@@ -124,7 +124,8 @@ def minhash_lsh_pairs(
     a_coef, b_coef = A[:num_hashes], B[:num_hashes]
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     base = df.select(F.col(id_col).alias("_id"), toks.alias("_toks"))
-    sig_schema = "_id long, " + ", ".join(
+    id_type = df.schema[id_col].dataType.simpleString()
+    sig_schema = f"_id {id_type}, " + ", ".join(
         [f"_h{i} long" for i in range(num_hashes)]
         + [f"_bk{b} long" for b in range(bands)]
     )
@@ -139,7 +140,9 @@ def minhash_lsh_pairs(
             H = np.empty((n, num_hashes), dtype=np.int64)
             BK = np.empty((n, bands), dtype=np.int64)
             for i, tk in enumerate(pdf["_toks"]):
-                tk = list(tk)
+                # NULL text has NULL tokens: shingle it like the empty
+                # token list, as shingles() does
+                tk = [] if tk is None else list(tk)
                 if len(tk) >= shingle_n:
                     sh = [" ".join(tk[j:j + shingle_n])
                           for j in range(len(tk) - shingle_n + 1)]

@@ -104,21 +104,3 @@ def doc_log_perplexity(
         F.count("*").cast("bigint").alias("n_bigrams"),
         (-F.avg("lp")).alias("log_ppl"),
     )
-
-
-def perplexity_filter(
-    corpus: DataFrame,
-    lm: dict,
-    max_log_ppl: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    normalize: bool = False,
-) -> DataFrame:
-    """Keep docs whose LM cross-entropy is below the threshold — the
-    CCNet 'head/middle' cut (docs the LM finds unsurprising are kept;
-    gibberish and boilerplate-free noise score high and drop).
-    ``normalize`` must match how the model was trained."""
-    ppl = doc_log_perplexity(corpus, lm, text_col, id_col,
-                             normalize=normalize)
-    keep = ppl.where(F.col("log_ppl") <= max_log_ppl).select(id_col)
-    return corpus.join(keep, id_col, "left_semi")

@@ -71,27 +71,6 @@ def domain_rates(
     )
 
 
-def domain_mix(
-    df: DataFrame,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    alpha: float = 0.5,
-    target_rows: int | None = None,
-) -> DataFrame:
-    """Alpha-smoothed, deterministic domain mixture sample.
-
-    Keeps row r of domain d iff sample_unit(r.id) < rate_d.  The result
-    is a strict subset of the input (down-sampling only), reproducible
-    across runs/partitionings, with the rate and domain size attached for
-    audit.
-    """
-    rates = domain_rates(df, domain_col, alpha, target_rows)
-    return (
-        df.join(F.broadcast(rates), domain_col)
-        .where(sample_unit(id_col) < F.col("rate"))
-    )
-
-
 def mix_audit(
     df: DataFrame,
     domain_col: str = "source",
@@ -99,11 +78,12 @@ def mix_audit(
     alpha: float = 0.5,
     target_rows: int | None = None,
 ) -> DataFrame:
-    """Per-domain audit of the mixture: input size, kept size, keep-rate.
+    """Per-domain audit of the alpha-smoothed down-sampling mixture:
+    input size, kept size, keep-rate.
 
-    Returns (domain_col, n_in, n_out, rate) — the contract-checkable
-    summary of :func:`domain_mix` (n_out is exact, not expected-value:
-    the sample is deterministic).
+    Row r of domain d is kept iff sample_unit(r.id) < rate_d.  Returns
+    (domain_col, n_in, n_out, rate) — n_out is exact, not expected-value:
+    the sample is deterministic across runs and partitionings.
     """
     rates = domain_rates(df, domain_col, alpha, target_rows)
     kept = (

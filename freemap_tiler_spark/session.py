@@ -1,9 +1,10 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
-Settings chosen for the 100 TB design point (and safe at local[32]):
-AQE on (runtime coalesce + skew-join split), Arrow on (all our kernels are
-Arrow-batched pandas UDFs), shuffle partitions sized to cores locally (on a
-real cluster this is set to 2-3x total cores via spark-submit conf).
+Settings chosen for the 100 TB design point: AQE on (runtime coalesce +
+skew-join split), Arrow on (all our kernels are Arrow-batched pandas UDFs),
+local mode sized to the CPUs this process may run on, shuffle partitions
+sized to cores locally (on a real cluster this is set to 2-3x total cores
+via spark-submit conf).
 """
 
 from __future__ import annotations
@@ -28,7 +29,8 @@ def get_spark(
     _blas_vars = ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS")
     for var in _blas_vars:
         os.environ.setdefault(var, "1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1:master.find("]")] if "[" in master else str(cpus)
@@ -46,9 +48,8 @@ def get_spark(
         # candidate stage ran its 3.9M-row WindowGroupLimit single-threaded,
         # 3.5s -> 1.3s with a 4k floor).  At production partition sizes
         # (>=64MB) the floor never binds, so this only affects nearly-empty
-        # shuffles; parameterised for cluster tuning.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "4k"))
+        # shuffles.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "4k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")

@@ -69,15 +69,11 @@ def streaming_first_seen(
     stream: DataFrame,
     watermark: str = "1 hour",
     state_ttl: str | None = "24 hours",
-    emit_cols: list[str] | None = None,
 ) -> DataFrame:
     """First-seen-wins streaming dedup, keyed on the md5 fingerprint of
     the text — a CUSTOM stateful operator via applyInPandasWithState
     (state = one boolean per fingerprint; rows after the first are
-    dropped).  Emits (fingerprint, *emit_cols) of first occurrences —
-    ``emit_cols`` defaults to (url, warc_ts); pass more of the stream's
-    columns to carry the whole first-seen document through (the
-    streaming clean-corpus path).
+    dropped).  Emits (fingerprint, url, warc_ts) of first occurrences.
 
     State lifetime: with the default ``state_ttl``, each fingerprint's
     state is dropped via EventTimeTimeout once the watermark passes
@@ -101,18 +97,12 @@ def streaming_first_seen(
     ttl_ms = (
         int(pd.Timedelta(state_ttl).total_seconds() * 1000) if state_ttl else None
     )
-    emit_cols = list(emit_cols) if emit_cols is not None \
-        else ["url", "warc_ts"]
     keyed = (
         stream.withColumn("fingerprint", T.md5_fingerprint(F.col("text")))
         .withWatermark("warc_ts", watermark)
         .groupBy("fingerprint")
     )
-    out_schema = "fingerprint long, " + ", ".join(
-        f"`{c}` {stream.schema[c].dataType.simpleString()}"
-        for c in emit_cols
-    )
-    empty = pd.DataFrame({"fingerprint": [], **{c: [] for c in emit_cols}})
+    empty = pd.DataFrame({"fingerprint": [], "url": [], "warc_ts": []})
 
     def _arm(state: GroupState, max_ev_ms: int | None) -> int:
         if ttl_ms is None:
@@ -141,8 +131,11 @@ def streaming_first_seen(
         armed = _arm(state, max_ev)
         state.update((1, armed))
         yield pd.DataFrame(
-            {"fingerprint": [key[0]],
-             **{c: [first_row[c]] for c in emit_cols}}
+            {
+                "fingerprint": [key[0]],
+                "url": [first_row["url"]],
+                "warc_ts": [first_row["warc_ts"]],
+            }
         )
 
     def _first(key, pdfs, state: GroupState):
@@ -189,7 +182,7 @@ def streaming_first_seen(
 
     return keyed.applyInPandasWithState(
         _first,
-        outputStructType=out_schema,
+        outputStructType="fingerprint long, url string, warc_ts timestamp",
         stateStructType="seen int, armed_ms long",
         outputMode="append",
         timeoutConf=(
@@ -198,37 +191,6 @@ def streaming_first_seen(
             else GroupStateTimeout.NoTimeout
         ),
     )
-
-
-def streaming_clean_corpus(
-    stream: DataFrame,
-    min_quality: float = 0.3,
-    min_words: int = 5,
-    watermark: str = "1 hour",
-    state_ttl: str | None = "24 hours",
-) -> DataFrame:
-    """The cleaning funnel as ONE streaming plan: the stateless stages
-    (C4/Gopher quality floor, length floor, PII redaction) are the SAME
-    Column expressions as the batch clean_corpus — Structured Streaming
-    runs them per micro-batch unchanged — and exact dedup becomes the
-    CROSS-BATCH stateful first-seen operator (a duplicate arriving in a
-    later drop is suppressed by the fingerprint state, which the batch
-    groupBy cannot do over an unbounded stream).  Emits the cleaned,
-    deduped document rows; sink with writeStream (parquet/corpus_store
-    via foreachBatch).  Dedup keys on the fingerprint of the ORIGINAL
-    text so identical pages stay identical keys after PII redaction."""
-    q = (
-        stream.withColumn("quality", T.quality_score(F.col("text")))
-        .where(
-            (F.col("quality") >= min_quality)
-            & (T.ws_token_count(F.col("text")) >= min_words)
-        )
-        .withColumn("clean_text", T.scrub_pii(F.col("text")))
-    )
-    return streaming_first_seen(
-        q, watermark, state_ttl,
-        emit_cols=["url", "warc_ts", "clean_text", "lang", "quality"],
-    ).withColumnRenamed("clean_text", "text")
 
 
 def run_streaming_pyramid(

@@ -208,55 +208,3 @@ def test_first_seen_ttl_survives_first_batch_arming(spark, tmp_path):
     urls = sorted(r.url for r in spark.table("arm_dedup").collect())
     # u3 (A dup, inside TTL) must stay suppressed
     assert urls == ["u1", "u2"], urls
-
-
-def test_streaming_clean_corpus(spark, tmp_path):
-    """The streaming cleaning funnel: quality + length floors and PII
-    redaction apply per micro-batch, exact dedup holds ACROSS drops
-    (fingerprint state suppresses a later-batch duplicate), and the
-    emitted rows carry the scrubbed text."""
-    import pandas as pd
-
-    d = str(tmp_path / "dropsc")
-    good = ("contact me at bob@example.org about the quick brown fox "
-            "jumping over the lazy dog in town")
-    drop1 = pd.DataFrame({
-        "url": ["u/a", "u/junk", "u/short", "u/a-dup"],
-        "warc_ts": pd.to_datetime(
-            ["2024-01-01 00:00:01", "2024-01-01 00:00:02",
-             "2024-01-01 00:00:03", "2024-01-01 00:00:04"]),
-        "html": [b""] * 4,
-        "text": [good,
-                 "!9! ?8? #7# $6$ %5% ^4^ &3& *2* (1( )0) !9! ?8?",
-                 "tiny doc", good],
-        "lang": ["en"] * 4,
-    })
-    drop2 = pd.DataFrame({
-        "url": ["u/a-dup2", "u/b"],
-        "warc_ts": pd.to_datetime(
-            ["2024-01-01 00:10:00", "2024-01-01 00:10:01"]),
-        "html": [b""] * 2,
-        "text": [good,  # cross-batch duplicate: state must suppress it
-                 "a different well formed document about maps and tiles "
-                 "with enough words to pass the floors"],
-        "lang": ["en"] * 2,
-    })
-    spark.createDataFrame(drop1).coalesce(1).write.mode("append").parquet(d)
-    spark.createDataFrame(drop2).coalesce(1).write.mode("append").parquet(d)
-
-    out = str(tmp_path / "cleaned")
-    q = (
-        SI.streaming_clean_corpus(SI.stream_corpus(spark, d, max_files=1))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckc"))
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out)
-        .start()
-    )
-    q.awaitTermination(240)
-    rows = {r.url: r for r in spark.read.parquet(out).collect()}
-    assert set(rows) == {"u/a", "u/b"}            # junk/short/dups gone
-    assert "[EMAIL]" in rows["u/a"].text          # PII scrubbed
-    assert "bob@example.org" not in rows["u/a"].text
-    assert rows["u/a"].quality >= 0.3 and rows["u/b"].lang == "en"

@@ -171,17 +171,7 @@ def main() -> None:
     check("pack_summary: bucketed windows, JVM-only", p, ["Window"],
           ["BatchEvalPython", "ArrowEvalPython", "CartesianProduct"])
 
-    # 15. BPE encode (r5-cont): ONE Arrow pass, no shuffle, no join — the
-    # merge table rides the closure; Exchange in this plan would mean the
-    # tokenizer added a corpus shuffle it doesn't need
-    from freemap_tiler_spark.operators import tokenizer as _tk
-    merges = [("t", "h"), ("th", "e</w>")]
-    p = plan_of(_tk.bpe_encode(docs, merges))
-    check("bpe_encode: single Arrow pass, no shuffle", p,
-          ["MapInPandas"],
-          ["Exchange", "Join", "CartesianProduct"])
-
-    # 16. VRT ingestion (r5-cont): per-file fan-out is one mapInPandas
+    # 15. VRT ingestion (r5-cont): per-file fan-out is one mapInPandas
     # over the tiny file manifest — one repartition of the manifest
     # (file-count rows), then no further shuffle and no join
     import os as _os
@@ -211,7 +201,7 @@ def main() -> None:
           ["MapInPandas"],
           ["Join", "CartesianProduct"])
 
-    # 17. as-of + range legs (r5-cont): the compound window query must
+    # 16. as-of + range legs (r5-cont): the compound window query must
     # contain NO nested-loop/cartesian join — the as-of is a window pass
     # and the range join is a bucketed hash equi-join
     p = plan_of(contract.q_window_topk_asof(spark, sf))
