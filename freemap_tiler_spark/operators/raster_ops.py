@@ -31,7 +31,11 @@ VALID_BAND_COUNTS = {1: "G", 2: "GA", 3: "RGB", 4: "RGBA"}
 
 def validate_blocks(blocks: DataFrame) -> str:
     """Fail-fast band-layout validation (S2).  Returns the layout name."""
-    counts = [r[0] for r in blocks.select("bands").distinct().collect()]
+    return layout_name([r[0] for r in blocks.select("bands").distinct().collect()])
+
+
+def layout_name(counts: list[int]) -> str:
+    """The layout of a source whose blocks have these distinct band counts."""
     if len(counts) != 1:
         raise ValueError(f"mixed band counts {counts}; a source has ONE layout")
     n = counts[0]
@@ -422,7 +426,6 @@ def warp_blocks_to_tiles(
     pieces = blocks.mapInPandas(
         _warp, "cell long, px0 int, py0 int, pw int, ph int, payload binary"
     )
-    nb = blocks.select("bands").first()[0]
 
     # batched alpha-gated paste: collect_list + ONE scalar Arrow UDF (a
     # groupBy.applyInPandas here would pay group dispatch per tile); a tile
@@ -431,6 +434,9 @@ def warp_blocks_to_tiles(
     def _merge(pieces_col: pd.Series) -> pd.Series:
         out = []
         for lst in pieces_col:
+            # band count from the first piece: a piece is ph x pw x bands
+            # bytes, and a piece is never empty
+            nb = len(lst[0]["payload"]) // (int(lst[0]["ph"]) * int(lst[0]["pw"]))
             canvas = np.zeros((t, t, nb), dtype=np.uint8)
             for pc in lst:
                 ph, pw = int(pc["ph"]), int(pc["pw"])

@@ -5,17 +5,25 @@ every stage is the Spark-native counterpart, same order, same semantics:
 
     reference                                   here
     ---------                                   ----
-    GDAL open + band validation                 raster_ops.validate_blocks
+    GDAL open + band validation                 one agg over blocks: the
+    source bbox from geo-transform                validate_blocks check + source_bbox
     GeoJSON polygon parse + 4326->3857          sources.geojson
-    source bbox from geo-transform              sources.raster_blocks.source_bbox
     leaf tile enumeration (bbox cover)          raster_ops.tile_cover
     polygon prune (rayon filter)                pip tile prune (broadcast)
     megatile warp + nodata + slice              raster_ops.mask_nodata + warp_blocks_to_tiles
-    resume probe (per-tile SELECT)              lineage.resume_anti_join (set-at-a-time)
+    resume probe (per-tile SELECT)              lineage.write_pyramid (skips committed levels)
     pyramid compose (per-tile scheduler)        pyramid.compose_pyramid (k levels/shuffle)
-    encode + single-writer insert               store.write_tiles (parallel committer)
+    encode + single-writer insert               store.write_tiles, per level inside
+                                                  write_pyramid (its on_level sink)
     limits fold + metadata                      lineage.write_metadata
     stats thread                                plans.metrics.MetricsSink
+
+Encode is fused into the level loop, as in the reference, which encodes
+each tile as compose emits it (src/processor.rs:493-563): a level is
+encoded into ``store/zoom=<z>`` right after its parquet lands and before
+its lineage commit, so the pyramid is never re-read to encode.  The
+``encode_write`` stage only re-encodes committed levels whose store
+directory is missing and appends the ``insert_empty`` markers.
 
 Args mirror the reference's CLI knobs (src/args.rs:13-70): max_zoom,
 tile_size, format/quality, warp-zoom-offset -> levels_per_shuffle,
@@ -24,19 +32,22 @@ bounding polygon, continue-file -> resume root.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from freemap_tiler_spark.functions import cells
 from freemap_tiler_spark.functions.mercator import np_merc_to_lonlat
 from freemap_tiler_spark.operators import pyramid as P
 from freemap_tiler_spark.operators import raster_ops
 from freemap_tiler_spark.operators.pip_join import _segments_hit_rects, points_in_polygon
+from freemap_tiler_spark.plans import fsutil, store
 from freemap_tiler_spark.plans import lineage as L
-from freemap_tiler_spark.plans import store
 from freemap_tiler_spark.plans.metrics import MetricsSink
 from freemap_tiler_spark.sources.geojson import parse_geojson_polygon
-from freemap_tiler_spark.sources.raster_blocks import source_bbox
+from freemap_tiler_spark.sources.raster_blocks import bbox_aggs, clamp_bbox
 
 
 def _prune_cover_by_polygon(cover: DataFrame, rings_lonlat) -> DataFrame:
@@ -117,8 +128,6 @@ def prune_cover_by_polygon_layer(
     same rule as the broadcast prune), and the tile cover semi-joins
     that cell set.  O(perimeter cells) rows per polygon, one shuffle,
     no driver collect."""
-    from pyspark.sql import functions as F
-
     from freemap_tiler_spark.operators.pip_join import polygon_covering_cells
     from freemap_tiler_spark.sources.geojson import reproject_rings_3857
 
@@ -176,16 +185,16 @@ def run_tiler(
     row counts.  The complete reference-equivalent run."""
     m = MetricsSink(spark, root)
 
-    # ONE driver action on `blocks` for the scalar metadata the stages
-    # need (VERDICT r3 "What's wrong" #4: validate + two .first() calls +
-    # repeated source_bbox each re-scanned the blocks table — at scale
-    # `blocks` is the 100 TB input).  bands falls out of the validated
-    # layout; the bbox agg is the one remaining (cheap, min/max) scan.
-    layout = raster_ops.validate_blocks(blocks)
-    bands = {"G": 1, "GA": 2, "RGB": 3, "RGBA": 4}[layout]
-    bbox = source_bbox(blocks)
+    # ONE aggregate over `blocks` gives every scalar the stages need: the
+    # band layout (validate_blocks' check) and the source bbox (at scale
+    # `blocks` is the 100 TB input, so it is scanned once here and once by
+    # the warp)
+    scan = blocks.agg(F.collect_set("bands"), *bbox_aggs()).first()
+    raster_ops.layout_name(scan[0])  # raises on a mixed or unsupported layout
+    bands = scan[0][0]
+    bbox = clamp_bbox(scan[1:])
 
-    with m.stage("rasterize") as h:
+    with m.stage("rasterize") as rasterize:
         masked = raster_ops.mask_nodata(blocks)
         leaves = raster_ops.warp_blocks_to_tiles(
             masked, max_zoom, tile_size, resampling
@@ -199,31 +208,51 @@ def run_tiler(
                 rings = parse_geojson_polygon(polygon)
                 kept = _prune_cover_by_polygon(cover, rings)
             leaves = leaves.join(kept.select("cell"), "cell", "left_semi")
-        leaves = leaves.persist()
-        h["rows"] = leaves.count()
+
+    encoded: set[int] = set()
+
+    def encode(level: int, written: DataFrame) -> None:
+        # looked up on the module at each call, so a wrapper installed on
+        # store.write_tiles sees every level
+        store.write_tiles(
+            spark, written.where("length(payload) > 0"), root, fmt, quality,
+            tile_size, bands, png_filter=png_filter,
+        )
+        encoded.add(level)
 
     with m.stage("compose") as h:
+        # warp runs inside the first level write; each level is encoded
+        # into the store as it lands, before its lineage commit
         counts = L.write_pyramid(
             spark, leaves, root, max_zoom, min_zoom, tile_size,
             bands=bands,
             levels_per_shuffle=levels_per_shuffle, resume=resume,
-            slices_per_level=slices_per_level,
+            slices_per_level=slices_per_level, on_level=encode,
         )
         h["rows"] = sum(counts.values())
+    rasterize["rows"] = counts.get(max_zoom)
 
     with m.stage("encode_write") as h:
-        levels = L.read_pyramid(spark, root)
-        store.write_tiles(
-            spark, levels.where("length(payload) > 0"), root, fmt, quality,
-            tile_size, bands, png_filter=png_filter,
-        )
+        # a level committed by an earlier run keeps its store directory;
+        # re-encode it from its pyramid parquet only if that directory is
+        # missing (a root written before per-level encode, or deleted)
+        for z in sorted(set(counts) - encoded):
+            if not fsutil.fs_exists(spark, os.path.join(root, "store", f"zoom={z}")):
+                encode(z, spark.read.parquet(L.level_path(root, z)))
         if insert_empty:
             # known-empty markers bypass the encode path entirely (they
             # have no pixels): appended to the store as NULL tile_data
             # rows so the resume anti-join can skip them next run
-            # (src/processor.rs:186-190 semantics).
+            # (src/processor.rs:186-190 semantics).  Cells the store
+            # already holds at max_zoom (tiles, or an earlier run's
+            # markers) are not appended again.
             cover = raster_ops.tile_cover(spark, bbox, max_zoom)
-            markers = raster_ops.empty_markers(cover, levels)
+            zc = F.col("zoom")
+            stored = store.read_tiles(spark, root).where(zc == max_zoom).select(
+                cells.cell(zc, F.col("x"), cells.reversed_y(zc, F.col("tms_y")))
+                .alias("cell")
+            )
+            markers = raster_ops.empty_markers(cover, stored)
             store.append_empty_markers(spark, markers, root)
         h["rows"] = sum(counts.values())
 
@@ -237,5 +266,4 @@ def run_tiler(
             bounds=(float(lon0), float(lat0), float(lon1), float(lat1)),
         )
     m.flush()
-    leaves.unpersist()
     return counts

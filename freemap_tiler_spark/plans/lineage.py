@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from freemap_tiler_spark.operators import pyramid as P
+from freemap_tiler_spark.plans import fsutil
 
 LINEAGE_SCHEMA = (
     "level int, partition int, row_count long, min_cell long, max_cell long, "
@@ -61,12 +62,8 @@ def _rewrite_lineage(spark: SparkSession, root: str, rows: list[tuple]) -> None:
     """Replace the lineage table via write-new + two renames: at every
     crash point either the old or the fully-written new table is readable
     (read_lineage knows the recovery order)."""
-    from freemap_tiler_spark.plans import fsutil
-
     live = _lineage_dir(root)
-    spark.createDataFrame(rows, LINEAGE_SCHEMA).write.mode("overwrite").parquet(
-        live + ".tmp"
-    )
+    fsutil.write_rows(spark, rows, LINEAGE_SCHEMA, live + ".tmp", "overwrite")
     fsutil.fs_delete(spark, live + ".old")
     fsutil.fs_rename(spark, live, live + ".old")
     fsutil.fs_rename(spark, live + ".tmp", live)
@@ -91,15 +88,17 @@ def _drop_slice_rows(spark: SparkSession, root: str, level: int) -> None:
     )
 
 
-def committed_levels(spark: SparkSession, root: str) -> set[int]:
+def committed_levels(spark: SparkSession, root: str) -> dict[int, int]:
+    """{level: row_count} of the committed levels, from their summary rows
+    (partition = -1)."""
     lin = read_lineage(spark, root)
     if lin is None:
-        return set()
+        return {}
     return {
-        r[0]
+        r["level"]: r["row_count"]
         for r in lin.where(
             (F.col("status") == "committed") & (F.col("partition") == -1)
-        ).select("level").distinct().collect()
+        ).select("level", "row_count").collect()
     }
 
 
@@ -124,7 +123,7 @@ def _commit_level(
         max((p["mx"] for p in parts), default=None),
         seconds, "committed",
     ))
-    spark.createDataFrame(rows, LINEAGE_SCHEMA).write.mode("append").parquet(_lineage_dir(root))
+    fsutil.write_rows(spark, rows, LINEAGE_SCHEMA, _lineage_dir(root), "append")
     return total
 
 
@@ -152,8 +151,10 @@ def _write_level(
     t0: float,
     slices: int = 1,
     resume: bool = True,
+    on_level=None,
 ) -> int:
-    """Write one level and commit its lineage.  ``slices`` > 1 enables
+    """Write one level, hand it to ``on_level`` (see write_pyramid), then
+    commit its lineage.  ``slices`` > 1 enables
     MID-LEVEL resume: the level is written in ``pmod(cell, slices)``-keyed
     slices, each staged to ``{root}/_staging``, promoted into the flat
     level directory under a slice-prefixed filename (Hadoop FS renames),
@@ -164,12 +165,12 @@ def _write_level(
     idempotent (its prefix is cleared first, then deterministically
     rewritten).  The level summary row (partition=-1) is appended last —
     it remains the level-commit marker ``committed_levels`` keys on."""
-    from freemap_tiler_spark.plans import fsutil
-
     ldir = level_path(root, level)
     if slices <= 1:
         lv_df.write.mode("overwrite").parquet(ldir)
         written = spark.read.parquet(ldir)
+        if on_level is not None:
+            on_level(level, written)
         return _commit_level(spark, root, level, written, time.time() - t0)
 
     done = committed_slices(spark, root, level) if resume else {}
@@ -227,13 +228,13 @@ def _write_level(
                 moved += 1
         fsutil.fs_delete(spark, stage)
         row = (level, s, st[0], st[1], st[2], time.time() - t0, "slice")
-        spark.createDataFrame([row], LINEAGE_SCHEMA).write.mode("append").parquet(
-            _lineage_dir(root)
-        )
+        fsutil.write_rows(spark, [row], LINEAGE_SCHEMA, _lineage_dir(root), "append")
         stats.append(st)
     # all slices promoted + recorded (any failure raised above, keeping
     # staging for re-promotion) — drop the level's staging dir wholesale
     fsutil.fs_delete(spark, stage_root)
+    if on_level is not None:
+        on_level(level, spark.read.parquet(ldir))
     total = int(sum(s[0] for s in stats))
     mns = [s[1] for s in stats if s[1] is not None]
     mxs = [s[2] for s in stats if s[2] is not None]
@@ -241,9 +242,7 @@ def _write_level(
         level, -1, total, min(mns, default=None), max(mxs, default=None),
         time.time() - t0, "committed",
     )
-    spark.createDataFrame([summary], LINEAGE_SCHEMA).write.mode("append").parquet(
-        _lineage_dir(root)
-    )
+    fsutil.write_rows(spark, [summary], LINEAGE_SCHEMA, _lineage_dir(root), "append")
     return total
 
 
@@ -258,6 +257,7 @@ def write_pyramid(
     levels_per_shuffle: int = 3,
     resume: bool = True,
     slices_per_level: int = 1,
+    on_level=None,
 ) -> dict:
     """Build + write the pyramid level group by level group, committing
     lineage after each; resume skips committed groups.  With
@@ -265,10 +265,18 @@ def write_pyramid(
     cell-keyed slices so a kill mid-level resumes writing only the
     missing slices (see _write_level).
 
+    ``on_level(level, written)`` is the per-level sink: it gets each level
+    this run writes, read back from its parquet, after the level lands and
+    before its lineage commit (with slices, after every slice is promoted
+    and before the summary row).  A committed level therefore always has
+    its sink output; skipped levels are not passed to it.
+
     Returns {level: row_count} for the run (committed-and-skipped levels
     report their recorded counts)."""
-    done = committed_levels(spark, root) if resume else set()
-    out: dict[int, int] = {}
+    done = committed_levels(spark, root) if resume else {}
+    # committed-and-skipped levels report their lineage counts; every level
+    # written below overwrites its entry
+    out: dict[int, int] = dict(done)
 
     # seed: the DEEPEST level of the contiguous committed prefix
     # [z, max_zoom] — resume restarts exactly there, never rewriting a
@@ -282,11 +290,10 @@ def write_pyramid(
         z = max_zoom
         t0 = time.time()
         out[z] = _write_level(
-            spark, root, max_zoom, leaves, t0, slices_per_level, resume
+            spark, root, max_zoom, leaves, t0, slices_per_level, resume,
+            on_level,
         )
         current = spark.read.parquet(level_path(root, max_zoom))
-    if z not in out:
-        out[z] = current.count()
 
     while z > min_zoom:
         k = min(levels_per_shuffle, z - min_zoom)
@@ -303,22 +310,14 @@ def write_pyramid(
         for lv in sorted(group, reverse=True):
             lv_df = produced.where(P.cells.cell_zoom("cell") == lv)
             out[lv] = _write_level(
-                spark, root, lv, lv_df, t0, slices_per_level, resume
+                spark, root, lv, lv_df, t0, slices_per_level, resume,
+                on_level,
             )
         produced.unpersist()
         for df in cache:
             df.unpersist()
         z -= k
         current = spark.read.parquet(level_path(root, z))
-
-    # report committed-and-skipped levels from their lineage counts
-    lin = read_lineage(spark, root)
-    if lin is not None:
-        rows = lin.where(
-            (F.col("status") == "committed") & (F.col("partition") == -1)
-        ).collect()
-        for r in rows:
-            out.setdefault(r["level"], r["row_count"])
     return out
 
 
@@ -357,9 +356,10 @@ def write_metadata(
         ("bounds", ",".join(str(b) for b in bounds) if bounds else ""),
         ("limits", limits_json),
     ]
-    spark.createDataFrame(rows, "name string, value string").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(root, "metadata"))
+    fsutil.write_rows(
+        spark, rows, "name string, value string",
+        os.path.join(root, "metadata"), "overwrite",
+    )
 
 
 def resume_anti_join(pending: DataFrame, done_tiles: DataFrame) -> DataFrame:

@@ -24,6 +24,9 @@ from pyspark.sql import SparkSession
 from freemap_tiler_spark.plans.store import read_tiles
 
 _TILE_SCHEMA = "zoom int, x int, tms_y int, tile_data binary, tile_alpha binary"
+# import_mbtiles writes its buffered tiles once their blobs reach this many
+# bytes: the driver holds at most one flush of tile data at a time
+_FLUSH_BYTES = 128 << 20
 
 
 def import_mbtiles(
@@ -41,7 +44,8 @@ def import_mbtiles(
 
     SQLite is single-file/single-reader, so the scan necessarily streams
     driver-side (mirror of the export): zoom-ordered fetchmany batches
-    append to the zoom-partitioned store — bounded driver memory, and
+    append to the zoom-partitioned store once ~``_FLUSH_BYTES`` of blobs
+    have accumulated — driver memory bounded in bytes, not rows, and
     parquet files land z-ordered per zoom like the native writer.  Empty
     tile_alpha blobs (the reference's opaque-elision encoding,
     src/schema.rs:20-33) come back as NULL alpha, matching the native
@@ -62,15 +66,16 @@ def import_mbtiles(
         )
         out = os.path.join(root, "store")
         wrote = False
-        # accumulate fetchmany batches into one write per ~write_every rows:
-        # a coalesce(1) parquet append per 8k-row batch meant one file per
-        # batch AND an O(files) output-dir relisting per append — O(files^2)
-        # committer overhead on large archives (ADVICE r5)
-        write_every = max(batch, 262_144)
+        # accumulate fetchmany batches into one write per ~_FLUSH_BYTES of
+        # blobs: a coalesce(1) parquet append per 8k-row batch meant one file
+        # per batch AND an O(files) output-dir relisting per append —
+        # O(files^2) committer overhead on large archives (ADVICE r5).  The
+        # bound is in bytes because tile sizes vary by orders of magnitude.
         recs: list = []
+        held = 0
 
         def _flush():
-            nonlocal wrote, recs
+            nonlocal wrote, recs, held
             if not recs:
                 return
             (spark.createDataFrame(recs, _TILE_SCHEMA)
@@ -79,6 +84,7 @@ def import_mbtiles(
              .partitionBy("zoom").parquet(out))
             wrote = True
             recs = []
+            held = 0
 
         while True:
             rows = cur.fetchmany(batch)
@@ -91,8 +97,9 @@ def import_mbtiles(
                     bytes(r[3]) if r[3] is not None else None,
                     bytes(alpha) if alpha else None,  # b"" = opaque-elided
                 ))
-            if len(recs) >= write_every:
-                _flush()
+                held += len(r[3] or b"") + len(alpha or b"")
+                if held >= _FLUSH_BYTES:
+                    _flush()
         _flush()
         if not wrote:
             (spark.createDataFrame([], _TILE_SCHEMA)

@@ -27,6 +27,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from freemap_tiler_spark.plans.fsutil import write_rows
+
 
 class MetricsSink:
     def __init__(
@@ -78,24 +80,28 @@ class MetricsSink:
             stop.set()
             th.join(timeout=1.0)
             self._emit_progress(name, t0, final=True)
-            self._rows.append(
-                (name, time.time() - t0, holder.get("rows"), float(time.time()))
-            )
+            # the holder is read at flush, so a stage's row count may be
+            # set after the stage ends, once a later stage knows it
+            self._rows.append((name, time.time() - t0, holder, float(time.time())))
 
     def flush(self) -> None:
         if self._rows:
-            self.spark.createDataFrame(
-                self._rows, "stage string, seconds double, rows long, ts double"
-            ).write.mode("append").parquet(self.path)
+            write_rows(
+                self.spark,
+                [(n, s, h.get("rows"), ts) for n, s, h, ts in self._rows],
+                "stage string, seconds double, rows long, ts double",
+                self.path, "append",
+            )
             self._rows = []
         with self._lock:
             prog, self._progress = self._progress, []
         if prog:
-            self.spark.createDataFrame(
-                prog,
+            write_rows(
+                self.spark, prog,
                 "stage string, pct double, completed long, total long,"
                 " seconds double, ts double",
-            ).write.mode("append").parquet(self.progress_path)
+                self.progress_path, "append",
+            )
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path)

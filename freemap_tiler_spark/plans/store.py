@@ -8,6 +8,12 @@ metadata(name, value).  Here:
   tile_data, tile_alpha) — tile_row IS the TMS-flipped y, exactly like the
   reference's inserter (src/tile_inserter.rs:54).  Key uniqueness holds by
   construction: each row comes from one groupBy(cell) group.
+- one write per pyramid level: ``pipeline.run_tiler`` encodes each level
+  as ``lineage.write_pyramid`` lands it (the reference encodes each tile as
+  compose emits it, src/processor.rs:493-563) and ``write_tiles``
+  overwrites only that level's ``zoom=<z>`` directory.  The level's files
+  are the files of its pyramid parquet, re-encoded; there is no cross-zoom
+  range shuffle.
 - ``metadata`` + per-zoom ``limits`` (S7/S8) via plans.lineage.write_metadata.
 - the reference's single-writer thread + bounded channel
   (src/tile_inserter.rs:15-69) disappears: Spark's committer parallelizes,
@@ -33,18 +39,14 @@ def write_tiles(
     quality: int = 85,
     tile_size: int = 256,
     bands: int = 2,
-    files_per_zoom_hint: int | None = None,
     png_filter: str = "adaptive",
 ) -> str:
-    """(cell, payload) levels -> encoded tiles table at {root}/store.
+    """(cell, payload) levels -> encoded tiles in {root}/store/zoom=<z>.
 
-    Encoding (F13-F17) happens in the same pass as the write — one shuffle
-    to cluster by (zoom, morton) so files hold z-order-adjacent tiles (X3).
-
-    Range-partition count defaults to 4x parallelism (not a fixed 32):
-    cell ids sort by zoom prefix, so range partitioning naturally gives
-    deep zooms many files and shallow zooms few — the file count scales
-    with cluster size instead of capping write parallelism.
+    Encoding (F13-F17) happens in the same pass as the write, with no
+    shuffle: one Spark job, and each tile is encoded once.  Only the zoom
+    directories present in ``levels`` are overwritten (dynamic partition
+    overwrite), so the pipeline writes one level at a time.
     """
     enc = P.encode_level(levels, fmt, quality, tile_size, bands,
                          png_filter=png_filter)
@@ -54,12 +56,10 @@ def write_tiles(
         cells.reversed_y(cells.cell_zoom("cell"), cells.cell_y("cell")).alias("tms_y"),
         "tile_data",
         "tile_alpha",
-        F.col("cell"),
     )
     out = os.path.join(root, "store")
-    n = files_per_zoom_hint or max(32, spark.sparkContext.defaultParallelism * 4)
-    keyed.repartitionByRange(n, "cell").drop("cell").write.mode(
-        "overwrite"
+    keyed.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
     ).partitionBy("zoom").parquet(out)
     return out
 

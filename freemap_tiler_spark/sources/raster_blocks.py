@@ -96,18 +96,27 @@ def raster_blocks(
 def source_bbox(df: DataFrame) -> tuple[float, float, float, float]:
     """Source bbox from block metadata (src/geo.rs:4-25 analogue): min/max
     over per-block corner coordinates, one tiny agg job."""
-    corners = df.select(
-        (F.element_at("geo_transform", 1) + F.col("block_x") * F.col("width") *
-         F.element_at("geo_transform", 2)).alias("cx0"),
-        (F.element_at("geo_transform", 1) + (F.col("block_x") + 1) * F.col("width") *
-         F.element_at("geo_transform", 2)).alias("cx1"),
-        (F.element_at("geo_transform", 4) + (F.col("block_y") + 1) * F.col("height") *
-         F.element_at("geo_transform", 6)).alias("cy0"),
-        (F.element_at("geo_transform", 4) + F.col("block_y") * F.col("height") *
-         F.element_at("geo_transform", 6)).alias("cy1"),
-    ).agg(F.min("cx0"), F.min("cy0"), F.max("cx1"), F.max("cy1")).first()
+    return clamp_bbox(df.agg(*bbox_aggs()).first())
+
+
+def bbox_aggs() -> list:
+    """Aggregates (min x, min y, max x, max y) over per-block corners."""
+    def gt(i):
+        return F.element_at("geo_transform", i)
+
+    bx, by, w, h = F.col("block_x"), F.col("block_y"), F.col("width"), F.col("height")
+    return [
+        F.min(gt(1) + bx * w * gt(2)),
+        F.min(gt(4) + (by + 1) * h * gt(6)),
+        F.max(gt(1) + (bx + 1) * w * gt(2)),
+        F.max(gt(4) + by * h * gt(6)),
+    ]
+
+
+def clamp_bbox(corners) -> tuple[float, float, float, float]:
+    """Clamp bbox_aggs' result to the world extent, like transform_bounds'
+    densify does implicitly."""
     mn_x, mn_y, mx_x, mx_y = corners
-    # clamp to world extent like transform_bounds densify does implicitly
     return (
         max(mn_x, -ORIGIN), max(mn_y, -ORIGIN), min(mx_x, ORIGIN), min(mx_y, ORIGIN)
     )

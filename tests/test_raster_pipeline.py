@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from freemap_tiler_spark.functions import cells
 from freemap_tiler_spark.operators import raster_ops
 from freemap_tiler_spark.pipeline import run_tiler
-from freemap_tiler_spark.plans import store
+from freemap_tiler_spark.plans import fsutil, store
 from freemap_tiler_spark.sources.geojson import parse_geojson_polygon, polygon_df
 from freemap_tiler_spark.sources.raster_blocks import block_pixels, raster_blocks, source_bbox
 
@@ -180,6 +180,9 @@ def test_full_pipeline_with_resume_and_store(spark, blocks):
         got = {r.stage: r["count"] for r in prog}
         assert all(got.get(s, 0) >= 1
                    for s in ("rasterize", "compose", "encode_write", "metadata"))
+        # the rasterize row counts the leaf tiles (the max_zoom level)
+        leaf_rows = [r.rows for r in sink.read().where("stage = 'rasterize'").collect()]
+        assert leaf_rows == [counts[9]]
         # rerun == resume: counts unchanged
         counts2 = run_tiler(
             spark, blocks, root, max_zoom=9, min_zoom=6, tile_size=32,
@@ -188,6 +191,73 @@ def test_full_pipeline_with_resume_and_store(spark, blocks):
         assert counts2 == counts
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _store_rows(spark, root):
+    """Every store row as sorted (zoom, x, tms_y, tile_data, tile_alpha)
+    tuples: duplicates and byte differences both show."""
+    return sorted(
+        (r.zoom, r.x, r.tms_y,
+         None if r.tile_data is None else bytes(r.tile_data),
+         None if r.tile_alpha is None else bytes(r.tile_alpha))
+        for r in store.read_tiles(spark, root).collect()
+    )
+
+
+def test_run_tiler_job_budget(spark, blocks):
+    """Spark jobs per run_tiler call, counted by the status tracker.  Each
+    level is encoded once, as it lands, with no range shuffle whose
+    sampling job re-runs the encode; the small driver-side tables are
+    written as local relations.  48 jobs before encode was fused into the
+    level loop, 40 after."""
+    sc = spark.sparkContext
+    root = tempfile.mkdtemp(prefix="tiler_jobs_")
+    try:
+        sc.setJobGroup("run_tiler_budget", "job budget")
+        run_tiler(spark, blocks, root, max_zoom=9, min_zoom=6, tile_size=32,
+                  levels_per_shuffle=2, resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        shutil.rmtree(root, ignore_errors=True)
+    jobs = sc.statusTracker().getJobIdsForGroup("run_tiler_budget")
+    assert len(jobs) <= 40, f"run_tiler ran {len(jobs)} Spark jobs"
+
+
+def test_resume_deepens_fused_store(spark, blocks, tmp_path):
+    """A resumed run encodes only the levels it writes: running to
+    min_zoom=8 and then resuming to min_zoom=6 gives the store of one fresh
+    min_zoom=6 run, tile for tile and byte for byte."""
+    kw = dict(max_zoom=9, tile_size=32, levels_per_shuffle=2)
+    part, fresh = str(tmp_path / "part"), str(tmp_path / "fresh")
+    run_tiler(spark, blocks, part, min_zoom=8, **kw)
+    run_tiler(spark, blocks, part, min_zoom=6, **kw)
+    run_tiler(spark, blocks, fresh, min_zoom=6, resume=False, **kw)
+    assert _store_rows(spark, part) == _store_rows(spark, fresh)
+
+
+def test_resume_reencodes_missing_store_level(spark, blocks, tmp_path, monkeypatch):
+    """A committed level whose store directory is missing (a root written
+    before encode ran per level, or a deleted directory) is re-encoded from
+    its pyramid parquet on resume; every skipped level costs one
+    existence probe of its store directory."""
+    root = str(tmp_path / "root")
+    kw = dict(max_zoom=9, min_zoom=6, tile_size=32, levels_per_shuffle=2)
+    run_tiler(spark, blocks, root, **kw)
+    before = _store_rows(spark, root)
+    shutil.rmtree(f"{root}/store/zoom=7")
+    probes = []
+    real_exists = fsutil.fs_exists
+
+    def counting_exists(s, path):
+        probes.append(path)
+        return real_exists(s, path)
+
+    monkeypatch.setattr(fsutil, "fs_exists", counting_exists)
+    run_tiler(spark, blocks, root, **kw)
+    assert sorted(p for p in probes if "/store/" in p) == [
+        f"{root}/store/zoom={z}" for z in (6, 7, 8, 9)
+    ]
+    assert _store_rows(spark, root) == before
 
 
 def test_pipeline_polygon_prune(spark, blocks):
@@ -289,6 +359,12 @@ def test_insert_empty_markers_reach_store(spark, tmp_path):
     z11 = st.where(F.col("zoom") == 11)
     assert z11.count() == cover_n
     assert z11.select("x", "tms_y").distinct().count() == cover_n
+    # a resumed run keeps the committed store level and appends no marker
+    # the store already holds
+    run_tiler(spark, blocks, root, max_zoom=11, min_zoom=10, tile_size=32,
+              insert_empty=True)
+    z11 = store.read_tiles(spark, root).where(F.col("zoom") == 11)
+    assert z11.count() == cover_n
 
 
 def test_warp_utm_source(spark):
@@ -448,6 +524,33 @@ def test_mbtiles_import_adopts_foreign_store(spark, blocks):
         finally:
             shutil.rmtree(root, ignore_errors=True)
             shutil.rmtree(root2, ignore_errors=True)
+
+
+def test_mbtiles_import_flushes_by_bytes(spark, blocks, tmp_path, monkeypatch):
+    """import_mbtiles bounds its driver buffer by blob bytes, not rows: with
+    the bound below one tile's size every tile is its own flush (one
+    parquet file each), and export -> import -> export stays
+    byte-identical."""
+    import glob
+    import sqlite3
+
+    from freemap_tiler_spark.plans import mbtiles
+
+    root, root2 = str(tmp_path / "src"), str(tmp_path / "dst")
+    run_tiler(spark, blocks, root, max_zoom=8, min_zoom=7, tile_size=32,
+              resume=False)
+    path = mbtiles.export_mbtiles(spark, root, f"{root}/out.mbtiles")
+    monkeypatch.setattr(mbtiles, "_FLUSH_BYTES", 1)
+    mbtiles.import_mbtiles(spark, path, root2)
+    q = ("SELECT zoom_level, tile_column, tile_row, tile_data "
+         "FROM tiles ORDER BY 1, 2, 3")
+    with sqlite3.connect(path) as c1:
+        want = list(c1.execute(q))
+    assert len(want) > 1
+    assert len(glob.glob(f"{root2}/store/zoom=*/*.parquet")) == len(want)
+    path2 = mbtiles.export_mbtiles(spark, root2, f"{root2}/out.mbtiles")
+    with sqlite3.connect(path2) as c2:
+        assert list(c2.execute(q)) == want
 
 
 def test_warp_utm_lanczos_ramp_golden(spark):
