@@ -238,7 +238,7 @@ def run_tiler(
         # missing (a root written before per-level encode, or deleted)
         for z in sorted(set(counts) - encoded):
             if not fsutil.fs_exists(spark, os.path.join(root, "store", f"zoom={z}")):
-                encode(z, spark.read.parquet(L.level_path(root, z)))
+                encode(z, L.read_level(spark, root, z))
         if insert_empty:
             # known-empty markers bypass the encode path entirely (they
             # have no pixels): appended to the store as NULL tile_data

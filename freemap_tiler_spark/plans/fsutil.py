@@ -67,4 +67,6 @@ def write_rows(
 
     schema = StructType.fromDDL(ddl_schema)
     pdf = pd.DataFrame(rows, columns=schema.names, dtype=object)
-    spark.createDataFrame(pdf, schema).write.mode(mode).parquet(path)
+    # one file per call: a few rows spread over defaultParallelism tasks
+    # would leave that many files per append for every later read to list
+    spark.createDataFrame(pdf, schema).coalesce(1).write.mode(mode).parquet(path)

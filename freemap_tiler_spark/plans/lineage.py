@@ -38,6 +38,7 @@ LINEAGE_SCHEMA = (
     "level int, partition int, row_count long, min_cell long, max_cell long, "
     "seconds double, status string"
 )
+METADATA_SCHEMA = "name string, value string"
 
 
 def _lineage_dir(root: str) -> str:
@@ -143,6 +144,12 @@ def level_path(root: str, level: int) -> str:
     return os.path.join(root, "tiles", f"zoom={level}")
 
 
+def read_level(spark: SparkSession, root: str, level: int) -> DataFrame:
+    """One written level as (cell, payload).  The schema is given: without
+    it, every read-back first runs a one-task footer-inference job."""
+    return spark.read.schema(P.PAYLOAD_SCHEMA).parquet(level_path(root, level))
+
+
 def _write_level(
     spark: SparkSession,
     root: str,
@@ -168,7 +175,7 @@ def _write_level(
     ldir = level_path(root, level)
     if slices <= 1:
         lv_df.write.mode("overwrite").parquet(ldir)
-        written = spark.read.parquet(ldir)
+        written = read_level(spark, root, level)
         if on_level is not None:
             on_level(level, written)
         return _commit_level(spark, root, level, written, time.time() - t0)
@@ -234,7 +241,7 @@ def _write_level(
     # staging for re-promotion) — drop the level's staging dir wholesale
     fsutil.fs_delete(spark, stage_root)
     if on_level is not None:
-        on_level(level, spark.read.parquet(ldir))
+        on_level(level, read_level(spark, root, level))
     total = int(sum(s[0] for s in stats))
     mns = [s[1] for s in stats if s[1] is not None]
     mxs = [s[2] for s in stats if s[2] is not None]
@@ -285,7 +292,7 @@ def write_pyramid(
         z = max_zoom
         while z - 1 >= min_zoom and (z - 1) in done:
             z -= 1
-        current = spark.read.parquet(level_path(root, z))
+        current = read_level(spark, root, z)
     else:
         z = max_zoom
         t0 = time.time()
@@ -293,7 +300,7 @@ def write_pyramid(
             spark, root, max_zoom, leaves, t0, slices_per_level, resume,
             on_level,
         )
-        current = spark.read.parquet(level_path(root, max_zoom))
+        current = read_level(spark, root, max_zoom)
 
     while z > min_zoom:
         k = min(levels_per_shuffle, z - min_zoom)
@@ -317,13 +324,14 @@ def write_pyramid(
         for df in cache:
             df.unpersist()
         z -= k
-        current = spark.read.parquet(level_path(root, z))
+        current = read_level(spark, root, z)
     return out
 
 
 def read_pyramid(spark: SparkSession, root: str) -> DataFrame:
-    """All committed levels as one DataFrame (cell, payload)."""
-    return spark.read.parquet(os.path.join(root, "tiles"))
+    """All committed levels as one DataFrame (cell, payload, zoom)."""
+    return spark.read.schema(f"{P.PAYLOAD_SCHEMA}, zoom int").parquet(
+        os.path.join(root, "tiles"))
 
 
 def write_metadata(
@@ -357,7 +365,7 @@ def write_metadata(
         ("limits", limits_json),
     ]
     fsutil.write_rows(
-        spark, rows, "name string, value string",
+        spark, rows, METADATA_SCHEMA,
         os.path.join(root, "metadata"), "overwrite",
     )
 

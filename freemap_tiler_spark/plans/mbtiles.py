@@ -21,6 +21,7 @@ import sqlite3
 
 from pyspark.sql import SparkSession
 
+from freemap_tiler_spark.plans.lineage import METADATA_SCHEMA, write_metadata
 from freemap_tiler_spark.plans.store import read_tiles
 
 _TILE_SCHEMA = "zoom int, x int, tms_y int, tile_data binary, tile_alpha binary"
@@ -51,8 +52,6 @@ def import_mbtiles(
     src/schema.rs:20-33) come back as NULL alpha, matching the native
     store; metadata rows carry over and the limits JSON is recomputed
     from the imported tiles (lineage.write_metadata)."""
-    from freemap_tiler_spark.plans.lineage import write_metadata
-
     conn = sqlite3.connect(path)
     try:
         cur = conn.cursor()
@@ -133,7 +132,8 @@ def export_mbtiles(
     """
     meta = {
         r["name"]: r["value"]
-        for r in spark.read.parquet(os.path.join(root, "metadata")).collect()
+        for r in spark.read.schema(METADATA_SCHEMA)
+        .parquet(os.path.join(root, "metadata")).collect()
     }
     fmt = meta.get("format", "png")
     jpeg = fmt != "png"

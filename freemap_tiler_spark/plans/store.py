@@ -30,6 +30,10 @@ from pyspark.sql import functions as F
 from freemap_tiler_spark.functions import cells
 from freemap_tiler_spark.operators import pyramid as P
 
+# the columns write_tiles writes (zoom is the partition column); read-backs
+# name them instead of running a footer-inference job
+STORE_SCHEMA = "x long, tms_y long, tile_data binary, tile_alpha binary, zoom int"
+
 
 def write_tiles(
     spark: SparkSession,
@@ -79,7 +83,7 @@ def append_empty_markers(spark: SparkSession, markers: DataFrame, root: str) -> 
 
 
 def read_tiles(spark: SparkSession, root: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(root, "store"))
+    return spark.read.schema(STORE_SCHEMA).parquet(os.path.join(root, "store"))
 
 
 def lookup_tile(spark: SparkSession, root: str, zoom: int, x: int, tms_y: int):

@@ -5,6 +5,17 @@ skew-join split), Arrow on (all our kernels are Arrow-batched pandas UDFs),
 local mode sized to the CPUs this process may run on, shuffle partitions
 sized to cores locally (on a real cluster this is set to 2-3x total cores
 via spark-submit conf).
+
+Local masters also start their Python workers from
+``freemap_tiler_spark.worker_daemon`` (``spark.python.daemon.module``):
+PySpark's daemon with a stat-checked zip-directory invalidation, so a task
+no longer re-reads ``pyspark.zip`` 14-16 times before its UDF runs (on
+CPython < 3.12; see that module).  In local mode the workers are children
+of this driver and import this package for every engine UDF anyway; the
+package root is put on their path.  Other masters keep PySpark's daemon: a
+cluster whose executors have the package installed can opt in with
+``--conf spark.python.daemon.module=freemap_tiler_spark.worker_daemon``.
+``extra_conf`` overrides either setting.
 """
 
 from __future__ import annotations
@@ -70,6 +81,10 @@ def get_spark(
     )
     for var in _blas_vars:
         b = b.config(f"spark.executorEnv.{var}", os.environ[var])
+    if master == "local" or master.startswith("local["):
+        pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        b = (b.config("spark.python.daemon.module", "freemap_tiler_spark.worker_daemon")
+             .config("spark.executorEnv.PYTHONPATH", pkg_root))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

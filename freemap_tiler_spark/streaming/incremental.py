@@ -24,6 +24,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -101,10 +102,15 @@ def incremental_update(
 
     out: dict[int, int] = {}
     current_dirty = new_leaves  # (cell, payload) freshly recomputed
-    prev_cache: list = []   # round cache backing THIS iteration's dirty set
+    prev_cache: list = []   # THIS iteration's dirty set and the caches behind it
     retired: list = []      # cache whose last consumer ran last iteration
     for z in range(max_zoom, min_zoom - 1, -1):
         t0 = time.time()
+        # the dirty set feeds this level's merge write and count and the
+        # next level's parent set: unpersisted, its rasterize/compose UDF
+        # would run once per consumer
+        current_dirty = current_dirty.persist(StorageLevel.MEMORY_AND_DISK)
+        prev_cache.append(current_dirty)
         final = L.level_path(root, z)
         _recover_swap(spark, final)
         stored = spark.read.parquet(final)

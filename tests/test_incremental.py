@@ -38,6 +38,33 @@ def test_incremental_equals_full_rebuild(spark, sf_dir):
         shutil.rmtree(root_full, ignore_errors=True)
 
 
+def test_incremental_composes_each_dirty_parent_once(spark, sf_dir, monkeypatch):
+    """Every level's compose UDF runs once per dirty parent: the dirty set
+    feeds the merge write, its count and the next level's parent set, and
+    none of those re-runs it.  Nothing stays cached afterwards."""
+    calls = spark.sparkContext.accumulator(0)
+    compose = P._compose_subtree
+
+    def counting_compose(tiles, k, tile_size, bands):
+        calls.add(1)
+        return compose(tiles, k, tile_size, bands)
+
+    g = _docs_geo(spark, sf_dir)
+    root = tempfile.mkdtemp(prefix="incr_once_")
+    try:
+        old = g.where("doc_id % 7 != 0")
+        leaves = P.rasterize_level(P.assign_cells(old, "lon", "lat", 5), 32)
+        L.write_pyramid(spark, leaves, root, 5, 0, 32)
+        cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+        monkeypatch.setattr(P, "_compose_subtree", counting_compose)
+        dirty = incremental_update(spark, g, g.where("doc_id % 7 = 0"), root, 5, 0, 32)
+        # one compose group per dirty cell of the level it produces
+        assert calls.value == sum(dirty[z] for z in range(5))
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_swap_commit_recovery_states(spark, tmp_path):
     """Every crash point of the two-rename swap leaves a readable level:
     live present, or complete staging, or the set-aside old version."""
