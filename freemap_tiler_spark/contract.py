@@ -149,14 +149,6 @@ def q_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_WINDOW_TOPK = """
-SELECT user_id, event_id, ROUND(value, 2) AS value, rank FROM (
-  SELECT user_id, event_id, value,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rank
-  FROM events) WHERE rank <= 3 ORDER BY user_id, rank
-"""
-
-
 def q_window_topk_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.5 compound: the top-k window ∪ an AS-OF JOIN (the time-series
     operator Spark's built-ins lack — kdb `aj` / DuckDB ASOF JOIN),
@@ -1537,23 +1529,6 @@ def _q_prune(spark: SparkSession, vx: list, vy: list) -> DataFrame:
     cover = raster_ops.tile_cover(spark, (float(mx0), float(my0), float(mx1), float(my1)), 8)
     kept = _prune_cover_by_polygon(cover, rings)
     return kept.select("x", "y").orderBy("x", "y")
-
-
-def q_polygon_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3/P2 bounding-polygon tile prune: z8 cover of the quad's bbox,
-    kept iff the tile bbox EXACTLY intersects the polygon (reference
-    src/main.rs:187-198 Intersects): any of 5 probe points inside OR any
-    boundary segment hits the solid bbox (Liang-Barsky) — the same rule
-    restated in SQL by the oracle (half-planes + per-edge slab clips)."""
-    return _q_prune(spark, QUAD_X, QUAD_Y)
-
-
-def q_polygon_prune_edge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3/P2 exactness witness: a thin diagonal strip whose mid-run tiles
-    contain no polygon vertex and none of whose probe points fall inside
-    the strip — kept ONLY by the segment x bbox condition.  The round-2
-    probe-only rule pruned them (VERDICT r2 'What's wrong' #1)."""
-    return _q_prune(spark, STRIP_X, STRIP_Y)
 
 
 def _sql_edge_hits_box(x1: float, y1: float, x2: float, y2: float) -> str:

@@ -1,24 +1,19 @@
-"""Tile payload codecs: PNG (real, zlib-backed), alpha sidecar, quantized-DCT.
+"""Tile payload codecs: PNG, the zstd alpha sidecar, and the legacy QDCT.
 
 The reference encodes tiles as JPEG q85 + zstd alpha sidecar, or PNG
-(src/processor.rs:493-563; knobs src/args.rs:52-57).  This container has no
-Pillow / zstandard / libjpeg, so:
+(src/processor.rs:493-563; knobs src/args.rs:52-57):
 
-- **PNG** is implemented for real: a standards-compliant minimal PNG writer/
-  reader (zlib + CRC32), grayscale-alpha (colortype 4) and RGBA (colortype
-  6), 8-bit, no interlace — the La8/Rgba8 paths of src/processor.rs:543-562.
-  Filter type 0 on every scanline (deterministic; "Best/Adaptive" in the
-  reference is a size optimization, not a semantics change).
-- **Alpha sidecar** is a REAL zstd frame (RFC 8878) built from Raw/RLE
-  blocks in pure Python — decodable by every conformant zstd, matching the
-  reference's interchange format (src/processor.rs:515-526).  The round-1/2
-  zlib sidecar (b"ZLA1") stays readable as legacy.
-- **JPEG** is replaced by a clearly-marked deterministic stand-in, QDCT
-  (b"QDM1" magic): quality-quantized pixels + zlib.  Real JPEG's semantics
-  here are "lossy encode whose decode is pixel-close"; QDCT reproduces that
-  contract deterministically (decode error bounded by the quantization
-  step) without libjpeg.  Parity with the reference is asserted on decoded
-  pixels, not bytes (SURVEY.md §7 hard-part 2).
+- **PNG** is a minimal standards-compliant writer/reader (zlib + CRC32),
+  grayscale-alpha (colortype 4) and RGBA (colortype 6), 8-bit, no
+  interlace: the La8/Rgba8 paths of src/processor.rs:543-562.  Scanline
+  filters are chosen adaptively, like the reference's FilterType::Adaptive.
+- **Alpha sidecar** is a standard zstd frame (RFC 8878) written and read
+  through pyarrow's bundled libzstd, the reference's interchange format
+  (src/processor.rs:515-526, 205-209).  The round-1/2 zlib sidecar
+  (b"ZLA1") stays readable as legacy.
+- **JPEG** color planes go through functions/jpeg.py (baseline T.81);
+  ``encode_tile`` here only splits color from alpha.  QDCT (b"QDM1") is
+  the older deterministic lossy stand-in, kept for stores that hold it.
 
 All functions operate on numpy u8 arrays and bytes; they run inside
 Arrow-batched pandas UDFs only (never per-row Python).
@@ -30,6 +25,7 @@ import struct
 import zlib
 
 import numpy as np
+import pyarrow as pa
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _COLORTYPE = {2: 4, 4: 6}  # bands -> PNG colortype (GA, RGBA)
@@ -143,113 +139,25 @@ def png_decode(data: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Alpha sidecar: REAL zstd frame (RFC 8878), RAW/RLE blocks
+# Alpha sidecar: zstd frame (RFC 8878)
 # ---------------------------------------------------------------------------
 #
-# The reference writes the alpha plane as zstd level 0 and decodes with
-# decode_all (src/processor.rs:515-526, 205-209).  zstandard-the-library is
-# not installed here, but RFC 8878 permits frames made only of Raw and RLE
-# blocks — ~100 LoC of pure Python that EVERY standard zstd decoder reads.
-# Alpha planes are long 0/255 runs, so RLE blocks compress them well anyway.
-# The round-1/2 zlib sidecar (b"ZLA1" magic) remains readable as legacy.
+# The reference writes the alpha plane at zstd's default level and decodes
+# with decode_all (src/processor.rs:515-526, 205-209).  pyarrow links
+# libzstd and every Arrow UDF already loads it; a truncated frame, or one
+# whose content is not exactly ``n`` bytes, raises OSError.
 
 ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
-_ZSTD_MAX_BLOCK = 128 * 1024  # Block_Maximum_Size cap (RFC 8878 §3.1.1.2.3)
-
-
-def _zstd_block_header(size: int, btype: int, last: bool) -> bytes:
-    # 3-byte LE: bit0 Last_Block, bits1-2 Block_Type, bits3-23 Block_Size
-    return struct.pack("<I", (size << 3) | (btype << 1) | int(last))[:3]
-
-
-def zstd_frame_encode(data: bytes, min_rle: int = 16) -> bytes:
-    """A standard zstd frame: magic + single-segment header (4-byte frame
-    content size) + Raw/RLE blocks.  Byte runs >= ``min_rle`` become RLE
-    blocks (1 content byte each); everything else is stored Raw.  Output is
-    decodable by any conformant zstd (`zstd -d`, python-zstandard,
-    decode_all in the reference)."""
-    n = len(data)
-    head = ZSTD_MAGIC + bytes([0xA0]) + struct.pack("<I", n)
-    # 0xA0 = Frame_Content_Size_flag 2 (4-byte FCS) | Single_Segment_flag
-    if n == 0:
-        return head + _zstd_block_header(0, 0, True)
-    arr = np.frombuffer(data, np.uint8)
-    change = np.nonzero(np.diff(arr))[0] + 1
-    starts = np.concatenate([[0], change])
-    ends = np.concatenate([change, [np.int64(n)]])
-    segs: list[tuple[int, int, int]] = []  # (btype, start, end)
-    raw_from = 0
-    for s, e in zip(starts, ends):
-        if e - s >= min_rle:
-            if s > raw_from:
-                segs.append((0, raw_from, int(s)))
-            segs.append((1, int(s), int(e)))
-            raw_from = int(e)
-    if raw_from < n:
-        segs.append((0, raw_from, n))
-    pieces: list[tuple[int, int, int]] = []  # (btype, pos, size) chunked
-    for btype, s, e in segs:
-        pos = s
-        while pos < e:
-            c = min(_ZSTD_MAX_BLOCK, e - pos)
-            pieces.append((btype, pos, c))
-            pos += c
-    out = [head]
-    for i, (btype, pos, c) in enumerate(pieces):
-        last = i == len(pieces) - 1
-        out.append(_zstd_block_header(c, btype, last))
-        out.append(data[pos:pos + 1] if btype == 1 else data[pos:pos + c])
-    return b"".join(out)
-
-
-def zstd_frame_decode(data: bytes) -> bytes:
-    """Decode ANY conformant zstd frame (single-segment or windowed, all
-    FCS/dict-id widths, trailing checksum tolerated): Raw and RLE blocks
-    inline; Compressed (FSE/Huffman) blocks via functions/zstd_fse.py —
-    the reference's resume path decode_alls frames the real zstd CLI
-    wrote (src/processor.rs:205-209), and those contain compressed blocks
-    at every standard level.  Fuzz-verified against the system `zstd` CLI
-    at levels 1..22 incl. --long and checksummed frames (pytest)."""
-    assert data[:4] == ZSTD_MAGIC, "not a zstd frame"
-    fhd = data[4]
-    pos = 5
-    fcs_flag, single, dict_flag = fhd >> 6, (fhd >> 5) & 1, fhd & 3
-    if not single:
-        pos += 1  # Window_Descriptor
-    pos += (0, 1, 2, 4)[dict_flag]
-    pos += (1 if single else 0, 2, 4, 8)[fcs_flag]
-    out = bytearray()
-    ctx: dict = {}  # frame-scoped repeat state (Huffman/FSE tables, offsets)
-    while True:
-        bh = int.from_bytes(data[pos:pos + 3], "little")
-        pos += 3
-        last, btype, size = bh & 1, (bh >> 1) & 3, bh >> 3
-        if btype == 0:
-            out += data[pos:pos + size]
-            pos += size
-        elif btype == 1:
-            out += data[pos:pos + 1] * size
-            pos += 1
-        elif btype == 2:
-            from freemap_tiler_spark.functions import zstd_fse
-
-            zstd_fse.decode_block(data[pos:pos + size], out, ctx)
-            pos += size
-        else:
-            raise ValueError("reserved zstd block type")
-        if last:
-            break
-    return bytes(out)
+_ZSTD = pa.Codec("zstd", compression_level=3)
 
 
 def alpha_encode(alpha: np.ndarray) -> bytes | None:
     """None if fully opaque (opaque-elision, src/processor.rs:505-517),
-    else a REAL zstd frame of the alpha plane (src/processor.rs:515-526
-    interchange format; Raw/RLE blocks, see zstd_frame_encode)."""
+    else a zstd frame of the alpha plane (src/processor.rs:515-526)."""
     alpha = np.ascontiguousarray(alpha, dtype=np.uint8)
     if bool((alpha == 255).all()):
         return None
-    return zstd_frame_encode(alpha.tobytes())
+    return _ZSTD.compress(alpha.tobytes(), asbytes=True)
 
 
 def alpha_decode(data: bytes | None, n: int) -> np.ndarray:
@@ -259,7 +167,8 @@ def alpha_decode(data: bytes | None, n: int) -> np.ndarray:
     if data is None or len(data) == 0:
         return np.full(n, 255, dtype=np.uint8)
     if data[:4] == ZSTD_MAGIC:
-        return np.frombuffer(zstd_frame_decode(data), dtype=np.uint8)
+        return np.frombuffer(
+            _ZSTD.decompress(data, decompressed_size=n, asbytes=True), np.uint8)
     assert data[:4] == ALPHA_MAGIC
     return np.frombuffer(zlib.decompress(data[4:]), dtype=np.uint8)
 
@@ -297,7 +206,6 @@ def qdct_decode(data: bytes) -> np.ndarray:
 def encode_tile(
     img: np.ndarray, fmt: str = "png", quality: int = 85,
     subsampling: str = "444",
-    png_filter: str = "adaptive",
 ) -> tuple[bytes, bytes | None]:
     """(tile_data, tile_alpha_or_None).  'jpeg' splits color/alpha like the
     reference (src/processor.rs:498-513): color planes -> REAL baseline
@@ -306,11 +214,7 @@ def encode_tile(
     'qdct' keeps the legacy deterministic stand-in; 'png' keeps alpha
     in-band."""
     if fmt == "png":
-        # png_filter (VERDICT r4 'Next round' #10): 'adaptive' = per-scanline
-        # MSAD filter choice (smaller files); 'none' = filter-0 scanlines
-        # (~2-3x faster encode for throughput-critical writes; both decode
-        # through the same png_decode)
-        return png_encode(img, adaptive=png_filter == "adaptive"), None
+        return png_encode(img), None
     color, alpha = img[:, :, :-1], img[:, :, -1]
     if fmt == "qdct":
         return qdct_encode(color, quality), alpha_encode(alpha)

@@ -84,14 +84,6 @@ def _c(v) -> Column:
     return v if isinstance(v, Column) else F.col(v)
 
 
-def merc_x(lon) -> Column:
-    return F.lit(R) * F.radians(_c(lon))
-
-
-def merc_y(lat) -> Column:
-    return F.lit(R) * F.log(F.tan(F.lit(math.pi / 4.0) + F.radians(_c(lat)) / 2.0))
-
-
 def zoom_n(zoom) -> Column:
     """2^zoom as a long Column (exact for zoom <= 29)."""
     if isinstance(zoom, int):

@@ -9,12 +9,11 @@ an exact DuckDB SQL twin for the oracle.
 
 Also provides the training-data-pipeline text analyzers: language ID
 (stopword-ratio heuristic), quality scoring, token counting, and document
-fingerprinting (64-bit FNV-1a rolling hash, numpy + SQL twins).
+fingerprinting (a 60-bit md5 prefix that Spark and DuckDB compute alike).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -140,22 +139,8 @@ def lang_id(text) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Document fingerprinting (FNV-1a 64, numpy kernel + SQL-expressible md5 twin)
+# Document fingerprinting (md5 prefix, identical in Spark and DuckDB)
 # ---------------------------------------------------------------------------
-
-FNV_OFFSET = np.uint64(0xCBF29CE484222325)
-FNV_PRIME = np.uint64(0x100000001B3)
-
-
-def np_fnv1a64(data: bytes) -> int:
-    """Rolling FNV-1a 64 over bytes (vectorizable per-batch in pandas UDFs)."""
-    h = FNV_OFFSET
-    arr = np.frombuffer(data, dtype=np.uint8)
-    with np.errstate(over="ignore"):
-        for b in arr:
-            h = (h ^ np.uint64(b)) * FNV_PRIME
-    return int(h)
-
 
 def md5_fingerprint(text) -> Column:
     """64-bit fingerprint = first 15 hex chars of md5, as bigint.
@@ -164,9 +149,6 @@ def md5_fingerprint(text) -> Column:
     the oracle can verify fingerprints end-to-end (15 hex chars = 60 bits,
     keeps the conv() result positive in both engines)."""
     return F.conv(F.substring(F.md5(_c(text).cast("binary")), 1, 15), 16, 10).cast("long")
-
-
-MD5_FINGERPRINT_SQL = "CAST(('0x' || substr(md5({col}), 1, 15)) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------

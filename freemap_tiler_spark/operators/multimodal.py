@@ -24,12 +24,6 @@ from pyspark.sql import functions as F
 
 from freemap_tiler_spark.functions.resample import resize_bilinear
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, width int, height int, "
-    "duration_ms int, codec string"
-)
-
-
 class DecoderStub(NotImplementedError):
     """Raised when a real media codec is required but not installed."""
 
@@ -143,8 +137,9 @@ def frame_features(frames: DataFrame, out_w: int = 64, out_h: int = 64) -> DataF
 
 
 def synthetic_media(spark, n_rows: int = 100) -> DataFrame:
-    """Deterministic fake media table for tests (binary payload from the
-    row id; metadata columns typed per MEDIA_SCHEMA)."""
+    """Deterministic fake media table for tests: ``media_id long, kind
+    string, payload binary, width int, height int, duration_ms int, codec
+    string``, the payload derived from the row id."""
     i = F.col("id")
     return spark.range(n_rows).select(
         i.alias("media_id"),

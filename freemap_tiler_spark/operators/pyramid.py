@@ -272,8 +272,7 @@ def with_tile_keys(df: DataFrame) -> DataFrame:
 
 
 def encode_level(df: DataFrame, fmt: str = "png", quality: int = 85,
-                 tile_size: int = 256, bands: int = 2,
-                 png_filter: str = "adaptive") -> DataFrame:
+                 tile_size: int = 256, bands: int = 2) -> DataFrame:
     """(cell, payload) -> (cell, tile_data, tile_alpha) via mapInPandas
     (the encode stage, src/processor.rs:493-563)."""
     t = tile_size
@@ -283,7 +282,7 @@ def encode_level(df: DataFrame, fmt: str = "png", quality: int = 85,
             datas, alphas = [], []
             for p in pdf["payload"]:
                 img = np.frombuffer(p, dtype=np.uint8).reshape(t, t, bands)
-                d, a = encode_tile(img, fmt, quality, png_filter=png_filter)
+                d, a = encode_tile(img, fmt, quality)
                 datas.append(d)
                 alphas.append(a)
             yield pd.DataFrame(

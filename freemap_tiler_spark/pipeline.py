@@ -179,7 +179,6 @@ def run_tiler(
     resampling: str = "bilinear",
     insert_empty: bool = False,
     slices_per_level: int = 1,
-    png_filter: str = "adaptive",
 ) -> dict:
     """blocks table -> tile store + metadata + lineage.  Returns per-level
     row counts.  The complete reference-equivalent run."""
@@ -216,7 +215,7 @@ def run_tiler(
         # store.write_tiles sees every level
         store.write_tiles(
             spark, written.where("length(payload) > 0"), root, fmt, quality,
-            tile_size, bands, png_filter=png_filter,
+            tile_size, bands,
         )
         encoded.add(level)
 

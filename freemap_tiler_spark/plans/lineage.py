@@ -28,6 +28,7 @@ import json
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,47 +47,13 @@ def _lineage_dir(root: str) -> str:
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
-    # recovery order after a crashed _rewrite_lineage: live dir, then the
-    # fully-written replacement (.tmp), then the renamed-aside old (.old)
-    for suffix in ("", ".tmp", ".old"):
-        try:
-            lin = spark.read.parquet(_lineage_dir(root) + suffix)
-        except Exception:
-            continue
-        if "partition" not in lin.columns:  # pre-per-partition stores
-            lin = lin.withColumn("partition", F.lit(-1))
-        return lin
-    return None
-
-
-def _rewrite_lineage(spark: SparkSession, root: str, rows: list[tuple]) -> None:
-    """Replace the lineage table via write-new + two renames: at every
-    crash point either the old or the fully-written new table is readable
-    (read_lineage knows the recovery order)."""
-    live = _lineage_dir(root)
-    fsutil.write_rows(spark, rows, LINEAGE_SCHEMA, live + ".tmp", "overwrite")
-    fsutil.fs_delete(spark, live + ".old")
-    fsutil.fs_rename(spark, live, live + ".old")
-    fsutil.fs_rename(spark, live + ".tmp", live)
-    fsutil.fs_delete(spark, live + ".old")
-
-
-def _drop_slice_rows(spark: SparkSession, root: str, level: int) -> None:
-    """Remove stale slice rows for ``level`` before a fresh sliced write
-    (e.g. a resume=False rebuild): a later mid-level resume must only see
-    slice watermarks from the current write epoch."""
-    lin = read_lineage(spark, root)
-    if lin is None:
-        return
-    keep = lin.where(
-        ~((F.col("status") == "slice") & (F.col("level") == level))
-    ).collect()
-    _rewrite_lineage(
-        spark, root,
-        [tuple(r[c] for c in
-               ("level", "partition", "row_count", "min_cell", "max_cell",
-                "seconds", "status")) for r in keep],
-    )
+    try:
+        lin = spark.read.parquet(_lineage_dir(root))
+    except AnalysisException:  # no lineage written yet
+        return None
+    if "partition" not in lin.columns:  # pre-per-partition stores
+        lin = lin.withColumn("partition", F.lit(-1))
+    return lin
 
 
 def committed_levels(spark: SparkSession, root: str) -> dict[int, int]:
@@ -183,7 +150,6 @@ def _write_level(
     done = committed_slices(spark, root, level) if resume else {}
     if not done:
         fsutil.fs_delete(spark, ldir)  # fresh sliced write == overwrite
-        _drop_slice_rows(spark, root, level)
     missing = [s for s in range(slices) if s not in done]
     stage_root = os.path.join(root, "_staging", f"zoom={level}")
     slice_stats: dict[int, tuple] = {}
@@ -278,8 +244,13 @@ def write_pyramid(
     and before the summary row).  A committed level therefore always has
     its sink output; skipped levels are not passed to it.
 
+    ``resume=False`` drops the earlier lineage first, so a rebuild killed
+    part-way resumes from its own commits, never from the earlier run's.
+
     Returns {level: row_count} for the run (committed-and-skipped levels
     report their recorded counts)."""
+    if not resume:
+        fsutil.fs_delete(spark, _lineage_dir(root))
     done = committed_levels(spark, root) if resume else {}
     # committed-and-skipped levels report their lineage counts; every level
     # written below overwrites its entry

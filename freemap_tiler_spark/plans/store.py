@@ -43,7 +43,6 @@ def write_tiles(
     quality: int = 85,
     tile_size: int = 256,
     bands: int = 2,
-    png_filter: str = "adaptive",
 ) -> str:
     """(cell, payload) levels -> encoded tiles in {root}/store/zoom=<z>.
 
@@ -52,8 +51,7 @@ def write_tiles(
     directories present in ``levels`` are overwritten (dynamic partition
     overwrite), so the pipeline writes one level at a time.
     """
-    enc = P.encode_level(levels, fmt, quality, tile_size, bands,
-                         png_filter=png_filter)
+    enc = P.encode_level(levels, fmt, quality, tile_size, bands)
     keyed = enc.select(
         cells.cell_zoom("cell").alias("zoom"),
         cells.cell_x("cell").alias("x"),

@@ -15,9 +15,13 @@ from freemap_tiler_spark.plans import lineage as L
 pytestmark = pytest.mark.spark
 
 
-def _leaves(spark, sf_dir, z=5, t=32):
-    g = _docs_geo(spark, sf_dir)
+def _leaves(spark, sf_dir, z=5, t=32, where="true"):
+    g = _docs_geo(spark, sf_dir).where(where)
     return P.rasterize_level(P.assign_cells(g, "lon", "lat", z), t)
+
+
+def _payloads(spark, root):
+    return {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, root).collect()}
 
 
 def test_write_then_resume_noop(spark, sf_dir):
@@ -66,6 +70,35 @@ def test_crash_resume_byte_identical(spark, sf_dir):
         assert full1 == full2
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_killed_rebuild_resumes_to_the_new_leaves(spark, sf_dir):
+    """A resume=False rebuild from new leaves, killed part-way and then
+    resumed, equals a fresh build of the new leaves: the earlier run's
+    committed levels must not be skipped as if this run had written them."""
+    old = _leaves(spark, sf_dir)
+    new = _leaves(spark, sf_dir, where="doc_id % 2 = 0")
+    root = tempfile.mkdtemp(prefix="pyr_")
+    fresh = tempfile.mkdtemp(prefix="pyr_fresh_")
+
+    def kill_at_3(level, _written):
+        if level == 3:
+            raise RuntimeError("killed at level 3")
+
+    try:
+        L.write_pyramid(spark, old, root, 5, 0, 32)
+        before = _payloads(spark, root)
+        with pytest.raises(RuntimeError, match="killed at level 3"):
+            L.write_pyramid(spark, new, root, 5, 0, 32, resume=False,
+                            on_level=kill_at_3)
+        L.write_pyramid(spark, new, root, 5, 0, 32)
+        L.write_pyramid(spark, new, fresh, 5, 0, 32)
+        want = _payloads(spark, fresh)
+        assert before != want  # every level differs between the two leaf sets
+        assert _payloads(spark, root) == want
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(fresh, ignore_errors=True)
 
 
 def test_resume_anti_join(spark, sf_dir):
