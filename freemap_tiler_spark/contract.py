@@ -1521,13 +1521,14 @@ def _q_prune(spark: SparkSession, vx: list, vy: list) -> DataFrame:
     import numpy as np
 
     from freemap_tiler_spark.operators import raster_ops
-    from freemap_tiler_spark.pipeline import _prune_cover_by_polygon
+    from freemap_tiler_spark.pipeline import prune_cover_by_polygon_layer
+    from freemap_tiler_spark.sources.geojson import polygon_df
 
     rings = [(np.asarray(vx, float), np.asarray(vy, float))]
     mx0, my0 = mercator.np_lonlat_to_merc(min(vx), min(vy))
     mx1, my1 = mercator.np_lonlat_to_merc(max(vx), max(vy))
     cover = raster_ops.tile_cover(spark, (float(mx0), float(my0), float(mx1), float(my1)), 8)
-    kept = _prune_cover_by_polygon(cover, rings)
+    kept = prune_cover_by_polygon_layer(cover, polygon_df(spark, rings), 8)
     return kept.select("x", "y").orderBy("x", "y")
 
 

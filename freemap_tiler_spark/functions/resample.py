@@ -7,11 +7,12 @@ These are the engine's equivalents of the reference's two resampling sites:
 - ``image::imageops::resize(FilterType::Lanczos3)`` for the 2T->T parent
   downsample in the pyramid compose (src/processor.rs:287-308).
 
-Implemented as a separable convolution: for each output coordinate the
-contributing source window and Lanczos-3 weights are precomputed per-axis,
-then applied as two matrix multiplications (vectorized over bands).  The 2:1
-case uses a fixed precomputed weight table so parents are deterministic
-across runs (golden-tested in tests/test_resample.py).
+The warp's Lanczos lives with the warp (``operators/raster_ops``); this
+module holds the kernel function and the fixed 2:1 parent downsample, a
+separable convolution whose output centers all sit at the same fractional
+phase, so one precomputed 12-tap kernel serves every row and column and
+parents are deterministic across runs (golden-tested in
+tests/test_resample.py).
 
 All kernels operate on float32/float64 internally and clip to u8 at the end,
 matching the u8 pixel model of the reference (SURVEY.md §1.2).
@@ -32,102 +33,18 @@ def lanczos_kernel(x: np.ndarray, a: int = _A) -> np.ndarray:
     return out
 
 
-def _axis_weights(src_n: int, dst_n: int, a: int = _A) -> np.ndarray:
-    """Dense (dst_n, src_n) weight matrix for 1-D Lanczos resize.
-
-    Uses pixel-center alignment: dst center j maps to src coordinate
-    (j + 0.5) * src_n / dst_n - 0.5.  When downscaling, the kernel is
-    stretched by the scale factor (standard anti-aliased resize).
-    Weights are normalized per output pixel (edge clamp).
-    """
-    scale = src_n / dst_n
-    support = a * max(scale, 1.0)
-    w = np.zeros((dst_n, src_n), dtype=np.float64)
-    for j in range(dst_n):
-        center = (j + 0.5) * scale - 0.5
-        lo = int(np.floor(center - support))
-        hi = int(np.ceil(center + support))
-        idx = np.arange(lo, hi + 1)
-        x = (idx - center) / max(scale, 1.0)
-        k = lanczos_kernel(x, a)
-        idx_c = np.clip(idx, 0, src_n - 1)
-        for i, wt in zip(idx_c, k):
-            w[j, i] += wt
-        s = w[j].sum()
-        if s != 0:
-            w[j] /= s
-    return w
-
-
-_weight_cache: dict[tuple[int, int, int], np.ndarray] = {}
-
-
-def _weights(src_n: int, dst_n: int, a: int = _A) -> np.ndarray:
-    key = (src_n, dst_n, a)
-    if key not in _weight_cache:
-        _weight_cache[key] = _axis_weights(src_n, dst_n, a)
-    return _weight_cache[key]
-
-
-_banded_cache: dict[tuple[int, int, int], tuple[np.ndarray, np.ndarray]] = {}
-
-
-def _banded_weights(src_n: int, dst_n: int, a: int = _A) -> tuple[np.ndarray, np.ndarray]:
-    """Banded form of the axis weights: (dst_n, taps) kernel + (dst_n,)
-    first source index, derived from the SAME dense table as _weights so
-    both paths share one numeric definition.
-
-    The dense (dst, src) matrix is ~95% zeros (support 6-12 of src);
-    applying it as a GEMM burns src/taps x the necessary FLOPs — measured
-    as the whole pyramid running 15x slower, flat across cores."""
-    key = (src_n, dst_n, a)
-    if key not in _banded_cache:
-        dense = _weights(src_n, dst_n, a)
-        scale = src_n / dst_n
-        support = a * max(scale, 1.0)
-        taps = int(np.ceil(2 * support)) + 2
-        lo = np.clip(
-            np.floor((np.arange(dst_n) + 0.5) * scale - 0.5 - support).astype(np.int64),
-            0, max(src_n - taps, 0),
-        )
-        band = np.zeros((dst_n, taps), dtype=np.float64)
-        for j in range(dst_n):
-            seg = dense[j, lo[j]:lo[j] + taps]
-            band[j, :len(seg)] = seg
-        _banded_cache[key] = (band, lo)
-    return _banded_cache[key]
-
-
-def _apply_axis0(arr: np.ndarray, band: np.ndarray, lo: np.ndarray) -> np.ndarray:
-    """(src, W, C) -> (dst, W, C): banded weighted sum along axis 0,
-    one strided gather-axpy per tap (taps ~ 8-14, not src)."""
-    dst_n, taps = band.shape
-    out = np.zeros((dst_n,) + arr.shape[1:], dtype=arr.dtype)
-    for k in range(taps):
-        idx = np.minimum(lo + k, arr.shape[0] - 1)
-        out += band[:, k].reshape((-1,) + (1,) * (arr.ndim - 1)) * arr[idx]
-    return out
-
-
+# the single 12-tap kernel of the 2:1 resize: every output center sits at
+# src 2j+0.5, so the fractional phase is CONSTANT and one kernel serves all
+# rows — (idx - center)/2 for idx in [2j-5, 2j+6]; float32 like the canvas,
+# so einsum does not upcast
 _DOWN2_TAPS = 12
-_down2_kernel_cache: dict[int, np.ndarray] = {}
-
-
-def _down2_kernel(a: int = _A) -> np.ndarray:
-    """The single 12-tap kernel of the 2:1 resize: every output center sits
-    at src 2j+0.5, so the fractional phase is CONSTANT and one kernel
-    serves all rows — (idx - center)/2 for idx in [2j-5, 2j+6]."""
-    if a not in _down2_kernel_cache:
-        x = (np.arange(_DOWN2_TAPS) - 5.5) / 2.0
-        k = lanczos_kernel(x, a)
-        _down2_kernel_cache[a] = k / k.sum()
-    return _down2_kernel_cache[a]
+_DOWN2_KERNEL = lanczos_kernel((np.arange(_DOWN2_TAPS) - 5.5) / 2.0)
+_DOWN2_KERNEL = (_DOWN2_KERNEL / _DOWN2_KERNEL.sum()).astype(np.float32)
 
 
 def _down2_axis0(arr: np.ndarray) -> np.ndarray:
-    """(2n, W, C) -> (n, W, C) along axis 0: edge-replicate pad (identical
-    to the dense table's clip-accumulate) + strided 12-tap reduction."""
-    kern = _down2_kernel().astype(arr.dtype, copy=False)  # avoid upcast in einsum
+    """(2n, W, C) -> (n, W, C) along axis 0: edge-replicate pad (taps past
+    an edge weigh the edge pixel) + strided 12-tap reduction."""
     n = arr.shape[0] // 2
     pad = np.concatenate([arr[:1]] * 5 + [arr] + [arr[-1:]] * 6, axis=0)
     s = pad.strides
@@ -136,43 +53,26 @@ def _down2_axis0(arr: np.ndarray) -> np.ndarray:
     )
     # optimize=False: a 2-operand contraction has exactly one path, and the
     # per-call path search doubles the call cost (measured 85us -> 41us)
-    return np.einsum("t,jt...->j...", kern, view, optimize=False)
-
-
-def resize_lanczos(img: np.ndarray, dst_h: int, dst_w: int) -> np.ndarray:
-    """Lanczos-3 resize of (H, W) or (H, W, C) u8/float array -> u8.
-
-    Separable banded convolution: rows then columns, O(HW * taps).  The
-    exact 2:1 case (the pyramid hot path) uses a single constant-phase
-    12-tap kernel over a strided view — no dense weight matrix, no per-tap
-    temporaries."""
-    squeeze = np.asarray(img).ndim == 2
-    if h_fast := (np.asarray(img).shape[0] == 2 * dst_h and np.asarray(img).shape[1] == 2 * dst_w):
-        # float32 on the 2:1 hot path: verified bit-identical u8 output on
-        # golden + randomized tiles, half the memory traffic
-        arr = np.asarray(img, dtype=np.float32)
-    else:
-        arr = np.asarray(img, dtype=np.float64)
-    if squeeze:
-        arr = arr[:, :, None]
-    h, w, c = arr.shape
-    if h_fast:
-        tmp = _down2_axis0(arr)
-        out = _down2_axis0(tmp.transpose(1, 0, 2)).transpose(1, 0, 2)
-    else:
-        by, loy = _banded_weights(h, dst_h)
-        bx, lox = _banded_weights(w, dst_w)
-        tmp = _apply_axis0(arr, by, loy)                   # (dst_h, w, c)
-        out = _apply_axis0(tmp.transpose(1, 0, 2), bx, lox).transpose(1, 0, 2)
-    out = np.clip(np.rint(out), 0, 255).astype(np.uint8)
-    return out[:, :, 0] if squeeze else out
+    return np.einsum("t,jt...->j...", _DOWN2_KERNEL, view, optimize=False)
 
 
 def downsample2x(img: np.ndarray) -> np.ndarray:
-    """Fixed 2:1 Lanczos-3 downsample (2T x 2T -> T x T), the pyramid's A1
-    resize step (src/processor.rs:287-308 semantics)."""
-    h, w = img.shape[:2]
-    return resize_lanczos(img, h // 2, w // 2)
+    """Fixed 2:1 Lanczos-3 downsample of a (2T, 2T) or (2T, 2T, C) u8
+    canvas to (T, T[, C]) u8, the pyramid's A1 resize step
+    (src/processor.rs:287-308 semantics).
+
+    Separable: rows then columns, each one constant-phase 12-tap kernel
+    over a strided view.  float32 throughout, for half the memory traffic
+    of float64; a rare pixel on a .5 boundary rounds one step apart from a
+    float64 evaluation, and the golden test pins the float32 output."""
+    arr = np.asarray(img, dtype=np.float32)
+    squeeze = arr.ndim == 2
+    if squeeze:
+        arr = arr[:, :, None]
+    tmp = _down2_axis0(arr)
+    out = _down2_axis0(tmp.transpose(1, 0, 2)).transpose(1, 0, 2)
+    out = np.clip(np.rint(out), 0, 255).astype(np.uint8)
+    return out[:, :, 0] if squeeze else out
 
 
 def resize_bilinear(img: np.ndarray, dst_h: int, dst_w: int) -> np.ndarray:

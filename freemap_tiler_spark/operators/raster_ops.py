@@ -456,17 +456,21 @@ def warp_blocks_to_tiles(
 
 def tile_cover(spark, bbox_3857: tuple, zoom: int) -> DataFrame:
     """P1: all XYZ tiles at ``zoom`` intersecting a 3857 bbox, generated as
-    a DataFrame (spark.range cross join — the distributed form of the
-    reference's bbox_covered_tiles generator, src/main.rs:173-181)."""
+    a DataFrame (one spark.range over the nx * ny grid, row-major, so the
+    plan has no join — the distributed form of the reference's
+    bbox_covered_tiles generator, src/main.rs:173-181)."""
     x0, y0, x1, y1 = bbox_3857
     span = mercator.WORLD / (1 << zoom)
     tx0 = max(int((x0 + mercator.ORIGIN) // span), 0)
     tx1 = min(int((x1 + mercator.ORIGIN - 1e-9) // span), (1 << zoom) - 1)
     ty0 = max(int((mercator.ORIGIN - y1) // span), 0)
     ty1 = min(int((mercator.ORIGIN - y0 - 1e-9) // span), (1 << zoom) - 1)
-    xs = spark.range(tx0, tx1 + 1).select(F.col("id").alias("x"))
-    ys = spark.range(ty0, ty1 + 1).select(F.col("id").alias("y"))
-    return xs.crossJoin(ys).select(
+    nx, ny = max(tx1 - tx0 + 1, 0), max(ty1 - ty0 + 1, 0)
+    grid = spark.range(nx * ny).select(
+        (F.col("id") % max(nx, 1) + tx0).alias("x"),
+        (F.expr(f"id div {max(nx, 1)}") + ty0).alias("y"),
+    )
+    return grid.select(
         cells.cell(F.lit(zoom), F.col("x"), F.col("y")).alias("cell"), "x", "y"
     )
 

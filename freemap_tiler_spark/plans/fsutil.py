@@ -1,8 +1,9 @@
 """Filesystem operations through the Hadoop FileSystem API.
 
-Driver-side file management (slice promotion, staging swaps) must work on
-whatever filesystem backs the store root — local disk in tests, HDFS/S3/
-GCS on a cluster.  ``os.rename``/``shutil`` only work for local paths, so
+Driver-side file management (existence probes, lineage resets, the
+incremental store's staging swaps) must work on whatever filesystem backs
+the store root — local disk in tests, HDFS/S3/GCS on a cluster.
+``os.rename``/``shutil`` only work for local paths, so
 every move/delete here routes through the JVM's resolved FileSystem for
 the path's scheme (the same mechanism Spark's own committers use).
 ``write_rows`` is the one way the driver writes its small tables (lineage
@@ -37,19 +38,6 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
     truth, never the rename alone)."""
     fs, s, jvm = _jfs(spark, src)
     return bool(fs.rename(s, jvm.org.apache.hadoop.fs.Path(dst)))
-
-
-def fs_mkdirs(spark: SparkSession, path: str) -> None:
-    fs, p, _ = _jfs(spark, path)
-    fs.mkdirs(p)
-
-
-def fs_listdir(spark: SparkSession, path: str) -> list[str]:
-    """Basenames of directory entries ([] if the path is absent)."""
-    fs, p, _ = _jfs(spark, path)
-    if not fs.exists(p):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(p)]
 
 
 def write_rows(

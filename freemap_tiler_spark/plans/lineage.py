@@ -12,10 +12,12 @@ a commit table — the Spark-native way (SURVEY.md §2.9):
   wall seconds, status) — the "per-partition lineage (tile-range
   watermarks + row counts)" required by BASELINE.json north_star;
 - resume = read ``_lineage``, find the deepest committed level, seed the
-  compose loop from its parquet instead of recomputing (finer than the
-  reference: it re-probes every tile, we skip whole committed levels);
-- the resume "probe" for partially-written levels is the set-at-a-time
-  **left anti-join** (J1, src/processor.rs:136-171 -> SURVEY.md §2.1 S5).
+  compose loop from its parquet instead of recomputing (the reference
+  re-probes every tile; here whole committed levels are skipped).  A level
+  killed mid-write has no commit row, so resume rewrites it whole;
+- the reference's per-tile resume probe itself is ``resume_anti_join``, a
+  set-at-a-time **left anti-join** (J1, src/processor.rs:136-171 ->
+  SURVEY.md §2.1 S5).
 
 Also writes the MBTiles-equivalent ``metadata`` table (name/format/
 minzoom/maxzoom/bounds, src/schema.rs:43-68) and ``limits`` (per-zoom
@@ -47,13 +49,13 @@ def _lineage_dir(root: str) -> str:
 
 
 def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
+    """The lineage table, read with its schema (no footer-inference job).
+    A table from before per-partition rows reads ``partition`` as NULL, so
+    it holds no committed level and the run rebuilds."""
     try:
-        lin = spark.read.parquet(_lineage_dir(root))
+        return spark.read.schema(LINEAGE_SCHEMA).parquet(_lineage_dir(root))
     except AnalysisException:  # no lineage written yet
         return None
-    if "partition" not in lin.columns:  # pre-per-partition stores
-        lin = lin.withColumn("partition", F.lit(-1))
-    return lin
 
 
 def committed_levels(spark: SparkSession, root: str) -> dict[int, int]:
@@ -95,18 +97,6 @@ def _commit_level(
     return total
 
 
-def committed_slices(spark: SparkSession, root: str, level: int) -> dict[int, dict]:
-    """Slice rows (status='slice') already committed for ``level`` —
-    the mid-level restart points."""
-    lin = read_lineage(spark, root)
-    if lin is None:
-        return {}
-    rows = lin.where(
-        (F.col("status") == "slice") & (F.col("level") == level)
-    ).collect()
-    return {int(r["partition"]): r.asDict() for r in rows}
-
-
 def level_path(root: str, level: int) -> str:
     return os.path.join(root, "tiles", f"zoom={level}")
 
@@ -123,100 +113,16 @@ def _write_level(
     level: int,
     lv_df: DataFrame,
     t0: float,
-    slices: int = 1,
-    resume: bool = True,
     on_level=None,
 ) -> int:
-    """Write one level, hand it to ``on_level`` (see write_pyramid), then
-    commit its lineage.  ``slices`` > 1 enables
-    MID-LEVEL resume: the level is written in ``pmod(cell, slices)``-keyed
-    slices, each staged to ``{root}/_staging``, promoted into the flat
-    level directory under a slice-prefixed filename (Hadoop FS renames),
-    and recorded as a lineage row (level, slice, count, cell-range
-    watermark, status='slice').  A run killed half-way resumes writing
-    ONLY the missing slices; already-promoted slices are skipped using the
-    recorded watermarks, and re-promotion of a half-moved slice is
-    idempotent (its prefix is cleared first, then deterministically
-    rewritten).  The level summary row (partition=-1) is appended last —
-    it remains the level-commit marker ``committed_levels`` keys on."""
-    ldir = level_path(root, level)
-    if slices <= 1:
-        lv_df.write.mode("overwrite").parquet(ldir)
-        written = read_level(spark, root, level)
-        if on_level is not None:
-            on_level(level, written)
-        return _commit_level(spark, root, level, written, time.time() - t0)
-
-    done = committed_slices(spark, root, level) if resume else {}
-    if not done:
-        fsutil.fs_delete(spark, ldir)  # fresh sliced write == overwrite
-    missing = [s for s in range(slices) if s not in done]
-    stage_root = os.path.join(root, "_staging", f"zoom={level}")
-    slice_stats: dict[int, tuple] = {}
-    if missing:
-        # ONE Spark job writes every missing slice, partitioned by the
-        # slice key (VERDICT r3 "What's wrong" #3: the per-slice loop
-        # re-filtered the full level N times and serialized the write;
-        # this scans the level once at any slice count).  Promotion +
-        # lineage commit stay per-slice, so kill/resume granularity is
-        # unchanged.
-        sub = lv_df.withColumn("slc", F.pmod(F.col("cell"), F.lit(slices)))
-        if len(missing) < slices:
-            sub = sub.where(F.col("slc").isin([int(s) for s in missing]))
-        sub.write.mode("overwrite").partitionBy("slc").parquet(stage_root)
-        # empty slices produce no slc= dir at all (only _SUCCESS) — they
-        # still get a 0-count lineage row below, but there is nothing to
-        # read back for stats
-        if any(f.startswith("slc=") for f in fsutil.fs_listdir(spark, stage_root)):
-            staged = spark.read.parquet(stage_root)
-            for r in (
-                staged.groupBy("slc").agg(
-                    F.count("*").alias("n"),
-                    F.min("cell").alias("mn"),
-                    F.max("cell").alias("mx"),
-                ).collect()
-            ):
-                slice_stats[int(r["slc"])] = (r["n"] or 0, r["mn"], r["mx"])
-    stats: list[tuple] = []
-    for s in range(slices):
-        if s in done:
-            r = done[s]
-            stats.append((r["row_count"], r["min_cell"], r["max_cell"]))
-            continue
-        st = slice_stats.get(s, (0, None, None))
-        stage = os.path.join(stage_root, f"slc={s}")
-        fsutil.fs_mkdirs(spark, ldir)
-        for f in fsutil.fs_listdir(spark, ldir):
-            if f.startswith(f"s{s}-"):
-                fsutil.fs_delete(spark, os.path.join(ldir, f))
-        moved = 0
-        for f in sorted(fsutil.fs_listdir(spark, stage)):
-            if f.startswith("part-") and f.endswith(".parquet"):
-                dst = os.path.join(ldir, f"s{s}-{moved:05d}.parquet")
-                if not fsutil.fs_rename(spark, os.path.join(stage, f), dst):
-                    # a failed rename (S3A copy+delete race, dest-exists)
-                    # must NOT commit the slice: leave staging intact and
-                    # no lineage row, so resume re-promotes it
-                    raise IOError(f"slice promote failed: {stage}/{f} -> {dst}")
-                moved += 1
-        fsutil.fs_delete(spark, stage)
-        row = (level, s, st[0], st[1], st[2], time.time() - t0, "slice")
-        fsutil.write_rows(spark, [row], LINEAGE_SCHEMA, _lineage_dir(root), "append")
-        stats.append(st)
-    # all slices promoted + recorded (any failure raised above, keeping
-    # staging for re-promotion) — drop the level's staging dir wholesale
-    fsutil.fs_delete(spark, stage_root)
+    """Write one level (an idempotent overwrite of its directory), hand it
+    to ``on_level`` (see write_pyramid), then commit its lineage.  A level
+    killed part-way has no summary row, so resume rewrites it whole."""
+    lv_df.write.mode("overwrite").parquet(level_path(root, level))
+    written = read_level(spark, root, level)
     if on_level is not None:
-        on_level(level, read_level(spark, root, level))
-    total = int(sum(s[0] for s in stats))
-    mns = [s[1] for s in stats if s[1] is not None]
-    mxs = [s[2] for s in stats if s[2] is not None]
-    summary = (
-        level, -1, total, min(mns, default=None), max(mxs, default=None),
-        time.time() - t0, "committed",
-    )
-    fsutil.write_rows(spark, [summary], LINEAGE_SCHEMA, _lineage_dir(root), "append")
-    return total
+        on_level(level, written)
+    return _commit_level(spark, root, level, written, time.time() - t0)
 
 
 def write_pyramid(
@@ -229,19 +135,15 @@ def write_pyramid(
     bands: int = 2,
     levels_per_shuffle: int = 3,
     resume: bool = True,
-    slices_per_level: int = 1,
     on_level=None,
 ) -> dict:
     """Build + write the pyramid level group by level group, committing
-    lineage after each; resume skips committed groups.  With
-    ``slices_per_level`` > 1, each level additionally commits in
-    cell-keyed slices so a kill mid-level resumes writing only the
-    missing slices (see _write_level).
+    lineage after each; resume skips committed levels and rewrites a
+    level killed mid-write from scratch (see _write_level).
 
     ``on_level(level, written)`` is the per-level sink: it gets each level
     this run writes, read back from its parquet, after the level lands and
-    before its lineage commit (with slices, after every slice is promoted
-    and before the summary row).  A committed level therefore always has
+    before its lineage commit.  A committed level therefore always has
     its sink output; skipped levels are not passed to it.
 
     ``resume=False`` drops the earlier lineage first, so a rebuild killed
@@ -267,10 +169,7 @@ def write_pyramid(
     else:
         z = max_zoom
         t0 = time.time()
-        out[z] = _write_level(
-            spark, root, max_zoom, leaves, t0, slices_per_level, resume,
-            on_level,
-        )
+        out[z] = _write_level(spark, root, max_zoom, leaves, t0, on_level)
         current = read_level(spark, root, max_zoom)
 
     while z > min_zoom:
@@ -287,10 +186,7 @@ def write_pyramid(
         produced = produced.persist()
         for lv in sorted(group, reverse=True):
             lv_df = produced.where(P.cells.cell_zoom("cell") == lv)
-            out[lv] = _write_level(
-                spark, root, lv, lv_df, t0, slices_per_level, resume,
-                on_level,
-            )
+            out[lv] = _write_level(spark, root, lv, lv_df, t0, on_level)
         produced.unpersist()
         for df in cache:
             df.unpersist()

@@ -29,6 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from freemap_tiler_spark.plans.fsutil import write_rows
 
+METRICS_SCHEMA = "stage string, seconds double, rows long, ts double"
+PROGRESS_SCHEMA = (
+    "stage string, pct double, completed long, total long, seconds double,"
+    " ts double"
+)
+
 
 class MetricsSink:
     def __init__(
@@ -89,25 +95,22 @@ class MetricsSink:
             write_rows(
                 self.spark,
                 [(n, s, h.get("rows"), ts) for n, s, h, ts in self._rows],
-                "stage string, seconds double, rows long, ts double",
-                self.path, "append",
+                METRICS_SCHEMA, self.path, "append",
             )
             self._rows = []
         with self._lock:
             prog, self._progress = self._progress, []
         if prog:
             write_rows(
-                self.spark, prog,
-                "stage string, pct double, completed long, total long,"
-                " seconds double, ts double",
-                self.progress_path, "append",
+                self.spark, prog, PROGRESS_SCHEMA, self.progress_path, "append"
             )
 
+    # read-backs name their schema, so none runs a footer-inference job
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(METRICS_SCHEMA).parquet(self.path)
 
     def read_progress(self) -> DataFrame:
-        return self.spark.read.parquet(self.progress_path)
+        return self.spark.read.schema(PROGRESS_SCHEMA).parquet(self.progress_path)
 
     def summary(self) -> DataFrame:
         """The reference's per-metric fold: count + total + mean seconds."""

@@ -2,14 +2,16 @@
 
 The reference parses the first Polygon of a Feature/FeatureCollection and
 reprojects 4326 -> 3857 (src/geojson.rs:9-41,44-55); the polygon then prunes
-the leaf tile set (src/main.rs:183-199).  Here: driver-side json parse (the
-layer is by definition small — it ships broadcast), returned both as plain
-ring arrays and as a polygons DataFrame compatible with operators.pip_join.
+the leaf tile set (src/main.rs:183-199).  Here: driver-side json parse of
+the one polygon, returned as plain ring arrays; ``polygon_df`` turns them
+into the one-polygon layer (operators.pip_join schema) that
+``pipeline.prune_cover_by_polygon_layer`` prunes with.
 """
 
 from __future__ import annotations
 
 import json
+import math
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -43,11 +45,20 @@ def parse_geojson_polygon(src: str | dict) -> list[tuple[np.ndarray, np.ndarray]
     return out
 
 
+# the latitude of the square Web-Mercator world's edge, atan(sinh(pi))
+MAX_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.0511287798...
+
+
 def reproject_rings_3857(
     rings: list[tuple[np.ndarray, np.ndarray]],
 ) -> list[tuple[np.ndarray, np.ndarray]]:
-    """Per-vertex 4326 -> 3857 (F10, src/geojson.rs:44-55), vectorized."""
-    return [tuple(np_lonlat_to_merc(xs, ys)) for xs, ys in rings]
+    """Per-vertex 4326 -> 3857 (F10, src/geojson.rs:44-55), vectorized.
+    Latitudes are clamped to +-MAX_LAT: a pole vertex would project to
+    +-inf (or a huge finite y), and the tile grid ends at +-MAX_LAT."""
+    return [
+        tuple(np_lonlat_to_merc(xs, np.clip(ys, -MAX_LAT, MAX_LAT)))
+        for xs, ys in rings
+    ]
 
 
 def polygon_df(

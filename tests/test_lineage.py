@@ -1,10 +1,12 @@
 """Resume semantics: kill/resume byte-identity (SURVEY §5.3d)."""
 
 import glob
+import os
 import shutil
 import tempfile
 from collections import Counter
 
+import pyarrow.parquet as pq
 import pytest
 
 from freemap_tiler_spark.contract import _docs_geo
@@ -40,21 +42,31 @@ def test_write_then_resume_noop(spark, sf_dir):
 
 
 def test_crash_resume_byte_identical(spark, sf_dir):
+    """A kill mid-level-4 resumes to the uninterrupted pyramid: level 5 is
+    committed, level 4 is half-written (its directory stays, some of its
+    part files are gone), levels 0-3 are missing, and levels 0-4 have no
+    lineage.  Resume rewrites level 4 by overwrite."""
     root = tempfile.mkdtemp(prefix="pyr_")
     try:
         leaves = _leaves(spark, sf_dir)
         L.write_pyramid(spark, leaves, root, 5, 0, 32)
         full1 = {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, root).collect()}
-        # simulate crash after level 3: drop levels 0-2 and their lineage
-        lin = L.read_lineage(spark, root).where("level >= 3").toPandas()
+        lin = L.read_lineage(spark, root).where("level = 5").collect()
         shutil.rmtree(f"{root}/_lineage")
-        spark.createDataFrame(lin).write.mode("overwrite").parquet(f"{root}/_lineage")
-        for z in range(0, 3):
+        spark.createDataFrame(lin, L.LINEAGE_SCHEMA).write.parquet(f"{root}/_lineage")
+        n4 = L.read_level(spark, root, 4).count()
+        files = glob.glob(f"{L.level_path(root, 4)}/part-*.parquet")
+        holding = sorted(f for f in files if pq.read_metadata(f).num_rows)
+        for f in holding[::2]:
+            os.remove(f)
+        assert len(holding[::2]) < len(files)  # some part files stay
+        assert L.read_level(spark, root, 4).count() < n4
+        for z in range(0, 4):
             shutil.rmtree(L.level_path(root, z))
         out = L.write_pyramid(spark, leaves, root, 5, 0, 32)
         assert set(out) == set(range(6))
-        # committed levels 3-5 were NOT recommitted (one summary row each);
-        # only the crashed levels 0-2 gained fresh commits
+        # committed level 5 was NOT recommitted (one summary row each);
+        # only the crashed levels 0-4 gained fresh commits
         lin_df = L.read_lineage(spark, root)
         summaries = lin_df.where("partition = -1").groupBy("level").count().collect()
         assert {r["level"]: r["count"] for r in summaries} == {z: 1 for z in range(6)}
@@ -107,96 +119,6 @@ def test_resume_anti_join(spark, sf_dir):
     done = pending.limit(3)
     remaining = L.resume_anti_join(pending, done)
     assert remaining.count() == pending.count() - 3
-
-
-def test_mid_level_slice_resume_byte_identical(spark, sf_dir):
-    """Kill half-way through a level: resume writes ONLY the missing
-    slices (committed slice watermarks are reused, their lineage rows are
-    not re-appended) and the store is byte-identical to an uninterrupted
-    run (VERDICT r2 next-round #4)."""
-    import os
-
-    from pyspark.sql import functions as SF
-
-    root = tempfile.mkdtemp(prefix="pyr_slice_")
-    try:
-        leaves = _leaves(spark, sf_dir)
-        L.write_pyramid(spark, leaves, root, 5, 0, 32, slices_per_level=3)
-        full1 = {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, root).collect()}
-        # simulate a crash mid-level-2: drop level 2's summary + slice 1,
-        # its slice-1 files, and everything below (levels 0-1)
-        lin = L.read_lineage(spark, root)
-        keep = [
-            tuple(r[c] for c in ("level", "partition", "row_count", "min_cell",
-                                 "max_cell", "seconds", "status"))
-            for r in lin.where(
-                "level >= 3 OR (level = 2 AND status = 'slice' AND partition IN (0, 2))"
-            ).collect()
-        ]
-        shutil.rmtree(f"{root}/_lineage")
-        spark.createDataFrame(keep, L.LINEAGE_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/_lineage")
-        ldir = L.level_path(root, 2)
-        for f in os.listdir(ldir):
-            if f.startswith("s1-"):
-                os.remove(os.path.join(ldir, f))
-        for z in (0, 1):
-            shutil.rmtree(L.level_path(root, z))
-        out = L.write_pyramid(spark, leaves, root, 5, 0, 32, slices_per_level=3)
-        assert set(out) == set(range(6))
-        lin2 = L.read_lineage(spark, root)
-        # slices 0 and 2 of level 2 kept their single original commit row
-        cnt = {int(r["partition"]): r["n"] for r in lin2.where(
-            "level = 2 AND status = 'slice'"
-        ).groupBy("partition").agg(SF.count("*").alias("n")).collect()}
-        assert cnt == {0: 1, 1: 1, 2: 1}
-        full2 = {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, root).collect()}
-        assert full1 == full2
-        # per-slice watermarks sum to each level summary
-        parts = {r["level"]: r["n"] for r in lin2.where("status = 'slice'")
-                 .groupBy("level").agg(SF.sum("row_count").alias("n")).collect()}
-        for r in lin2.where("partition = -1").collect():
-            assert parts[r["level"]] == r["row_count"]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _total_input_bytes(spark) -> int:
-    el = spark.sparkContext._jsc.sc().statusStore().executorList(False)
-    return sum(el.apply(i).totalInputBytes() for i in range(el.size()))
-
-
-def test_sliced_write_single_scan(spark, sf_dir):
-    """VERDICT r3 'Next round' #6 done-criterion: slices_per_level=4 must
-    scan the level input ONCE (one partitioned write job), not once per
-    slice — the old loop re-filtered the full level N times.  Asserted on
-    executor input bytes (load-independent, unlike wall time): the sliced
-    write may read at most 2x the flat write's bytes (stats read-back of
-    staging accounts for the slack), where the old loop read ~4x."""
-    leaves = _leaves(spark, sf_dir)
-    leaves = leaves.persist()
-    leaves.count()
-    try:
-        r1 = tempfile.mkdtemp(prefix="pyr_flat_")
-        r4 = tempfile.mkdtemp(prefix="pyr_sl4_")
-        b0 = _total_input_bytes(spark)
-        L.write_pyramid(spark, leaves, r1, 5, 0, 32, slices_per_level=1)
-        flat_bytes = _total_input_bytes(spark) - b0
-        b1 = _total_input_bytes(spark)
-        L.write_pyramid(spark, leaves, r4, 5, 0, 32, slices_per_level=4)
-        sliced_bytes = _total_input_bytes(spark) - b1
-        # identical content either way
-        a = {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, r1).collect()}
-        b = {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, r4).collect()}
-        assert a == b
-        assert sliced_bytes < flat_bytes * 2.0 + 1_000_000, (
-            f"sliced write read {sliced_bytes} bytes vs flat {flat_bytes} — "
-            f"is the level being re-scanned per slice?")
-    finally:
-        leaves.unpersist()
-        shutil.rmtree(r1, ignore_errors=True)
-        shutil.rmtree(r4, ignore_errors=True)
 
 
 def test_write_rows_one_file_per_call(spark, tmp_path):

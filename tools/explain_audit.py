@@ -6,7 +6,9 @@ Checks (written to BENCH/explain_audit.md):
   for text-only queries);
 - broadcast joins are actually broadcast (BroadcastHashJoin);
 - tile algebra stays inside WholeStageCodegen (no Python in key paths);
-- partition pruning on the zoom-partitioned store (PartitionFilters).
+- partition pruning on the zoom-partitioned store (PartitionFilters);
+- spatial joins (kNN, PIP cells, the polygon prune) and the dedup joins
+  are equi- or semi-joins on their key, never a cartesian product.
 """
 
 from __future__ import annotations
@@ -122,6 +124,14 @@ def main() -> None:
     check("pip_join_cells: rings join is NOT broadcast (layer mode)",
           "_rpid" if not bad_rings else "BROADCAST_RINGS", ["_rpid"],
           ["BROADCAST_RINGS"])
+
+    # 8c. polygon prune: the tile cover semi-joins the polygons' quadtree
+    # cell set on `cell` — the cover is one range, so the plan has no
+    # cartesian product and no nested-loop join anywhere
+    p = plan_of(contract.q_polygon_prune_both(spark, sf))
+    check("polygon_prune: cell semi-join, no cartesian", p,
+          ["Join type: LeftSemi", "Left keys [1]: [cell#"],
+          ["CartesianProduct", "BroadcastNestedLoopJoin"])
 
     # 9. embedding near-dups: bucketed self-join stays an equi-join on
     # (tbl, bkt) — the id inequality is a post-filter, not a join driver
