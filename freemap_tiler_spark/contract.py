@@ -1286,9 +1286,7 @@ def q_pyramid_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     z<=8; payload sizes rows-only (keys are oracle-checked by
     pyramid_keys/limits_per_zoom)."""
     g = _docs_geo(spark, sf_dir)
-    levels = pyramid.build_pyramid(
-        g, "lon", "lat", max_zoom=8, min_zoom=0, tile_size=64, levels_per_shuffle=3
-    )
+    levels = pyramid.build_pyramid(g, "lon", "lat", max_zoom=8, min_zoom=0, tile_size=64)
     keyed = pyramid.with_tile_keys(levels)
     return keyed.select(
         "zoom", "x", "y", "tms_y", F.length("payload").alias("payload_bytes")
@@ -1406,8 +1404,7 @@ def q_tile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     blocks = raster_blocks(spark, grid=2, width=64, height=64, bands=4)
     root = os.path.join(tempfile.gettempdir(), "freemap_contract_store")
-    run_tiler(spark, blocks, root, max_zoom=9, min_zoom=7, tile_size=32,
-              levels_per_shuffle=2, resume=False)
+    run_tiler(spark, blocks, root, max_zoom=9, min_zoom=7, tile_size=32, resume=False)
     return store.read_tiles(spark, root).select(
         "zoom", "x", "tms_y", (F.length("tile_data") > 0).alias("has_data")
     ).orderBy("zoom", "x", "tms_y")

@@ -282,10 +282,14 @@ def polygon_covering_cells(
     upgraded from a bbox meshgrid to a hierarchical quadtree cover (see
     _hier_cover_one).  Output: (poly_id, cell, interior); ``interior``
     rows are fully inside the polygon, so the join-time exact ray-cast
-    can be skipped for their matches.  ``space='merc'`` classifies with
-    rings already in EPSG:3857 (the reference's Intersects space)."""
+    can be skipped for their matches.  ``space='merc'`` reprojects each
+    polygon's lon/lat rings to EPSG:3857 inside its group and classifies
+    there (the reference's Intersects space)."""
 
     def _cover(pdf: pd.DataFrame) -> pd.DataFrame:
+        # geojson imports this module
+        from freemap_tiler_spark.sources.geojson import reproject_rings_3857
+
         pids, ccells, ints = [], [], []
         for pid, g in pdf.groupby("poly_id"):
             g = g.sort_values("ring_idx")
@@ -293,6 +297,8 @@ def polygon_covering_cells(
                 (np.asarray(x, float), np.asarray(y, float))
                 for x, y in zip(g["xs"], g["ys"])
             ]
+            if space == "merc":
+                rings = reproject_rings_3857(rings)
             c, inter = _hier_cover_one(rings, zoom, space=space)
             pids.append(np.full(len(c), pid, dtype=np.int64))
             ccells.append(c)

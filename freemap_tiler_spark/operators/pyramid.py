@@ -12,14 +12,17 @@ The Spark-first restatement of the reference's core computation
 
 2. **Pyramid compose** — instead of one shuffle per zoom level (the naive
    translation of the reference's per-tile readiness scheduler,
-   src/state.rs:30-49), tiles are grouped by their zoom-k ancestor and one
-   ``applyInPandas`` task composes the ENTIRE k-level subtree (mosaic 2x2 +
-   Lanczos-3 downsample per level, src/processor.rs:254-309 semantics).
-   One shuffle therefore advances k levels: ceil(max_zoom / k) shuffles
-   total.  k = ``levels_per_shuffle`` is the engine's analogue of the
-   reference's --warp-zoom-offset batching knob (src/args.rs:59-61) — the
-   same amortization idea applied to shuffles instead of GDAL warps.
-   At 100 TB this is the difference between 14 and 5 shuffle barriers.
+   src/state.rs:30-49), one ``compose_round`` groups tiles by their zoom-k
+   ancestor and one ``applyInPandas`` task composes the ENTIRE k-level
+   subtree (mosaic 2x2 + Lanczos-3 downsample per level,
+   src/processor.rs:254-309 semantics), so one shuffle advances k levels.
+   ``round_depth`` is the one rule that picks k: the largest subtree
+   within a per-group pixel budget, deepened for thin levels and shrunk
+   where too few groups would leave cores idle — the engine's analogue of
+   the reference's --warp-zoom-offset batching (src/args.rs:59-61),
+   applied to shuffles instead of GDAL warps.  ``compose_pyramid`` chains
+   rounds in memory; ``plans.lineage.write_pyramid`` writes and commits
+   each round's levels before the next.
 
 3. **Limits fold** — per-zoom min/max of x and TMS y
    (src/processor.rs:567-584, src/main.rs:351-364): one tiny groupBy.
@@ -144,20 +147,52 @@ def _compose_subtree(
 GROUP_PIXEL_BUDGET = 64 << 20  # bytes of child payload per compose group
 
 
-def clamp_levels_per_shuffle(
-    levels_per_shuffle: int, tile_size: int, bands: int,
-    budget: int = GROUP_PIXEL_BUDGET,
-) -> int:
-    """Largest k <= levels_per_shuffle with 4^k * tile_size^2 * bands <=
-    budget (SURVEY §7(5)): a compose group holds one zoom-k subtree IN
-    MEMORY inside a single applyInPandas task, so unclamped k at 256px
-    RGBA means 4^5 * 256KB = 270MB per group — OOM at production tile
-    size, and (worse for scaling) a parallelism ceiling of
-    tiles(from_zoom)/4^k tasks per round."""
-    k = max(1, int(levels_per_shuffle))
-    while k > 1 and (4 ** k) * tile_size * tile_size * bands > budget:
+def round_depth(levels: int, tile_size: int, bands: int, n: int | None = None,
+                min_groups: int = 0, max_k: int | None = None,
+                n_budget: int | None = None) -> int:
+    """Levels one compose round advances, at most ``levels`` (and
+    ``max_k``).  First the pixel-budget clamp: the largest k with 4^k *
+    tile_size^2 * bands <= GROUP_PIXEL_BUDGET (SURVEY §7(5)), since a
+    group holds its zoom-k subtree IN MEMORY in one task (unclamped k=5 at
+    256px RGBA is 270MB per group).  Then, given the level's tile count
+    ``n``, two corrections.  A thin level deepens: a group's real payload
+    is bounded by the level's tile count (x2 for intermediates), not the
+    4^k subtree, so a tail of tens of tiles composes down in ONE round
+    instead of a ~1 s near-empty job per k levels.  An estimated count
+    passes ``n_budget`` assuming only 2x decay per level (linear features
+    — coastlines — shrink ~2x, not the area cover's 4x).  Then a round
+    that would leave cores idle (n/4^k < ``min_groups`` groups) shrinks,
+    but only while shrinking can restore parallelism: a level too small
+    even at k=1 keeps the full k (fewest jobs)."""
+    tile_bytes = tile_size * tile_size * bands
+    k = max(1, levels if max_k is None else min(levels, max_k))
+    while k > 1 and 4 ** k * tile_bytes > GROUP_PIXEL_BUDGET:
+        k -= 1
+    if n is None:
+        return k
+    n = max(n, 1)
+    n_budget = n if n_budget is None else max(n_budget, 1)
+    while (k < levels and
+           min(4 ** (k + 1), 2 * n_budget) * tile_bytes <= GROUP_PIXEL_BUDGET):
+        k += 1
+    while k > 1 and n >> (2 * k) < min_groups <= n >> 2:
         k -= 1
     return k
+
+
+def compose_round(current: DataFrame, k: int, tile_size: int, bands: int) -> DataFrame:
+    """(cell, payload) tiles of one level -> the k levels above it, in one
+    shuffle: tiles are grouped by their zoom-k ancestor and one
+    ``applyInPandas`` task composes that ancestor's whole subtree."""
+    def _compose(pdf: pd.DataFrame) -> pd.DataFrame:
+        tiles = {int(c): np.frombuffer(p, dtype=np.uint8)
+                 for c, p in zip(pdf["cell"], pdf["payload"])}
+        produced = _compose_subtree(tiles, k, tile_size, bands)
+        return pd.DataFrame({"cell": list(produced),
+                             "payload": [v.tobytes() for v in produced.values()]})
+
+    anc = cells.ancestor(F.col("cell"), k).alias("anc")
+    return current.groupBy(anc).applyInPandas(_compose, PAYLOAD_SCHEMA)
 
 
 def compose_pyramid(
@@ -171,80 +206,37 @@ def compose_pyramid(
     approx_tiles: int | None = None,
 ) -> DataFrame:
     """(cell, payload) tiles at from_zoom -> union of ALL levels
-    [to_zoom, from_zoom].  ceil((from_zoom-to_zoom)/k) shuffles.
+    [to_zoom, from_zoom], in rounds of at most ``levels_per_shuffle``
+    levels (``round_depth``).
 
-    Each round's output is persisted (it feeds both the union and the next
-    round).  Pass ``round_cache`` (a list) to receive those DataFrames and
-    unpersist them once the returned union is materialized — otherwise one
-    cached copy per composed round leaks for the session lifetime.
+    Each round's output but the last is persisted (it feeds both the union
+    and the next round).  Pass ``round_cache`` (a list) to receive those
+    DataFrames and unpersist them once the returned union is materialized
+    — otherwise one cached copy per composed round leaks for the session
+    lifetime.
 
-    ``approx_tiles`` (tile count at ``from_zoom``, usually already known
-    from the caller's materializing count) arms PER-ROUND granularity
-    control: a round's group count is tiles/4^k, so a big k on the leaf
-    round can collapse the heaviest shuffle onto a handful of tasks (e.g.
-    16k leaves at k=5 -> ~20 groups, a parallelism ceiling far below even
-    a 32-core host, let alone a 1000-executor cluster).  With the hint,
-    each round picks the largest k whose group count still keeps every
-    core busy (>= 4x defaultParallelism); later (geometrically smaller)
-    rounds keep the full k so the tail stays at ~2 cheap jobs."""
-    def _make_compose(k: int):
-        def _compose(pdf: pd.DataFrame) -> pd.DataFrame:
-            tiles = {
-                int(c): np.frombuffer(p, dtype=np.uint8)
-                for c, p in zip(pdf["cell"], pdf["payload"])
-            }
-            produced = _compose_subtree(tiles, k, tile_size, bands)
-            return pd.DataFrame(
-                {
-                    "cell": list(produced.keys()),
-                    "payload": [v.tobytes() for v in produced.values()],
-                }
-            )
-
-        return _compose
-
-    max_k = clamp_levels_per_shuffle(levels_per_shuffle, tile_size, bands)
+    ``approx_tiles`` (tile count at ``from_zoom``, usually known from the
+    caller's materializing count) arms ``round_depth``'s deepening and
+    shrinking, with each level's count estimated as approx_tiles/4^dz
+    (approx_tiles/2^dz for the pixel budget) and >= 4 groups per core."""
     min_groups = 0
     if approx_tiles is not None:
         min_groups = 4 * level_df.sparkSession.sparkContext.defaultParallelism
-    all_levels = level_df
-    current = level_df
+    all_levels = current = level_df
     z = from_zoom
     while z > to_zoom:
-        k = min(max_k, z - to_zoom)
-        if min_groups > 0:
+        n = n_budget = None
+        if approx_tiles is not None:
             dz = from_zoom - z
-            n_here = max(approx_tiles >> (2 * dz), 1)
-            # sparse-tail deepening: a group's real payload is bounded by
-            # the level's own tile count (x2 for intermediates), not the
-            # full-subtree 4^k the static clamp assumes — so a thin tail
-            # (tens of tiles) composes straight to to_zoom in ONE round
-            # instead of burning a ~1 s near-empty Spark job per k levels.
-            # The BUDGET estimate assumes only 2x count decay per level
-            # (linear features — coastlines — shrink ~2x, not the area
-            # cover's 4x; assuming 4x here can deepen k past the OOM
-            # budget by up to 2^dz).  The 4x n_here stays for the
-            # parallelism shrink below, where underestimating is benign.
-            n_budget = max(approx_tiles >> dz, 1)
-            tile_bytes = tile_size * tile_size * bands
-            while (k < z - to_zoom and
-                   min(4 ** (k + 1), 2 * n_budget) * tile_bytes
-                   <= GROUP_PIXEL_BUDGET):
-                k += 1
-            # shrink k only while shrinking can actually restore
-            # parallelism; a level too small for min_groups even at k=1
-            # keeps the full k (tiny tail round — minimize job count)
-            while k > 1 and n_here >> (2 * k) < min_groups <= n_here >> 2:
-                k -= 1
-        anc = cells.ancestor(F.col("cell"), k).alias("anc")
+            n, n_budget = approx_tiles >> (2 * dz), approx_tiles >> dz
+        k = round_depth(z - to_zoom, tile_size, bands, n, min_groups,
+                        levels_per_shuffle, n_budget)
         # persist per round: the output feeds BOTH the union and the next
         # round — without it Spark re-runs the (expensive) UDF stage once
         # per consumer, turning 3 rounds into ~6 executions.  The FINAL
         # round's output has only one consumer (the union), so its cache
         # build is pure overhead — skip it.
-        produced = current.groupBy(anc).applyInPandas(
-            _make_compose(k), PAYLOAD_SCHEMA
-        )
+        produced = compose_round(current, k, tile_size, bands)
         if z - k > to_zoom:
             produced = produced.persist(StorageLevel.MEMORY_AND_DISK)
             # serialized: binary-payload rows cached deserialized are heap
@@ -310,8 +302,6 @@ def build_pyramid(
     max_zoom: int = 14,
     min_zoom: int = 0,
     tile_size: int = 256,
-    levels_per_shuffle: int = 3,
-    round_cache: list | None = None,
 ) -> DataFrame:
     """Full pipeline: points -> all pyramid levels as (cell, payload).
 
@@ -319,7 +309,4 @@ def build_pyramid(
     resumable sink)."""
     assigned = assign_cells(points, lon_col, lat_col, max_zoom)
     leaves = rasterize_level(assigned, tile_size)
-    return compose_pyramid(
-        leaves, max_zoom, min_zoom, tile_size, 2, levels_per_shuffle,
-        round_cache=round_cache,
-    )
+    return compose_pyramid(leaves, max_zoom, min_zoom, tile_size, 2)

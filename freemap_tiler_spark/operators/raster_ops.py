@@ -10,7 +10,11 @@ The remaining reference-parity pieces of the raster path:
   WebMercator tile grid.  Inverse mapping: for each target (3857) pixel
   center, compute the source pixel via the source CRS (EPSG:4326 supported
   offline — the inverse-mercator formula; EPSG:3857 = identity fast path,
-  src/warp.rs:78-89), then sample bilinear or Lanczos.
+  src/warp.rs:78-89; other CRSs and rotated geo-transforms through a 2-D
+  map), then sample.  As in GDAL's warper, resampling is only a choice of
+  kernel: every method (nearest, bilinear, Lanczos-3) is one 1-D tap table,
+  applied rows-then-columns on the separable megatile path and at 2-D
+  points on the generic path.
 - **Alpha gating** (P4, src/processor.rs:463-488): copy only where alpha>0
   when merging warped pieces.
 """
@@ -36,6 +40,8 @@ def validate_blocks(blocks: DataFrame) -> str:
 
 def layout_name(counts: list[int]) -> str:
     """The layout of a source whose blocks have these distinct band counts."""
+    if not counts:
+        raise ValueError("the source has no blocks: nothing to tile")
     if len(counts) != 1:
         raise ValueError(f"mixed band counts {counts}; a source has ONE layout")
     n = counts[0]
@@ -132,26 +138,45 @@ def _axis_scale(centers: np.ndarray, fallback: float) -> float:
 MEGATILE_BAND_PX = 4 << 20
 
 
-def _lanczos_apply_axis0(
-    arr: np.ndarray, centers: np.ndarray, scale: float
-) -> np.ndarray:
-    """(src, W, C) -> (m, W, C): Lanczos-3 resample along axis 0 at
-    arbitrary fractional source ``centers`` (GRA_Lanczos equivalent,
-    src/warp.rs:19).  Banded: (m, taps) kernel + gather + einsum — a dense
-    (m, src) weight GEMM here burns src/taps x the needed FLOPs.  Kernel
-    stretched by ``scale`` when downscaling; index clip == edge clamp;
-    rows normalized (clip-accumulate equals replicate-read)."""
+def _ntaps(scale: float, method: str) -> int:
+    """Taps per target pixel: nearest 1, bilinear 2, Lanczos-3 its support
+    stretched by ``scale`` when downscaling (+2 for the floors)."""
+    taps = {"nearest": 1, "bilinear": 2}
+    return taps.get(method) or int(np.ceil(6.0 * max(float(scale), 1.0))) + 2
+
+
+def _taps(
+    coords: np.ndarray, n: int, scale: float, method: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """1-D resampling taps at fractional (center-based) source ``coords``
+    on an axis of ``n`` pixels: (idx (m, taps), w (m, taps) float32).
+    Resampling is only a choice of kernel, as in GDAL's warper
+    (src/warp.rs:15-99): ``nearest``, ``bilinear`` or, for anything else,
+    Lanczos-3 (GRA_Lanczos, src/warp.rs:19), its kernel stretched by
+    ``scale`` when downscaling and its rows normalized.  Index clip ==
+    edge clamp (clip-accumulate equals replicate-read)."""
+    if method == "nearest":
+        idx = np.clip(np.rint(coords).astype(np.int64), 0, n - 1)[:, None]
+        return idx, np.ones(idx.shape, np.float32)
+    if method == "bilinear":
+        i0 = np.clip(np.floor(coords).astype(np.int64), 0, n - 1)
+        f = np.clip(coords - i0, 0.0, 1.0).astype(np.float32)
+        return np.stack([i0, np.minimum(i0 + 1, n - 1)], 1), np.stack([1 - f, f], 1)
     from freemap_tiler_spark.functions.resample import lanczos_kernel
 
     sc = max(float(scale), 1.0)
-    support = 3.0 * sc
-    lo = np.floor(centers - support).astype(np.int64)
-    taps = int(np.ceil(2.0 * support)) + 2
-    idx = lo[:, None] + np.arange(taps)[None, :]
-    k = lanczos_kernel((idx - centers[:, None]) / sc).astype(np.float32)
-    k /= k.sum(axis=1, keepdims=True)
-    g = arr[np.clip(idx, 0, arr.shape[0] - 1)]          # (m, taps, W, C)
-    return np.einsum("mt,mt...->m...", k, g, optimize=True)
+    lo = np.floor(coords - 3.0 * sc).astype(np.int64)
+    idx = lo[:, None] + np.arange(_ntaps(scale, method))[None, :]
+    w = lanczos_kernel((idx - coords[:, None]) / sc).astype(np.float32)
+    w /= w.sum(axis=1, keepdims=True)
+    return np.clip(idx, 0, n - 1), w
+
+
+def _apply_axis0(arr: np.ndarray, idx: np.ndarray, w: np.ndarray) -> np.ndarray:
+    """(src, W, C) -> (m, W, C): apply a tap table along axis 0.  Banded
+    (m, taps) gather + einsum: a dense (m, src) weight GEMM here burns
+    src/taps x the needed FLOPs."""
+    return np.einsum("mt,mt...->m...", w, arr[idx], optimize=True)
 
 
 def _inverse_map_source_px_2d(
@@ -196,38 +221,28 @@ def _jacobian_scale(m2: np.ndarray) -> float:
     return float(np.median(np.hypot(du[:-1, :], dv[:, :-1])))
 
 
-def _lanczos_sample_2d(
-    img: np.ndarray, sx2: np.ndarray, sy2: np.ndarray, scx: float, scy: float
+def _sample_2d(
+    img: np.ndarray, sx2: np.ndarray, sy2: np.ndarray, scx: float, scy: float,
+    method: str,
 ) -> np.ndarray:
-    """Lanczos-3 sampling of (H, W, C) ``img`` at arbitrary fractional
-    source points (m, n): separable tap weights applied at non-separable
-    positions — GDAL's GRA_Lanczos shape for generic warps
-    (src/warp.rs:19,22-77).  Kernel axes stay source-aligned, stretched
-    per axis by the Jacobian-derived scales.  Row-chunked so the
-    (rows, n, taps_y, taps_x, C) gather stays ~64 MB."""
-    from freemap_tiler_spark.functions.resample import lanczos_kernel
-
-    h, w = img.shape[:2]
-    scx, scy = max(float(scx), 1.0), max(float(scy), 1.0)
-    supx, supy = 3.0 * scx, 3.0 * scy
-    ntx = int(np.ceil(2.0 * supx)) + 2
-    nty = int(np.ceil(2.0 * supy)) + 2
+    """Sample (H, W, C) ``img`` at arbitrary fractional source points
+    (m, n): separable tap weights applied at non-separable positions -
+    GDAL's kernel shape for generic warps (src/warp.rs:19,22-77).  Kernel
+    axes stay source-aligned, stretched per axis by the Jacobian-derived
+    scales.  Row-chunked so the (rows, n, taps_y, taps_x, C) gather stays
+    ~64 MB."""
+    h, w, c = img.shape
     m, n = sx2.shape
-    out = np.empty((m, n, img.shape[2]), np.float32)
-    chunk = max(1, int(64e6 // max(n * ntx * nty * img.shape[2] * 4, 1)))
+    out = np.empty((m, n, c), np.float32)
+    chunk = max(1, int(64e6 // (n * _ntaps(scx, method) * _ntaps(scy, method) * c * 4)))
     for r0 in range(0, m, chunk):
-        sxs = sx2[r0:r0 + chunk]
-        sys_ = sy2[r0:r0 + chunk]
-        xi = np.floor(sxs - supx).astype(np.int64)[..., None] + np.arange(ntx)
-        yi = np.floor(sys_ - supy).astype(np.int64)[..., None] + np.arange(nty)
-        kx = lanczos_kernel((xi - sxs[..., None]) / scx).astype(np.float32)
-        ky = lanczos_kernel((yi - sys_[..., None]) / scy).astype(np.float32)
-        kx /= kx.sum(-1, keepdims=True)
-        ky /= ky.sum(-1, keepdims=True)
-        g = img[np.clip(yi, 0, h - 1)[:, :, :, None],
-                np.clip(xi, 0, w - 1)[:, :, None, :]]
-        out[r0:r0 + chunk] = np.einsum("rnt,rns,rntsc->rnc", ky, kx, g,
-                                       optimize=True)
+        rows = slice(r0, r0 + chunk)
+        xi, kx = (a.reshape(-1, n, a.shape[1])
+                  for a in _taps(sx2[rows].ravel(), w, scx, method))
+        yi, ky = (a.reshape(-1, n, a.shape[1])
+                  for a in _taps(sy2[rows].ravel(), h, scy, method))
+        g = img[yi[:, :, :, None], xi[:, :, None, :]]
+        out[rows] = np.einsum("rnt,rns,rntsc->rnc", ky, kx, g, optimize=True)
     return out
 
 
@@ -242,7 +257,8 @@ def warp_blocks_to_tiles(
     pieces from blocks straddling a tile merge alpha-gated (P4).
 
     Resampling: ``lanczos`` (the reference's default, src/warp.rs:19 /
-    src/processor.rs:389), ``bilinear``, ``nearest``.
+    src/processor.rs:389), ``bilinear``, ``nearest`` - one tap table each
+    (``_taps``), the same sampler on both paths.
 
     Shuffle shape: each block emits CROPPED pieces — only the target-pixel
     rectangle whose source centers fall inside this block, with its (px0,
@@ -300,9 +316,7 @@ def warp_blocks_to_tiles(
                            if use2d else ()):
                     for tx in range(max(tx0, 0), min(tx1, (1 << zoom) - 1) + 1):
                         # generic 2-D path (custom CRS and/or rotated
-                        # geo-transform): full inverse map per tile,
-                        # Lanczos default (src/warp.rs:19 — GRA_Lanczos
-                        # on ALL warps), bilinear/nearest selectable
+                        # geo-transform): full inverse map per tile
                         sx2, sy2 = _inverse_map_source_px_2d(
                             tx, ty, zoom, t, gt,
                             pair[1] if pair is not None else None, crs_name,
@@ -319,29 +333,10 @@ def warp_blocks_to_tiles(
                         px0, px1 = int(xi2.min()), int(xi2.max()) + 1
                         sxc2 = sx2[py0:py1, px0:px1]
                         syc2 = sy2[py0:py1, px0:px1]
-                        if resampling == "nearest":
-                            piece = img[
-                                np.clip(np.rint(syc2).astype(int), 0, h - 1),
-                                np.clip(np.rint(sxc2).astype(int), 0, w - 1),
-                            ]
-                        elif resampling == "bilinear":
-                            x0 = np.clip(np.floor(sxc2).astype(int), 0, w - 1)
-                            y0 = np.clip(np.floor(syc2).astype(int), 0, h - 1)
-                            x1 = np.clip(x0 + 1, 0, w - 1)
-                            y1 = np.clip(y0 + 1, 0, h - 1)
-                            fx2 = np.clip(sxc2 - x0, 0.0, 1.0).astype(np.float32)[:, :, None]
-                            fy2 = np.clip(syc2 - y0, 0.0, 1.0).astype(np.float32)[:, :, None]
-                            piece = (
-                                img[y0, x0] * (1 - fy2) * (1 - fx2)
-                                + img[y0, x1] * (1 - fy2) * fx2
-                                + img[y1, x0] * fy2 * (1 - fx2)
-                                + img[y1, x1] * fy2 * fx2
-                            )
-                        else:  # lanczos: anisotropic 2-D (Jacobian scales)
-                            piece = _lanczos_sample_2d(
-                                img, sxc2, syc2,
-                                _jacobian_scale(sx2), _jacobian_scale(sy2),
-                            )
+                        piece = _sample_2d(
+                            img, sxc2, syc2, _jacobian_scale(sx2),
+                            _jacobian_scale(sy2), resampling,
+                        )
                         piece = np.clip(np.rint(piece), 0, 255).astype(np.uint8)
                         piece[~inb[py0:py1, px0:px1]] = 0
                         o_c.append(int(cells.np_cell(zoom, tx, ty)))
@@ -381,30 +376,14 @@ def warp_blocks_to_tiles(
                 cols_total = gx_hi - gx_lo
                 ty_lo, ty_hi = gy_lo // t, (gy_hi - 1) // t
                 band_tiles = max(1, MEGATILE_BAND_PX // max(cols_total * t, 1))
+                x_taps = _taps(sxc, w, sx_scale, resampling)
                 for bty in range(ty_lo, ty_hi + 1, band_tiles):
                     bty1 = min(bty + band_tiles - 1, ty_hi)
                     ra_g = max(bty * t, gy_lo)
                     rb_g = min((bty1 + 1) * t, gy_hi)
                     syb = syc[ra_g - gy_lo:rb_g - gy_lo]
-                    if resampling == "nearest":
-                        mega = img[np.clip(np.rint(syb).astype(int), 0, h - 1)][
-                            :, np.clip(np.rint(sxc).astype(int), 0, w - 1)
-                        ]
-                    elif resampling == "bilinear":
-                        x0 = np.clip(np.floor(sxc).astype(int), 0, w - 1)
-                        y0 = np.clip(np.floor(syb).astype(int), 0, h - 1)
-                        x1 = np.clip(x0 + 1, 0, w - 1)
-                        y1 = np.clip(y0 + 1, 0, h - 1)
-                        fx = np.clip(sxc - x0, 0.0, 1.0).astype(np.float32)[None, :, None]
-                        fy = np.clip(syb - y0, 0.0, 1.0).astype(np.float32)[:, None, None]
-                        top, bot = img[y0], img[y1]
-                        rows_ = top * (1 - fy) + bot * fy
-                        mega = rows_[:, x0] * (1 - fx) + rows_[:, x1] * fx
-                    else:  # lanczos (banded separable, rows then cols)
-                        tmp = _lanczos_apply_axis0(img, syb, sy_scale)
-                        mega = _lanczos_apply_axis0(
-                            tmp.transpose(1, 0, 2), sxc, sx_scale
-                        ).transpose(1, 0, 2)
+                    tmp = _apply_axis0(img, *_taps(syb, h, sy_scale, resampling))
+                    mega = _apply_axis0(tmp.transpose(1, 0, 2), *x_taps).transpose(1, 0, 2)
                     mega = np.clip(np.rint(mega), 0, 255).astype(np.uint8)
                     # slice the band into per-tile pieces
                     for ty in range(bty, bty1 + 1):

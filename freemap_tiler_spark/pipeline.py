@@ -13,7 +13,8 @@ every stage is the Spark-native counterpart, same order, same semantics:
                                                   (quadtree cell cover, semi-join)
     megatile warp + nodata + slice              raster_ops.mask_nodata + warp_blocks_to_tiles
     resume probe (per-tile SELECT)              lineage.write_pyramid (skips committed levels)
-    pyramid compose (per-tile scheduler)        pyramid.compose_pyramid (k levels/shuffle)
+    pyramid compose (per-tile scheduler)        write_pyramid's rounds: pyramid.round_depth
+                                                  + compose_round (k levels/shuffle)
     encode + single-writer insert               store.write_tiles, per level inside
                                                   write_pyramid (its on_level sink)
     limits fold + metadata                      lineage.write_metadata
@@ -27,15 +28,16 @@ its lineage commit, so the pyramid is never re-read to encode.  The
 directory is missing and appends the ``insert_empty`` markers.
 
 Args mirror the reference's CLI knobs (src/args.rs:13-70): max_zoom,
-tile_size, format/quality, warp-zoom-offset -> levels_per_shuffle,
-bounding polygon, continue-file -> resume root.
+tile_size, format/quality, resampling, bounding polygon, continue-file ->
+resume root.  The reference's warp-zoom-offset batching has no knob here:
+``pyramid.round_depth`` derives each round's depth from the pixel budget
+and the level's tile count.
 """
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +45,7 @@ from freemap_tiler_spark.functions import cells
 from freemap_tiler_spark.functions.mercator import np_merc_to_lonlat
 from freemap_tiler_spark.operators import pyramid as P
 from freemap_tiler_spark.operators import raster_ops
+from freemap_tiler_spark.operators.pip_join import polygon_covering_cells
 from freemap_tiler_spark.plans import fsutil, store
 from freemap_tiler_spark.plans import lineage as L
 from freemap_tiler_spark.plans.metrics import MetricsSink
@@ -64,36 +67,11 @@ def prune_cover_by_polygon_layer(
     segment meets the solid cell rectangle.  The cover then semi-joins
     that cell set: O(perimeter cells) rows per polygon and no driver
     collect, for a one-polygon GeoJSON bound and a layer alike."""
-    from freemap_tiler_spark.operators.pip_join import polygon_covering_cells
-    from freemap_tiler_spark.sources.geojson import reproject_rings_3857
-
-    schema = "poly_id long, ring_idx int, xs array<double>, ys array<double>"
-
-    def _to_merc(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            xs_out, ys_out = [], []
-            for xs, ys in zip(pdf["xs"], pdf["ys"]):
-                (mx, my), = reproject_rings_3857(
-                    [(np.asarray(xs, float), np.asarray(ys, float))]
-                )
-                xs_out.append(mx)
-                ys_out.append(my)
-            yield pd.DataFrame(
-                {"poly_id": pdf["poly_id"], "ring_idx": pdf["ring_idx"],
-                 "xs": xs_out, "ys": ys_out}
-            )
-
-    merc_rings = polygons.select("poly_id", "ring_idx", "xs", "ys").mapInPandas(
-        _to_merc, schema
-    )
     # a cell covered by several polygons still keeps its tile once: a
     # semi-join emits each cover row at most once, so no distinct
-    kept_cells = polygon_covering_cells(merc_rings, zoom, space="merc")
-    return cover.join(kept_cells, "cell", "left_semi").select(
-        F.col("cell"), F.col("x"), F.col("y")
-    )
+    kept_cells = polygon_covering_cells(
+        polygons.select("poly_id", "ring_idx", "xs", "ys"), zoom, space="merc")
+    return cover.join(kept_cells, "cell", "left_semi")
 
 
 def run_tiler(
@@ -105,7 +83,6 @@ def run_tiler(
     tile_size: int = 256,
     fmt: str = "png",
     quality: int = 85,
-    levels_per_shuffle: int = 3,
     polygon: str | dict | DataFrame | None = None,
     resume: bool = True,
     resampling: str = "bilinear",
@@ -156,9 +133,7 @@ def run_tiler(
         # into the store as it lands, before its lineage commit
         counts = L.write_pyramid(
             spark, leaves, root, max_zoom, min_zoom, tile_size,
-            bands=bands,
-            levels_per_shuffle=levels_per_shuffle, resume=resume,
-            on_level=encode,
+            bands=bands, resume=resume, on_level=encode,
         )
         h["rows"] = sum(counts.values())
     rasterize["rows"] = counts.get(max_zoom)

@@ -133,13 +133,12 @@ def write_pyramid(
     min_zoom: int = 0,
     tile_size: int = 256,
     bands: int = 2,
-    levels_per_shuffle: int = 3,
     resume: bool = True,
     on_level=None,
 ) -> dict:
-    """Build + write the pyramid level group by level group, committing
-    lineage after each; resume skips committed levels and rewrites a
-    level killed mid-write from scratch (see _write_level).
+    """Build + write the pyramid one compose round at a time, committing
+    lineage after each level; resume skips committed levels and rewrites
+    a level killed mid-write from scratch (see _write_level).
 
     ``on_level(level, written)`` is the per-level sink: it gets each level
     this run writes, read back from its parquet, after the level lands and
@@ -161,37 +160,29 @@ def write_pyramid(
     # seed: the DEEPEST level of the contiguous committed prefix
     # [z, max_zoom] — resume restarts exactly there, never rewriting a
     # committed level (finer-grained than the reference's per-tile probe)
-    if max_zoom in done:
-        z = max_zoom
+    z = max_zoom
+    if z in done:
         while z - 1 >= min_zoom and (z - 1) in done:
             z -= 1
-        current = read_level(spark, root, z)
     else:
-        z = max_zoom
-        t0 = time.time()
-        out[z] = _write_level(spark, root, max_zoom, leaves, t0, on_level)
-        current = read_level(spark, root, max_zoom)
+        out[z] = _write_level(spark, root, z, leaves, time.time(), on_level)
 
+    # one compose round per pass: its depth comes from the exact row count
+    # level z committed; a round of k > 1 levels is persisted, since each
+    # of its levels is written from it
+    min_groups = 4 * spark.sparkContext.defaultParallelism
     while z > min_zoom:
-        k = min(levels_per_shuffle, z - min_zoom)
-        k = P.clamp_levels_per_shuffle(k, tile_size, bands)
-        k = min(k, z - min_zoom)
-        group = list(range(z - k, z))  # levels produced by this compose
+        k = P.round_depth(z - min_zoom, tile_size, bands, n=out[z],
+                          min_groups=min_groups)
         t0 = time.time()
-        cache: list = []
-        produced = P.compose_pyramid(
-            current, z, z - k, tile_size, bands, levels_per_shuffle=k,
-            round_cache=cache, approx_tiles=out.get(z),
-        ).where(P.cells.cell_zoom("cell") < z)
-        produced = produced.persist()
-        for lv in sorted(group, reverse=True):
+        produced = P.compose_round(read_level(spark, root, z), k, tile_size, bands)
+        if k > 1:
+            produced = produced.persist()
+        for lv in range(z - 1, z - k - 1, -1):
             lv_df = produced.where(P.cells.cell_zoom("cell") == lv)
             out[lv] = _write_level(spark, root, lv, lv_df, t0, on_level)
         produced.unpersist()
-        for df in cache:
-            df.unpersist()
         z -= k
-        current = read_level(spark, root, z)
     return out
 
 

@@ -102,15 +102,13 @@ def incremental_update(
 
     out: dict[int, int] = {}
     current_dirty = new_leaves  # (cell, payload) freshly recomputed
-    prev_cache: list = []   # THIS iteration's dirty set and the caches behind it
-    retired: list = []      # cache whose last consumer ran last iteration
+    retired = None  # the dirty set whose last consumer ran last iteration
     for z in range(max_zoom, min_zoom - 1, -1):
         t0 = time.time()
         # the dirty set feeds this level's merge write and count and the
         # next level's parent set: unpersisted, its rasterize/compose UDF
         # would run once per consumer
         current_dirty = current_dirty.persist(StorageLevel.MEMORY_AND_DISK)
-        prev_cache.append(current_dirty)
         final = L.level_path(root, z)
         _recover_swap(spark, final)
         stored = spark.read.parquet(final)
@@ -127,14 +125,13 @@ def incremental_update(
         _swap_commit(spark, final)
         written = spark.read.parquet(final)
         L._commit_level(spark, root, z, written, time.time() - t0)
-        # prev_cache still backs parent_cells below (it executes at the
-        # NEXT level's write) — retire it one iteration later
-        for df in retired:
-            df.unpersist()
-        retired, prev_cache = prev_cache, []
+        # this dirty set still backs parent_cells below (it executes at
+        # the NEXT level's write) — retire it one iteration later
+        if retired is not None:
+            retired.unpersist()
+        retired = current_dirty
         if z == min_zoom:
-            for df in retired:
-                df.unpersist()
+            retired.unpersist()
             break
         # recompute dirty parents from stored children (clean siblings
         # read back via semi-join on parent)
@@ -145,8 +142,5 @@ def incremental_update(
             cells.parent(level_full["cell"]) == parent_cells["pcell"],
             "left_semi",
         )
-        current_dirty = P.compose_pyramid(
-            kids, z, z - 1, tile_size, 2, levels_per_shuffle=1,
-            round_cache=prev_cache,
-        ).where(cells.cell_zoom("cell") == z - 1)
+        current_dirty = P.compose_round(kids, 1, tile_size, 2)
     return out

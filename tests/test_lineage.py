@@ -113,6 +113,42 @@ def test_killed_rebuild_resumes_to_the_new_leaves(spark, sf_dir):
         shutil.rmtree(fresh, ignore_errors=True)
 
 
+def test_write_pyramid_rounds_equal_compose_pyramid(spark, sf_dir, tmp_path,
+                                                   monkeypatch):
+    """write_pyramid's round loop (one compose_round per pass, its depth
+    from the count level z committed) writes the pyramid compose_pyramid
+    builds from the same leaves, byte for byte, over several rounds."""
+    ks = []
+    real = P.compose_round
+
+    def record(current, k, tile_size, bands):
+        ks.append(k)
+        return real(current, k, tile_size, bands)
+
+    monkeypatch.setattr(P, "compose_round", record)
+    root = str(tmp_path / "pyr")
+    L.write_pyramid(spark, _leaves(spark, sf_dir, z=12), root, 12, 3, 32)
+    assert len(ks) > 1 and sum(ks) == 9
+    monkeypatch.setattr(P, "compose_round", real)
+    composed = P.compose_pyramid(L.read_level(spark, root, 12), 12, 3, 32, 2)
+    assert _payloads(spark, root) == {
+        r.cell: bytes(r.payload) for r in composed.collect()}
+
+
+def test_empty_leaves_commit_every_level(spark, sf_dir, tmp_path):
+    """Empty leaves commit every level with 0 rows (round_depth at n = 0
+    composes them in one round), and the resume writes nothing."""
+    root = str(tmp_path / "empty")
+    leaves = _leaves(spark, sf_dir, where="false")
+    zeros = {z: 0 for z in range(6)}
+    assert L.write_pyramid(spark, leaves, root, 5, 0, 32) == zeros
+    assert L.committed_levels(spark, root) == zeros
+    written = []
+    resumed = L.write_pyramid(spark, leaves, root, 5, 0, 32,
+                              on_level=lambda z, _df: written.append(z))
+    assert resumed == zeros and written == []
+
+
 def test_resume_anti_join(spark, sf_dir):
     g = _docs_geo(spark, sf_dir)
     pending = P.assign_cells(g, "lon", "lat", 5).select("cell").distinct()

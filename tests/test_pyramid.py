@@ -54,9 +54,11 @@ def test_parent_pixels_match_numpy_oracle(spark, points):
 
 
 def test_levels_per_shuffle_invariant(spark, points):
-    """The shuffle-amortization knob must not change any byte."""
-    a = pyramid.build_pyramid(points, max_zoom=6, tile_size=32, levels_per_shuffle=1)
-    b = pyramid.build_pyramid(points, max_zoom=6, tile_size=32, levels_per_shuffle=4)
+    """compose_pyramid's shuffle-amortization bound must not change any
+    byte."""
+    leaves = pyramid.rasterize_level(pyramid.assign_cells(points, "lon", "lat", 6), 32)
+    a = pyramid.compose_pyramid(leaves, 6, 0, 32, 2, levels_per_shuffle=1)
+    b = pyramid.compose_pyramid(leaves, 6, 0, 32, 2, levels_per_shuffle=4)
     pa = {r.cell: bytes(r.payload) for r in a.collect()}
     pb = {r.cell: bytes(r.payload) for r in b.collect()}
     assert pa == pb
@@ -92,12 +94,53 @@ def test_empty_input(spark, points):
     assert pyramid.build_pyramid(empty, max_zoom=4, tile_size=32).count() == 0
 
 
-def test_clamp_levels_per_shuffle_pixel_budget():
-    """SURVEY §7(5): one compose group holds a 4^k subtree in memory —
-    k is clamped so 4^k * tile_size^2 * bands <= 64 MB."""
-    from freemap_tiler_spark.operators.pyramid import clamp_levels_per_shuffle
+# (cores, approx_tiles) -> the rounds compose_pyramid picks for
+# corpus_joins' parameters (z10 -> 0, 64 px, 2 bands,
+# levels_per_shuffle=5), recorded from the compose loop before its depth
+# rule became round_depth
+CORPUS_JOINS_ROUNDS = [
+    (1, None, [5, 5]), (1, 30, [1, 9]), (1, 500, [3, 7]), (1, 5000, [5, 5]),
+    (1, 100000, [6, 1, 3]), (1, 10**7, [6, 4]),
+    (4, None, [5, 5]), (4, 0, [10]), (4, 30, [10]), (4, 500, [2, 8]),
+    (4, 5000, [4, 6]), (4, 100000, [6, 4]), (4, 10**7, [6, 3, 1]),
+    (32, 500, [10]), (32, 5000, [2, 8]), (32, 100000, [4, 6]),
+    (32, 10**7, [6, 2, 2]),
+]
 
-    assert clamp_levels_per_shuffle(5, 256, 4) == 4   # 4^5 would be 268 MB
-    assert clamp_levels_per_shuffle(5, 64, 2) == 5    # small tiles: unclamped
-    assert clamp_levels_per_shuffle(3, 1024, 4) == 2  # 1024px RGBA: k=2 is 67MB
-    assert clamp_levels_per_shuffle(8, 4096, 4) == 1  # never below 1
+
+@pytest.mark.parametrize("cores, approx, rounds", CORPUS_JOINS_ROUNDS)
+def test_compose_pyramid_rounds(spark, monkeypatch, cores, approx, rounds):
+    """round_depth keeps compose_pyramid's rounds: the pixel-budget clamp,
+    thin-level deepening (past levels_per_shuffle) and the shrink that
+    keeps >= 4 groups per core."""
+    from unittest import mock
+
+    ks = []
+
+    def record(current, k, tile_size, bands):
+        ks.append(k)
+        return mock.MagicMock()
+
+    monkeypatch.setattr(pyramid, "compose_round", record)
+    level = mock.MagicMock()
+    level.sparkSession.sparkContext.defaultParallelism = cores
+    pyramid.compose_pyramid(level, 10, 0, 64, 2, levels_per_shuffle=5,
+                            round_cache=[], approx_tiles=approx)
+    assert ks == rounds
+
+
+def test_round_depth_pixel_budget():
+    """SURVEY §7(5): one compose group holds a 4^k subtree in memory, so k
+    is clamped to 4^k * tile_size^2 * bands <= 64 MB; given the level's
+    exact tile count (write_pyramid's rounds), a thin level deepens and a
+    round that would leave fewer than min_groups groups shrinks."""
+    rd = pyramid.round_depth
+    assert rd(5, 256, 4) == 4     # 4^5 would be 268 MB
+    assert rd(5, 64, 2) == 5      # small tiles: unclamped
+    assert rd(3, 1024, 4) == 2    # 1024px RGBA: k=2 is 67MB
+    assert rd(8, 4096, 4) == 1    # never below 1
+    assert rd(10, 256, 4, n=0, min_groups=16) == 10     # empty level: one round
+    assert rd(10, 256, 4, n=20, min_groups=16) == 10    # thin level deepens
+    assert rd(10, 256, 4, n=100, min_groups=16) == 1    # 100 / 4 >= 16 groups
+    assert rd(10, 256, 4, n=5000, min_groups=16) == 4   # 5000 / 4^4 >= 16 groups
+    assert rd(1, 256, 4, n=10**6, min_groups=16) == 1

@@ -31,6 +31,14 @@ def test_validate_blocks(spark, blocks):
         raster_ops.validate_blocks(bad)
 
 
+def test_run_tiler_on_empty_blocks_says_so(spark, blocks, tmp_path):
+    """A source with no blocks fails with that reason, not as a 'mixed
+    band counts []' layout error."""
+    with pytest.raises(ValueError, match="no blocks"):
+        run_tiler(spark, blocks.where(F.lit(False)), str(tmp_path / "empty"),
+                  max_zoom=9, min_zoom=8, tile_size=32)
+
+
 def test_block_pixels_law():
     img = block_pixels(1, 2, 8, 8, 4)
     # band k at global pixel (x,y) = (x*3 + y*5 + k*17) % 256 except alpha
@@ -156,7 +164,6 @@ def test_full_pipeline_with_resume_and_store(spark, blocks):
     try:
         counts = run_tiler(
             spark, blocks, root, max_zoom=9, min_zoom=6, tile_size=32,
-            levels_per_shuffle=2,
         )
         assert set(counts) == {9, 8, 7, 6}
         st = store.read_tiles(spark, root)
@@ -187,7 +194,6 @@ def test_full_pipeline_with_resume_and_store(spark, blocks):
         # rerun == resume: counts unchanged
         counts2 = run_tiler(
             spark, blocks, root, max_zoom=9, min_zoom=6, tile_size=32,
-            levels_per_shuffle=2,
         )
         assert counts2 == counts
     finally:
@@ -211,10 +217,12 @@ def test_run_tiler_job_budget(spark, blocks):
     sampling job re-runs the encode; the small driver-side tables are
     written as local relations, and parquet read-backs name their schema
     instead of running a footer-inference job.  48 jobs before encode was
-    fused into the level loop, 40 after, 33 with schema-given read-backs."""
+    fused into the level loop, 40 after, 33 with schema-given read-backs,
+    31 once write_pyramid composes 9 -> 6 in one round (round_depth) and
+    no longer re-reads each round's source level into the cached round."""
     sc = spark.sparkContext
     root = tempfile.mkdtemp(prefix="tiler_jobs_")
-    kw = dict(max_zoom=9, min_zoom=6, tile_size=32, levels_per_shuffle=2)
+    kw = dict(max_zoom=9, min_zoom=6, tile_size=32)
     try:
         sc.setJobGroup("run_tiler_budget", "job budget")
         run_tiler(spark, blocks, root, resume=False, **kw)
@@ -226,7 +234,7 @@ def test_run_tiler_job_budget(spark, blocks):
         sc.setLocalProperty("spark.jobGroup.id", None)
         shutil.rmtree(root, ignore_errors=True)
     jobs = sc.statusTracker().getJobIdsForGroup("run_tiler_budget")
-    assert len(jobs) <= 33, f"run_tiler ran {len(jobs)} Spark jobs"
+    assert len(jobs) <= 31, f"run_tiler ran {len(jobs)} Spark jobs"
     jobs = sc.statusTracker().getJobIdsForGroup("run_tiler_resume_budget")
     assert len(jobs) <= 8, f"the resumed run_tiler ran {len(jobs)} Spark jobs"
 
@@ -235,7 +243,7 @@ def test_resume_deepens_fused_store(spark, blocks, tmp_path):
     """A resumed run encodes only the levels it writes: running to
     min_zoom=8 and then resuming to min_zoom=6 gives the store of one fresh
     min_zoom=6 run, tile for tile and byte for byte."""
-    kw = dict(max_zoom=9, tile_size=32, levels_per_shuffle=2)
+    kw = dict(max_zoom=9, tile_size=32)
     part, fresh = str(tmp_path / "part"), str(tmp_path / "fresh")
     run_tiler(spark, blocks, part, min_zoom=8, **kw)
     run_tiler(spark, blocks, part, min_zoom=6, **kw)
@@ -249,7 +257,7 @@ def test_resume_reencodes_missing_store_level(spark, blocks, tmp_path, monkeypat
     its pyramid parquet on resume; every skipped level costs one
     existence probe of its store directory."""
     root = str(tmp_path / "root")
-    kw = dict(max_zoom=9, min_zoom=6, tile_size=32, levels_per_shuffle=2)
+    kw = dict(max_zoom=9, min_zoom=6, tile_size=32)
     run_tiler(spark, blocks, root, **kw)
     before = _store_rows(spark, root)
     shutil.rmtree(f"{root}/store/zoom=7")
@@ -335,7 +343,7 @@ def test_warp_lanczos_aligned_identity(spark):
     )
     tiles = raster_ops.warp_blocks_to_tiles(df, zoom, t, resampling="lanczos")
     rows = {
-        (int(z), int(x), int(y)): r.payload
+        (int(z[0]), int(x[0]), int(y[0])): r.payload
         for r in tiles.collect()
         for z, x, y in [cells.np_cell_zxy(np.array([r.cell]))]
     }
@@ -428,7 +436,7 @@ def test_warp_utm_source(spark):
     tiles = raster_ops.warp_blocks_to_tiles(df, zoom=11, tile_size=32)
     rows = tiles.collect()
     assert rows, "UTM block must produce tiles"
-    keys = {(int(x), int(y)) for r in rows
+    keys = {(int(x[0]), int(y[0])) for r in rows
             for _, x, y in [cells.np_cell_zxy(np.array([r.cell]))]}
     want_x, want_y = mercator.np_lonlat_to_tile(16.9, 48.6, 11)
     assert (int(want_x), int(want_y)) in keys
@@ -680,6 +688,70 @@ def test_megatile_banding_byte_identical(spark, monkeypatch):
     monkeypatch.setattr(raster_ops, "MEGATILE_BAND_PX", 32 * 64)  # ~1 tile-row
     banded = run()
     assert base == banded and len(base) > 0
+
+
+# SHA-1 of each separable warp case's sorted (cell, payload) rows, taken
+# from the per-method samplers the tap-table sampler replaced
+SEPARABLE_WARP_DIGESTS = {
+    ('EPSG:3857', 0.37, 'nearest'): '412b5cfc53d291d48e24d9add6b31e2fefb55376',
+    ('EPSG:3857', 1.3, 'nearest'): '11707b3a934044e0c7786d5002e1297cfbf5b8e7',
+    ('EPSG:3857', 2.7, 'nearest'): 'b5341599b3d8113049f0d310f5428c9ba44b8d0a',
+    ('EPSG:4326', 0.37, 'nearest'): 'dbf4fa69c50759a878d6e8651e2fc959217690d4',
+    ('EPSG:4326', 1.3, 'nearest'): '7a0c45fd571f711bf615a96241494879af696282',
+    ('EPSG:4326', 2.7, 'nearest'): 'c1f87619e69b38735e9da25ff62a23e778c6a94b',
+    ('EPSG:3857', 0.37, 'bilinear'): '252f12db3f78689c3a768306e880542dd7daeabd',
+    ('EPSG:3857', 1.3, 'bilinear'): '2a2eab51c2e611ad59c9ef8484ee9c525bdf319c',
+    ('EPSG:3857', 2.7, 'bilinear'): 'f6fa4bbccd262985f0dc81af87d2564ad4d44af3',
+    ('EPSG:4326', 0.37, 'bilinear'): 'f5b9b7a7d37bc0c9b932b213af9b1b703833c94d',
+    ('EPSG:4326', 1.3, 'bilinear'): '93639a65782181116345e13cc5d7ea2111f94df6',
+    ('EPSG:4326', 2.7, 'bilinear'): '1f4a3939ae5876e572721f71403ded9e9972ffb3',
+    ('EPSG:3857', 0.37, 'lanczos'): 'e6940da7f9fde9d494783a9cda32cbb63e22cbb8',
+    ('EPSG:3857', 1.3, 'lanczos'): '399c6e3a07abaa69fb5263560323c8a6b2e73e6a',
+    ('EPSG:3857', 2.7, 'lanczos'): 'dcadd56b12157deccb130b30e9df158fe00a8e5c',
+    ('EPSG:4326', 0.37, 'lanczos'): 'f63b1e5b932652da5b624e5caf7dcd31241eeacf',
+    ('EPSG:4326', 1.3, 'lanczos'): '9301d14b514301708077284c72dd7439dc685696',
+    ('EPSG:4326', 2.7, 'lanczos'): '75556d10a6dfcf98c1f77376e7a7ec5a99456dc3',
+}
+
+
+@pytest.mark.parametrize("method", ["nearest", "bilinear", "lanczos"])
+def test_separable_warp_matches_golden_digests(spark, method):
+    """Every resampling method on the separable megatile path (EPSG:3857
+    and EPSG:4326 sources, upsampled, near 1:1 and downsampled) gives the
+    same bytes as the per-method samplers it replaced.  Six random RGBA
+    blocks, 3 degrees apart, warp in one job; tiles are told apart by
+    longitude."""
+    import hashlib
+
+    zoom, t = 10, 32
+    unit = mercator.WORLD / (1 << zoom) / t  # one target pixel, in meters
+    cases = [(crs, s) for crs in ("EPSG:3857", "EPSG:4326") for s in (0.37, 1.3, 2.7)]
+    rows = []
+    for i, (crs, scale) in enumerate(cases):
+        lon, lat = 10.0 + 3.0 * i, 30.0
+        if crs == "EPSG:3857":
+            x0, y0 = (float(v) for v in mercator.np_lonlat_to_merc(lon, lat))
+            px = scale * unit
+        else:
+            x0, y0, px = lon, lat, scale * math.degrees(unit / mercator.R)
+        img = np.random.default_rng(i).integers(0, 256, (40, 48, 4), dtype=np.uint8)
+        rows.append((0, 0, 48, 40, 4, bytearray(img.tobytes()),
+                     [x0, px, 0.0, y0, 0.0, -px], crs, [None] * 4))
+    df = spark.createDataFrame(
+        rows,
+        "block_x int, block_y int, width int, height int, bands int, "
+        "data binary, geo_transform array<double>, crs string, nodata array<int>",
+    )
+    tiles = raster_ops.warp_blocks_to_tiles(df, zoom, t, resampling=method).collect()
+    by_case: dict = {}
+    for r in sorted(tiles, key=lambda r: r.cell):
+        _, x, _ = cells.np_cell_zxy(np.array([r.cell]))
+        i = int((x[0] * 360.0 / (1 << zoom) - 180.0 - 9.0) // 3.0)
+        by_case.setdefault(cases[i], hashlib.sha1()).update(
+            int(r.cell).to_bytes(8, "little") + bytes(r.payload))
+    got = {(crs, s, method): h.hexdigest() for (crs, s), h in by_case.items()}
+    want = {k: v for k, v in SEPARABLE_WARP_DIGESTS.items() if k[2] == method}
+    assert got == want and len(got) == 6
 
 
 def test_warp_proj_pipeline_string_equals_epsg(spark):

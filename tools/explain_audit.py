@@ -8,7 +8,8 @@ Checks (written to BENCH/explain_audit.md):
 - tile algebra stays inside WholeStageCodegen (no Python in key paths);
 - partition pruning on the zoom-partitioned store (PartitionFilters);
 - spatial joins (kNN, PIP cells, the polygon prune) and the dedup joins
-  are equi- or semi-joins on their key, never a cartesian product.
+  are equi- or semi-joins on their key, never a cartesian product;
+- one pyramid compose round is one Python group stage with no Union.
 """
 
 from __future__ import annotations
@@ -83,9 +84,24 @@ def main() -> None:
     try:
         blocks = raster_blocks(spark, grid=2, width=64, height=64, bands=4)
         run_tiler(spark, blocks, root, max_zoom=9, min_zoom=7, tile_size=32,
-                  levels_per_shuffle=2, resume=False)
+                  resume=False)
         p = plan_of(store.read_tiles(spark, root).where(F.col("zoom") == 8))
         check("store read: partition pruning on zoom", p, ["PartitionFilters"])
+
+        # 6b. one compose round over a written level is ONE Python group
+        # stage and carries no Union: the level it reads is not re-read
+        # into its output only to be filtered back out
+        from freemap_tiler_spark.operators import pyramid as P
+        from freemap_tiler_spark.plans import lineage as L
+
+        tree = (
+            P.compose_round(L.read_level(spark, root, 9), 2, 32, 4)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        n_groups = tree.count("FlatMapGroupsInPandas")
+        check("compose_round: one FlatMapGroupsInPandas, no Union",
+              tree if n_groups == 1 else f"{n_groups} x FlatMapGroupsInPandas",
+              ["FlatMapGroupsInPandas"], ["Union", " x FlatMapGroupsInPandas"])
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -127,11 +143,13 @@ def main() -> None:
 
     # 8c. polygon prune: the tile cover semi-joins the polygons' quadtree
     # cell set on `cell` — the cover is one range, so the plan has no
-    # cartesian product and no nested-loop join anywhere
+    # cartesian product and no nested-loop join anywhere; the rings are
+    # reprojected inside the cover's group function, so the only Python
+    # stage is that one (no MapInPandas before it)
     p = plan_of(contract.q_polygon_prune_both(spark, sf))
-    check("polygon_prune: cell semi-join, no cartesian", p,
+    check("polygon_prune: cell semi-join, no cartesian, no MapInPandas", p,
           ["Join type: LeftSemi", "Left keys [1]: [cell#"],
-          ["CartesianProduct", "BroadcastNestedLoopJoin"])
+          ["CartesianProduct", "BroadcastNestedLoopJoin", "MapInPandas"])
 
     # 9. embedding near-dups: bucketed self-join stays an equi-join on
     # (tbl, bkt) — the id inequality is a post-filter, not a join driver
