@@ -24,8 +24,9 @@ Two parallel implementations are provided and cross-tested:
 
 1. **Spark Column expressions** (pure JVM arithmetic — stays inside
    whole-stage codegen; no Python in the hot path), and
-2. **numpy kernels** (vectorized, used inside pandas UDFs and as the
-   independent test oracle).
+2. **numpy kernels** (vectorized, used inside pandas UDFs).  The numpy
+   forms that only the tests compare against (children, ancestor,
+   sector_in_ancestor, reversed_y) live in ``tests/oracles.py``.
 """
 
 from __future__ import annotations
@@ -96,35 +97,6 @@ def np_parent(cell) -> np.ndarray:
     z = cell >> ZOOM_SHIFT
     m = cell & MORTON_MASK
     return ((z - 1) << ZOOM_SHIFT) | (m >> 2)
-
-
-def np_ancestor(cell, n: int) -> np.ndarray:
-    cell = np.asarray(cell, dtype=np.int64)
-    z = cell >> ZOOM_SHIFT
-    m = cell & MORTON_MASK
-    return ((z - n) << ZOOM_SHIFT) | (m >> (2 * n))
-
-
-def np_children(cell) -> np.ndarray:
-    """(N,) -> (N, 4) children, row-major NW,NE,SW,SE (child i at (i&1, i>>1))."""
-    cell = np.asarray(cell, dtype=np.int64)
-    z = cell >> ZOOM_SHIFT
-    m = cell & MORTON_MASK
-    base = ((z + 1) << ZOOM_SHIFT) | (m << 2)
-    # morton low bits: x-bit at position 0, y-bit at position 1 -> child i
-    # contributes (i&1) | ((i>>1)<<1) == i. Row-major order == +0..+3.
-    return base[..., None] + np.arange(4, dtype=np.int64)
-
-
-def np_sector_in_ancestor(cell, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Grid position of a tile inside its zoom-n ancestor (src/processor.rs:453)."""
-    _, x, y = np_cell_zxy(cell)
-    mask = (1 << n) - 1
-    return x & mask, y & mask
-
-
-def np_reversed_y(z, y) -> np.ndarray:
-    return (np.int64(1) << np.asarray(z, dtype=np.int64)) - 1 - np.asarray(y, dtype=np.int64)
 
 
 # ---------------------------------------------------------------------------

@@ -1,21 +1,24 @@
-"""Pluggable CRS transforms for the warp (the reference's PROJ-pipeline
+"""CRS transforms for the warp (the reference's PROJ-pipeline
 knob, src/warp.rs:22-77 / src/main.rs:154-162, re-expressed offline).
 
 No PROJ in this container, so transforms are pure-numpy implementations of
 published projection formulas (Snyder, "Map Projections — A Working
 Manual", USGS PP 1395: Transverse Mercator eqs 8-9..8-17 and 4-20..4-32).
-A transform pair is registered by name:
-
-    register_crs("EPSG:32633", to_merc=fn, from_merc=fn)
+``lookup_crs(name)`` resolves a CRS name to a transform pair:
 
 - ``from_merc(mx, my) -> (X, Y)``: WebMercator meters -> source CRS coords
   (used per target-pixel-center during the warp's inverse mapping);
 - ``to_merc(X, Y) -> (mx, my)``: source coords -> WebMercator (used to
   bbox a block for tile-cover enumeration, with edge densification).
 
-WGS84 UTM zones (EPSG:326xx north / 327xx south) auto-register on lookup.
-Non-axis-aligned transforms make the inverse map non-separable, so the
-warp samples them through its generic 2-D path.
+Names are EPSG codes (3857/4326 native; WGS84 UTM zones EPSG:326xx north /
+327xx south and the Krovak codes 5514/8353 built on lookup) or `+proj=...`
+pipeline strings (``parse_proj_pipeline``: longlat, webmerc, utm, tmerc,
+lcc, aea, stere, krovak and multi-step pipelines).  A block names its CRS
+in its ``crs`` column, so each Python worker of the warp builds the pair
+from that string itself: a CRS outside the EPSG codes is given as its
+`+proj=...` string.  Non-axis-aligned transforms make the inverse map
+non-separable, so the warp samples them through its generic 2-D path.
 """
 
 from __future__ import annotations
@@ -110,16 +113,11 @@ def tm_inverse(
 
 
 # ---------------------------------------------------------------------------
-# registry
+# registry: the pairs built so far in this process, by normalized name
 # ---------------------------------------------------------------------------
 
 Transform = Callable[[np.ndarray, np.ndarray], tuple[np.ndarray, np.ndarray]]
 _REGISTRY: dict[str, tuple[Transform, Transform]] = {}
-
-
-def register_crs(name: str, to_merc: Transform, from_merc: Transform) -> None:
-    """Register a custom CRS pair (the PROJ-pipeline hook)."""
-    _REGISTRY[name] = (to_merc, from_merc)
 
 
 def _utm_pair(zone: int, south: bool) -> tuple[Transform, Transform]:
@@ -768,8 +766,7 @@ def parse_proj_pipeline(proj: str) -> str:
         return name
     raise ValueError(
         f"unsupported PROJ pipeline {proj!r}: longlat/webmerc/utm/tmerc/"
-        f"lcc/aea/stere/krovak/pipeline forms are parsed; "
-        f"register_crs(...) covers anything else"
+        f"lcc/aea/stere/krovak/pipeline forms are parsed"
     )
 
 
@@ -782,10 +779,9 @@ def normalize_crs(name: str) -> str:
 
 
 def lookup_crs(name: str) -> tuple[Transform, Transform] | None:
-    """Resolve a registered (or auto-registrable) CRS pair; None if the
-    warp should use its separable native paths (3857/4326).  Accepts
-    EPSG names, previously-registered custom names, and `+proj=...`
-    pipeline strings (parse_proj_pipeline)."""
+    """Resolve a CRS name to its transform pair; None if the warp should
+    use its separable native paths (3857/4326).  Accepts the EPSG codes
+    above and `+proj=...` pipeline strings (parse_proj_pipeline)."""
     name = normalize_crs(name)
     if name in ("EPSG:3857", "EPSG:4326"):
         return None
@@ -810,7 +806,8 @@ def lookup_crs(name: str) -> tuple[Transform, Transform] | None:
     if name not in _REGISTRY:
         raise ValueError(
             f"unknown CRS {name!r}: supported natively EPSG:3857/4326, "
-            f"auto EPSG:326xx/327xx (UTM), or register_crs(...) a custom pair"
+            f"auto EPSG:326xx/327xx (UTM) and EPSG:5514/8353 (Krovak); "
+            f"name any other CRS by its `+proj=...` pipeline string"
         )
     return _REGISTRY[name]
 

@@ -12,9 +12,10 @@ and tile bounds (src/main.rs:185, src/processor.rs:339-342 semantics):
     world extent = +/- pi * R = +/- 20037508.342789244 m
     tile span at zoom z = 2 * pi * R / 2^z
 
-Both numpy kernels (for pandas UDFs / oracles) and Spark Column expressions
+Both numpy kernels (for pandas UDFs) and Spark Column expressions
 (JVM-side, codegen-friendly) are provided; plus the exact SQL-text twins used
-by the DuckDB oracle so correctness is checked end-to-end.
+by the DuckDB oracle so correctness is checked end-to-end.  The numpy tile
+bounds the tests compare against live in ``tests/oracles.py``.
 """
 
 from __future__ import annotations
@@ -63,17 +64,6 @@ def np_lonlat_to_tile(lon, lat, zoom: int) -> tuple[np.ndarray, np.ndarray]:
     lat_r = np.radians(lat)
     ty = np.floor((1.0 - np.arcsinh(np.tan(lat_r)) / np.pi) / 2.0 * n).astype(np.int64)
     return np.clip(tx, 0, n - 1), np.clip(ty, 0, n - 1)
-
-
-def np_tile_bounds(z, x, y, size: float = WORLD) -> tuple[np.ndarray, ...]:
-    """EPSG:3857 (min_x, min_y, max_x, max_y) of a tile (src/main.rs:185)."""
-    z = np.asarray(z, dtype=np.int64)
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    span = size / (np.int64(1) << z).astype(np.float64)
-    min_x = x * span - size / 2.0
-    max_y = size / 2.0 - y * span
-    return min_x, max_y - span, min_x + span, max_y
 
 
 # ---------------------------------------------------------------------------

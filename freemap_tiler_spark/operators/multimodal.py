@@ -6,9 +6,10 @@ size/type accounting; the codec step is STUBBED (no image/audio libraries
 in this container) behind ``DecoderStub``:
 
 - ``decode="stub"``  -> raises NotImplementedError (the honest default)
-- ``decode="fake"``  -> deterministic fake decode (FNV-1a of the bytes
-  seeds a tiny synthetic frame) so the downstream plumbing — resize, frame
-  sampling, feature extraction, batch shapes — is exercised and tested.
+- ``decode="fake"``  -> deterministic fake decode (the payload bytes
+  tiled into a frame) so the downstream plumbing — resize, feature
+  extraction, batch shapes — is exercised by the ``media_features``
+  contract query.
 
 Swapping in Pillow/torchaudio later only replaces ``_fake_decode``.
 """
@@ -71,50 +72,6 @@ def decode_and_resize(
     return media.mapInPandas(_proc, "media_id long, frame binary, out_w int, out_h int")
 
 
-def sample_frames(
-    media: DataFrame,
-    every_ms: int = 1000,
-    max_frames: int = 8,
-    decode: str = "stub",
-) -> DataFrame:
-    """Video frame sampling: one row per sampled frame at ``every_ms``
-    spacing (capped at ``max_frames``), (media_id, frame_idx, ts_ms,
-    frame binary).  The Spark plumbing — row explosion inside one Arrow
-    batch, typed schema, deterministic frame identity — is real; the
-    decoder is the same honest stub as decode_and_resize (``fake`` =
-    FNV-tiled payload bytes salted by frame index so frames differ)."""
-    if decode == "stub":
-        raise DecoderStub(
-            "no media codec installed in this container; use decode='fake'"
-        )
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, tss, frames = [], [], [], []
-            for mid, kind, p, w, h, dur in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"],
-                pdf["width"], pdf["height"], pdf["duration_ms"],
-            ):
-                n = 1 if kind == "image" else max(
-                    1, min(int(dur) // every_ms + 1, max_frames)
-                )
-                for k in range(n):
-                    # salt the payload by frame index: deterministic,
-                    # frame-distinct fake decode
-                    img = _fake_decode(bytes([k & 0xFF]) + p, int(w), int(h))
-                    ids.append(mid)
-                    idxs.append(k)
-                    tss.append(k * every_ms)
-                    frames.append(img.tobytes())
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "ts_ms": tss, "frame": frames}
-            )
-
-    return media.mapInPandas(
-        _sample, "media_id long, frame_idx int, ts_ms int, frame binary"
-    )
-
-
 def frame_features(frames: DataFrame, out_w: int = 64, out_h: int = 64) -> DataFrame:
     """Thumbnail -> feature vector (channel means/stds + 8x8 luma grid) —
     the feature-extraction stage, fully real numpy over the fake frames."""
@@ -149,61 +106,4 @@ def synthetic_media(spark, n_rows: int = 100) -> DataFrame:
         F.lit(240).alias("height"),
         (i % 5000).cast("int").alias("duration_ms"),
         F.lit("fake").alias("codec"),
-    )
-
-
-def phash(frames: DataFrame, out_w: int = 64, out_h: int = 64) -> DataFrame:
-    """64-bit DCT perceptual hash per frame (the classic pHash recipe:
-    luma → 32×32 → 2-D DCT-II → low-frequency 8×8 block minus DC →
-    median threshold → bit string).  The DCT/threshold math is fully
-    real numpy; only the upstream frame decode is the honest stub/fake.
-
-    Returns (media_id, phash long).  Arrow-batched; one matrix DCT per
-    frame (32×32 — microseconds), no shuffle.
-    """
-    k = np.arange(32)
-    D = np.sqrt(2.0 / 32) * np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / 64)
-    D[0] /= np.sqrt(2.0)
-
-    def _ph(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs = [], []
-            for mid, fr in zip(pdf["media_id"], pdf["frame"]):
-                img = np.frombuffer(fr, np.uint8).reshape(out_h, out_w, 3)
-                luma = img.mean(axis=2)
-                # block-mean to 32x32
-                small = luma.reshape(32, out_h // 32, 32, out_w // 32).mean(axis=(1, 3))
-                dct = D @ small @ D.T
-                low = dct[:8, :8].ravel().copy()
-                low[0] = np.median(low)  # drop DC from the comparison
-                med = np.median(low)
-                bits = (low > med).astype(np.uint64)
-                h = 0
-                for b in bits:
-                    h = (h << 1) | int(b)
-                # keep in signed-long range for the Spark column
-                ids.append(mid)
-                hs.append(h - (1 << 64) if h >= (1 << 63) else h)
-            yield pd.DataFrame({"media_id": ids, "phash": hs})
-
-    return frames.mapInPandas(_ph, "media_id long, phash long")
-
-
-def phash_near_dups(
-    media: DataFrame,
-    max_hamming: int = 3,
-    out_w: int = 64,
-    out_h: int = 64,
-    decode: str = "stub",
-) -> DataFrame:
-    """Image near-dup pairs by perceptual-hash Hamming distance: decode →
-    pHash → pigeonhole-blocked Hamming join (dedup.hamming_pairs — the
-    same O(pairs-sharing-a-block) plan as SimHash, never all-pairs).
-    Returns (id_a, id_b, hamming)."""
-    from freemap_tiler_spark.operators.dedup import hamming_pairs
-
-    frames = decode_and_resize(media, out_w, out_h, decode=decode)
-    return hamming_pairs(
-        phash(frames, out_w, out_h), "phash", id_col="media_id",
-        bits=64, max_hamming=max_hamming,
     )

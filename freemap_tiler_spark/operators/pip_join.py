@@ -19,7 +19,7 @@ Two physical strategies, chosen by layer size (the engine's only
   at a chosen zoom (the generalization of the reference's
   bbox_covered_tiles enumeration, src/main.rs:173-181), points assigned to
   the same cells (pure Column math), equi-join on cell (AQE handles skew;
-  see operators.skew for explicit salting), exact ray-cast after the join.
+  ``salt=`` adds explicit hot-cell salting), exact ray-cast after the join.
 
 Geometry model: a polygon = one or more rings; ring 0 is the outer shell,
 further rings are holes.  The even-odd rule over all rings handles holes

@@ -33,11 +33,6 @@ from freemap_tiler_spark.functions import cells, mercator
 VALID_BAND_COUNTS = {1: "G", 2: "GA", 3: "RGB", 4: "RGBA"}
 
 
-def validate_blocks(blocks: DataFrame) -> str:
-    """Fail-fast band-layout validation (S2).  Returns the layout name."""
-    return layout_name([r[0] for r in blocks.select("bands").distinct().collect()])
-
-
 def layout_name(counts: list[int]) -> str:
     """The layout of a source whose blocks have these distinct band counts."""
     if not counts:
@@ -274,7 +269,7 @@ def warp_blocks_to_tiles(
                 gt = np.asarray(row.geo_transform, float)
                 w, h, nb = int(row.width), int(row.height), int(row.bands)
                 img = np.frombuffer(row.data, np.uint8).reshape(h, w, nb).astype(np.float32)
-                # generic-CRS hook (UTM auto, register_crs for custom);
+                # generic CRS (EPSG codes or a +proj=... string);
                 # None -> separable native paths (3857 identity / 4326)
                 from freemap_tiler_spark.functions import crs as crs_mod
                 # pipeline spellings (+proj=...) normalize to their EPSG

@@ -3,13 +3,12 @@
 AQE's skew-join split (enabled in session.py) handles most runtime skew;
 this module adds the *explicit* salting strategy BASELINE.json names
 ("cell-prefix repartition-join with salting for skewed hot cells") for the
-cases AQE cannot split: skewed ``groupBy`` aggregations and pandas-UDF
-groups (one Python worker per group — a 10^7-point hot cell would serialize
-through one worker without salting).
+case AQE cannot split: a skewed ``groupBy`` aggregation, made two-phase
+over (key, salt).
 
-The salt is **deterministic** (hash of a stable id column, not rand()) so
-re-runs and resume produce identical partitioning — required by the
-engine's lineage/resume semantics (SURVEY.md §2.9).
+The salt is **deterministic** (a hash of the row, not rand()) so re-runs
+and resume produce identical partitioning — required by the engine's
+lineage/resume semantics (SURVEY.md §2.9).
 """
 
 from __future__ import annotations
@@ -18,41 +17,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def skew_probe(df: DataFrame, key: str = "cell", threshold: int | None = None) -> list:
-    """Cheap count-probe: keys whose row count exceeds ``threshold``
-    (default: 20x the mean).  One small agg job on the key column only."""
-    counts = df.groupBy(key).count()
-    if threshold is None:
-        mean = counts.agg(F.avg("count")).first()[0] or 0.0
-        threshold = int(mean * 20) + 1
-    return [r[0] for r in counts.where(F.col("count") > threshold).select(key).collect()]
-
-
-def with_salt(
-    df: DataFrame,
-    key: str = "cell",
-    hot_keys: list | None = None,
-    salt_factor: int = 16,
-    id_col: str | None = None,
-    salt_col: str = "salt",
-) -> DataFrame:
-    """Add a deterministic salt column: 0 for cold keys, hash(id) %
-    salt_factor for hot keys.  Group/join on (key, salt) afterwards.
-
-    id_col: stable unique column to derive the salt from (falls back to
-    a hash over all columns — still deterministic for deterministic rows).
-    """
-    src = F.col(id_col) if id_col else F.concat_ws("\x00", *df.columns)
-    salt = F.pmod(F.xxhash64(src), F.lit(salt_factor))
-    if hot_keys is not None:
-        is_hot = F.col(key).isin(hot_keys) if hot_keys else F.lit(False)
-        salt = F.when(is_hot, salt).otherwise(F.lit(0))
-    return df.withColumn(salt_col, salt.cast("int"))
-
-
 def salted_count(df: DataFrame, key: str = "cell", salt_factor: int = 16) -> DataFrame:
     """Two-phase skew-proof count: partial count per (key, salt), then
-    final sum per key — map-side combine made explicit."""
-    salted = with_salt(df, key, hot_keys=None, salt_factor=salt_factor)
+    final sum per key — map-side combine made explicit.  The salt hashes
+    every column, so it is deterministic for deterministic rows."""
+    salt = F.pmod(F.xxhash64(F.concat_ws("\x00", *df.columns)), F.lit(salt_factor))
+    salted = df.withColumn("salt", salt.cast("int"))
     partial = salted.groupBy(key, "salt").agg(F.count("*").alias("_c"))
     return partial.groupBy(key).agg(F.sum("_c").alias("count"))

@@ -6,7 +6,7 @@ every stage is the Spark-native counterpart, same order, same semantics:
     reference                                   here
     ---------                                   ----
     GDAL open + band validation                 one agg over blocks: the
-    source bbox from geo-transform                validate_blocks check + source_bbox
+    source bbox from geo-transform                raster_ops.layout_name check + bbox
     GeoJSON polygon parse + 4326->3857          sources.geojson
     leaf tile enumeration (bbox cover)          raster_ops.tile_cover
     polygon prune (rayon filter)                prune_cover_by_polygon_layer
@@ -97,7 +97,7 @@ def run_tiler(
     m = MetricsSink(spark, root)
 
     # ONE aggregate over `blocks` gives every scalar the stages need: the
-    # band layout (validate_blocks' check) and the source bbox (at scale
+    # band layout (layout_name's check) and the source bbox (at scale
     # `blocks` is the 100 TB input, so it is scanned once here and once by
     # the warp)
     scan = blocks.agg(F.collect_set("bands"), *bbox_aggs()).first()

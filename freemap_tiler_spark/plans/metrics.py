@@ -8,10 +8,9 @@ equivalent:
   table — (stage, seconds, rows, ts) — one row per pipeline stage;
 - a LIVE progress reporter (A4): while a stage runs, a daemon thread polls
   ``sparkContext.statusTracker()`` every ``progress_interval`` seconds and
-  emits pct / completed-vs-total tasks / elapsed to stderr (the reference's
-  10-s ticker), recording the same rows to a ``_progress`` parquet table.
-  A final 100% row is always emitted at stage end, so every stage has at
-  least one progress row regardless of its duration.
+  prints pct / completed-vs-total tasks / elapsed to stderr (the reference's
+  10-s ticker).  A final 100% line is always printed at stage end, so every
+  stage reports at least once regardless of its duration.
 
 The five reference metric names map as: select->resume_probe,
 warp->rasterize, compose->compose, encode->encode, insert->write.
@@ -30,10 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from freemap_tiler_spark.plans.fsutil import write_rows
 
 METRICS_SCHEMA = "stage string, seconds double, rows long, ts double"
-PROGRESS_SCHEMA = (
-    "stage string, pct double, completed long, total long, seconds double,"
-    " ts double"
-)
 
 
 class MetricsSink:
@@ -42,11 +37,8 @@ class MetricsSink:
     ):
         self.spark = spark
         self.path = os.path.join(root, "_metrics")
-        self.progress_path = os.path.join(root, "_progress")
         self.progress_interval = progress_interval
         self._rows: list[tuple] = []
-        self._progress: list[tuple] = []
-        self._lock = threading.Lock()
 
     def _emit_progress(self, name: str, t0: float, final: bool = False) -> None:
         completed = total = 0
@@ -65,8 +57,6 @@ class MetricsSink:
             f"[tiler] {name}: {pct:.0f}% tasks {completed}/{total} {el:.1f}s",
             file=sys.stderr,
         )
-        with self._lock:
-            self._progress.append((name, pct, completed, total, el, time.time()))
 
     @contextmanager
     def stage(self, name: str, rows: int | None = None):
@@ -98,19 +88,10 @@ class MetricsSink:
                 METRICS_SCHEMA, self.path, "append",
             )
             self._rows = []
-        with self._lock:
-            prog, self._progress = self._progress, []
-        if prog:
-            write_rows(
-                self.spark, prog, PROGRESS_SCHEMA, self.progress_path, "append"
-            )
 
-    # read-backs name their schema, so none runs a footer-inference job
+    # the read-back names its schema, so it runs no footer-inference job
     def read(self) -> DataFrame:
         return self.spark.read.schema(METRICS_SCHEMA).parquet(self.path)
-
-    def read_progress(self) -> DataFrame:
-        return self.spark.read.schema(PROGRESS_SCHEMA).parquet(self.progress_path)
 
     def summary(self) -> DataFrame:
         """The reference's per-metric fold: count + total + mean seconds."""

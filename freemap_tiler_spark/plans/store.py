@@ -82,12 +82,3 @@ def append_empty_markers(spark: SparkSession, markers: DataFrame, root: str) -> 
 
 def read_tiles(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.schema(STORE_SCHEMA).parquet(os.path.join(root, "store"))
-
-
-def lookup_tile(spark: SparkSession, root: str, zoom: int, x: int, tms_y: int):
-    """Point lookup (the reference's resume SELECT, src/processor.rs:143-148)
-    — partition pruning on zoom + predicate pushdown on (x, tms_y)."""
-    df = read_tiles(spark, root)
-    return df.where(
-        (F.col("zoom") == zoom) & (F.col("x") == x) & (F.col("tms_y") == tms_y)
-    ).first()

@@ -26,7 +26,6 @@ import time
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from freemap_tiler_spark.functions import cells
 from freemap_tiler_spark.operators import pyramid as P
@@ -111,7 +110,8 @@ def incremental_update(
         current_dirty = current_dirty.persist(StorageLevel.MEMORY_AND_DISK)
         final = L.level_path(root, z)
         _recover_swap(spark, final)
-        stored = spark.read.parquet(final)
+        # each read-back names its schema: no footer-inference job
+        stored = L.read_level(spark, root, z)
         dirty_cells = current_dirty.select("cell").distinct()
         merged = stored.join(dirty_cells, "cell", "left_anti").unionByName(
             current_dirty
@@ -123,7 +123,7 @@ def incremental_update(
         merged.write.mode("overwrite").parquet(_aside_paths(final)[0])
         out[z] = dirty_cells.count()
         _swap_commit(spark, final)
-        written = spark.read.parquet(final)
+        written = L.read_level(spark, root, z)
         L._commit_level(spark, root, z, written, time.time() - t0)
         # this dirty set still backs parent_cells below (it executes at
         # the NEXT level's write) — retire it one iteration later
@@ -136,7 +136,7 @@ def incremental_update(
         # recompute dirty parents from stored children (clean siblings
         # read back via semi-join on parent)
         parent_cells = dirty_cells.select(cells.parent("cell").alias("pcell")).distinct()
-        level_full = spark.read.parquet(final)
+        level_full = L.read_level(spark, root, z)
         kids = level_full.join(
             parent_cells,
             cells.parent(level_full["cell"]) == parent_cells["pcell"],

@@ -6,6 +6,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from freemap_tiler_spark.functions import cells
+from oracles import np_ancestor, np_children, np_reversed_y, np_sector_in_ancestor
 
 
 @st.composite
@@ -30,7 +31,7 @@ def test_cell_roundtrip(t):
 def test_parent_children(t):
     z, x, y = t
     c = cells.np_cell(z, x, y)
-    ch = cells.np_children(np.array([c]))
+    ch = np_children(np.array([c]))
     assert (cells.np_parent(ch) == c).all()
     # children order law: child i at offset (i&1, i>>1) — src/processor.rs:261-262
     for i in range(4):
@@ -44,10 +45,10 @@ def test_ancestor_sector(t, n):
     z, x, y = t
     n = min(n, z)
     c = cells.np_cell(z, x, y)
-    a = cells.np_ancestor(c, n)
+    a = np_ancestor(c, n)
     az, ax, ay = cells.np_cell_zxy(a)
     assert (az, ax, ay) == (z - n, x >> n, y >> n)
-    sx, sy = cells.np_sector_in_ancestor(c, n)
+    sx, sy = np_sector_in_ancestor(c, n)
     # sector consistency: ancestor*2^n + sector == original (src/processor.rs:453)
     assert ax * (1 << n) + sx == x and ay * (1 << n) + sy == y
 
@@ -66,8 +67,8 @@ def test_morton_sort_is_zorder():
 
 
 def test_reversed_y():
-    assert cells.np_reversed_y(3, 0) == 7
-    assert cells.np_reversed_y(3, 7) == 0
+    assert np_reversed_y(3, 0) == 7
+    assert np_reversed_y(3, 7) == 0
 
 
 @pytest.mark.spark
@@ -105,7 +106,7 @@ def test_column_parity(spark):
     assert (got.cx.values == got.x.values).all()
     assert (got.cy.values == got.y.values).all()
     assert (got.cz.values == got.z.values).all()
-    assert (got.tms.values == cells.np_reversed_y(got.z.values, got.y.values)).all()
+    assert (got.tms.values == np_reversed_y(got.z.values, got.y.values)).all()
     kids = np.array([list(k) for k in got.kids])
-    assert (kids == cells.np_children(exp)).all()
+    assert (kids == np_children(exp)).all()
     assert (got.ci.values == (exp & 3)).all()

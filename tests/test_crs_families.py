@@ -173,6 +173,8 @@ def test_reference_pipeline_literal_matches_epsg8353():
 
 
 @pytest.mark.parametrize("proj", [
+    # a tmerc block reaches the warp's workers through its crs string alone
+    "+proj=tmerc +lat_0=0 +lon_0=17 +k=0.9996 +x_0=500000 +y_0=0",
     "+proj=lcc +lat_1=48 +lat_2=49.5 +lat_0=48.5 +lon_0=17",
     "+proj=aea +lat_1=48 +lat_2=49.5 +lat_0=48.5 +lon_0=17",
     "+proj=stere +lat_0=90 +lat_ts=70 +lon_0=-45",

@@ -1,7 +1,8 @@
 """Every ``freemap_tiler_spark`` import in the package, the tools, the
 benchmark and ``__spark_entry__.py`` resolves — including function-local
 imports that only run on one code path (a tool check no test executes
-still fails here if it imports a deleted module).  No Spark session."""
+still fails here if it imports a deleted module) — and every top-level
+package definition is reached from outside the tests.  No Spark session."""
 
 import ast
 import importlib
@@ -10,12 +11,22 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "freemap_tiler_spark"
+TEST_DIRS = ("tests", "perfbench/tests")
+
+# Package definitions that are entry points in their own right, so no
+# other code needs to name them.
+ENTRY_POINTS = {
+    # adopts a reference-produced .mbtiles file: the inverse of
+    # export_mbtiles, which the benchmark runs, and the way to resume a
+    # pyramid the reference started
+    "import_mbtiles",
+}
 
 
-def _sources():
+def _sources(root: Path = ROOT):
     for d in (PKG, "tools", "perfbench"):
-        yield from sorted((ROOT / d).rglob("*.py"))
-    yield ROOT / "__spark_entry__.py"
+        yield from sorted((root / d).rglob("*.py"))
+    yield root / "__spark_entry__.py"
 
 
 def _package_imports(src: str):
@@ -106,7 +117,7 @@ def _references(src: str):
 
 
 def _unreferenced(defining: dict, sources: list[str]) -> list[tuple[str, str]]:
-    used = set()
+    used = set(ENTRY_POINTS)
     for src in sources:
         used.update(_references(src))
     return sorted((mod, name) for mod, src in defining.items()
@@ -114,19 +125,59 @@ def _unreferenced(defining: dict, sources: list[str]) -> list[tuple[str, str]]:
                   if not name.startswith("__") and name not in used)
 
 
+def _dead_definitions(root: Path = ROOT) -> list[tuple[str, str]]:
+    """Package definitions that no code outside the tests names: the
+    package itself, the tools, the benchmark (less its tests) and
+    ``__spark_entry__.py``.  A name only a test calls is not reached by
+    any entry point."""
+    pkg = {str(p.relative_to(root)): p.read_text()
+           for p in sorted((root / PKG).rglob("*.py"))}
+    reaching = [p.read_text() for p in _sources(root)
+                if not any(p.is_relative_to(root / d) for d in TEST_DIRS)]
+    return _unreferenced(pkg, reaching)
+
+
 def test_every_package_definition_is_referenced():
-    """A top-level function, class or constant in the package that nothing
-    in the package, the tools, the benchmark, the tests or
-    ``__spark_entry__.py`` names is dead code: delete it."""
-    pkg = {str(p.relative_to(ROOT)): p.read_text()
-           for p in sorted((ROOT / PKG).rglob("*.py"))}
-    others = [p.read_text() for p in _sources() if not p.is_relative_to(ROOT / PKG)]
-    others += [p.read_text() for p in sorted((ROOT / "tests").rglob("*.py"))]
-    assert len(pkg) > 20
-    assert _unreferenced(pkg, list(pkg.values()) + others) == []
+    """A top-level function, class or constant in the package that only
+    the tests (or nothing) name is dead code: delete it, or move it into
+    ``tests/`` if it is a reference the tests compare against."""
+    assert len(list((ROOT / PKG).rglob("*.py"))) > 20
+    assert _dead_definitions() == []
+    # every exemption still names a package definition
+    defined = {n for p in (ROOT / PKG).rglob("*.py")
+               for n in _definitions(p.read_text())}
+    assert ENTRY_POINTS <= defined
 
 
 def test_definition_guard_flags_an_unreferenced_name():
     mod = "def used():\n    pass\n\ndef dead():\n    pass\n\nLIMIT = 3\n"
     caller = "from m import used\nused()\nprint(m.LIMIT)\n"
     assert _unreferenced({"m.py": mod}, [mod, caller]) == [("m.py", "dead")]
+
+
+def _tree(root: Path, files: dict) -> Path:
+    for rel, src in files.items():
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text(src)
+    return root
+
+
+def test_definition_guard_ignores_references_from_tests(tmp_path):
+    """A name that only ``tests/`` or ``perfbench/tests/`` call is flagged;
+    one that a tool calls is not."""
+    root = _tree(tmp_path, {
+        f"{PKG}/m.py": "def tooled():\n    pass\n\ndef tested():\n    pass\n",
+        "tools/t.py": f"from {PKG}.m import tooled\ntooled()\n",
+        "tests/test_m.py": f"from {PKG}.m import tested\ntested()\n",
+        "perfbench/tests/test_p.py": f"from {PKG} import m\nm.tested()\n",
+        "__spark_entry__.py": "",
+    })
+    assert _dead_definitions(root) == [(f"{PKG}/m.py", "tested")]
+
+
+def test_definition_guard_exempts_entry_points(tmp_path):
+    root = _tree(tmp_path, {
+        f"{PKG}/m.py": "def import_mbtiles():\n    pass\n\ndef dead():\n    pass\n",
+        "__spark_entry__.py": "",
+    })
+    assert _dead_definitions(root) == [(f"{PKG}/m.py", "dead")]

@@ -65,6 +65,28 @@ def test_incremental_composes_each_dirty_parent_once(spark, sf_dir, monkeypatch)
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_incremental_update_job_budget(spark, sf_dir):
+    """Spark jobs per incremental_update call, counted by the status
+    tracker, on the scenario of test_incremental_equals_full_rebuild.
+    Every level read-back names its schema, so none runs a
+    footer-inference job: 92-94 jobs when three reads per level inferred
+    it, 74-78 since."""
+    sc = spark.sparkContext
+    g = _docs_geo(spark, sf_dir)
+    root = tempfile.mkdtemp(prefix="incr_jobs_")
+    try:
+        leaves = P.rasterize_level(
+            P.assign_cells(g.where("doc_id % 7 != 0"), "lon", "lat", 5), 32)
+        L.write_pyramid(spark, leaves, root, 5, 0, 32)
+        sc.setJobGroup("incremental_budget", "incremental job budget")
+        incremental_update(spark, g, g.where("doc_id % 7 = 0"), root, 5, 0, 32)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        shutil.rmtree(root, ignore_errors=True)
+    jobs = sc.statusTracker().getJobIdsForGroup("incremental_budget")
+    assert len(jobs) <= 78, f"incremental_update ran {len(jobs)} Spark jobs"
+
+
 def test_swap_commit_recovery_states(spark, tmp_path):
     """Every crash point of the two-rename swap leaves a readable level:
     live present, or complete staging, or the set-aside old version."""

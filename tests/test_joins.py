@@ -75,16 +75,13 @@ def test_knn_grid_matches_brute(spark, pts):
 
 
 def test_salted_count_equals_plain(spark, pts):
-    df = pts.withColumn("cell", F.col("pid") % 5)
-    plain = {r.cell: r["count"] for r in df.groupBy("cell").count().collect()}
-    salted = {r.cell: r["count"] for r in skew.salted_count(df, "cell").collect()}
-    assert plain == salted
-
-
-def test_skew_probe_finds_hot(spark, pts):
-    skewed = pts.withColumn("cell", F.when(F.col("pid") % 10 < 8, 99).otherwise(F.col("pid")))
-    hot = skew.skew_probe(skewed, "cell")
-    assert hot == [99]
+    # a uniform key, and one hot key holding 80% of the rows
+    for key in (F.col("pid") % 5,
+                F.when(F.col("pid") % 10 < 8, 99).otherwise(F.col("pid"))):
+        df = pts.withColumn("cell", key)
+        plain = {r.cell: r["count"] for r in df.groupBy("cell").count().collect()}
+        salted = {r.cell: r["count"] for r in skew.salted_count(df, "cell").collect()}
+        assert plain == salted
 
 
 def test_knn_isolated_probe_ring_expansion(spark):

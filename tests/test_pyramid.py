@@ -4,9 +4,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from freemap_tiler_spark.functions import cells, text
+from freemap_tiler_spark.functions import text
 from freemap_tiler_spark.operators import pyramid
 from freemap_tiler_spark.sources.corpus import geotagged_corpus
+from oracles import np_children
 
 pytestmark = pytest.mark.spark
 
@@ -46,7 +47,7 @@ def test_parent_pixels_match_numpy_oracle(spark, points):
     for p in parents:
         kids = {}
         for i in range(4):
-            ch = int(cells.np_children(np.array([p]))[0, i])
+            ch = int(np_children(np.array([p]))[0, i])
             if ch in tiles:
                 kids[i] = tiles[ch]
         exp = downsample2x(mosaic_children(kids, t, 2)).reshape(-1)

@@ -24,11 +24,17 @@ def blocks(spark):
     return raster_blocks(spark, grid=2, width=64, height=64, bands=4).cache()
 
 
-def test_validate_blocks(spark, blocks):
-    assert raster_ops.validate_blocks(blocks) == "RGBA"
-    bad = blocks.withColumn("bands", F.lit(5))
-    with pytest.raises(ValueError):
-        raster_ops.validate_blocks(bad)
+def test_validate_blocks():
+    """The band-layout check run_tiler applies to the distinct band counts
+    of its blocks (S2): one supported count names the layout."""
+    assert raster_ops.layout_name([4]) == "RGBA"
+    assert raster_ops.layout_name([1]) == "G"
+    with pytest.raises(ValueError, match="mixed band counts"):
+        raster_ops.layout_name([3, 4])
+    with pytest.raises(ValueError, match="unsupported band count 5"):
+        raster_ops.layout_name([5])
+    with pytest.raises(ValueError, match="no blocks"):
+        raster_ops.layout_name([])
 
 
 def test_run_tiler_on_empty_blocks_says_so(spark, blocks, tmp_path):
@@ -159,21 +165,23 @@ def test_geojson_parse_and_df(spark):
     assert df.count() == 2
 
 
-def test_full_pipeline_with_resume_and_store(spark, blocks):
+def test_full_pipeline_with_resume_and_store(spark, blocks, capfd):
     root = tempfile.mkdtemp(prefix="tiler_")
+    stages = ("rasterize", "compose", "encode_write", "metadata")
     try:
         counts = run_tiler(
             spark, blocks, root, max_zoom=9, min_zoom=6, tile_size=32,
         )
         assert set(counts) == {9, 8, 7, 6}
+        # live progress (A4): every stage prints its final 100% line (the
+        # 10-s poller adds more on long stages)
+        err = capfd.readouterr().err
+        for s in stages:
+            assert f"[tiler] {s}: 100% tasks" in err, s
         st = store.read_tiles(spark, root)
         assert st.count() == sum(counts.values())
         # store schema matches the MBTiles shape
         assert {f.name for f in st.schema.fields} >= {"zoom", "x", "tms_y", "tile_data"}
-        # point lookup (resume probe shape)
-        any_row = st.first()
-        hit = store.lookup_tile(spark, root, any_row.zoom, any_row.x, any_row.tms_y)
-        assert hit is not None and bytes(hit.tile_data) == bytes(any_row.tile_data)
         # metadata written
         meta = {r.name: r.value for r in spark.read.parquet(f"{root}/metadata").collect()}
         assert meta["format"] == "png" and "limits" in meta
@@ -181,13 +189,7 @@ def test_full_pipeline_with_resume_and_store(spark, blocks):
         from freemap_tiler_spark.plans.metrics import MetricsSink
         sink = MetricsSink(spark, root)
         summary = {r.stage for r in sink.summary().collect()}
-        assert {"rasterize", "compose", "encode_write", "metadata"} <= summary
-        # live progress (A4): >= 1 row per stage (the guaranteed final
-        # 100% tick; the 10-s poller adds more on long stages)
-        prog = sink.read_progress().groupBy("stage").count().collect()
-        got = {r.stage: r["count"] for r in prog}
-        assert all(got.get(s, 0) >= 1
-                   for s in ("rasterize", "compose", "encode_write", "metadata"))
+        assert set(stages) <= summary
         # the rasterize row counts the leaf tiles (the max_zoom level)
         leaf_rows = [r.rows for r in sink.read().where("stage = 'rasterize'").collect()]
         assert leaf_rows == [counts[9]]
@@ -219,7 +221,8 @@ def test_run_tiler_job_budget(spark, blocks):
     instead of running a footer-inference job.  48 jobs before encode was
     fused into the level loop, 40 after, 33 with schema-given read-backs,
     31 once write_pyramid composes 9 -> 6 in one round (round_depth) and
-    no longer re-reads each round's source level into the cached round."""
+    no longer re-reads each round's source level into the cached round,
+    29 once the metrics sink stopped writing a ``_progress`` table."""
     sc = spark.sparkContext
     root = tempfile.mkdtemp(prefix="tiler_jobs_")
     kw = dict(max_zoom=9, min_zoom=6, tile_size=32)
@@ -227,16 +230,17 @@ def test_run_tiler_job_budget(spark, blocks):
         sc.setJobGroup("run_tiler_budget", "job budget")
         run_tiler(spark, blocks, root, resume=False, **kw)
         # a resume of the committed run reads the lineage with its schema:
-        # no footer-inference job (9 jobs when it inferred one)
+        # no footer-inference job (9 jobs when it inferred one, 8 while
+        # the metrics sink also wrote a _progress table)
         sc.setJobGroup("run_tiler_resume_budget", "resume job budget")
         run_tiler(spark, blocks, root, **kw)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         shutil.rmtree(root, ignore_errors=True)
     jobs = sc.statusTracker().getJobIdsForGroup("run_tiler_budget")
-    assert len(jobs) <= 31, f"run_tiler ran {len(jobs)} Spark jobs"
+    assert len(jobs) <= 29, f"run_tiler ran {len(jobs)} Spark jobs"
     jobs = sc.statusTracker().getJobIdsForGroup("run_tiler_resume_budget")
-    assert len(jobs) <= 8, f"the resumed run_tiler ran {len(jobs)} Spark jobs"
+    assert len(jobs) <= 7, f"the resumed run_tiler ran {len(jobs)} Spark jobs"
 
 
 def test_resume_deepens_fused_store(spark, blocks, tmp_path):
@@ -454,25 +458,6 @@ def test_warp_utm_source(spark):
         for r in rows
     )
     assert abs(lit_total * ground ** 2 - 6400.0 ** 2) / 6400.0 ** 2 < 0.05
-
-
-def test_iceberg_sink_fallback(spark, tmp_path):
-    """No Iceberg runtime in this container: detection returns False and
-    the sink writes the identical zoom-partitioned parquet layout."""
-    from freemap_tiler_spark.sources import iceberg as IB
-
-    assert IB.iceberg_available(spark) is False
-    df = spark.createDataFrame(
-        [(9, 1, 2, b"x", None), (8, 0, 1, b"y", None)],
-        "zoom int, x long, tms_y long, tile_data binary, tile_alpha binary",
-    )
-    out = str(tmp_path / "tiles_tbl")
-    assert IB.write_tiles_table(spark, df, out) == out
-    back = IB.read_tiles_table(spark, out)
-    assert back.count() == 2
-    assert {r.zoom for r in back.select("zoom").collect()} == {8, 9}
-    # layout check: hive-style zoom= directories
-    assert (tmp_path / "tiles_tbl" / "zoom=9").exists()
 
 
 def test_mbtiles_export_png_and_jpeg(spark, blocks):
@@ -905,38 +890,3 @@ def test_polygon_layer_prune_matches_broadcast(spark):
     kept = PL.prune_cover_by_polygon_layer(cover, layer, 8)
     n_kept, n_cover = kept.count(), cover.count()
     assert 0 < n_kept < n_cover
-
-
-def test_iceberg_sink_real_when_jar_present(spark, tmp_path):
-    """VERDICT r4 #9: the GATED Iceberg branch, proven the day a runtime
-    jar appears — skipped cleanly in this container (no iceberg-spark
-    jar).  With a jar: configures a hadoop-catalog warehouse, exercises
-    writeTo().createOrReplace() + .append(), reads the table back, and
-    asserts the snapshot log grew."""
-    from freemap_tiler_spark.sources import iceberg as IB
-
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.SparkCatalog")
-    except Exception:
-        pytest.skip("no iceberg-spark runtime jar in this container")
-
-    cat = "lake_test"
-    spark.conf.set(f"spark.sql.catalog.{cat}",
-                   "org.apache.iceberg.spark.SparkCatalog")
-    spark.conf.set(f"spark.sql.catalog.{cat}.type", "hadoop")
-    spark.conf.set(f"spark.sql.catalog.{cat}.warehouse",
-                   str(tmp_path / "warehouse"))
-    assert IB.iceberg_available(spark, cat) is True
-    df = spark.createDataFrame(
-        [(9, 1, 2, b"x", None), (8, 0, 1, b"y", None)],
-        "zoom int, x long, tms_y long, tile_data binary, tile_alpha binary",
-    )
-    tbl = IB.write_tiles_table(spark, df, "db.tiles", catalog=cat)
-    assert tbl == f"{cat}.db.tiles"
-    assert IB.read_tiles_table(spark, "db.tiles", catalog=cat).count() == 2
-    IB.write_tiles_table(spark, df, "db.tiles", catalog=cat, mode="append")
-    back = IB.read_tiles_table(spark, "db.tiles", catalog=cat)
-    assert back.count() == 4
-    snaps = spark.read.table(f"{cat}.db.tiles.snapshots").count()
-    assert snaps >= 2  # createOrReplace + append
