@@ -17,7 +17,9 @@ every stage is the Spark-native counterpart, same order, same semantics:
                                                   + compose_round (k levels/shuffle)
     encode + single-writer insert               store.write_tiles, per level inside
                                                   write_pyramid (its on_level sink)
-    limits fold + metadata                      lineage.write_metadata
+    limits fold + metadata                      lineage.write_metadata, from the
+                                                  levels' commit rows (observed
+                                                  on each level's write)
     stats thread                                plans.metrics.MetricsSink
 
 Encode is fused into the level loop, as in the reference, which encodes
@@ -43,7 +45,6 @@ from pyspark.sql import functions as F
 
 from freemap_tiler_spark.functions import cells
 from freemap_tiler_spark.functions.mercator import np_merc_to_lonlat
-from freemap_tiler_spark.operators import pyramid as P
 from freemap_tiler_spark.operators import raster_ops
 from freemap_tiler_spark.operators.pip_join import polygon_covering_cells
 from freemap_tiler_spark.plans import fsutil, store
@@ -163,12 +164,14 @@ def run_tiler(
         h["rows"] = sum(counts.values())
 
     with m.stage("metadata"):
-        keyed = P.with_tile_keys(L.read_pyramid(spark, root))
+        # the limits of every level of the run, from its commit row: those
+        # this run wrote and those it skipped on resume (no Spark job)
+        commits = L.committed_rows(spark, root)
         lon0, lat0 = np_merc_to_lonlat(bbox[0], bbox[1])
         lon1, lat1 = np_merc_to_lonlat(bbox[2], bbox[3])
         L.write_metadata(
-            spark, root, keyed, name="tiles", fmt=fmt, min_zoom=min_zoom,
-            max_zoom=max_zoom,
+            spark, root, {z: commits[z] for z in counts}, name="tiles",
+            fmt=fmt, min_zoom=min_zoom, max_zoom=max_zoom,
             bounds=(float(lon0), float(lat0), float(lon1), float(lat1)),
         )
     m.flush()

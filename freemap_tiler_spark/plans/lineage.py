@@ -7,10 +7,14 @@ a commit table — the Spark-native way (SURVEY.md §2.9):
 
 - each zoom level is written to its own parquet directory
   ``{root}/tiles/zoom={z}/`` (idempotent overwrite);
-- after a level lands, a row is appended to the ``_lineage`` table:
+- after a level lands, ONE row is appended to the ``_lineage`` table:
   (level, row_count, min_cell, max_cell — the tile-range watermark —
-  wall seconds, status) — the "per-partition lineage (tile-range
-  watermarks + row counts)" required by BASELINE.json north_star;
+  min/max x and TMS row — the level's limits — wall seconds, status).
+  Every value comes from aggregates observed on the level's own write
+  (``DataFrame.observe``), so the commit re-reads nothing and runs no
+  Spark job of its own.  The per-file watermarks (row count and
+  ``cell`` min/max per split) are the part files' own parquet footers,
+  which Spark writes with every file;
 - resume = read ``_lineage``, find the deepest committed level, seed the
   compose loop from its parquet instead of recomputing (the reference
   re-probes every tile; here whole committed levels are skipped).  A level
@@ -21,7 +25,8 @@ a commit table — the Spark-native way (SURVEY.md §2.9):
 
 Also writes the MBTiles-equivalent ``metadata`` table (name/format/
 minzoom/maxzoom/bounds, src/schema.rs:43-68) and ``limits`` (per-zoom
-min/max x / tms_y JSON, src/main.rs:351-364).
+min/max x / tms_y JSON, src/main.rs:351-364), folded from the commit
+rows as the reference folds them while it inserts.
 """
 
 from __future__ import annotations
@@ -30,71 +35,69 @@ import json
 import os
 import time
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from freemap_tiler_spark.functions import cells
 from freemap_tiler_spark.operators import pyramid as P
 from freemap_tiler_spark.plans import fsutil
 
 LINEAGE_SCHEMA = (
-    "level int, partition int, row_count long, min_cell long, max_cell long, "
-    "seconds double, status string"
+    "level int, row_count long, min_cell long, max_cell long, "
+    "min_x long, max_x long, min_y long, max_y long, seconds double, status string"
 )
 METADATA_SCHEMA = "name string, value string"
+_LIMITS = ("min_x", "max_x", "min_y", "max_y")
 
 
 def _lineage_dir(root: str) -> str:
     return os.path.join(root, "_lineage")
 
 
-def read_lineage(spark: SparkSession, root: str) -> DataFrame | None:
-    """The lineage table, read with its schema (no footer-inference job).
-    A table from before per-partition rows reads ``partition`` as NULL, so
-    it holds no committed level and the run rebuilds."""
-    try:
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(_lineage_dir(root))
-    except AnalysisException:  # no lineage written yet
-        return None
-
-
-def committed_levels(spark: SparkSession, root: str) -> dict[int, int]:
-    """{level: row_count} of the committed levels, from their summary rows
-    (partition = -1)."""
-    lin = read_lineage(spark, root)
-    if lin is None:
-        return {}
+def committed_rows(spark: SparkSession, root: str) -> dict[int, dict]:
+    """{level: its latest commit row}, read by the driver (no Spark job).
+    A row from before the limit columns (a per-partition lineage) has
+    NULL limits with rows behind them, so it commits nothing and the run
+    rebuilds that level."""
     return {
-        r["level"]: r["row_count"]
-        for r in lin.where(
-            (F.col("status") == "committed") & (F.col("partition") == -1)
-        ).select("level", "row_count").collect()
+        r["level"]: r
+        for r in fsutil.read_rows(spark, _lineage_dir(root), LINEAGE_SCHEMA)
+        if r["status"] == "committed"
+        and (r["row_count"] == 0 or r["min_x"] is not None)
     }
 
 
+def committed_levels(spark: SparkSession, root: str) -> dict[int, int]:
+    """{level: row_count} of the committed levels."""
+    return {z: r["row_count"] for z, r in committed_rows(spark, root).items()}
+
+
+def _observe(df: DataFrame, level: int) -> tuple[DataFrame, Observation]:
+    """``df`` with its commit row's aggregates attached: they are computed
+    by the action that runs it (the level's own write), in no extra job."""
+    obs = Observation()
+    c = F.col("cell")
+    x = cells.cell_x(c)
+    y = cells.reversed_y(F.lit(level), cells.cell_y(c))  # the TMS row
+    return df.observe(
+        obs, F.count(F.lit(1)).alias("row_count"),
+        F.min(c).alias("min_cell"), F.max(c).alias("max_cell"),
+        F.min(x).alias("min_x"), F.max(x).alias("max_x"),
+        F.min(y).alias("min_y"), F.max(y).alias("max_y"),
+    ), obs
+
+
 def _commit_level(
-    spark: SparkSession, root: str, level: int, df_written: DataFrame, seconds: float
+    spark: SparkSession, root: str, level: int, obs: Observation, seconds: float
 ) -> int:
-    """Commit a written level: ONE job computes per-partition lineage rows
-    (cell-range watermark + row count per parquet split — the north rule's
-    per-partition checkpoint), the level summary (partition = -1) is folded
-    driver-side from those few rows.  Returns the level row count."""
-    parts = df_written.groupBy(F.spark_partition_id().alias("part")).agg(
-        F.count("*").alias("n"), F.min("cell").alias("mn"), F.max("cell").alias("mx")
-    ).collect()
-    rows = [
-        (level, int(p["part"]), p["n"], p["mn"], p["mx"], seconds, "committed")
-        for p in parts
-    ]
-    total = sum(p["n"] for p in parts)
-    rows.append((
-        level, -1, total,
-        min((p["mn"] for p in parts), default=None),
-        max((p["mx"] for p in parts), default=None),
-        seconds, "committed",
-    ))
-    fsutil.write_rows(spark, rows, LINEAGE_SCHEMA, _lineage_dir(root), "append")
-    return total
+    """Commit a written level: append its one lineage row, from the
+    aggregates its write observed (row count, the cell-range watermark and
+    the x / TMS-row limits).  Returns the level row count."""
+    m = obs.get
+    row = (level, m["row_count"], m["min_cell"], m["max_cell"],
+           *(m[k] for k in _LIMITS), seconds, "committed")
+    fsutil.write_rows(spark, [row], LINEAGE_SCHEMA, _lineage_dir(root), "append")
+    return m["row_count"]
 
 
 def level_path(root: str, level: int) -> str:
@@ -116,13 +119,14 @@ def _write_level(
     on_level=None,
 ) -> int:
     """Write one level (an idempotent overwrite of its directory), hand it
-    to ``on_level`` (see write_pyramid), then commit its lineage.  A level
-    killed part-way has no summary row, so resume rewrites it whole."""
+    to ``on_level`` (see write_pyramid), then commit its lineage from what
+    the write observed.  A level killed part-way has no commit row, so
+    resume rewrites it whole."""
+    lv_df, obs = _observe(lv_df, level)
     lv_df.write.mode("overwrite").parquet(level_path(root, level))
-    written = read_level(spark, root, level)
     if on_level is not None:
-        on_level(level, written)
-    return _commit_level(spark, root, level, written, time.time() - t0)
+        on_level(level, read_level(spark, root, level))
+    return _commit_level(spark, root, level, obs, time.time() - t0)
 
 
 def write_pyramid(
@@ -179,38 +183,31 @@ def write_pyramid(
         if k > 1:
             produced = produced.persist()
         for lv in range(z - 1, z - k - 1, -1):
-            lv_df = produced.where(P.cells.cell_zoom("cell") == lv)
+            lv_df = produced.where(cells.cell_zoom("cell") == lv)
             out[lv] = _write_level(spark, root, lv, lv_df, t0, on_level)
         produced.unpersist()
         z -= k
     return out
 
 
-def read_pyramid(spark: SparkSession, root: str) -> DataFrame:
-    """All committed levels as one DataFrame (cell, payload, zoom)."""
-    return spark.read.schema(f"{P.PAYLOAD_SCHEMA}, zoom int").parquet(
-        os.path.join(root, "tiles"))
-
-
 def write_metadata(
     spark: SparkSession,
     root: str,
-    tiles_with_keys: DataFrame,
+    limits: dict,
     name: str = "pyramid",
     fmt: str = "png",
     min_zoom: int = 0,
     max_zoom: int = 14,
     bounds: tuple | None = None,
 ) -> None:
-    """metadata + limits tables (src/schema.rs:43-68, src/main.rs:351-364)."""
-    lim = P.limits(tiles_with_keys).collect()
+    """metadata + limits tables (src/schema.rs:43-68, src/main.rs:351-364).
+    ``limits`` maps each zoom to a row holding min_x, max_x, min_y, max_y
+    (TMS rows), such as its commit row; a zoom whose limits are NULL (a
+    level with no tiles) has no entry."""
     limits_json = json.dumps(
         {
-            str(r["zoom"]): {
-                "min_x": r["min_x"], "max_x": r["max_x"],
-                "min_y": r["min_y"], "max_y": r["max_y"],
-            }
-            for r in lim
+            str(z): {k: r[k] for k in _LIMITS}
+            for z, r in limits.items() if r["min_x"] is not None
         },
         sort_keys=True,
     )

@@ -21,6 +21,8 @@ import sqlite3
 
 from pyspark.sql import SparkSession
 
+from freemap_tiler_spark.operators import pyramid as P
+from freemap_tiler_spark.plans.fsutil import read_rows
 from freemap_tiler_spark.plans.lineage import METADATA_SCHEMA, write_metadata
 from freemap_tiler_spark.plans.store import read_tiles
 
@@ -51,7 +53,7 @@ def import_mbtiles(
     tile_alpha blobs (the reference's opaque-elision encoding,
     src/schema.rs:20-33) come back as NULL alpha, matching the native
     store; metadata rows carry over and the limits JSON is recomputed
-    from the imported tiles (lineage.write_metadata)."""
+    from the imported tiles, which have no lineage to take them from."""
     conn = sqlite3.connect(path)
     try:
         cur = conn.cursor()
@@ -106,8 +108,9 @@ def import_mbtiles(
     finally:
         conn.close()
     bounds = tuple(meta["bounds"].split(",")) if meta.get("bounds") else None
+    limits = {r["zoom"]: r for r in P.limits(read_tiles(spark, root)).collect()}
     write_metadata(
-        spark, root, read_tiles(spark, root),
+        spark, root, limits,
         name=meta.get("name", "Tiles"), fmt=meta.get("format", "png"),
         min_zoom=int(meta.get("minzoom", 0)),
         max_zoom=int(meta.get("maxzoom", 0)), bounds=bounds,
@@ -132,8 +135,7 @@ def export_mbtiles(
     """
     meta = {
         r["name"]: r["value"]
-        for r in spark.read.schema(METADATA_SCHEMA)
-        .parquet(os.path.join(root, "metadata")).collect()
+        for r in read_rows(spark, os.path.join(root, "metadata"), METADATA_SCHEMA)
     }
     fmt = meta.get("format", "png")
     jpeg = fmt != "png"

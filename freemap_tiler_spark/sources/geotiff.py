@@ -349,6 +349,11 @@ def _lzw_encode(data: bytes) -> bytes:
         w = bytes([b])
     if w:
         emit(table[w], width)
+        # the decoder adds a table entry for this last code too, so EOI
+        # must go out at the width that entry implies (nxt <= 4094 here)
+        nxt += 1
+        if nxt == (1 << width):
+            width += 1
     emit(_LZW_EOI, width)
     if bitcnt:
         out.append((bitbuf << (8 - bitcnt)) & 0xFF)

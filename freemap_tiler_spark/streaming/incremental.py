@@ -120,11 +120,13 @@ def incremental_update(
         # swap (old set aside, never a missing-live-dir window; Hadoop FS
         # so HDFS/S3 roots work); the swap is the commit point, recorded
         # in lineage so a crash between swap and commit is detectable.
+        # the commit row is observed on the staging write itself, so the
+        # level is not re-read after the swap
+        merged, obs = L._observe(merged, z)
         merged.write.mode("overwrite").parquet(_aside_paths(final)[0])
         out[z] = dirty_cells.count()
         _swap_commit(spark, final)
-        written = L.read_level(spark, root, z)
-        L._commit_level(spark, root, z, written, time.time() - t0)
+        L._commit_level(spark, root, z, obs, time.time() - t0)
         # this dirty set still backs parent_cells below (it executes at
         # the NEXT level's write) — retire it one iteration later
         if retired is not None:

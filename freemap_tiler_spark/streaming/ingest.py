@@ -220,7 +220,7 @@ def run_streaming_pyramid(
             return
         pts.write.mode("append").parquet(points_dir)
         all_pts = spark.read.parquet(points_dir)
-        if L.read_lineage(spark, root) is None:
+        if not L.committed_levels(spark, root):
             # first drop: build + commit the full pyramid
             leaves = P.rasterize_level(
                 P.assign_cells(all_pts, "lon", "lat", max_zoom), tile_size

@@ -7,12 +7,15 @@ that pin them, so they live with the tests, not in the package.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from freemap_tiler_spark.functions.cells import MORTON_MASK, ZOOM_SHIFT, np_cell_zxy
 from freemap_tiler_spark.functions.mercator import WORLD
+from freemap_tiler_spark.operators.pyramid import PAYLOAD_SCHEMA
 from freemap_tiler_spark.operators.similarity import _plane_coeff
 
 
@@ -73,3 +76,10 @@ def srp_bucket(vec, dim: int, n_planes: int = 12, table: int = 0) -> Column:
         )
         out = out.bitwiseOR(F.when(proj >= 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long")))
     return out
+
+
+def read_pyramid(spark, root: str):
+    """Every written level of ``root`` as one DataFrame (cell, payload,
+    zoom): the whole pyramid the tests compare runs by."""
+    return spark.read.schema(f"{PAYLOAD_SCHEMA}, zoom int").parquet(
+        os.path.join(root, "tiles"))

@@ -2,11 +2,13 @@
 (the full gate runs via tools/check_contract.py)."""
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's __spark_entry__ and tools, not another checkout's
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 pytestmark = pytest.mark.spark
 

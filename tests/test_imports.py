@@ -7,7 +7,13 @@ package definition is reached from outside the tests.  No Spark session."""
 import ast
 import importlib
 import importlib.util
+import os
+import shutil
+import subprocess
+import sys
 from pathlib import Path
+
+import pytest
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "freemap_tiler_spark"
@@ -181,3 +187,29 @@ def test_definition_guard_exempts_entry_points(tmp_path):
         "__spark_entry__.py": "",
     })
     assert _dead_definitions(root) == [(f"{PKG}/m.py", "dead")]
+
+
+@pytest.mark.parametrize("rel", ["tests/test_contract.py", "tools/explain_audit.py"])
+def test_a_copy_imports_its_own_entry_module(tmp_path, rel):
+    """A module that puts its checkout on ``sys.path`` puts its OWN
+    checkout there: loaded from a copy of the repo, it resolves
+    ``__spark_entry__`` inside that copy, not in another checkout."""
+    copy = tmp_path / "copy"
+    for f in (rel, "__spark_entry__.py"):
+        (copy / f).parent.mkdir(parents=True, exist_ok=True)
+        shutil.copy(ROOT / f, copy / f)
+    child = (
+        "import importlib.util, sys\n"
+        f"spec = importlib.util.spec_from_file_location('m', {str(copy / rel)!r})\n"
+        "spec.loader.exec_module(importlib.util.module_from_spec(spec))\n"
+        "import __spark_entry__\n"
+        "print(__spark_entry__.__file__)\n"
+    )
+    # the package itself comes from this checkout; only the copy has the
+    # module under test and an entry module
+    out = subprocess.run(
+        [sys.executable, "-c", child], cwd=tmp_path, capture_output=True,
+        text=True, timeout=120, env={**os.environ, "PYTHONPATH": str(ROOT)},
+    )
+    assert out.returncode == 0, out.stderr
+    assert Path(out.stdout.split()[-1]).resolve() == (copy / "__spark_entry__.py").resolve()

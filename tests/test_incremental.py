@@ -10,6 +10,7 @@ from freemap_tiler_spark.contract import _docs_geo
 from freemap_tiler_spark.operators import pyramid as P
 from freemap_tiler_spark.plans import lineage as L
 from freemap_tiler_spark.streaming import incremental_update
+from oracles import read_pyramid
 
 pytestmark = pytest.mark.spark
 
@@ -27,12 +28,20 @@ def test_incremental_equals_full_rebuild(spark, sf_dir):
         # incremental update with the new rows
         dirty = incremental_update(spark, g, new, root, 5, 0, 32)
         assert dirty[5] > 0
-        got = {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, root).collect()}
+        got = {r.cell: bytes(r.payload) for r in read_pyramid(spark, root).collect()}
         # oracle: full rebuild from the complete corpus
         leaves_all = P.rasterize_level(P.assign_cells(g, "lon", "lat", 5), 32)
         L.write_pyramid(spark, leaves_all, root_full, 5, 0, 32)
-        exp = {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, root_full).collect()}
+        exp = {r.cell: bytes(r.payload) for r in read_pyramid(spark, root_full).collect()}
         assert got == exp
+
+        # each level's latest commit row, observed on its staging write,
+        # describes the updated level as the full rebuild's describes it
+        def commits(r):
+            return {z: {k: v for k, v in row.items() if k != "seconds"}
+                    for z, row in L.committed_rows(spark, r).items()}
+
+        assert commits(root) == commits(root_full)
     finally:
         shutil.rmtree(root, ignore_errors=True)
         shutil.rmtree(root_full, ignore_errors=True)
@@ -70,7 +79,8 @@ def test_incremental_update_job_budget(spark, sf_dir):
     tracker, on the scenario of test_incremental_equals_full_rebuild.
     Every level read-back names its schema, so none runs a
     footer-inference job: 92-94 jobs when three reads per level inferred
-    it, 74-78 since."""
+    it, 74-78 since, 57-58 once each level's commit row was observed on
+    its staging write and the lineage rows were written by the driver."""
     sc = spark.sparkContext
     g = _docs_geo(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="incr_jobs_")
@@ -84,7 +94,7 @@ def test_incremental_update_job_budget(spark, sf_dir):
         sc.setLocalProperty("spark.jobGroup.id", None)
         shutil.rmtree(root, ignore_errors=True)
     jobs = sc.statusTracker().getJobIdsForGroup("incremental_budget")
-    assert len(jobs) <= 78, f"incremental_update ran {len(jobs)} Spark jobs"
+    assert len(jobs) <= 58, f"incremental_update ran {len(jobs)} Spark jobs"
 
 
 def test_swap_commit_recovery_states(spark, tmp_path):

@@ -8,11 +8,13 @@ from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from freemap_tiler_spark.contract import _docs_geo
 from freemap_tiler_spark.operators import pyramid as P
 from freemap_tiler_spark.plans import fsutil
 from freemap_tiler_spark.plans import lineage as L
+from oracles import read_pyramid
 
 pytestmark = pytest.mark.spark
 
@@ -22,8 +24,13 @@ def _leaves(spark, sf_dir, z=5, t=32, where="true"):
     return P.rasterize_level(P.assign_cells(g, "lon", "lat", z), t)
 
 
+def _lineage(spark, root):
+    """The lineage table as Spark reads it."""
+    return spark.read.schema(L.LINEAGE_SCHEMA).parquet(f"{root}/_lineage")
+
+
 def _payloads(spark, root):
-    return {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, root).collect()}
+    return {r.cell: bytes(r.payload) for r in read_pyramid(spark, root).collect()}
 
 
 def test_write_then_resume_noop(spark, sf_dir):
@@ -35,7 +42,7 @@ def test_write_then_resume_noop(spark, sf_dir):
         # second run: everything committed -> only reads, same counts
         second = L.write_pyramid(spark, leaves, root, 5, 0, 32)
         assert second[5] == first[5]
-        lin = L.read_lineage(spark, root)
+        lin = _lineage(spark, root)
         assert lin.where("status = 'committed'").count() >= 6
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -50,8 +57,8 @@ def test_crash_resume_byte_identical(spark, sf_dir):
     try:
         leaves = _leaves(spark, sf_dir)
         L.write_pyramid(spark, leaves, root, 5, 0, 32)
-        full1 = {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, root).collect()}
-        lin = L.read_lineage(spark, root).where("level = 5").collect()
+        full1 = {r.cell: bytes(r.payload) for r in read_pyramid(spark, root).collect()}
+        lin = _lineage(spark, root).where("level = 5").collect()
         shutil.rmtree(f"{root}/_lineage")
         spark.createDataFrame(lin, L.LINEAGE_SCHEMA).write.parquet(f"{root}/_lineage")
         n4 = L.read_level(spark, root, 4).count()
@@ -65,23 +72,105 @@ def test_crash_resume_byte_identical(spark, sf_dir):
             shutil.rmtree(L.level_path(root, z))
         out = L.write_pyramid(spark, leaves, root, 5, 0, 32)
         assert set(out) == set(range(6))
-        # committed level 5 was NOT recommitted (one summary row each);
+        # committed level 5 was NOT recommitted (one commit row each);
         # only the crashed levels 0-4 gained fresh commits
-        lin_df = L.read_lineage(spark, root)
-        summaries = lin_df.where("partition = -1").groupBy("level").count().collect()
-        assert {r["level"]: r["count"] for r in summaries} == {z: 1 for z in range(6)}
-        # per-partition lineage rows sum to the level summary (the tile-range
-        # watermark + row-count checkpoint per parquet split)
-        import pyspark.sql.functions as SF
-        parts = lin_df.where("partition >= 0").groupBy("level").agg(
-            SF.sum("row_count").alias("n")).collect()
-        sums = {r["level"]: r["n"] for r in parts}
-        for r in lin_df.where("partition = -1").collect():
-            assert sums[r["level"]] == r["row_count"]
-        full2 = {r.cell: bytes(r.payload) for r in L.read_pyramid(spark, root).collect()}
+        lin_df = _lineage(spark, root)
+        commits = lin_df.groupBy("level").count().collect()
+        assert {r["level"]: r["count"] for r in commits} == {z: 1 for z in range(6)}
+        # the per-file watermarks are the part files' parquet footers: per
+        # level they add up to the commit row's count and cell range
+        for r in lin_df.collect():
+            metas = [pq.read_metadata(f) for f in
+                     glob.glob(f"{L.level_path(root, r['level'])}/part-*.parquet")]
+            assert sum(m.num_rows for m in metas) == r["row_count"]
+            stats = [
+                m.row_group(i).column(m.schema.names.index("cell")).statistics
+                for m in metas for i in range(m.num_row_groups)
+                if m.row_group(i).num_rows
+            ]
+            assert min(st.min for st in stats) == r["min_cell"]
+            assert max(st.max for st in stats) == r["max_cell"]
+        full2 = {r.cell: bytes(r.payload) for r in read_pyramid(spark, root).collect()}
         assert full1 == full2
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+# the lineage format before each level committed one observed row
+PER_PARTITION_LINEAGE = (
+    "level int, partition int, row_count long, min_cell long, max_cell long, "
+    "seconds double, status string"
+)
+
+
+def test_per_partition_lineage_reads_as_nothing_committed(spark, sf_dir, tmp_path):
+    """A ``_lineage`` in the per-partition format (a row per parquet
+    split plus a partition = -1 summary, no limit columns) commits
+    nothing: the next run rebuilds every level, byte-identical to a fresh
+    run."""
+    leaves = _leaves(spark, sf_dir)
+    root, fresh = str(tmp_path / "old"), str(tmp_path / "fresh")
+    L.write_pyramid(spark, leaves, root, 5, 0, 32)
+    rows = []
+    for z in range(6):
+        parts = L.read_level(spark, root, z).groupBy(
+            F.spark_partition_id().alias("p")).agg(
+            F.count("*").alias("n"), F.min("cell").alias("mn"),
+            F.max("cell").alias("mx")).collect()
+        rows += [(z, p["p"], p["n"], p["mn"], p["mx"], 0.1, "committed")
+                 for p in parts]
+        rows.append((z, -1, sum(p["n"] for p in parts),
+                     min(p["mn"] for p in parts), max(p["mx"] for p in parts),
+                     0.1, "committed"))
+    shutil.rmtree(f"{root}/_lineage")
+    spark.createDataFrame(rows, PER_PARTITION_LINEAGE).write.parquet(
+        f"{root}/_lineage")
+    assert L.committed_levels(spark, root) == {}
+    rebuilt = []
+    L.write_pyramid(spark, leaves, root, 5, 0, 32,
+                    on_level=lambda z, _df: rebuilt.append(z))
+    assert sorted(rebuilt) == list(range(6))
+    L.write_pyramid(spark, leaves, fresh, 5, 0, 32)
+    assert _payloads(spark, root) == _payloads(spark, fresh)
+    assert L.committed_levels(spark, root) == L.committed_levels(spark, fresh)
+
+
+def test_write_killed_before_its_rename_is_invisible(spark, sf_dir, tmp_path,
+                                                     monkeypatch):
+    """A small-table write killed between its bytes and its rename leaves
+    a hidden ``.part-*.parquet``: committed_levels, read_rows and Spark
+    all skip it."""
+    root = str(tmp_path / "pyr")
+    lin = f"{root}/_lineage"
+    L.write_pyramid(spark, _leaves(spark, sf_dir), root, 5, 3, 32)
+    levels = L.committed_levels(spark, root)
+    rows = fsutil.read_rows(spark, lin, L.LINEAGE_SCHEMA)
+    real = fsutil._jfs
+
+    class KilledAtRename:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def rename(self, *_):
+            raise RuntimeError("killed before the rename")
+
+    def killing(spark, path):
+        fs, p, jvm = real(spark, path)
+        return KilledAtRename(fs), p, jvm
+
+    monkeypatch.setattr(fsutil, "_jfs", killing)
+    with pytest.raises(RuntimeError, match="killed before the rename"):
+        fsutil.write_rows(spark, [(2, 7, 1, 2, 0, 1, 0, 1, 0.5, "committed")],
+                          L.LINEAGE_SCHEMA, lin, "append")
+    monkeypatch.undo()
+    assert len(glob.glob(f"{lin}/.part-*.parquet")) == 1
+    assert set(levels) == {3, 4, 5}
+    assert L.committed_levels(spark, root) == levels
+    assert fsutil.read_rows(spark, lin, L.LINEAGE_SCHEMA) == rows
+    assert spark.read.parquet(lin).count() == len(rows) == 3
 
 
 def test_killed_rebuild_resumes_to_the_new_leaves(spark, sf_dir):

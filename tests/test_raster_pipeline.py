@@ -216,31 +216,92 @@ def _store_rows(spark, root):
 def test_run_tiler_job_budget(spark, blocks):
     """Spark jobs per run_tiler call, counted by the status tracker.  Each
     level is encoded once, as it lands, with no range shuffle whose
-    sampling job re-runs the encode; the small driver-side tables are
-    written as local relations, and parquet read-backs name their schema
+    sampling job re-runs the encode; each level's commit row is observed
+    on its own write and the small driver-side tables are written and read
+    by the driver with no Spark job; parquet read-backs name their schema
     instead of running a footer-inference job.  48 jobs before encode was
     fused into the level loop, 40 after, 33 with schema-given read-backs,
     31 once write_pyramid composes 9 -> 6 in one round (round_depth) and
     no longer re-reads each round's source level into the cached round,
-    29 once the metrics sink stopped writing a ``_progress`` table."""
+    29 once the metrics sink stopped writing a ``_progress`` table, 13 once
+    the commits were observed and the small tables left Spark."""
     sc = spark.sparkContext
     root = tempfile.mkdtemp(prefix="tiler_jobs_")
     kw = dict(max_zoom=9, min_zoom=6, tile_size=32)
+    blocks.count()  # the fixture's cache is built outside the budget
     try:
         sc.setJobGroup("run_tiler_budget", "job budget")
         run_tiler(spark, blocks, root, resume=False, **kw)
-        # a resume of the committed run reads the lineage with its schema:
-        # no footer-inference job (9 jobs when it inferred one, 8 while
-        # the metrics sink also wrote a _progress table)
+        # a resume of the committed run reads its lineage on the driver (9
+        # jobs when a Spark read inferred its schema, 8 while the metrics
+        # sink also wrote a _progress table, 7 until the small tables left
+        # Spark)
         sc.setJobGroup("run_tiler_resume_budget", "resume job budget")
         run_tiler(spark, blocks, root, **kw)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         shutil.rmtree(root, ignore_errors=True)
     jobs = sc.statusTracker().getJobIdsForGroup("run_tiler_budget")
-    assert len(jobs) <= 29, f"run_tiler ran {len(jobs)} Spark jobs"
+    assert len(jobs) <= 13, f"run_tiler ran {len(jobs)} Spark jobs"
     jobs = sc.statusTracker().getJobIdsForGroup("run_tiler_resume_budget")
-    assert len(jobs) <= 7, f"the resumed run_tiler ran {len(jobs)} Spark jobs"
+    assert len(jobs) <= 2, f"the resumed run_tiler ran {len(jobs)} Spark jobs"
+
+
+def test_tiler_png_shaped_run_job_budget(spark, tmp_path):
+    """A fresh run of the benchmark's tiler shape (a 513 px square RGBA
+    raster, zoom 10 -> 9, 256 px tiles) runs the layout/bbox aggregate (2
+    jobs) and, per level, its write (2 jobs) and its store encode (1): 18
+    jobs while each commit re-read its level, the limits were collected
+    over the written pyramid and the small tables were Spark writes."""
+    sc = spark.sparkContext
+    raster = raster_blocks(spark, grid=3, width=171, height=171, bands=4)
+    try:
+        sc.setJobGroup("tiler_png_budget", "tiler_png job budget")
+        counts = run_tiler(spark, raster, str(tmp_path / "png"), max_zoom=10,
+                           min_zoom=9, resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(counts) == {10, 9} and counts[10] > counts[9] > 0
+    jobs = sc.statusTracker().getJobIdsForGroup("tiler_png_budget")
+    assert len(jobs) <= 8, f"run_tiler ran {len(jobs)} Spark jobs"
+
+
+def test_metadata_limits_equal_the_pyramids(spark, blocks, tmp_path):
+    """The metadata ``limits`` JSON, folded from the levels' commit rows,
+    equals P.limits over every level of the pyramid: after a fresh run,
+    after a run to min_zoom=8 resumed to 6 (the skipped levels' limits come
+    from the first run's lineage), and after an import_mbtiles adopt
+    (which has no lineage).  A level with no tiles has no entry."""
+    import json
+
+    from freemap_tiler_spark.operators import pyramid as P
+    from freemap_tiler_spark.plans.mbtiles import export_mbtiles, import_mbtiles
+    from oracles import read_pyramid
+
+    def written(root):
+        meta = {r.name: r.value for r in spark.read.parquet(f"{root}/metadata").collect()}
+        return json.loads(meta["limits"])
+
+    def folded(keyed):
+        return {str(r["zoom"]): {k: r[k] for k in ("min_x", "max_x", "min_y", "max_y")}
+                for r in P.limits(keyed).collect()}
+
+    kw = dict(max_zoom=9, tile_size=32)
+    fresh, part, adopt, empty = (str(tmp_path / d) for d in ("fresh", "part", "adopt", "empty"))
+    run_tiler(spark, blocks, fresh, min_zoom=6, resume=False, **kw)
+    run_tiler(spark, blocks, part, min_zoom=8, **kw)
+    run_tiler(spark, blocks, part, min_zoom=6, **kw)
+    import_mbtiles(spark, export_mbtiles(spark, fresh, str(tmp_path / "f.mbtiles")), adopt)
+    want = folded(P.with_tile_keys(read_pyramid(spark, fresh)))
+    assert sorted(want, key=int) == ["6", "7", "8", "9"]
+    assert written(fresh) == written(part) == want
+    assert written(adopt) == folded(store.read_tiles(spark, adopt)) == want
+    # a polygon away from the raster leaves every level without tiles
+    far = {"type": "Polygon", "coordinates": [[
+        [-60.0, -30.0], [-59.0, -30.0], [-59.0, -29.0], [-60.0, -29.0], [-60.0, -30.0]]]}
+    counts = run_tiler(spark, blocks, empty, min_zoom=8, polygon=far, **kw)
+    assert counts == {9: 0, 8: 0}
+    assert written(empty) == folded(P.with_tile_keys(read_pyramid(spark, empty))) == {}
 
 
 def test_resume_deepens_fused_store(spark, blocks, tmp_path):

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from freemap_tiler_spark.sources.corpus import geotagged_corpus
 from freemap_tiler_spark.streaming import ingest as SI
+from oracles import read_pyramid
 
 pytestmark = pytest.mark.spark
 
@@ -109,7 +110,7 @@ def test_streaming_pyramid_matches_batch(spark, tmp_path):
     )
     q.awaitTermination(180)
     got = {
-        r.cell: bytes(r.payload) for r in L.read_pyramid(spark, root).collect()
+        r.cell: bytes(r.payload) for r in read_pyramid(spark, root).collect()
     }
     # batch twin over all 400 rows
     pts = geotagged_corpus(spark, 400).select(

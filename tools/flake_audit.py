@@ -22,13 +22,14 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from freemap_tiler_spark.session import get_spark
     from tools.check_contract import compare
