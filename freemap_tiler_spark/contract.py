@@ -654,8 +654,8 @@ SELECT probe_id, point_id, rank FROM ranked WHERE rank <= 5 ORDER BY probe_id, r
 """
 
 # knn_grid oracle: exact kNN RESTRICTED to the operator's final search
-# window — Chebyshev distance <= 4 cells at zoom 9 (ring doubling 1->2->4
-# over expand_rounds=2).  For corpus probes whose global top-5 sit inside
+# window — Chebyshev distance <= 4 cells at zoom 9 (the ring schedule
+# 1 -> 2 -> 4, knn.RINGS).  For corpus probes whose global top-5 sit inside
 # the 3x3 ring (the fixture property) the cap changes nothing; for the
 # planted isolated probe it grades the PARTIAL-result contract exactly.
 _KG_TXP = mercator.TILE_X_SQL.format(lon="plon", z=9)

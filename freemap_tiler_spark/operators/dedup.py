@@ -19,7 +19,9 @@ the standard shape: explode shingles (narrow), per-doc signature agg (one
 shuffle on doc_id — map-side combined), explode bands (narrow), self-join
 on band bucket (one shuffle on a well-distributed 60-bit bucket key; AQE
 splits hot buckets), exact verify on the (small) candidate set.  No
-all-pairs product ever materializes.
+all-pairs product ever materializes.  Intermediate tables (signatures,
+bucket sizes, connected-components rounds) are checkpointed: reliably
+when the session has a checkpoint dir, locally otherwise.
 """
 
 from __future__ import annotations
@@ -33,6 +35,17 @@ from freemap_tiler_spark.functions.text import md5_fingerprint
 P = 2147483647  # 2^31 - 1 (Mersenne prime): products fit in int64
 A = [1103515245, 1299709, 15485863, 32452843, 49979687, 67867967, 86028121, 104395301]
 B = [12345, 7919, 104729, 1299721, 15485917, 32452867, 49979693, 67867979]
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and cut its lineage.  With a checkpoint dir
+    set on the session (``spark.checkpoint.dir`` or
+    ``sparkContext.setCheckpointDir``) the rows go there and survive the
+    loss of an executor; without one they stay in executor storage
+    (``localCheckpoint``)."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def token_hash(col) -> Column:
@@ -107,7 +120,7 @@ def minhash_lsh_pairs(
     r = num_hashes // bands
     # ONE Arrow pass computes every signature + band bucket from the text,
     # then the (tiny: id + num_hashes + bands longs per doc) signature table
-    # is localCheckpoint'd so the five downstream consumers (bucket sizing,
+    # is checkpointed so the five downstream consumers (bucket sizing,
     # small-bucket self-join x2, star, chain re-attach) read materialized
     # rows instead of re-running the md5-per-shingle work — the former
     # Column-HOF pipeline evaluated interpreted (transform/array_min are
@@ -168,7 +181,7 @@ def minhash_lsh_pairs(
     # eager measured faster than lazy on fresh plans (1.7s vs 2.4s at bench
     # scale): the lazy form re-enters the checkpoint machinery inside the
     # tagged job's tasks
-    sig = base.mapInPandas(_signatures, sig_schema).localCheckpoint(eager=True)
+    sig = _checkpoint(base.mapInPandas(_signatures, sig_schema))
     banded = sig.select(
         "_id",
         F.explode(
@@ -184,11 +197,11 @@ def minhash_lsh_pairs(
     # preserved (band, bucket) hash partitioning makes the self-join
     # exchange-free
     wsz = Window.partitionBy("band", "bucket")
-    tagged = banded.select(
+    tagged = _checkpoint(banded.select(
         "_id", "band", "bucket",
         F.count("*").over(wsz).alias("_n"),
         F.min("_id").over(wsz).alias("_rep"),
-    ).localCheckpoint(eager=True)
+    ))
     small = tagged.where(F.col("_n") <= max_bucket_size).select("_id", "band", "bucket")
     left = small.alias("l")
     right = small.alias("r")
@@ -282,30 +295,43 @@ def simhash_near_dups(
     id_col: str = "doc_id",
     bits: int = 32,
     max_hamming: int = 3,
-    block_bits: int = 8,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
-    Candidate blocking: split the simhash into (max_hamming+1) bit blocks —
-    by pigeonhole, any pair within max_hamming shares at least one exact
-    block; self-join per block then verify with bit_count(xor).  The
-    block-join core is the shared :func:`hamming_pairs` (also used by the
-    pHash image path); ``block_bits`` is retained for signature
-    compatibility but the block width is ``bits // (max_hamming + 1)``.
+    Candidate blocking: split the simhash into (max_hamming+1) bit blocks
+    of ``bits // (max_hamming + 1)`` bits — by pigeonhole, any pair within
+    max_hamming shares at least one exact block; self-join per block then
+    verify with bit_count(xor).  Returns (id_a, id_b, hamming) with
+    id_a < id_b, distinct.
     """
-    if block_bits != 8:
-        import warnings
-
-        warnings.warn(
-            "simhash_near_dups ignores block_bits; blocking width is "
-            "bits // (max_hamming + 1)",
-            DeprecationWarning, stacklevel=2,
-        )
+    n_blocks = max_hamming + 1
+    bb = bits // n_blocks
     sh = df.select(
-        F.col(id_col), simhash(F.col(text_col), bits).alias("_simhash")
+        F.col(id_col).alias("_id"), simhash(F.col(text_col), bits).alias("_h")
     )
-    return hamming_pairs(sh, "_simhash", id_col=id_col, bits=bits,
-                         max_hamming=max_hamming)
+
+    def _key(i):
+        sr = F.shiftright("_h", i * bb)
+        # a full-width block needs no mask ((1<<64)-1 overflows a long)
+        return sr if bb >= 64 else sr.bitwiseAND(F.lit((1 << bb) - 1))
+
+    blocked = sh.select(
+        "_id", "_h",
+        F.explode(F.array(*[
+            F.struct(F.lit(i).alias("blk"), _key(i).alias("key"))
+            for i in range(n_blocks)
+        ])).alias("b"),
+    ).select("_id", "_h", "b.blk", "b.key")
+    l, r = blocked.alias("l"), blocked.alias("r")
+    ham = F.bit_count(F.col("l._h").bitwiseXOR(F.col("r._h")))
+    return (
+        l.join(r, (F.col("l.blk") == F.col("r.blk")) & (F.col("l.key") == F.col("r.key"))
+               & (F.col("l._id") < F.col("r._id")))
+        .where(ham <= max_hamming)
+        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"),
+                ham.alias("hamming"))
+        .distinct()
+    )
 
 
 def connected_components(
@@ -330,12 +356,10 @@ def connected_components(
     self-labels for their full id universe.
 
     100 TB shape: each round = 2 shuffles on node id; each round's edge
-    set is localCheckpoint'd — iterative DataFrame plans otherwise nest
-    the whole history and the Catalyst tree grows exponentially with
-    rounds (plan-size OOM long before data size matters).  On a cluster
-    where executor loss during the (short) iteration matters, set a
-    reliable spark.checkpoint.dir and swap localCheckpoint for
-    checkpoint.  Convergence is a deterministic (count, xor-of-hash)
+    set is checkpointed (``_checkpoint``: reliable when the session has a
+    checkpoint dir, local otherwise) — iterative DataFrame plans otherwise
+    nest the whole history and the Catalyst tree grows exponentially with
+    rounds (plan-size OOM long before data size matters).  Convergence is a deterministic (count, xor-of-hash)
     digest, never a driver collect of edges.
     """
     e = (
@@ -345,7 +369,7 @@ def connected_components(
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
     )
-    cur = e.localCheckpoint(eager=True)
+    cur = _checkpoint(e)
     def _digest(df):
         # bit_xor digest: order-insensitive, overflow-free under ANSI mode
         return df.agg(
@@ -386,7 +410,7 @@ def connected_components(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionAll(m2.select(F.col("u"), F.col("m").alias("v")))
         )
-        nxt = _canon(small).localCheckpoint(eager=True)
+        nxt = _checkpoint(_canon(small))
         d2 = _digest(nxt)
         cur = nxt
         if (d2["n"], d2["h"]) == (digest["n"], digest["h"]):
@@ -603,46 +627,4 @@ def contamination(
                    F.coalesce(F.col("n_hits"), F.lit(0)) / F.col("n_windows"))
             .otherwise(F.lit(0.0)).alias("frac"),
         )
-    )
-
-
-def hamming_pairs(
-    df: DataFrame,
-    hash_col: str,
-    id_col: str = "doc_id",
-    bits: int = 64,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Generic Hamming-distance pair join over any integer hash column
-    (the simhash_near_dups pigeonhole core, factored for reuse by e.g.
-    perceptual image hashes): split the hash into (max_hamming+1) bit
-    blocks — any pair within max_hamming shares one exact block — self-
-    join per block, verify with bit_count(xor).  Returns
-    (id_a, id_b, hamming) with id_a < id_b, distinct.
-    """
-    n_blocks = max_hamming + 1
-    bb = bits // n_blocks
-    sh = df.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
-
-    def _key(i):
-        sr = F.shiftright("_h", i * bb)
-        # a full-width block needs no mask ((1<<64)-1 overflows a long)
-        return sr if bb >= 64 else sr.bitwiseAND(F.lit((1 << bb) - 1))
-
-    blocked = sh.select(
-        "_id", "_h",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("blk"), _key(i).alias("key"))
-            for i in range(n_blocks)
-        ])).alias("b"),
-    ).select("_id", "_h", "b.blk", "b.key")
-    l, r = blocked.alias("l"), blocked.alias("r")
-    ham = F.bit_count(F.col("l._h").bitwiseXOR(F.col("r._h")))
-    return (
-        l.join(r, (F.col("l.blk") == F.col("r.blk")) & (F.col("l.key") == F.col("r.key"))
-               & (F.col("l._id") < F.col("r._id")))
-        .where(ham <= max_hamming)
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"),
-                ham.alias("hamming"))
-        .distinct()
     )

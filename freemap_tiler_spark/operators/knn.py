@@ -10,10 +10,11 @@ No counterpart in the reference (SURVEY.md §2.5); required by BASELINE.json
 4. ``Window.partitionBy(probe).orderBy(dist)`` + ``row_number() <= k``.
 
 Probes whose 3x3 neighborhood holds fewer than k points escalate to a
-widened ring (doubling, ``expand_rounds`` times); at production zoom
-choices (cell ~ expected kNN radius) the fallback triggers on <1% of
-probes.  Probes still underfilled after the last ring return their partial
-(rank < k) rows rather than disappearing.
+widened ring: Chebyshev radius 2, then 4 (``RINGS``; a ring wider than the
+world at zoom 0 and 1 is dropped).  At production zoom choices (cell ~
+expected kNN radius) the escalation triggers on <1% of probes.  Probes
+still underfilled at ring 4 return their partial (rank < k) rows rather
+than disappearing; a probe with no point within ring 4 returns no rows.
 
 Scale note (VERDICT r4 #1): ring escalation is decided by *cell-count
 sums* computed in ONE pass — every probe explodes its MAX-ring
@@ -38,6 +39,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from freemap_tiler_spark.functions import cells, mercator
+
+# the ring schedule: Chebyshev neighborhood radii, in cells, tried in order
+RINGS = (1, 2, 4)
 
 
 def _with_cell_xy(df: DataFrame, lon_col: str, lat_col: str, zoom: int, px: str) -> DataFrame:
@@ -66,7 +70,6 @@ def knn_join(
     point_id: str = "point_id",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    expand_rounds: int = 2,
 ) -> DataFrame:
     """Returns (probe_id, point_id, dist, rank) with rank 1..k per probe.
 
@@ -87,13 +90,8 @@ def knn_join(
     # subplan feeding the candidate join collapses via exchange reuse.
     cnts = pt.groupBy("qcell").agg(F.count("*").alias("_ccnt"))
 
-    # ring schedule 1, 2, 4, ... — same doubling as the old iterative loop.
-    rings = [1]
-    for _ in range(expand_rounds):
-        nxt = rings[-1] * 2
-        if nxt > (1 << zoom):
-            break
-        rings.append(nxt)
+    # a ring wider than the world (zoom 0 and 1) is dropped from the schedule
+    rings = [r for r in RINGS if r <= (1 << zoom)]
     max_ring = rings[-1]
 
     n = mercator.zoom_n(zoom)
@@ -151,12 +149,10 @@ def knn_join(
         """Cumulative point count at every candidate ring via ONE window
         over the probe (no separate aggregation + join back: the former
         groupBy + re-join shape cost an extra shuffle and a broadcast
-        build per tier), then the smallest sufficient ring as a CASE
-        chain attached to every (probe, cell) row; probes underfilled at
-        the widest option keep ``fallback`` and return their PARTIAL
-        top-(<k) rows rather than disappearing (VERDICT r2 "What's
-        wrong" #4).  ``fallback=None`` leaves insufficient probes with a
-        NULL choice (tier split below)."""
+        build), then the smallest sufficient ring as a CASE chain attached
+        to every (probe, cell) row; probes underfilled at the widest
+        option keep ``fallback`` and return their PARTIAL top-(<k) rows
+        rather than disappearing (VERDICT r2 "What's wrong" #4)."""
         w = Window.partitionBy(probe_id)
         cums = [
             F.sum(F.when(F.col("_ring") <= r, F.col("_ccnt")).otherwise(F.lit(0)))
@@ -164,48 +160,20 @@ def knn_join(
             for r in ring_opts
         ]
         opts = [F.when(c >= k, F.lit(r)) for r, c in zip(ring_opts, cums)]
-        if fallback is not None:
-            opts.append(F.lit(fallback))
-        return counted.withColumn("_chosen", F.coalesce(*opts))
+        return counted.withColumn("_chosen", F.coalesce(*opts, F.lit(fallback)))
 
-    # two-tier plan (100-TB shape): EVERY probe pays only the small-ring
-    # explode ((2*SMALL+1)^2 cells); the full max_ring neighborhood —
-    # (2^expand_rounds)-wide, quadratically larger — is exploded ONLY for
-    # the probes the small tier could not satisfy (sparse regions, a tail
-    # by construction).  Candidate-set semantics are identical to a
-    # single max_ring pass: each probe uses its smallest sufficient ring.
-    SMALL_CAP = 4
-    small_rings = [r for r in rings if r <= SMALL_CAP] or rings[:1]
-    r_small = small_rings[-1]
+    # every probe explodes its widest ring once: (2*4+1)^2 = 81 offsets.
     # occupied neighbor cells only; empty cells contribute no counts and
     # no candidates, and a probe with ZERO occupied cells in its widest
     # ring yields no rows (the documented zero-candidate contract)
-    counted_s = neighbor_cells(pr, r_small).join(cnts, "qcell")
-    if max_ring <= r_small:
-        if len(rings) == 1:
-            cand_cells = counted_s
-        else:
-            cand_cells = (
-                with_choice(counted_s, rings[:-1], max_ring)
-                .where(F.col("_ring") <= F.col("_chosen"))
-            )
+    counted = neighbor_cells(pr, max_ring).join(cnts, "qcell")
+    if len(rings) == 1:
+        cand_cells = counted
     else:
-        choice_s = with_choice(counted_s, small_rings, None)
-        cand_small = choice_s.where(
-            F.col("_chosen").isNotNull() & (F.col("_ring") <= F.col("_chosen"))
-        )
-        # unsatisfied probes (including zero-occupied-small-ring ones,
-        # absent from counted_s entirely) escalate to the wide tier
-        sat_ids = choice_s.where(F.col("_chosen").isNotNull()).select(probe_id)
-        wide_pr = pr.join(sat_ids, probe_id, "anti")
-        counted_w = neighbor_cells(wide_pr, max_ring).join(cnts, "qcell")
-        cand_wide = (
-            with_choice(counted_w, rings[:-1], max_ring)
+        cand_cells = (
+            with_choice(counted, rings[:-1], max_ring)
             .where(F.col("_ring") <= F.col("_chosen"))
         )
-        cand_cells = cand_small.select(
-            probe_id, "qcell", "_plon", "_plat"
-        ).unionByName(cand_wide.select(probe_id, "qcell", "_plon", "_plat"))
     # project to the 4 columns the candidate join needs BEFORE the fan-out
     # (guide: an explicit select before a multiplying join is cheap
     # insurance — _ring/_ccnt/_chosen would otherwise ride every candidate

@@ -123,13 +123,12 @@ def pip_join_broadcast(
     polygons: DataFrame | list[dict],
     x_col: str = "lon",
     y_col: str = "lat",
-    how: str = "inner",
 ) -> DataFrame:
     """points |><| polygons on contains(poly, point), broadcast strategy.
 
     Output: points columns + (poly_id, tag); a point inside k polygons
-    yields k rows (true join semantics).  how='left' keeps misses with NULL
-    poly_id.  Zero shuffles: mapInPandas over the points only.
+    yields k rows and a point inside none yields no row (inner join
+    semantics).  Zero shuffles: mapInPandas over the points only.
     """
     polys = polygons if isinstance(polygons, list) else collect_polygons(polygons)
     bboxes = np.array([p["bbox"] for p in polys]) if polys else np.zeros((0, 4))
@@ -138,14 +137,11 @@ def pip_join_broadcast(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in points.schema.fields]
         + ["poly_id long", "tag string"]
     )
-    left = how == "left"
-
     def _match(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             px = pdf[x_col].to_numpy(float)
             py = pdf[y_col].to_numpy(float)
             idx_acc, pid_acc, tag_acc = [], [], []
-            matched = np.zeros(len(pdf), dtype=bool)
             if len(polys):
                 # flat R-tree: one vectorized bbox mask per polygon
                 for p, bb in zip(polys, bboxes):
@@ -160,17 +156,11 @@ def pip_join_broadcast(
                     idx_acc.append(hit)
                     pid_acc.append(np.full(len(hit), p["poly_id"], dtype=np.int64))
                     tag_acc.extend([p["tag"]] * len(hit))
-                    matched[hit] = True
             idx = np.concatenate(idx_acc) if idx_acc else np.array([], dtype=np.int64)
             pid = np.concatenate(pid_acc) if pid_acc else np.array([], dtype=np.int64)
             out = pdf.iloc[idx].copy()
             out["poly_id"] = pid
             out["tag"] = tag_acc
-            if left:
-                miss = pdf.iloc[~matched].copy()
-                miss["poly_id"] = None
-                miss["tag"] = None
-                out = pd.concat([out, miss])
             yield out[out_fields]
 
     return points.mapInPandas(_match, schema)

@@ -64,15 +64,15 @@ def write_rows(
     to ``part-<id>.parquet``: a write killed before the rename leaves a
     file that Spark, pyarrow and ``read_rows`` all skip.  ``<id>`` starts
     with the write's clock time, so ``read_rows`` returns earlier appends
-    first.  ``mode`` is ``"append"`` or ``"overwrite"`` (the directory is
-    replaced)."""
+    first.  ``mode`` is ``"append"`` or ``"overwrite"``: an overwrite
+    deletes the table's other ``part-*`` files only after its own file is
+    in place, so a kill part-way leaves the old rows followed by the new
+    ones, never an empty table."""
     schema = _arrow_schema(ddl_schema)
     table = pa.Table.from_pylist(
         [dict(zip(schema.names, r)) for r in rows], schema=schema)
     sink = pa.BufferOutputStream()
     pq.write_table(table, sink)
-    if mode == "overwrite":
-        fs_delete(spark, path)
     name = f"part-{time.time_ns():020d}-{uuid.uuid4().hex}.parquet"
     fs, hidden, jvm = _jfs(spark, f"{path}/.{name}")
     out = fs.create(hidden, True)
@@ -82,6 +82,16 @@ def write_rows(
         out.close()
     if not fs.rename(hidden, jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")):
         raise OSError(f"could not rename {path}/.{name} to {name}")
+    if mode == "overwrite":
+        for old in _parts(fs, jvm, path):
+            if old.getName() != name:
+                fs.delete(old, False)
+
+
+def _parts(fs, jvm, path: str) -> list:
+    """The ``part-*.parquet`` files of a table, in file-name order."""
+    found = fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/part-*.parquet"))
+    return sorted((st.getPath() for st in found or []), key=lambda f: f.getName())
 
 
 def read_rows(spark: SparkSession, path: str, ddl_schema: str) -> list[dict]:
@@ -90,11 +100,9 @@ def read_rows(spark: SparkSession, path: str, ddl_schema: str) -> list[dict]:
     Spark-written tables alike; like ``spark.read.schema(ddl)``, a column
     that a file lacks reads as NULL.  A missing table has no rows."""
     schema = _arrow_schema(ddl_schema)
-    fs, p, jvm = _jfs(spark, f"{path}/part-*.parquet")
-    files = sorted((st.getPath() for st in fs.globStatus(p) or []),
-                   key=lambda f: f.getName())
+    fs, _, jvm = _jfs(spark, path)
     rows: list[dict] = []
-    for part in files:
+    for part in _parts(fs, jvm, path):
         stream = fs.open(part)
         try:
             data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)

@@ -67,6 +67,15 @@ def committed_rows(spark: SparkSession, root: str) -> dict[int, dict]:
     }
 
 
+def compact_lineage(spark: SparkSession, root: str) -> None:
+    """Rewrite ``_lineage`` as one file holding each level's latest commit
+    row, so a root that is updated again and again reads one file, not
+    one per level per update."""
+    # read_rows gives each row's values in LINEAGE_SCHEMA's column order
+    rows = [tuple(r.values()) for r in committed_rows(spark, root).values()]
+    fsutil.write_rows(spark, rows, LINEAGE_SCHEMA, _lineage_dir(root), "overwrite")
+
+
 def committed_levels(spark: SparkSession, root: str) -> dict[int, int]:
     """{level: row_count} of the committed levels."""
     return {z: r["row_count"] for z, r in committed_rows(spark, root).items()}

@@ -5,9 +5,10 @@ and prints every 10 s (src/time_track.rs:22-33,117-127).  Spark-native
 equivalent:
 
 - a driver-side stage timer that appends rows to a ``_metrics`` parquet
-  table — (stage, seconds, rows, ts) — one row per pipeline stage;
+  table — (stage, seconds, rows, ts) — one row per pipeline stage (the
+  reference's per-metric fold is a ``groupBy("stage")`` over it);
 - a LIVE progress reporter (A4): while a stage runs, a daemon thread polls
-  ``sparkContext.statusTracker()`` every ``progress_interval`` seconds and
+  ``sparkContext.statusTracker()`` every ``PROGRESS_INTERVAL_S`` seconds and
   prints pct / completed-vs-total tasks / elapsed to stderr (the reference's
   10-s ticker).  A final 100% line is always printed at stage end, so every
   stage reports at least once regardless of its duration.
@@ -24,20 +25,18 @@ import threading
 import time
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from freemap_tiler_spark.plans.fsutil import write_rows
 
 METRICS_SCHEMA = "stage string, seconds double, rows long, ts double"
+PROGRESS_INTERVAL_S = 10.0
 
 
 class MetricsSink:
-    def __init__(
-        self, spark: SparkSession, root: str, progress_interval: float = 10.0
-    ):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.path = os.path.join(root, "_metrics")
-        self.progress_interval = progress_interval
         self._rows: list[tuple] = []
 
     def _emit_progress(self, name: str, t0: float, final: bool = False) -> None:
@@ -65,7 +64,7 @@ class MetricsSink:
         stop = threading.Event()
 
         def _tick():
-            while not stop.wait(self.progress_interval):
+            while not stop.wait(PROGRESS_INTERVAL_S):
                 self._emit_progress(name, t0)
 
         th = threading.Thread(target=_tick, daemon=True, name=f"progress-{name}")
@@ -88,22 +87,3 @@ class MetricsSink:
                 METRICS_SCHEMA, self.path, "append",
             )
             self._rows = []
-
-    # the read-back names its schema, so it runs no footer-inference job
-    def read(self) -> DataFrame:
-        return self.spark.read.schema(METRICS_SCHEMA).parquet(self.path)
-
-    def summary(self) -> DataFrame:
-        """The reference's per-metric fold: count + total + mean seconds."""
-        from pyspark.sql import functions as F
-
-        return (
-            self.read()
-            .groupBy("stage")
-            .agg(
-                F.count("*").alias("runs"),
-                F.sum("seconds").alias("total_sec"),
-                F.avg("seconds").alias("mean_sec"),
-                F.sum("rows").alias("rows"),
-            )
-        )

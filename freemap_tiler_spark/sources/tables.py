@@ -22,9 +22,3 @@ TABLES = [
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view (idempotent)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -13,7 +13,9 @@ incremental-view-maintenance job:
    dirty subset;
 3. per level: recompute dirty parents from their (4) children — the stored
    clean siblings are read back via a semi-join — and overwrite only those
-   rows (copy-on-write per level, committed to lineage).
+   rows (copy-on-write per level, committed to lineage);
+4. compact ``_lineage`` to each level's latest commit row, so a root that
+   takes update after update still reads one lineage file.
 
 Cost is O(dirty leaves * depth), not O(pyramid) — the property that makes
 daily 100 TB corpus refreshes feasible.
@@ -25,7 +27,8 @@ import os
 import time
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from freemap_tiler_spark.functions import cells
 from freemap_tiler_spark.operators import pyramid as P
@@ -104,17 +107,20 @@ def incremental_update(
     retired = None  # the dirty set whose last consumer ran last iteration
     for z in range(max_zoom, min_zoom - 1, -1):
         t0 = time.time()
-        # the dirty set feeds this level's merge write and count and the
-        # next level's parent set: unpersisted, its rasterize/compose UDF
-        # would run once per consumer
+        # the dirty set feeds both sides of this level's merge write and
+        # the next level's parent set: unpersisted, its rasterize/compose
+        # UDF would run once per consumer
         current_dirty = current_dirty.persist(StorageLevel.MEMORY_AND_DISK)
         final = L.level_path(root, z)
         _recover_swap(spark, final)
         # each read-back names its schema: no footer-inference job
         stored = L.read_level(spark, root, z)
         dirty_cells = current_dirty.select("cell").distinct()
+        # one row per dirty cell: the write observes the dirty count too,
+        # so counting it runs no job of its own
+        dirty_obs = Observation()
         merged = stored.join(dirty_cells, "cell", "left_anti").unionByName(
-            current_dirty
+            current_dirty.observe(dirty_obs, F.count(F.lit(1)).alias("n"))
         )
         # write ONCE to a staging dir, then promote with the two-rename
         # swap (old set aside, never a missing-live-dir window; Hadoop FS
@@ -124,7 +130,7 @@ def incremental_update(
         # level is not re-read after the swap
         merged, obs = L._observe(merged, z)
         merged.write.mode("overwrite").parquet(_aside_paths(final)[0])
-        out[z] = dirty_cells.count()
+        out[z] = dirty_obs.get["n"]
         _swap_commit(spark, final)
         L._commit_level(spark, root, z, obs, time.time() - t0)
         # this dirty set still backs parent_cells below (it executes at
@@ -145,4 +151,5 @@ def incremental_update(
             "left_semi",
         )
         current_dirty = P.compose_round(kids, 1, tile_size, 2)
+    L.compact_lineage(spark, root)
     return out

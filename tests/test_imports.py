@@ -92,12 +92,17 @@ def test_walker_flags_function_local_import_of_missing_module():
 
 
 def _definitions(src: str):
-    """Names a module defines at top level: functions, classes and
-    assigned constants.  Names bound inside a top-level ``if``/``try`` are
-    skipped: those are platform shims, not API."""
+    """Names a module defines at top level: functions, classes, assigned
+    constants, and the methods of its classes as ``Class.method``.  Names
+    bound inside a top-level ``if``/``try`` are skipped: those are
+    platform shims, not API."""
     for node in ast.parse(src).body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             yield node.name
+        if isinstance(node, ast.ClassDef):
+            for m in node.body:
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    yield f"{node.name}.{m.name}"
         elif isinstance(node, (ast.Assign, ast.AnnAssign)):
             targets = node.targets if isinstance(node, ast.Assign) else [node.target]
             for t in targets:
@@ -128,18 +133,22 @@ def _unreferenced(defining: dict, sources: list[str]) -> list[tuple[str, str]]:
         used.update(_references(src))
     return sorted((mod, name) for mod, src in defining.items()
                   for name in _definitions(src)
-                  if not name.startswith("__") and name not in used)
+                  if not name.split(".")[-1].startswith("__")
+                  and name.split(".")[-1] not in used)
 
 
 def _dead_definitions(root: Path = ROOT) -> list[tuple[str, str]]:
     """Package definitions that no code outside the tests names: the
     package itself, the tools, the benchmark (less its tests) and
     ``__spark_entry__.py``.  A name only a test calls is not reached by
-    any entry point."""
+    any entry point.  A package ``__init__.py`` only re-exports, so its
+    names do not count: a re-export that only a test imports reaches
+    nothing."""
     pkg = {str(p.relative_to(root)): p.read_text()
            for p in sorted((root / PKG).rglob("*.py"))}
     reaching = [p.read_text() for p in _sources(root)
-                if not any(p.is_relative_to(root / d) for d in TEST_DIRS)]
+                if not any(p.is_relative_to(root / d) for d in TEST_DIRS)
+                and not (p.name == "__init__.py" and p.is_relative_to(root / PKG))]
     return _unreferenced(pkg, reaching)
 
 
@@ -179,6 +188,35 @@ def test_definition_guard_ignores_references_from_tests(tmp_path):
         "__spark_entry__.py": "",
     })
     assert _dead_definitions(root) == [(f"{PKG}/m.py", "tested")]
+
+
+def test_definition_guard_ignores_package_reexports(tmp_path):
+    """A name that only a package ``__init__.py`` re-exports (import alias
+    and ``__all__`` string) and only a test imports is flagged."""
+    root = _tree(tmp_path, {
+        f"{PKG}/sub/__init__.py": (
+            f"from {PKG}.sub.m import tooled, exported\n"
+            "__all__ = ['tooled', 'exported']\n"),
+        f"{PKG}/sub/m.py": "def tooled():\n    pass\n\ndef exported():\n    pass\n",
+        "tools/t.py": f"from {PKG}.sub import tooled\ntooled()\n",
+        "tests/test_m.py": f"from {PKG}.sub import exported\nexported()\n",
+        "__spark_entry__.py": "",
+    })
+    assert _dead_definitions(root) == [(f"{PKG}/sub/m.py", "exported")]
+
+
+def test_definition_guard_flags_a_method_only_a_test_calls(tmp_path):
+    root = _tree(tmp_path, {
+        f"{PKG}/m.py": (
+            "class Sink:\n"
+            "    def __init__(self):\n        self.rows = []\n"
+            "    def flush(self):\n        pass\n"
+            "    def summary(self):\n        pass\n"),
+        "tools/t.py": f"from {PKG}.m import Sink\nSink().flush()\n",
+        "tests/test_m.py": f"from {PKG}.m import Sink\nSink().summary()\n",
+        "__spark_entry__.py": "",
+    })
+    assert _dead_definitions(root) == [(f"{PKG}/m.py", "Sink.summary")]
 
 
 def test_definition_guard_exempts_entry_points(tmp_path):

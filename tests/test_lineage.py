@@ -135,6 +135,27 @@ def test_per_partition_lineage_reads_as_nothing_committed(spark, sf_dir, tmp_pat
     assert L.committed_levels(spark, root) == L.committed_levels(spark, fresh)
 
 
+def _kill_at(monkeypatch, method):
+    """Make the Hadoop FileSystem that ``fsutil`` uses raise at ``method``,
+    as if the driver were killed there."""
+    real = fsutil._jfs
+
+    class Killed:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            if name == method:
+                raise RuntimeError(f"killed at {method}")
+            return getattr(self.fs, name)
+
+    def killing(spark, path):
+        fs, p, jvm = real(spark, path)
+        return Killed(fs), p, jvm
+
+    monkeypatch.setattr(fsutil, "_jfs", killing)
+
+
 def test_write_killed_before_its_rename_is_invisible(spark, sf_dir, tmp_path,
                                                      monkeypatch):
     """A small-table write killed between its bytes and its rename leaves
@@ -145,24 +166,8 @@ def test_write_killed_before_its_rename_is_invisible(spark, sf_dir, tmp_path,
     L.write_pyramid(spark, _leaves(spark, sf_dir), root, 5, 3, 32)
     levels = L.committed_levels(spark, root)
     rows = fsutil.read_rows(spark, lin, L.LINEAGE_SCHEMA)
-    real = fsutil._jfs
-
-    class KilledAtRename:
-        def __init__(self, fs):
-            self.fs = fs
-
-        def __getattr__(self, name):
-            return getattr(self.fs, name)
-
-        def rename(self, *_):
-            raise RuntimeError("killed before the rename")
-
-    def killing(spark, path):
-        fs, p, jvm = real(spark, path)
-        return KilledAtRename(fs), p, jvm
-
-    monkeypatch.setattr(fsutil, "_jfs", killing)
-    with pytest.raises(RuntimeError, match="killed before the rename"):
+    _kill_at(monkeypatch, "rename")
+    with pytest.raises(RuntimeError, match="killed at rename"):
         fsutil.write_rows(spark, [(2, 7, 1, 2, 0, 1, 0, 1, 0.5, "committed")],
                           L.LINEAGE_SCHEMA, lin, "append")
     monkeypatch.undo()
@@ -171,6 +176,25 @@ def test_write_killed_before_its_rename_is_invisible(spark, sf_dir, tmp_path,
     assert L.committed_levels(spark, root) == levels
     assert fsutil.read_rows(spark, lin, L.LINEAGE_SCHEMA) == rows
     assert spark.read.parquet(lin).count() == len(rows) == 3
+
+
+def test_overwrite_killed_before_its_cleanup_keeps_the_new_rows(spark, tmp_path,
+                                                                 monkeypatch):
+    """An overwrite puts its own file in place before it deletes the old
+    ones: killed in between, the table reads the old rows and then the new
+    ones, never nothing; completed, it holds one file of new rows."""
+    path = str(tmp_path / "rows")
+    ddl = "name string, value string"
+    fsutil.write_rows(spark, [("a", "1")], ddl, path, "append")
+    fsutil.write_rows(spark, [("b", "2")], ddl, path, "append")
+    _kill_at(monkeypatch, "delete")
+    with pytest.raises(RuntimeError, match="killed at delete"):
+        fsutil.write_rows(spark, [("c", "3")], ddl, path, "overwrite")
+    monkeypatch.undo()
+    assert [r["name"] for r in fsutil.read_rows(spark, path, ddl)] == ["a", "b", "c"]
+    fsutil.write_rows(spark, [("d", "4")], ddl, path, "overwrite")
+    assert fsutil.read_rows(spark, path, ddl) == [{"name": "d", "value": "4"}]
+    assert len(glob.glob(f"{path}/part-*.parquet")) == 1
 
 
 def test_killed_rebuild_resumes_to_the_new_leaves(spark, sf_dir):

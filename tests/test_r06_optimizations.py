@@ -146,9 +146,10 @@ def test_brute_topk_matches_hof_formulation(spark, sf_dir):
 def test_knn_neighbor_filter_path_matches_wrap_branch(spark):
     """The r6 shuffle-free neighbor enumeration (off-grid y filtered) must
     agree with the clamp+groupBy branch.  zoom=2 (2R+1 > 2^zoom) forces the
-    groupBy branch; zoom=3 (2R+1 <= 2^zoom) takes the filter branch; for
-    probes/points placed identically relative to the grid edge, the k
-    nearest sets must agree with the brute-force oracle in both."""
+    groupBy branch; zoom=3 (2R+1 <= 2^zoom) takes the filter branch; zoom 0
+    and 1 drop the rings wider than the world (schedule [1] and [1, 2]).
+    For probes/points placed identically relative to the grid edge, the k
+    nearest sets must agree with the brute-force oracle at every zoom."""
     probes = spark.createDataFrame(pd.DataFrame({
         "probe_id": [1, 2, 3],
         "lon": [0.0, 179.0, -179.0],
@@ -162,9 +163,9 @@ def test_knn_neighbor_filter_path_matches_wrap_branch(spark):
     }))
     brute = {(r.probe_id, r.point_id) for r in knn.knn_join_brute(
         probes, pts, k=3).collect()}
-    for zoom in (2, 3):
+    for zoom in (0, 1, 2, 3):
         got = {(r.probe_id, r.point_id) for r in knn.knn_join(
-            probes, pts, k=3, zoom=zoom, expand_rounds=2).collect()}
+            probes, pts, k=3, zoom=zoom).collect()}
         # the grid operator is ring-capped; at these tiny zooms the ring
         # covers the world, so it must equal brute exactly
         assert got == brute, f"zoom={zoom}"

@@ -186,12 +186,12 @@ def test_full_pipeline_with_resume_and_store(spark, blocks, capfd):
         meta = {r.name: r.value for r in spark.read.parquet(f"{root}/metadata").collect()}
         assert meta["format"] == "png" and "limits" in meta
         # metrics written
-        from freemap_tiler_spark.plans.metrics import MetricsSink
-        sink = MetricsSink(spark, root)
-        summary = {r.stage for r in sink.summary().collect()}
-        assert set(stages) <= summary
+        from freemap_tiler_spark.plans import fsutil
+        from freemap_tiler_spark.plans.metrics import METRICS_SCHEMA
+        metrics = fsutil.read_rows(spark, f"{root}/_metrics", METRICS_SCHEMA)
+        assert set(stages) <= {r["stage"] for r in metrics}
         # the rasterize row counts the leaf tiles (the max_zoom level)
-        leaf_rows = [r.rows for r in sink.read().where("stage = 'rasterize'").collect()]
+        leaf_rows = [r["rows"] for r in metrics if r["stage"] == "rasterize"]
         assert leaf_rows == [counts[9]]
         # rerun == resume: counts unchanged
         counts2 = run_tiler(

@@ -107,10 +107,11 @@ def main() -> None:
         shutil.rmtree(root, ignore_errors=True)
 
     # 7. production grid kNN: equi-join on the neighborhood cell, never a
-    # cartesian product (the brute twin is the only allowed crossJoin)
+    # cartesian product (the brute twin is the only allowed crossJoin),
+    # and one candidate plan: no anti-join splitting probes into tiers
     p = plan_of(contract.q_knn_grid(spark, sf))
-    check("knn_grid: cell equi-join, no cartesian", p, ["Join"],
-          ["CartesianProduct", "BroadcastNestedLoopJoin"])
+    check("knn_grid: cell equi-join, no cartesian, one tier", p, ["Join"],
+          ["CartesianProduct", "BroadcastNestedLoopJoin", "LeftAnti"])
 
     # 8. cell-prefix PIP join: equi-join, no cartesian
     p = plan_of(contract.q_pip_join_cells(spark, sf))
