@@ -801,11 +801,7 @@ FROM planted GROUP BY 1 ORDER BY fingerprint
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 50 == 0)
-    sig = dedup.minhash_signature(F.col("text"), 4)
-    return d.select(
-        "doc_id",
-        *[F.element_at(sig, i + 1).alias(f"h{i}") for i in range(4)],
-    ).orderBy("doc_id")
+    return dedup.minhash_signatures(d, num_hashes=4).orderBy("doc_id")
 
 
 def _sql_minhash_signatures() -> str:

@@ -15,11 +15,11 @@ DuckDB) + modular arithmetic, so the DuckDB oracle can recompute signatures
 bit-for-bit — dedup correctness is checked end-to-end, not rows-only.
 
 Scale notes: exact dedup is one shuffle on a 60-bit key.  MinHash-LSH is
-the standard shape: explode shingles (narrow), per-doc signature agg (one
-shuffle on doc_id — map-side combined), explode bands (narrow), self-join
-on band bucket (one shuffle on a well-distributed 60-bit bucket key; AQE
-splits hot buckets), exact verify on the (small) candidate set.  No
-all-pairs product ever materializes.  Intermediate tables (signatures,
+the standard shape: one Arrow signature pass per doc (narrow), explode
+bands (narrow), self-join on band bucket (one shuffle on a
+well-distributed 60-bit bucket key; hot buckets switch to O(k) pairs),
+exact verify on the (small) candidate set.  No all-pairs product ever
+materializes.  Intermediate tables (signatures,
 bucket sizes, connected-components rounds) are checkpointed: reliably
 when the session has a checkpoint dir, locally otherwise.
 """
@@ -67,18 +67,6 @@ def shingles(text_col, n: int = 3) -> Column:
     )).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def minhash_signature(text_col, num_hashes: int = 8, shingle_n: int = 3) -> Column:
-    """array<long> MinHash signature: per hash i, min over shingles of
-    (A[i] * (md5_60(shingle) mod P) + B[i]) mod P."""
-    sh = shingles(text_col, shingle_n)
-    base = F.transform(sh, lambda s: token_hash(s) % P)
-    sigs = [
-        F.array_min(F.transform(base, lambda h: (F.lit(A[i]) * h + F.lit(B[i])) % P))
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the lowest-id representative per identical text.
     Returns (fingerprint, keep_id, dup_count)."""
@@ -89,58 +77,32 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def minhash_lsh_pairs(
+def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 8,
-    bands: int = 4,
     shingle_n: int = 3,
-    max_bucket_size: int = 64,
 ) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) sharing >=1 LSH band.
+    """(id_col, h0 .. h{num_hashes-1}) MinHash signatures in ONE Arrow
+    pass: per hash i, the min over the document's word shingles of
+    (A[i] * (md5_60(shingle) mod P) + B[i]) mod P.
 
-    bands must divide num_hashes; band bucket = md5 hash of the band's
-    signature slice.  Self-join on (band_idx, bucket) — the classic
-    LSH join; dedup pairs found in multiple bands.
-
-    Hot-bucket guard: a degenerate bucket of k near-identical docs would
-    emit k^2/2 pairs from ONE task (AQE splits the shuffle, not the
-    quadratic pair count).  Buckets larger than ``max_bucket_size`` switch
-    to O(k) pairs: a star around the bucket's min id PLUS a chain linking
-    members consecutively in full-minhash-signature order.  The star keeps
-    the bucket one connected component; the chain matters when a mixed
-    over-size bucket (band collision, not true dups) meets a downstream
-    Jaccard verify — star-only edges to a dissimilar representative could
-    all fail the verify and disconnect members whose true near-dup pairs
-    were never emitted, while signature-sorted neighbors are the most
-    similar available pairs and survive.  (Documented approximation:
-    other pairs of an over-size bucket are still not emitted.)
-    """
-    r = num_hashes // bands
-    # ONE Arrow pass computes every signature + band bucket from the text,
-    # then the (tiny: id + num_hashes + bands longs per doc) signature table
-    # is checkpointed so the five downstream consumers (bucket sizing,
-    # small-bucket self-join x2, star, chain re-attach) read materialized
-    # rows instead of re-running the md5-per-shingle work — the former
-    # Column-HOF pipeline evaluated interpreted (transform/array_min are
-    # CodegenFallback) and re-derived the signatures once per consumer
-    # (measured 2.3s per pass at bench scale, ~3 passes).  Tokenization
-    # (lower + trim + whitespace split) stays in the JVM so its semantics
-    # are bit-identical to the shingles() Column path and the DuckDB twin;
-    # Python only rejoins token windows and md5s them — both engines hash
-    # the same UTF-8 bytes, and the minhash permutation arithmetic
-    # ((A*h + B) % P) stays in int64 range either way.
+    Tokenization (lower + trim + whitespace split) stays in the JVM, so it
+    is bit-identical to ``shingles()`` and the DuckDB twin; Python only
+    rejoins token windows and md5s them (both engines hash the same UTF-8
+    bytes) and the permutation arithmetic stays in int64 range.  A Column
+    form of the same law (transform/array_min) evaluates interpreted,
+    since higher-order functions are CodegenFallback: measured 2.3 s per
+    pass at bench scale against one Arrow pass."""
     import numpy as np
     import pandas as pd
 
     a_coef, b_coef = A[:num_hashes], B[:num_hashes]
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    base = df.select(F.col(id_col).alias("_id"), toks.alias("_toks"))
     id_type = df.schema[id_col].dataType.simpleString()
-    sig_schema = f"_id {id_type}, " + ", ".join(
-        [f"_h{i} long" for i in range(num_hashes)]
-        + [f"_bk{b} long" for b in range(bands)]
+    schema = f"`{id_col}` {id_type}, " + ", ".join(
+        f"h{i} long" for i in range(num_hashes)
     )
 
     def _signatures(batches):
@@ -149,9 +111,7 @@ def minhash_lsh_pairs(
         aa = np.asarray(a_coef, dtype=np.int64)[None, :]
         bb = np.asarray(b_coef, dtype=np.int64)[None, :]
         for pdf in batches:
-            n = len(pdf)
-            H = np.empty((n, num_hashes), dtype=np.int64)
-            BK = np.empty((n, bands), dtype=np.int64)
+            H = np.empty((len(pdf), num_hashes), dtype=np.int64)
             for i, tk in enumerate(pdf["_toks"]):
                 # NULL text has NULL tokens: shingle it like the empty
                 # token list, as shingles() does
@@ -166,70 +126,125 @@ def minhash_lsh_pairs(
                      for s in sh),
                     dtype=np.int64, count=len(sh),
                 )[:, None]
-                m = ((aa * hs + bb) % P).min(axis=0)
-                H[i] = m
-                for b in range(bands):
-                    key = ",".join(str(m[b * r + j]) for j in range(r))
-                    BK[i, b] = int(
-                        hashlib.md5(key.encode("utf-8")).hexdigest()[:15], 16
-                    )
-            out = {"_id": pdf["_id"]}
-            out.update({f"_h{i}": H[:, i] for i in range(num_hashes)})
-            out.update({f"_bk{b}": BK[:, b] for b in range(bands)})
+                H[i] = ((aa * hs + bb) % P).min(axis=0)
+            out = {id_col: pdf[id_col]}
+            out.update({f"h{i}": H[:, i] for i in range(num_hashes)})
             yield pd.DataFrame(out)
 
-    # eager measured faster than lazy on fresh plans (1.7s vs 2.4s at bench
-    # scale): the lazy form re-enters the checkpoint machinery inside the
-    # tagged job's tasks
-    sig = _checkpoint(base.mapInPandas(_signatures, sig_schema))
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), F.col(f"_bk{b}").alias("bucket"))
-                for b in range(bands)
-            ])
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bucket")
-    # bucket size + representative via ONE window pass (the former
-    # groupBy + join back re-shuffled banded twice); checkpointed because
-    # FOUR consumers walk it (small self-join x2, star, chain) and the
-    # preserved (band, bucket) hash partitioning makes the self-join
-    # exchange-free
-    wsz = Window.partitionBy("band", "bucket")
-    tagged = _checkpoint(banded.select(
-        "_id", "band", "bucket",
-        F.count("*").over(wsz).alias("_n"),
-        F.min("_id").over(wsz).alias("_rep"),
-    ))
-    small = tagged.where(F.col("_n") <= max_bucket_size).select("_id", "band", "bucket")
-    left = small.alias("l")
-    right = small.alias("r")
-    pairs_small = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
+    return df.select(F.col(id_col), toks.alias("_toks")).mapInPandas(
+        _signatures, schema
     )
+
+
+def _lsh_pairs(rows: DataFrame, max_bucket_size: int, chain_key, flips=(0,)) -> DataFrame:
+    """Candidate pairs (id_a < id_b, distinct) of ids that share an LSH
+    bucket, from ``(_id, tbl, bkt)`` rows: one per id and table (a MinHash
+    band, an SRP table).
+
+    Bucket size and representative (min id) come from ONE window pass,
+    materialized through ``_checkpoint``: the small self-join, the star and
+    the chain all read it, and its (tbl, bkt) hash partitioning makes the
+    small self-join exchange-free.
+
+    ``flips`` are XOR masks (0 first) applied to the LEFT side's bucket
+    ids: multiprobe visits buckets at small Hamming distance, costing left
+    rows only.
+
+    Hot-bucket guard: a degenerate bucket of k near-identical ids would
+    emit k^2/2 pairs from ONE task (AQE splits the shuffle, not the
+    quadratic pair count).  Buckets larger than ``max_bucket_size`` switch
+    to O(k) pairs: a star around the bucket's min id PLUS a chain linking
+    members consecutively in ``_key`` order.  ``chain_key(big, rows)``
+    maps the over-size members' ``(_id, tbl, bkt)`` rows (and all bucket
+    rows) to the same rows with a sortable ``_key``: the full signature,
+    so members that agree on more of it sort adjacently.  The star keeps
+    the bucket one connected component; the chain matters when a mixed
+    over-size bucket (a collision, not true dups) meets a downstream
+    verify: star-only edges to a dissimilar representative could all fail
+    it and disconnect members whose true near-dup pairs were never
+    emitted, while signature-sorted neighbors are the most similar
+    available pairs and survive.  Documented approximation: the other
+    pairs of an over-size bucket, and flipped left rows landing in one,
+    are not emitted."""
+    w = Window.partitionBy("tbl", "bkt")
+    tagged = _checkpoint(rows.select(
+        "_id", "tbl", "bkt",
+        F.count("*").over(w).alias("_n"),
+        F.min("_id").over(w).alias("_rep"),
+    ))
+    small = tagged.where(F.col("_n") <= max_bucket_size).select("_id", "tbl", "bkt")
+    left = small
+    if len(flips) > 1:
+        left = tagged.select("_id", "tbl", F.explode(F.array(*[
+            F.col("bkt").bitwiseXOR(F.lit(m)) for m in flips
+        ])).alias("bkt"))
+    l, r = left.alias("l"), small.alias("r")
+    pairs_small = l.join(
+        r,
+        (F.col("l.tbl") == F.col("r.tbl")) & (F.col("l.bkt") == F.col("r.bkt"))
+        & (F.col("l._id") < F.col("r._id")),
+    ).select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
+    # star: _rep is the bucket's min id, so the pair is already ordered
     pairs_star = tagged.where(
         (F.col("_n") > max_bucket_size) & (F.col("_id") != F.col("_rep"))
     ).select(F.col("_rep").alias("id_a"), F.col("_id").alias("id_b"))
-    # chain: consecutive members in full-signature order (see docstring)
-    big = tagged.where(F.col("_n") > max_bucket_size).select("_id", "band", "bucket")
-    big_sig = big.join(sig, "_id")
-    wchain = Window.partitionBy("band", "bucket").orderBy(
-        *[f"_h{i}" for i in range(num_hashes)], "_id"
-    )
-    chained = big_sig.withColumn("_prev", F.lag("_id").over(wchain)).where(
-        F.col("_prev").isNotNull()
-    )
+    big = tagged.where(F.col("_n") > max_bucket_size).select("_id", "tbl", "bkt")
+    wchain = Window.partitionBy("tbl", "bkt").orderBy("_key", "_id")
+    chained = chain_key(big, tagged.select("_id", "tbl", "bkt")).withColumn(
+        "_prev", F.lag("_id").over(wchain)
+    ).where(F.col("_prev").isNotNull())
     pairs_chain = chained.select(
         F.least("_prev", "_id").alias("id_a"), F.greatest("_prev", "_id").alias("id_b")
     )
     return pairs_small.unionByName(pairs_star).unionByName(pairs_chain).distinct()
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 8,
+    bands: int = 4,
+    shingle_n: int = 3,
+    max_bucket_size: int = 64,
+) -> DataFrame:
+    """Candidate near-dup pairs (id_a < id_b) sharing >=1 LSH band.
+
+    bands must divide num_hashes; band bucket = md5 hash of the band's
+    signature slice.  Pairs come from ``_lsh_pairs``: a self-join on
+    (band, bucket), with its hot-bucket star and chain; the chain orders
+    an over-size bucket's members by their full MinHash signature.
+
+    The signature table (id + num_hashes longs per doc) is checkpointed
+    so bucketing and the chain read materialized rows instead of
+    re-running the md5-per-shingle pass; eager measured faster than lazy
+    on fresh plans (1.7 s vs 2.4 s at bench scale): the lazy form
+    re-enters the checkpoint machinery inside the tagged job's tasks.
+    """
+    r = num_hashes // bands
+    hs = [f"h{i}" for i in range(num_hashes)]
+    sig = _checkpoint(
+        minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
+        .withColumnRenamed(id_col, "_id")
+    )
+    rows = sig.select(
+        "_id",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(b).alias("tbl"),
+                md5_fingerprint(F.concat_ws(",", *hs[b * r:(b + 1) * r])).alias("bkt"),
+            )
+            for b in range(bands)
+        ])).alias("b"),
+    ).select("_id", "b.tbl", "b.bkt")
+
+    def _sig_key(big: DataFrame, _rows: DataFrame) -> DataFrame:
+        # join the checkpointed table whole, not a narrowed projection of
+        # it: a smaller size estimate would make the planner broadcast the
+        # whole signature table (one more job) instead of the members
+        return big.join(sig, "_id").select("_id", "tbl", "bkt", F.array(*hs).alias("_key"))
+
+    return _lsh_pairs(rows, max_bucket_size, _sig_key)
 
 
 def jaccard_verify(

@@ -309,6 +309,15 @@ def polygon_covering_cells(
     )
 
 
+def polygon_rings(polygons: DataFrame) -> DataFrame:
+    """(poly_id, all_xs, all_ys): all of a polygon's rings in one row.
+    Even-odd ray casting is ring-order-free, so the rings are not sorted:
+    a sort before the groupBy would stay in the plan as a global Sort."""
+    return polygons.groupBy("poly_id").agg(
+        F.collect_list("xs").alias("all_xs"), F.collect_list("ys").alias("all_ys")
+    )
+
+
 def pip_join_cells(
     points: DataFrame,
     polygons: DataFrame,
@@ -369,10 +378,7 @@ def pip_join_cells(
     # semantics); only the per-polygon tag dim — one tiny row per polygon
     # — is broadcast to all rows.
     tags = polygons.groupBy("poly_id").agg(F.first("tag").alias("tag"))
-    rings = polygons.orderBy("ring_idx").groupBy("poly_id").agg(
-        F.collect_list("xs").alias("all_xs"),
-        F.collect_list("ys").alias("all_ys"),
-    ).withColumnRenamed("poly_id", "_rpid")
+    rings = polygon_rings(polygons).withColumnRenamed("poly_id", "_rpid")
     cand = (
         matched.join(F.broadcast(tags), "poly_id")
         .withColumn(
@@ -390,30 +396,26 @@ def pip_join_cells(
 def _pip_exact_raycast(
     cand: DataFrame, points: DataFrame, x_col: str, y_col: str
 ) -> DataFrame:
-    """Exact even-odd verify over (point x candidate-polygon) rows.  When
-    ``cand`` carries an ``interior`` column, True rows are kept without a
-    ray-cast (their covering cell was proven fully inside)."""
+    """Exact even-odd verify over (point x candidate-polygon) rows.
+    ``interior`` rows are kept without a ray-cast (their covering cell was
+    proven fully inside)."""
     out_cols = list(points.schema.fieldNames()) + ["poly_id", "tag"]
     schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in points.schema.fields]
         + ["poly_id long", "tag string"]
     )
-    has_interior = "interior" in cand.columns
 
     def _exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 yield pdf.reindex(columns=out_cols)
                 continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            if has_interior:
-                keep |= pdf["interior"].to_numpy(bool)
+            keep = pdf["interior"].to_numpy(bool).copy()
             px = pdf[x_col].to_numpy(float)
             py = pdf[y_col].to_numpy(float)
             # vectorized per polygon: all boundary candidates of one
             # polygon in a single ray-cast batch
-            todo = pdf if not has_interior else pdf.loc[~keep]
-            for pid, g in todo.groupby("poly_id", sort=False):
+            for pid, g in pdf.loc[~keep].groupby("poly_id", sort=False):
                 first = g.iloc[0]
                 poly_rings = [
                     (np.asarray(xs, float), np.asarray(ys, float))

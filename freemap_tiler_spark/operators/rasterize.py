@@ -20,10 +20,13 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from freemap_tiler_spark.functions import cells, mercator
-from freemap_tiler_spark.operators.pip_join import points_in_polygon, polygon_covering_cells
+from freemap_tiler_spark.functions import cells
+from freemap_tiler_spark.operators.pip_join import (
+    points_in_polygon,
+    polygon_covering_cells,
+    polygon_rings,
+)
 
 
 def rasterize_polygons(
@@ -35,17 +38,14 @@ def rasterize_polygons(
     pixel centers in lon/lat space.  Empty masks are dropped (the empty-tile
     elision P5, src/processor.rs:594-601)."""
     cover = polygon_covering_cells(polygons, zoom)
-    rings = polygons.orderBy("ring_idx").groupBy("poly_id").agg(
-        F.collect_list("xs").alias("all_xs"), F.collect_list("ys").alias("all_ys")
-    )
-    work = cover.join(rings, "poly_id")
+    work = cover.join(polygon_rings(polygons), "poly_id")
     t = tile_size
 
     def _fill(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pids, ccs, masks = [], [], []
             for row in pdf.itertuples(index=False):
-                if getattr(row, "interior", False):
+                if row.interior:
                     # quadtree-proven interior cell: full mask, no ray-cast
                     pids.append(row.poly_id)
                     ccs.append(row.cell)

@@ -4,10 +4,11 @@ Training-data-pipeline component (engine-side requirement; no reference
 counterpart).  Two paths:
 
 - **Brute-force cosine top-k** — exact baseline: broadcast the (small)
-  probe set, one narrow pass over the corpus computing dots via
-  ``F.zip_with`` + ``F.aggregate`` (JVM-side higher-order functions — no
-  Python), window top-k.  Linear scan: right answer for <=10^4 probes over
-  any corpus size (one shuffle for the window).
+  probe matrix, one narrow ``mapInPandas`` pass over the corpus computing
+  each batch's probe x batch cosine block as a float64 GEMM and keeping
+  each probe's local top-k, then one window top-k.  Linear scan: right
+  answer for <= ``MAX_BRUTE_PROBES`` probes over any corpus size (one
+  shuffle for the window).
 
 - **LSH-bucketed ANN (random hyperplane / SRP)** — scale path: each vector
   gets a sign bucket from ``n_planes`` deterministic pseudo-random
@@ -16,12 +17,21 @@ counterpart).  Two paths:
   ``n_tables`` independent tables), exact cosine re-rank on candidates.
 
 Also provides embedding-cosine near-duplicate pairs (dedup by embedding).
+
+Zero-norm vectors have no direction: their cosine is NULL (DuckDB's
+``x / 0.0``), it ranks after every real score and passes no threshold.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from freemap_tiler_spark.operators import dedup
+
+# brute_force_topk collects its probes to the driver; past this many it
+# fails loudly instead (ann_topk and ivf_topk keep probes distributed)
+MAX_BRUTE_PROBES = 10_000
 
 
 def _norm(v) -> Column:
@@ -37,7 +47,48 @@ def dot(u, v) -> Column:
 
 
 def cosine(u, v) -> Column:
-    return dot(u, v) / (_norm(u) * _norm(v))
+    """NULL when either vector has zero norm (see the module docstring)."""
+    return F.try_divide(dot(u, v), _norm(u) * _norm(v))
+
+
+def _top_k(scored: DataFrame, k: int, probe_id: str, corpus_id: str) -> DataFrame:
+    """(probe_id, corpus_id, cos, rank): each probe's k best ``cos`` rows,
+    ties broken by corpus id; NULL cosines rank last."""
+    w = Window.partitionBy(probe_id).orderBy(F.desc("cos"), corpus_id)
+    return (
+        scored.select(probe_id, corpus_id, "cos")  # no vectors into the window shuffle
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+
+
+def _rerank(
+    cand_ids: DataFrame,
+    probes: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    probe_id: str,
+    corpus_id: str,
+    vec_col: str,
+    broadcast: bool,
+) -> DataFrame:
+    """Exact cosine top-k over (probe_id, corpus_id) candidate ids: the
+    vectors re-attach through two equi-joins, each corpus vector shipped
+    once.  Candidate ids are probe-proportional, so with ``broadcast`` the
+    ids and the probe vectors are force-broadcast and the corpus re-attach
+    stays shuffle-free (AQE's runtime conversion fires only after the
+    corpus map stage has already written its shuffle files).  A huge probe
+    set or degenerate buckets break that size assumption: ``broadcast=
+    False`` shuffles instead of failing on a too-large broadcast."""
+    pv = probes.select(F.col(probe_id), F.col(vec_col).alias("_pv"))
+    if broadcast:
+        cand_ids, pv = F.broadcast(cand_ids), F.broadcast(pv)
+    cand = (
+        corpus.select(F.col(corpus_id), F.col(vec_col).alias("_cv"))
+        .join(cand_ids, corpus_id)
+        .join(pv, probe_id)
+    )
+    return _top_k(cand.withColumn("cos", cosine("_pv", "_cv")), k, probe_id, corpus_id)
 
 
 def brute_force_topk(
@@ -62,14 +113,31 @@ def brute_force_topk(
     are CodegenFallback) AND re-derived both norms per pair; the GEMM is
     ~100x cheaper per pair and norms are computed once per row.  Ranks are
     unchanged: adjacent top-k cosine gaps measured >= 1.8e-6 across all
-    fixture SFs — nine orders above float64 summation-order noise.  NaN
-    cosines (zero-norm vectors) are kept with Spark's NaN-largest desc
-    semantics.
+    fixture SFs — nine orders above float64 summation-order noise.  A
+    zero-norm vector's cosine is NULL and ranks last, as in ``cosine``.
+
+    Raises ``ValueError`` past ``MAX_BRUTE_PROBES`` probe rows.  The guard
+    keeps at most that many + 1 rows per partition in the JVM (the low 33
+    bits of ``monotonically_increasing_id`` are a row's index in its
+    partition), so the collect stays one job with no Python stage (a
+    ``limit`` collect runs more jobs).
     """
     import numpy as np
     import pandas as pd
 
-    pr_rows = probes.select(F.col(probe_id), F.col(vec_col)).collect()
+    cap = MAX_BRUTE_PROBES
+    pr_rows = (
+        probes.select(probe_id, vec_col, F.monotonically_increasing_id().alias("_i"))
+        .where(F.col("_i").bitwiseAND(F.lit((1 << 33) - 1)) <= cap)
+        .select(probe_id, vec_col)
+        .collect()
+    )
+    if len(pr_rows) > cap:
+        raise ValueError(
+            f"brute_force_topk collects its probes to the driver: at least "
+            f"{len(pr_rows)} probe rows exceed its cap of {cap}; use ann_topk "
+            f"or ivf_topk for a probe set this large"
+        )
     pid_type = probes.schema[probe_id].dataType.simpleString()
     cid_type = corpus.schema[corpus_id].dataType.simpleString()
     P = np.array([list(r[1]) for r in pr_rows], dtype=np.float64)
@@ -90,8 +158,10 @@ def brute_force_topk(
             V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             cids = pdf[corpus_id].to_numpy()
             vn = np.sqrt((V * V).sum(axis=1))
-            C = (V @ bP.T) / (vn[:, None] * bpn[None, :])  # (batch, probes)
-            key = np.where(np.isnan(C), np.inf, C)  # Spark: NaN sorts largest
+            with np.errstate(invalid="ignore"):
+                C = (V @ bP.T) / (vn[:, None] * bpn[None, :])  # (batch, probes)
+            # zero norm: 0/0 = NaN ranks last here, and Arrow sends it as NULL
+            key = np.where(np.isnan(C), -np.inf, C)
             out_p, out_c, out_s = [], [], []
             kk = min(k, n)
             for j in range(len(bpids)):
@@ -108,12 +178,7 @@ def brute_force_topk(
     scored = corpus.select(F.col(corpus_id), F.col(vec_col)).mapInPandas(
         _score, f"{probe_id} {pid_type}, {corpus_id} {cid_type}, cos double"
     )
-    w = Window.partitionBy(probe_id).orderBy(F.desc("cos"), corpus_id)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(probe_id, corpus_id, "cos", "rank")
-    )
+    return _top_k(scored, k, probe_id, corpus_id)
 
 
 def _plane_coeff(table: int, plane: int, dim: int) -> list[float]:
@@ -163,7 +228,6 @@ def srp_bucket_rows(
     n_planes: int,
     n_tables: int,
     multiprobe: int = 0,
-    out_vec: str | None = None,
 ) -> DataFrame:
     """All (table, bucket) rows per vector in ONE Arrow kernel: a single
     (rows, dim) x (dim, n_tables*n_planes) float64 GEMM, sign-packed to
@@ -177,20 +241,15 @@ def srp_bucket_rows(
     are bit-identical to that Column form (``tests/oracles.srp_bucket``:
     same md5 coefficients, float64 accumulation; asserted in pytest).
 
-    By default emits **id-only** ``(id, tbl, bkt)`` rows (VERDICT r3
-    "What's wrong" #2): repeating the raw vector across n_tables x flips
-    bucket rows multiplies candidate-join shuffle bytes by 4-8x of the
-    corpus's widest column at 768-dim.  Callers re-attach vectors to the
-    (much smaller) deduped candidate set with one equi-join against the
-    corpus.  Pass ``out_vec`` to get the old vector-carrying rows."""
+    Emits **id-only** ``(id, tbl, bkt)`` rows (VERDICT r3 "What's wrong"
+    #2): repeating the raw vector across n_tables x flips bucket rows
+    multiplies candidate-join shuffle bytes by 4-8x of the corpus's widest
+    column at 768-dim.  Callers re-attach vectors to the (much smaller)
+    deduped candidate set with one equi-join against the corpus."""
     flips = _bit_flips(n_planes, multiprobe)
     id_type = df.schema[id_col].dataType.simpleString()
     n_t, n_p = n_tables, n_planes
-    if out_vec is not None:
-        vec_type = df.schema[vec_col].dataType.simpleString()
-        schema = f"`{id_col}` {id_type}, `{out_vec}` {vec_type}, tbl int, bkt long"
-    else:
-        schema = f"`{id_col}` {id_type}, tbl int, bkt long"
+    schema = f"`{id_col}` {id_type}, tbl int, bkt long"
 
     def _gen(batches):
         import numpy as np
@@ -210,12 +269,11 @@ def srp_bucket_rows(
             base = (bits.reshape(n, n_t, n_p) * pw).sum(axis=2)  # (n, T)
             bkts = base[:, :, None] ^ fl[None, None, :]          # (n, T, F)
             reps = n_t * len(fl)
-            cols = {id_col: pdf[id_col].to_numpy().repeat(reps)}
-            if out_vec is not None:
-                cols[out_vec] = pdf[vec_col].to_numpy().repeat(reps)
-            cols["tbl"] = np.tile(tbl_pat, n)
-            cols["bkt"] = bkts.reshape(-1)
-            yield pd.DataFrame(cols)
+            yield pd.DataFrame({
+                id_col: pdf[id_col].to_numpy().repeat(reps),
+                "tbl": np.tile(tbl_pat, n),
+                "bkt": bkts.reshape(-1),
+            })
 
     return df.select(id_col, vec_col).mapInPandas(_gen, schema)
 
@@ -259,15 +317,7 @@ def ann_topk(
     Shuffle shape (VERDICT r3 "What's wrong" #2): bucket rows are id-only
     (tbl, bkt) — the candidate equi-join moves 20-byte rows, never the
     n_tables x flips repeated raw vectors.  Vectors re-attach to the
-    deduped candidate set via two equi-joins (probe side broadcast-sized
-    by construction; corpus side ships each vector once).
-
-    ``broadcast`` (ADVICE r4 #2): the re-attach joins force-broadcast the
-    candidate ids and the probe vectors, assuming candidate volume ~
-    |probes| x n_tables x flips x bucket-occupancy fits in executor
-    memory.  A lookup with a huge probe set (or degenerate buckets)
-    violates that — pass ``broadcast=False`` to fall back to plain
-    shuffle equi-joins instead of hard-failing on a too-large broadcast."""
+    deduped candidate set in ``_rerank`` (``broadcast``: see there)."""
     pr = srp_bucket_rows(
         probes, probe_id, vec_col, dim, n_planes, n_tables, multiprobe
     )
@@ -279,28 +329,7 @@ def ann_topk(
         .select(probe_id, corpus_id)
         .dropDuplicates([probe_id, corpus_id])
     )
-    # candidate ids are O(|probes| x bucket-occupancy) — probe-proportional,
-    # so broadcast-able exactly when the probe set is (the same assumption
-    # the bucket join's probe-side broadcast already makes).  An explicit
-    # broadcast keeps the corpus re-attach join shuffle-free: AQE's runtime
-    # conversion fires only after the corpus map stage has already written
-    # its shuffle files.
-    pv = probes.select(F.col(probe_id), F.col(vec_col).alias("_pv"))
-    if broadcast:
-        cand_ids, pv = F.broadcast(cand_ids), F.broadcast(pv)
-    cand = (
-        corpus.select(F.col(corpus_id), F.col(vec_col).alias("_cv"))
-        .join(cand_ids, corpus_id)
-        .join(pv, probe_id)
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.desc("cos"), corpus_id)
-    return (
-        cand.withColumn("cos", cosine("_pv", "_cv"))
-        .select(probe_id, corpus_id, "cos")   # drop vectors before the window shuffle
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(probe_id, corpus_id, "cos", "rank")
-    )
+    return _rerank(cand_ids, probes, corpus, k, probe_id, corpus_id, vec_col, broadcast)
 
 
 def ivf_build_centroids(
@@ -445,13 +474,9 @@ def ivf_topk(
         centroids, probe_id, "_pv", nprobe=nprobe,
     )
     cand = pr.join(co, "centroid_id").select(probe_id, corpus_id, "_pv", "_cv")
-    w = Window.partitionBy(probe_id).orderBy(F.desc("cos"), corpus_id)
-    return (
-        cand.dropDuplicates([probe_id, corpus_id])
-        .withColumn("cos", cosine("_pv", "_cv"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(probe_id, corpus_id, "cos", "rank")
+    return _top_k(
+        cand.dropDuplicates([probe_id, corpus_id]).withColumn("cos", cosine("_pv", "_cv")),
+        k, probe_id, corpus_id,
     )
 
 
@@ -470,68 +495,38 @@ def embedding_near_dups(
     SRP-bucketed candidates, exact verify.  ``multiprobe`` flips up to that
     many bucket bits on the LEFT side of the self-join (recall knob — same
     trade as ann_topk: more left rows, zero extra right rows).  Bucketing
-    is the same one-GEMM Arrow kernel as ann_topk (srp_bucket_rows), and
-    the self-join moves id-only rows — vectors re-attach to the deduped
-    candidate pairs with two equi-joins (VERDICT r3 "What's wrong" #2).
+    is the same one-GEMM Arrow kernel as ann_topk (srp_bucket_rows), run
+    once; the self-join moves id-only rows, and vectors re-attach to the
+    deduped candidate pairs with two equi-joins (VERDICT r3 "What's wrong"
+    #2).
 
-    Hot-bucket guard (VERDICT r4 "What's wrong" #2, same construction as
-    ``dedup.minhash_lsh_pairs``): a degenerate bucket of k near-identical
-    embeddings would emit k^2/2 pairs from ONE task (AQE splits the
-    shuffle, not the quadratic pair count).  Buckets larger than
-    ``max_bucket_size`` switch to O(k) candidates: a star around the
-    bucket's min id PLUS a chain linking members consecutively in
-    full-signature order (per-id bucket codes across ALL tables, the SRP
-    analog of minhash's signature sort — members sharing more tables sort
-    adjacently, so chain neighbors are the most similar available pairs
-    and survive the cosine verify even when the star representative is a
-    collision, not a true dup).  Documented approximation: other pairs of
-    an over-size bucket — and multiprobe-flipped left rows landing in one
-    — are not emitted; the star keeps true-dup floods one connected
-    component through ``connected_components``."""
+    Candidate pairs and the hot-bucket guard are ``dedup._lsh_pairs``'s,
+    as for MinHash.  An over-size bucket's chain runs in full-signature
+    order: per-id bucket codes across ALL tables, folded to one sortable
+    string, so members sharing more tables sort adjacently.  The key is
+    built ONLY for over-size bucket members (semi-join prune): the common
+    all-buckets-small case pays no full-corpus aggregation for an empty
+    chain.  The star keeps a true-dup flood one connected component
+    through ``connected_components``."""
     co = corpus.select(F.col(corpus_id).alias("_id"), F.col(vec_col).alias("_v"))
-    l = srp_bucket_rows(co, "_id", "_v", dim, n_planes, n_tables, multiprobe).alias("l")
-    r = srp_bucket_rows(co, "_id", "_v", dim, n_planes, n_tables, 0)
-    sizes = r.groupBy("tbl", "bkt").agg(
-        F.count("*").alias("_n"), F.min("_id").alias("_rep")
-    )
-    tagged = r.join(sizes, ["tbl", "bkt"])
-    small = tagged.where(F.col("_n") <= max_bucket_size).select("_id", "tbl", "bkt").alias("r")
-    pairs_small = (
-        l.join(small, (F.col("l.tbl") == F.col("r.tbl")) & (F.col("l.bkt") == F.col("r.bkt"))
-               & (F.col("l._id") < F.col("r._id")))
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-    )
-    # star: every big-bucket member pairs with the bucket's min id (= _rep,
-    # so _rep < _id always holds and the pair is already ordered)
-    pairs_star = tagged.where(
-        (F.col("_n") > max_bucket_size) & (F.col("_id") != F.col("_rep"))
-    ).select(F.col("_rep").alias("id_a"), F.col("_id").alias("id_b"))
-    # chain: consecutive members in full-signature order — the per-id
-    # (tbl, bkt) codes over all tables, folded to one sortable string.
-    # Built ONLY for big-bucket members (semi-join prune): the common
-    # all-buckets-small case must not pay a full-corpus collect_list +
-    # format_string aggregation for an empty chain.
-    big = tagged.where(F.col("_n") > max_bucket_size).select("_id", "tbl", "bkt")
-    sig = r.join(big.select("_id").distinct(), "_id", "semi").groupBy("_id").agg(
-        F.array_join(
+    rows = srp_bucket_rows(co, "_id", "_v", dim, n_planes, n_tables)
+
+    def _sigkey(big: DataFrame, all_rows: DataFrame) -> DataFrame:
+        members = all_rows.join(big.select("_id").distinct(), "_id", "semi")
+        key = members.groupBy("_id").agg(F.array_join(
             F.transform(
                 F.sort_array(F.collect_list(F.struct("tbl", "bkt"))),
                 lambda s: F.format_string("%02d:%016x", s["tbl"], s["bkt"]),
             ),
             ",",
-        ).alias("_sigkey")
-    )
-    wchain = Window.partitionBy("tbl", "bkt").orderBy("_sigkey", "_id")
-    chained = big.join(sig, "_id").withColumn(
-        "_prev", F.lag("_id").over(wchain)
-    ).where(F.col("_prev").isNotNull())
-    pairs_chain = chained.select(
-        F.least("_prev", "_id").alias("id_a"), F.greatest("_prev", "_id").alias("id_b")
+        ).alias("_key"))
+        return big.join(key, "_id")
+
+    pairs = dedup._lsh_pairs(
+        rows, max_bucket_size, _sigkey, _bit_flips(n_planes, multiprobe)
     )
     return (
-        pairs_small.unionByName(pairs_star).unionByName(pairs_chain)
-        .dropDuplicates(["id_a", "id_b"])
-        .join(co.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va")), "id_a")
+        pairs.join(co.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va")), "id_a")
         .join(co.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb")), "id_b")
         .withColumn("cos", cosine("_va", "_vb"))
         .where(F.col("cos") >= threshold)
@@ -845,23 +840,5 @@ def ivfpq_topk(
         .where(F.col("_r") <= rerank)
         .select(probe_id, corpus_id)
     )
-    # short-list is <= rerank x |probes| rows by construction; the probe
-    # vectors are probe-sized — both force-broadcast under the same
-    # probe-side-is-small assumption as ann_topk (ADVICE r4 #2: pass
-    # broadcast=False for huge probe sets to shuffle instead)
-    pvec = probes.select(F.col(probe_id), F.col(vec_col).alias("_pv"))
-    if broadcast:
-        short, pvec = F.broadcast(short), F.broadcast(pvec)
-    rejoined = (
-        corpus.select(F.col(corpus_id), F.col(vec_col).alias("_cv"))
-        .join(short, corpus_id)
-        .join(pvec, probe_id)
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.desc("cos"), corpus_id)
-    return (
-        rejoined.withColumn("cos", cosine("_pv", "_cv"))
-        .select(probe_id, corpus_id, "cos")
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(probe_id, corpus_id, "cos", "rank")
-    )
+    # the short-list is <= rerank x |probes| rows by construction
+    return _rerank(short, probes, corpus, k, probe_id, corpus_id, vec_col, broadcast)

@@ -83,3 +83,16 @@ def read_pyramid(spark, root: str):
     zoom): the whole pyramid the tests compare runs by."""
     return spark.read.schema(f"{PAYLOAD_SCHEMA}, zoom int").parquet(
         os.path.join(root, "tiles"))
+
+
+def minhash_signature(text_col, num_hashes: int = 8, shingle_n: int = 3) -> Column:
+    """array<long> MinHash signature as Column higher-order functions: per
+    hash i, min over shingles of (A[i] * (md5_60(shingle) mod P) + B[i])
+    mod P.  The reference for ``dedup.minhash_signatures``."""
+    from freemap_tiler_spark.operators.dedup import A, B, P, shingles, token_hash
+
+    def perm(i):
+        return lambda h: (F.lit(A[i]) * h + F.lit(B[i])) % P
+
+    base = F.transform(shingles(text_col, shingle_n), lambda s: token_hash(s) % P)
+    return F.array(*[F.array_min(F.transform(base, perm(i))) for i in range(num_hashes)])

@@ -54,6 +54,69 @@ def test_brute_topk_rank1_is_self(spark, sf_dir):
     assert all(r.probe_id == r.vec_id for r in r1)  # self-similarity == 1
 
 
+def _zero_and_random(spark, n_zero=20, n_rand=10, dim=8):
+    """One partition: n_zero all-zero vectors (ids 0..) then n_rand random
+    ones, so a single Arrow batch holds both."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    rows = [(i, [0.0] * dim) for i in range(n_zero)] + [
+        (n_zero + j, rng.normal(size=dim).astype("float32").tolist())
+        for j in range(n_rand)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
+
+
+def test_zero_norm_cosine_is_null_and_ranks_last(spark):
+    """A zero-norm vector's cosine is NULL (DuckDB's x / 0.0): it ranks
+    after every real score and passes no threshold, in the GEMM kernel
+    and in the Column cosine alike (which must not raise DIVIDE_BY_ZERO
+    under ANSI mode)."""
+    emb = _zero_and_random(spark)
+
+    def probe(vec_id):
+        return emb.where(F.col("vec_id") == vec_id).select(
+            F.col("vec_id").alias("probe_id"), "embedding")
+
+    def ranked(df):
+        return [(r.vec_id, r.cos) for r in df.orderBy("rank").collect()]
+
+    got = ranked(similarity.brute_force_topk(probe(25), emb, k=3))
+    assert got[0][0] == 25 and abs(got[0][1] - 1.0) < 1e-6
+    assert all(v >= 20 and c is not None for v, c in got)
+    zero_probe = [(0, None), (1, None), (2, None)]  # all NULL: ties by id
+    assert ranked(similarity.brute_force_topk(probe(0), emb, k=3)) == zero_probe
+    ann = similarity.ann_topk(probe(0), emb, dim=8, k=3, n_planes=4, n_tables=2)
+    assert ranked(ann) == zero_probe
+    pairs = similarity.embedding_near_dups(
+        emb, dim=8, threshold=-1.0, n_planes=4, n_tables=2).collect()
+    assert pairs and all(r.id_a >= 20 for r in pairs)
+
+
+def test_brute_topk_probe_cap(spark, sf_dir, monkeypatch):
+    """brute_force_topk collects its probes to the driver: past
+    MAX_BRUTE_PROBES it raises and names the alternatives, and the guarded
+    collect is still one Spark job."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    # probes are not the first rows of their partition: the cap counts
+    # probe rows, not the rows the probe filter dropped
+    pr = emb.where("vec_id % 20 = 0 AND vec_id < 100").selectExpr(
+        "vec_id as probe_id", "embedding")
+    monkeypatch.setattr(similarity, "MAX_BRUTE_PROBES", 4)
+    with pytest.raises(ValueError, match=r"at least 5 probe rows exceed its cap "
+                                         r"of 4; use ann_topk or ivf_topk"):
+        similarity.brute_force_topk(pr, emb, k=3)
+    monkeypatch.setattr(similarity, "MAX_BRUTE_PROBES", 5)
+    sc = spark.sparkContext
+    sc.setJobGroup("brute_probe_collect", "probe collect")
+    try:
+        bf = similarity.brute_force_topk(pr, emb, k=3)
+        assert len(sc.statusTracker().getJobIdsForGroup("brute_probe_collect")) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert bf.count() == 15
+
+
 def test_ann_subset_quality(spark, sf_dir):
     """ANN results are genuine (cos matches brute values for same pairs)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -223,6 +286,34 @@ def _total_shuffle_write(spark) -> int:
     return sum(el.apply(i).totalShuffleWrite() for i in range(el.size()))
 
 
+def _vector_bucket_rows(df, id_col, out_vec, dim, n_planes, n_tables):
+    """The r3 SRP kernel: (id, vector, tbl, bkt) bucket rows that carry the
+    raw vector, same hyperplanes as ``similarity.srp_bucket_rows``."""
+    vec_t = df.schema["embedding"].dataType.simpleString()
+    id_t = df.schema[id_col].dataType.simpleString()
+
+    def _gen(batches):
+        import numpy as np
+        import pandas as pd
+
+        plane = similarity._plane_matrix(n_tables, n_planes, dim)
+        pw = 1 << np.arange(n_planes, dtype=np.int64)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            v = np.asarray([np.asarray(e, np.float64) for e in pdf["embedding"]])
+            bits = (v @ plane >= 0).reshape(len(pdf), n_tables, n_planes)
+            yield pd.DataFrame({
+                id_col: pdf[id_col].to_numpy().repeat(n_tables),
+                out_vec: pdf["embedding"].to_numpy().repeat(n_tables),
+                "tbl": np.tile(np.arange(n_tables, dtype=np.int32), len(pdf)),
+                "bkt": (bits * pw).sum(axis=2).reshape(-1),
+            })
+
+    return df.select(id_col, "embedding").mapInPandas(
+        _gen, f"{id_col} {id_t}, {out_vec} {vec_t}, tbl int, bkt long")
+
+
 def test_srp_id_only_candidate_join_shuffle(spark):
     """VERDICT r3 'Next round' #3 done-criterion: at 768-dim the id-only
     SRP bucket join (production ann_topk) must move >=4x fewer shuffle
@@ -259,10 +350,8 @@ def test_srp_id_only_candidate_join_shuffle(spark):
     bytes_new = _total_shuffle_write(spark) - s0
 
     # the r3 shape: bucket rows repeat the raw vector into the equi-join
-    pr = similarity.srp_bucket_rows(
-        probes, "probe_id", "embedding", dim, n_planes, n_tables, 0, "_pv")
-    co = similarity.srp_bucket_rows(
-        corpus, "vec_id", "embedding", dim, n_planes, n_tables, 0, "_cv")
+    pr = _vector_bucket_rows(probes, "probe_id", "_pv", dim, n_planes, n_tables)
+    co = _vector_bucket_rows(corpus, "vec_id", "_cv", dim, n_planes, n_tables)
     s1 = _total_shuffle_write(spark)
     w = Window.partitionBy("probe_id").orderBy(F.desc("cos"), "vec_id")
     old_rows = (

@@ -14,6 +14,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from freemap_tiler_spark.operators import dedup, knn, similarity
+from oracles import minhash_signature
 
 
 @pytest.fixture(scope="module")
@@ -28,40 +29,17 @@ def docs(spark, sf_dir):
 
 
 def test_minhash_arrow_signatures_match_column_path(spark, docs):
-    """The r6 one-pass Arrow signature kernel must reproduce the Column
-    minhash_signature() values BIT-FOR-BIT (same tokens, same md5 bytes,
-    same (A*h+B) % P arithmetic)."""
-    col_sig = docs.select(
-        "doc_id", dedup.minhash_signature(F.col("text"), 8, 3).alias("sig")
-    ).toPandas()
-    # reach into the optimized pipeline's checkpointed signature table by
-    # recomputing it exactly as minhash_lsh_pairs does
-    pairs_src = dedup.minhash_lsh_pairs(docs, num_hashes=8, bands=4)
-    # the kernel itself: rebuild via the public function on a trivial
-    # projection — compare against Column values per doc
-    import hashlib
-
-    import numpy as np
-
-    toks_pdf = docs.select(
-        "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t")
-    ).toPandas()
-    P, A, B = dedup.P, dedup.A[:8], dedup.B[:8]
-    aa = np.asarray(A, dtype=np.int64)[None, :]
-    bb = np.asarray(B, dtype=np.int64)[None, :]
-    got = {}
-    for doc_id, tk in zip(toks_pdf["doc_id"], toks_pdf["t"]):
-        tk = list(tk)
-        sh = ([" ".join(tk[j:j + 3]) for j in range(len(tk) - 2)]
-              if len(tk) >= 3 else [" ".join(tk)])
-        hs = np.array(
-            [int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % P for s in sh],
-            dtype=np.int64,
-        )[:, None]
-        got[doc_id] = ((aa * hs + bb) % P).min(axis=0).tolist()
-    for doc_id, sig in zip(col_sig["doc_id"], col_sig["sig"]):
-        assert got[doc_id] == list(sig), f"doc {doc_id} signature drift"
-    assert pairs_src.count() >= 0  # pipeline itself still builds/executes
+    """The one-pass Arrow signature kernel reproduces the Column-HOF
+    MinHash signature (tests/oracles.py) BIT-FOR-BIT: same tokens, same
+    md5 bytes, same (A*h+B) % P arithmetic, NULL text included."""
+    nulls = spark.createDataFrame(
+        [(-1, None), (-2, "")], "doc_id long, text string")
+    d = docs.select("doc_id", "text").unionByName(nulls)
+    got = {r[0]: list(r[1:]) for r in dedup.minhash_signatures(d).collect()}
+    ref = {r.doc_id: list(r.sig) for r in d.select(
+        "doc_id", minhash_signature(F.col("text"), 8, 3).alias("sig")).collect()}
+    assert len(got) == d.count()
+    assert got == ref
 
 
 def test_minhash_pairs_match_prebatch_formulation(spark, docs):
@@ -73,18 +51,10 @@ def test_minhash_pairs_match_prebatch_formulation(spark, docs):
     from freemap_tiler_spark.functions.text import md5_fingerprint
 
     num_hashes, bands, r = 8, 4, 2
-    base = docs.select(
+    sig = docs.select(
         F.col("doc_id").alias("_id"),
-        F.transform(dedup.shingles(F.col("text"), 3),
-                    lambda s: dedup.token_hash(s) % dedup.P).alias("_b"),
-    )
-
-    def _perm(i):
-        return lambda h: (F.lit(dedup.A[i]) * h + F.lit(dedup.B[i])) % dedup.P
-
-    sig = base.select(
-        "_id", *[F.array_min(F.transform("_b", _perm(i))).alias(f"_h{i}")
-                 for i in range(num_hashes)])
+        minhash_signature(F.col("text"), num_hashes, 3).alias("_s"),
+    ).select("_id", *[F.col("_s")[i].alias(f"_h{i}") for i in range(num_hashes)])
     banded = sig.select(
         "_id",
         F.explode(F.array(*[
@@ -120,6 +90,57 @@ def test_minhash_pairs_match_prebatch_formulation(spark, docs):
         F.greatest("_prev", "_id").alias("id_b"))
     old = {tuple(r) for r in pairs_small.unionByName(pairs_star)
            .unionByName(pairs_chain).distinct().collect()}
+    assert new == old
+
+
+def test_embedding_near_dups_match_groupby_formulation(spark, sf_dir):
+    """Pair set == the former groupBy-and-join formulation, re-stated here
+    (bucket sizing by groupBy + join, a second SRP pass for the multiprobe
+    left side), on sf0.001 embeddings plus a 300-copy flood that takes
+    the hot-bucket star and chain, with multiprobe=2."""
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
+    e = e.unionByName(
+        spark.range(300).crossJoin(e.where("vec_id = 1").select("embedding"))
+        .select((F.col("id") + 10_000_000).alias("vec_id"), "embedding"))
+    dim, thr, n_planes, n_tables, mp, cap = 64, 0.45, 6, 8, 2, 64
+    new = {tuple(r) for r in similarity.embedding_near_dups(
+        e, dim=dim, threshold=thr, n_planes=n_planes, n_tables=n_tables,
+        multiprobe=mp, max_bucket_size=cap).select("id_a", "id_b").collect()}
+
+    co = e.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
+    l = similarity.srp_bucket_rows(
+        co, "_id", "_v", dim, n_planes, n_tables, mp).alias("l")
+    r = similarity.srp_bucket_rows(co, "_id", "_v", dim, n_planes, n_tables, 0)
+    sizes = r.groupBy("tbl", "bkt").agg(
+        F.count("*").alias("_n"), F.min("_id").alias("_rep"))
+    tagged = r.join(sizes, ["tbl", "bkt"])
+    small = tagged.where(F.col("_n") <= cap).select("_id", "tbl", "bkt").alias("r")
+    pairs_small = l.join(
+        small, (F.col("l.tbl") == F.col("r.tbl")) & (F.col("l.bkt") == F.col("r.bkt"))
+        & (F.col("l._id") < F.col("r._id"))
+    ).select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
+    pairs_star = tagged.where(
+        (F.col("_n") > cap) & (F.col("_id") != F.col("_rep"))
+    ).select(F.col("_rep").alias("id_a"), F.col("_id").alias("id_b"))
+    big = tagged.where(F.col("_n") > cap).select("_id", "tbl", "bkt")
+    sig = r.join(big.select("_id").distinct(), "_id", "semi").groupBy("_id").agg(
+        F.array_join(F.transform(
+            F.sort_array(F.collect_list(F.struct("tbl", "bkt"))),
+            lambda s: F.format_string("%02d:%016x", s["tbl"], s["bkt"]),
+        ), ",").alias("_sigkey"))
+    wchain = Window.partitionBy("tbl", "bkt").orderBy("_sigkey", "_id")
+    chained = big.join(sig, "_id").withColumn(
+        "_prev", F.lag("_id").over(wchain)).where(F.col("_prev").isNotNull())
+    pairs_chain = chained.select(
+        F.least("_prev", "_id").alias("id_a"), F.greatest("_prev", "_id").alias("id_b"))
+    old = {tuple(r) for r in (
+        pairs_small.unionByName(pairs_star).unionByName(pairs_chain)
+        .dropDuplicates(["id_a", "id_b"])
+        .join(co.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va")), "id_a")
+        .join(co.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb")), "id_b")
+        .where(similarity.cosine("_va", "_vb") >= thr)
+        .select("id_a", "id_b").collect())}
+    assert any(a >= 10_000_000 for a, _ in new)  # the flood took the star/chain
     assert new == old
 
 

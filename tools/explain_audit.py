@@ -9,6 +9,7 @@ Checks (written to BENCH/explain_audit.md):
 - partition pruning on the zoom-partitioned store (PartitionFilters);
 - spatial joins (kNN, PIP cells, the polygon prune) and the dedup joins
   are equi- or semi-joins on their key, never a cartesian product;
+- both LSH pair operators size their buckets with one (tbl, bkt) window;
 - one pyramid compose round is one Python group stage with no Union.
 """
 
@@ -32,6 +33,21 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plans_run_by(spark, build) -> str:
+    """The plans of the SQL executions ``build()`` runs (an operator's
+    eager checkpoints) followed by the plan of the frame it returns."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execs():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = {e.executionId() for e in execs()}
+    df = build()
+    ran = [e.physicalPlanDescription() for e in execs() if e.executionId() not in seen]
+    return "\n".join(ran + [plan_of(df)])
 
 
 def main() -> None:
@@ -153,16 +169,19 @@ def main() -> None:
           ["Join type: LeftSemi", "Left keys [1]: [cell#"],
           ["CartesianProduct", "BroadcastNestedLoopJoin", "MapInPandas"])
 
-    # 9. embedding near-dups: bucketed self-join stays an equi-join on
-    # (tbl, bkt) — the id inequality is a post-filter, not a join driver
-    p = plan_of(contract.q_embedding_near_dups(spark, sf))
-    check("embedding_near_dups: bucket equi-join, no cartesian", p, ["Join"],
-          ["CartesianProduct", "BroadcastNestedLoopJoin"])
-
-    # 10. LSH dedup: band/bucket equi-join, no cartesian
-    p = plan_of(contract.q_minhash_lsh_dedup(spark, sf))
-    check("minhash_lsh_dedup: bucket equi-join, no cartesian", p, ["Join"],
-          ["CartesianProduct", "BroadcastNestedLoopJoin"])
+    # 9-10. the LSH pair operators share one pair builder: bucketed
+    # self-join stays an equi-join on (tbl, bkt) — the id inequality is a
+    # post-filter, not a join driver — and bucket sizes come from one
+    # (tbl, bkt) window.  That window runs in the eager checkpoint the
+    # operator takes while it is built, so its plan is read back from the
+    # SQL executions the build ran.
+    sizing = ["count(1) windowspecdefinition(tbl#"]
+    p = plans_run_by(spark, lambda: contract.q_embedding_near_dups(spark, sf))
+    check("embedding_near_dups: bucket equi-join, sizing window, no cartesian",
+          p, ["Join"] + sizing, ["CartesianProduct", "BroadcastNestedLoopJoin"])
+    p = plans_run_by(spark, lambda: contract.q_minhash_lsh_dedup(spark, sf))
+    check("minhash_lsh_dedup: bucket equi-join, sizing window, no cartesian",
+          p, ["Join"] + sizing, ["CartesianProduct", "BroadcastNestedLoopJoin"])
 
     # 11. SRP ANN: id-only bucket rows into the candidate join (r4) — the
     # raw embedding never enters a shuffle exchange; candidate-id joins
