@@ -468,7 +468,7 @@ def q_geo_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-SQL_GEO_EXTRACT = r"""
+SQL_GEO_EXTRACT = rf"""
 WITH g AS (
   SELECT doc_id,
          'doc ' || doc_id || ' geo:' ||
@@ -480,8 +480,8 @@ WITH g AS (
          ' end' AS gtext
   FROM documents)
 SELECT doc_id,
-       regexp_extract(gtext, 'geo:(-?\d+\.\d+),(-?\d+\.\d+)', 1) AS lat_s,
-       regexp_extract(gtext, 'geo:(-?\d+\.\d+),(-?\d+\.\d+)', 2) AS lon_s
+       regexp_extract(gtext, '{T.GEO_PATTERN}', 1) AS lat_s,
+       regexp_extract(gtext, '{T.GEO_PATTERN}', 2) AS lon_s
 FROM g ORDER BY doc_id
 """
 
@@ -864,10 +864,9 @@ ORDER BY id_a, id_b
 def q_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F15/P8/P9/F16-F17 codec laws over real rasterized tiles, folded to
     one row: PNG roundtrip is byte-exact, the JPEG path's zstd alpha
-    sidecar is exact, JPEG color decode is pixel-close, QDCT decode error
-    is bounded by its quantization step.  Oracle = the SQL tile-count of
-    the z6 cover + literal TRUE flags (a codec regression flips a flag
-    and fails the hash)."""
+    sidecar is exact, JPEG color decode is pixel-close.  Oracle = the SQL
+    tile-count of the z6 cover + literal TRUE flags (a codec regression
+    flips a flag and fails the hash)."""
     g = _docs_geo(spark, sf_dir)
     tiles = pyramid.rasterize_level(pyramid.assign_cells(g, "lon", "lat", 6), 16)
 
@@ -878,7 +877,7 @@ def q_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         from freemap_tiler_spark.functions import codecs as C
 
         for pdf in batches:
-            png_ok, alpha_ok, jpeg_ok, qdct_ok = [], [], [], []
+            png_ok, alpha_ok, jpeg_ok = [], [], []
             for p in pdf["payload"]:
                 img = np.frombuffer(p, np.uint8).reshape(16, 16, 2)
                 d, a = C.encode_tile(img, "png")
@@ -888,25 +887,18 @@ def q_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 alpha_ok.append(bool((dec[:, :, 1] == img[:, :, 1]).all()))
                 err = np.abs(dec[:, :, 0].astype(float) - img[:, :, 0])
                 jpeg_ok.append(bool(err.mean() <= 8.0))
-                dq, aq = C.encode_tile(img, "qdct", 85)
-                decq = C.decode_tile(dq, aq, "qdct")
-                eq = np.abs(decq[:, :, 0].astype(float) - img[:, :, 0])
-                qdct_ok.append(bool(eq.max() <= 3.0))
             yield pd.DataFrame(
-                {"png_exact": png_ok, "alpha_exact": alpha_ok,
-                 "jpeg_close": jpeg_ok, "qdct_close": qdct_ok}
+                {"png_exact": png_ok, "alpha_exact": alpha_ok, "jpeg_close": jpeg_ok}
             )
 
     flags = tiles.mapInPandas(
-        _rt, "png_exact boolean, alpha_exact boolean,"
-             " jpeg_close boolean, qdct_close boolean"
+        _rt, "png_exact boolean, alpha_exact boolean, jpeg_close boolean"
     )
     return flags.agg(
         F.count("*").alias("n_tiles"),
         F.bool_and("png_exact").alias("png_exact"),
         F.bool_and("alpha_exact").alias("alpha_exact"),
         F.bool_and("jpeg_close").alias("jpeg_close"),
-        F.bool_and("qdct_close").alias("qdct_close"),
     )
 
 
@@ -917,7 +909,7 @@ def _sql_codec_roundtrip() -> str:
 WITH p AS (SELECT {LON_SQL} AS lon, {LAT_SQL} AS lat FROM documents),
 t AS (SELECT DISTINCT {tx} AS tx, {ty} AS ty FROM p)
 SELECT COUNT(*)::BIGINT AS n_tiles, TRUE AS png_exact, TRUE AS alpha_exact,
-       TRUE AS jpeg_close, TRUE AS qdct_close FROM t
+       TRUE AS jpeg_close FROM t
 """
 
 

@@ -813,10 +813,11 @@ def lookup_crs(name: str) -> tuple[Transform, Transform] | None:
 
 
 def densified_merc_bbox(
-    to_merc: Transform, x0: float, y0: float, x1: float, y1: float, n: int = 21
+    to_merc: Transform, x0: float, y0: float, x1: float, y1: float
 ) -> tuple[float, float, float, float]:
-    """3857 bbox of a source-CRS rectangle, sampling n points per edge
+    """3857 bbox of a source-CRS rectangle, sampling 21 points per edge
     (curved edges under reprojection — transform_bounds-style densify)."""
+    n = 21
     ts = np.linspace(0.0, 1.0, n)
     xs = np.concatenate([
         x0 + (x1 - x0) * ts, np.full(n, x1), x0 + (x1 - x0) * ts, np.full(n, x0),

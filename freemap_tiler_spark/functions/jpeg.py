@@ -3,7 +3,7 @@
 The reference encodes tiles as JPEG q85 with the alpha band in a zstd
 sidecar (src/processor.rs:493-563).  No libjpeg/Pillow in this container,
 so this is a from-scratch baseline implementation.  Encode: 8-bit,
-non-progressive, grayscale or YCbCr 4:4:4 (no subsampling), standard
+non-progressive, grayscale or YCbCr 4:4:4 only (no subsampling), standard
 Annex-K quantization and Huffman tables, libjpeg quality scaling.  DCT is
 vectorized over all 8x8 blocks at once (two einsum contractions); only the
 entropy coding is a per-block python loop (runs inside Arrow-batched UDFs
@@ -215,19 +215,15 @@ def _dht(tc_th: int, spec) -> bytes:
     return b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
 
 
-def encode(img: np.ndarray, quality: int = 85, subsampling: str = "444") -> bytes:
-    """(H, W) grayscale or (H, W, 3) RGB u8 -> baseline JFIF bytes.
-
-    ``subsampling``: '444' (default — lowest color error) or '420' (2x2
-    chroma box-downsample, 16x16 MCUs — the reference's jpeg-encoder
-    crate default, /root/reference/Cargo.toml jpeg-encoder 0.6 /
-    src/processor.rs:528-539)."""
+def encode(img: np.ndarray, quality: int = 85) -> bytes:
+    """(H, W) grayscale or (H, W, 3) RGB u8 -> baseline JFIF bytes, 4:4:4
+    (no chroma subsampling; the reference's jpeg-encoder crate defaults to
+    4:2:0, src/processor.rs:528-539)."""
     img = np.asarray(img, dtype=np.uint8)
     gray = img.ndim == 2 or img.shape[2] == 1
     if img.ndim == 3 and img.shape[2] == 1:
         img = img[:, :, 0]
     h, w = img.shape[:2]
-    sub = (not gray) and subsampling == "420"
     ql, qc = _quality_tables(quality)
     out = bytearray(b"\xff\xd8")  # SOI
     out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
@@ -237,8 +233,7 @@ def encode(img: np.ndarray, quality: int = 85, subsampling: str = "444") -> byte
     ncomp = 1 if gray else 3
     sof = struct.pack(">BHHB", 8, h, w, ncomp)
     for cid in range(1, ncomp + 1):
-        hv = 0x22 if (sub and cid == 1) else 0x11
-        sof += bytes([cid, hv, 0 if cid == 1 else 1])
+        sof += bytes([cid, 0x11, 0 if cid == 1 else 1])
     out += b"\xff\xc0" + struct.pack(">H", len(sof) + 2) + sof
     out += _dht(0x00, _DC_L) + _dht(0x10, _AC_L)
     if not gray:
@@ -259,49 +254,17 @@ def encode(img: np.ndarray, quality: int = 85, subsampling: str = "444") -> byte
         cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
         tabs = [(_ENC_DC_L, _ENC_AC_L), (_ENC_DC_C, _ENC_AC_C), (_ENC_DC_C, _ENC_AC_C)]
         preds = [0, 0, 0]
-        if not sub:
-            planes = [np.clip(np.rint(p), 0, 255).astype(np.uint8) for p in (y, cb, cr)]
-            qs = [
-                _fdct_quant(_blockify(p), ql if i == 0 else qc)
-                for i, p in enumerate(planes)
-            ]
-            # 4:4:4 interleaved MCU = one block per component
-            for m in range(qs[0].shape[0]):
-                for c in range(3):
-                    preds[c] = _encode_component(
-                        bw, qs[c][m:m + 1], tabs[c][0], tabs[c][1], preds[c]
-                    )
-        else:
-            # 4:2:0: pad to 16x16 MCUs, box-average chroma 2x2, MCU =
-            # 4 Y blocks (2x2 raster) + 1 Cb + 1 Cr
-            ph, pw = -h % 16, -w % 16
-            def pad(p):
-                return np.pad(p, ((0, ph), (0, pw)), mode="edge") if ph or pw else p
-            yp = pad(y)
-            cbp, crp = pad(cb), pad(cr)
-            cb2 = (cbp[0::2, 0::2] + cbp[0::2, 1::2] + cbp[1::2, 0::2] + cbp[1::2, 1::2]) / 4.0
-            cr2 = (crp[0::2, 0::2] + crp[0::2, 1::2] + crp[1::2, 0::2] + crp[1::2, 1::2]) / 4.0
-            u8 = lambda p: np.clip(np.rint(p), 0, 255).astype(np.uint8)  # noqa: E731
-            qy = _fdct_quant(_blockify(u8(yp)), ql)
-            qcb = _fdct_quant(_blockify(u8(cb2)), qc)
-            qcr = _fdct_quant(_blockify(u8(cr2)), qc)
-            n_bw = yp.shape[1] // 8          # Y block-grid width
-            c_bw = n_bw // 2                 # chroma block-grid width
-            for my in range(yp.shape[0] // 16):
-                for mx in range(n_bw // 2):
-                    for r_ in (0, 1):
-                        for c_ in (0, 1):
-                            bi = (2 * my + r_) * n_bw + 2 * mx + c_
-                            preds[0] = _encode_component(
-                                bw, qy[bi:bi + 1], tabs[0][0], tabs[0][1], preds[0]
-                            )
-                    ci = my * c_bw + mx
-                    preds[1] = _encode_component(
-                        bw, qcb[ci:ci + 1], tabs[1][0], tabs[1][1], preds[1]
-                    )
-                    preds[2] = _encode_component(
-                        bw, qcr[ci:ci + 1], tabs[2][0], tabs[2][1], preds[2]
-                    )
+        planes = [np.clip(np.rint(p), 0, 255).astype(np.uint8) for p in (y, cb, cr)]
+        qs = [
+            _fdct_quant(_blockify(p), ql if i == 0 else qc)
+            for i, p in enumerate(planes)
+        ]
+        # 4:4:4 interleaved MCU = one block per component
+        for m in range(qs[0].shape[0]):
+            for c in range(3):
+                preds[c] = _encode_component(
+                    bw, qs[c][m:m + 1], tabs[c][0], tabs[c][1], preds[c]
+                )
     bw.flush()
     out += bw.buf
     out += b"\xff\xd9"  # EOI

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 R = 6378137.0
 ORIGIN = math.pi * R  # 20037508.342789244
 WORLD = 2.0 * ORIGIN
+# the latitude of the square Web-Mercator world's edge, atan(sinh(pi))
+MAX_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.0511287798...
 
 
 # ---------------------------------------------------------------------------
@@ -81,33 +83,63 @@ def zoom_n(zoom) -> Column:
     return F.pow(F.lit(2.0), _c(zoom).cast("double")).cast("long")
 
 
-def tile_x(lon, zoom) -> Column:
-    """XYZ tile column from lon degrees; JVM-side, clamped to [0, 2^z-1]."""
-    n = zoom_n(zoom)
-    tx = F.floor((_c(lon) + 180.0) / 360.0 * n)
+def clamp_lat(lat) -> Column:
+    """Latitude clamped to the tile grid's +-MAX_LAT: the Mercator formula
+    at a pole is log(0), which Spark returns as NULL.  ``least`` and
+    ``greatest`` skip NULLs, so a NULL clamps to an edge: callers test for
+    NULL first."""
+    return F.greatest(F.lit(-MAX_LAT), F.least(_c(lat), F.lit(MAX_LAT)))
+
+
+def _tile_x(lon: Column, n: Column) -> Column:
+    tx = F.floor((lon + 180.0) / 360.0 * n)
     return F.greatest(F.lit(0).cast("long"), F.least(tx, n - 1))
 
 
-def tile_y(lat, zoom) -> Column:
-    """XYZ tile row (southward) from lat degrees; uses asinh(tan(lat))."""
-    n = zoom_n(zoom)
-    lat_r = F.radians(_c(lat))
-    t = F.tan(lat_r)
+def _tile_y(lat: Column, n: Column) -> Column:
+    t = F.tan(F.radians(clamp_lat(lat)))
     asinh = F.log(t + F.sqrt(t * t + 1.0))
     ty = F.floor((1.0 - asinh / F.lit(math.pi)) / 2.0 * n)
     return F.greatest(F.lit(0).cast("long"), F.least(ty, n - 1))
+
+
+def tile_x(lon, zoom) -> Column:
+    """XYZ tile column from lon degrees; JVM-side, clamped to [0, 2^z-1];
+    NULL for a NULL lon."""
+    lon = _c(lon)
+    return F.when(lon.isNotNull(), _tile_x(lon, zoom_n(zoom)))
+
+
+def tile_y(lat, zoom) -> Column:
+    """XYZ tile row (southward) from lat degrees; uses asinh(tan(lat));
+    NULL for a NULL lat."""
+    lat = _c(lat)
+    return F.when(lat.isNotNull(), _tile_y(lat, zoom_n(zoom)))
+
+
+def located_tiles(lon, lat, zoom) -> tuple[Column, Column]:
+    """(tile_x, tile_y) for rows the caller has already filtered to
+    non-NULL coordinates.  With no NULL test the columns are never NULL, so
+    a join on their cell infers no isnotnull filter, which would repeat the
+    whole cell expression (32x a tile's, through the bit interleave) below
+    the projection: measured 2x the warm kNN time."""
+    n = zoom_n(zoom)
+    return _tile_x(_c(lon), n), _tile_y(_c(lat), n)
 
 
 # ---------------------------------------------------------------------------
 # DuckDB oracle SQL twins (text templates; {lon}/{lat}/{z} substituted)
 # ---------------------------------------------------------------------------
 
+_LAT_SQL = f"greatest({-MAX_LAT:.17e}, least({{lat}}, {MAX_LAT:.17e}))"
 TILE_X_SQL = (
-    "greatest(0, least(CAST(floor((({lon}) + 180.0) / 360.0 * (1::BIGINT << {z})) AS BIGINT),"
-    " (1::BIGINT << {z}) - 1))"
+    "CASE WHEN ({lon}) IS NOT NULL THEN"
+    " greatest(0, least(CAST(floor((({lon}) + 180.0) / 360.0 * (1::BIGINT << {z})) AS BIGINT),"
+    " (1::BIGINT << {z}) - 1)) END"
 )
 TILE_Y_SQL = (
-    "greatest(0, least(CAST(floor((1.0 - ln(tan(radians({lat})) +"
-    " sqrt(tan(radians({lat})) * tan(radians({lat})) + 1.0)) / pi()) / 2.0"
-    " * (1::BIGINT << {z})) AS BIGINT), (1::BIGINT << {z}) - 1))"
+    "CASE WHEN ({lat}) IS NOT NULL THEN"
+    f" greatest(0, least(CAST(floor((1.0 - ln(tan(radians({_LAT_SQL})) +"
+    f" sqrt(tan(radians({_LAT_SQL})) * tan(radians({_LAT_SQL})) + 1.0)) / pi()) / 2.0"
+    " * (1::BIGINT << {z})) AS BIGINT), (1::BIGINT << {z}) - 1)) END"
 )

@@ -25,11 +25,11 @@ import numpy as np
 _A = 3  # Lanczos lobes
 
 
-def lanczos_kernel(x: np.ndarray, a: int = _A) -> np.ndarray:
-    """sinc(x) * sinc(x/a) windowed to |x| < a."""
+def lanczos_kernel(x: np.ndarray) -> np.ndarray:
+    """sinc(x) * sinc(x/a) windowed to |x| < a, a = 3."""
     x = np.asarray(x, dtype=np.float64)
-    out = np.sinc(x) * np.sinc(x / a)
-    out[np.abs(x) >= a] = 0.0
+    out = np.sinc(x) * np.sinc(x / _A)
+    out[np.abs(x) >= _A] = 0.0
     return out
 
 

@@ -14,11 +14,14 @@ fingerprinting (a 60-bit md5 prefix that Spark and DuckDB compute alike).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-GEO_PATTERN = r"geo:(-?\d+\.\d+),(-?\d+\.\d+)"
+# ``geo:lat,lon`` with |lat| <= 90 and |lon| <= 180 (RE2 and Java alike):
+# an off-globe tag does not match at all, so both halves are NULL together
+# at no extra cost; a digit may not follow the lon
+GEO_PATTERN = (r"geo:(-?(?:90\.0+|[1-8]?\d\.\d+)),"
+               r"(-?(?:180\.0+|(?:1[0-7]\d|[1-9]?\d)\.\d+))(?:\D|$)")
 
 
 def _c(v) -> Column:
@@ -43,7 +46,8 @@ def extract_text(html) -> Column:
 # ---------------------------------------------------------------------------
 
 def geo_lat(text) -> Column:
-    """Latitude from the first ``geo:lat,lon`` occurrence; NULL if absent."""
+    """Latitude from the first on-globe ``geo:lat,lon`` occurrence; NULL if
+    there is none."""
     m = F.regexp_extract(_c(text), GEO_PATTERN, 1)
     return F.when(m != "", m.cast("double"))
 
@@ -228,39 +232,3 @@ def sql_canonical_url(col: str) -> str:
         expr = "regexp_replace({e}, '{p}', '{r}')".format(e=expr, p=pat, r=repl)
     return expr
 
-
-def normalize_ccnet(col) -> Column:
-    """CCNet's text normalization (Wenzek et al. 2020: applied before LM
-    scoring so the perplexity model sees canonical text): lowercase, NFD
-    accent stripping, every digit -> 0, unicode-punctuation folding via
-    NFKC, control characters removed.
-
-    Needs real unicode tables, so this is the Arrow-batched exception in
-    this otherwise JVM-only module — a pandas_udf over stdlib
-    ``unicodedata`` (vectorized per batch, never per-row Python in the
-    plan: one ArrowEvalPython stage).
-    """
-    import re as _re
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
-        import unicodedata
-
-        digits = _re.compile(r"\d")
-
-        def f(t):
-            if t is None:
-                return None
-            t = unicodedata.normalize("NFD", t.lower())
-            t = "".join(
-                c for c in t
-                if unicodedata.category(c) not in ("Mn", "Cc", "Cf")
-            )
-            t = digits.sub("0", t)
-            return unicodedata.normalize("NFKC", t)
-
-        return s.map(f)
-
-    return _norm(_c(col))

@@ -28,22 +28,20 @@ def asof_join(
     key: str,
     ts: str,
     right_cols: list[str],
-    prefix: str = "r_",
 ) -> DataFrame:
-    """left columns + ``prefix``-renamed right_cols (+ ``prefix + ts``),
-    NULL where no right row precedes the left row for that key."""
-    carried = [prefix + c for c in right_cols] + [prefix + ts]
+    """left columns + ``r_``-prefixed right_cols (+ ``r_`` + ts), NULL
+    where no right row precedes the left row for that key."""
+    carried = ["r_" + c for c in right_cols] + ["r_" + ts]
     clash = (set(carried) | {"_side"}) & set(left.columns)
     if clash:
         raise ValueError(
             f"asof_join: left columns {sorted(clash)} collide with carried "
-            f"right columns / the _side sentinel; rename them or pass a "
-            f"different prefix"
+            f"right columns / the _side sentinel; rename them"
         )
     r = right.select(
         F.col(key), F.col(ts),
-        *[F.col(c).alias(prefix + c) for c in right_cols],
-        F.col(ts).alias(prefix + ts),
+        *[F.col(c).alias("r_" + c) for c in right_cols],
+        F.col(ts).alias("r_" + ts),
         F.lit(0).alias("_side"),
     )
     l_cols = left.columns

@@ -35,6 +35,9 @@ from freemap_tiler_spark.functions.text import md5_fingerprint
 P = 2147483647  # 2^31 - 1 (Mersenne prime): products fit in int64
 A = [1103515245, 1299709, 15485863, 32452843, 49979687, 67867967, 86028121, 104395301]
 B = [12345, 7919, 104729, 1299721, 15485917, 32452867, 49979693, 67867979]
+SHINGLE_N = 3  # tokens per word shingle (MinHash and Jaccard)
+# connected_components stops after this many rounds even if not converged
+MAX_CC_ROUNDS = 25
 
 
 def _checkpoint(df: DataFrame) -> DataFrame:
@@ -53,12 +56,14 @@ def token_hash(col) -> Column:
     return md5_fingerprint(col)
 
 
-def shingles(text_col, n: int = 3) -> Column:
-    """Word n-gram shingles: array of space-joined n-token windows.
+def shingles(text_col) -> Column:
+    """Word n-gram shingles (n = ``SHINGLE_N``): array of space-joined
+    n-token windows.
 
     Pure Column math: split -> transform over a sequence of offsets.
     Documents shorter than n tokens produce a single shingle of all tokens.
     """
+    n = SHINGLE_N
     toks = F.split(F.trim(F.lower(text_col)), r"\s+")
     m = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(m - n, F.lit(0)))
@@ -82,10 +87,9 @@ def minhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 8,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """(id_col, h0 .. h{num_hashes-1}) MinHash signatures in ONE Arrow
-    pass: per hash i, the min over the document's word shingles of
+    pass: per hash i, the min over the document's ``SHINGLE_N``-word shingles of
     (A[i] * (md5_60(shingle) mod P) + B[i]) mod P.
 
     Tokenization (lower + trim + whitespace split) stays in the JVM, so it
@@ -116,9 +120,9 @@ def minhash_signatures(
                 # NULL text has NULL tokens: shingle it like the empty
                 # token list, as shingles() does
                 tk = [] if tk is None else list(tk)
-                if len(tk) >= shingle_n:
-                    sh = [" ".join(tk[j:j + shingle_n])
-                          for j in range(len(tk) - shingle_n + 1)]
+                if len(tk) >= SHINGLE_N:
+                    sh = [" ".join(tk[j:j + SHINGLE_N])
+                          for j in range(len(tk) - SHINGLE_N + 1)]
                 else:
                     sh = [" ".join(tk)]
                 hs = np.fromiter(
@@ -205,7 +209,6 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     num_hashes: int = 8,
     bands: int = 4,
-    shingle_n: int = 3,
     max_bucket_size: int = 64,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing >=1 LSH band.
@@ -224,7 +227,7 @@ def minhash_lsh_pairs(
     r = num_hashes // bands
     hs = [f"h{i}" for i in range(num_hashes)]
     sig = _checkpoint(
-        minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
+        minhash_signatures(df, text_col, id_col, num_hashes)
         .withColumnRenamed(id_col, "_id")
     )
     rows = sig.select(
@@ -252,14 +255,13 @@ def jaccard_verify(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs; keeps >= threshold.
     Returns (id_a, id_b, jaccard)."""
     sh = df.select(
         F.col(id_col).alias("_jid"),
-        F.array_distinct(shingles(F.col(text_col), shingle_n)).alias("_sh"),
+        F.array_distinct(shingles(F.col(text_col))).alias("_sh"),
     )
     withs = (
         pairs.join(sh.withColumnRenamed("_jid", "id_a").withColumnRenamed("_sh", "sh_a"), "id_a")
@@ -353,7 +355,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iters: int = 25,
 ) -> DataFrame:
     """Distributed connected components over an edge list — the cluster
     step of near-duplicate dedup (LSH/SimHash emit PAIRS; a training-data
@@ -406,7 +407,7 @@ def connected_components(
             .distinct()
         )
 
-    for _ in range(max_iters):
+    for _ in range(MAX_CC_ROUNDS):
         sym = _sym(cur)
         # Large-Star: every neighbor v > u links to m(u) = min(Γ(u) ∪ {u})
         m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
@@ -462,12 +463,11 @@ def duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    min_count: int = 2,
 ) -> DataFrame:
     """Substring-level exact dedup (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better"): find every maximal
     token span whose n-token windows all re-occur elsewhere in the
-    corpus (>= ``min_count`` total occurrences), per document.
+    corpus (>= 2 total occurrences), per document.
 
     Returns (id_col, tok_start, tok_end, n_windows, max_occ): token
     half-open span [tok_start, tok_end), the number of duplicated
@@ -487,7 +487,7 @@ def duplicate_spans(
         F.posexplode(window_hashes(F.col(text_col), n)).alias("pos", "whash"),
     )
     hot = (wh.groupBy("whash").agg(F.count("*").alias("occ"))
-             .where(F.col("occ") >= min_count))
+             .where(F.col("occ") >= 2))
     hits = wh.join(hot, "whash").select(id_col, "pos", "occ")
     # gaps-and-islands: windows at pos p, p' belong to one span when
     # p' - p <= n (they overlap or touch in token space)
@@ -517,7 +517,6 @@ def scrub_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    min_count: int = 2,
 ) -> DataFrame:
     """ExactSubstr removal (Lee et al. 2022 §3.2): cut every maximal
     duplicated span from every document EXCEPT its canonical occurrence,
@@ -548,7 +547,7 @@ def scrub_spans(
         F.posexplode(window_hashes(F.col(text_col), n)).alias("pos", "whash"),
     )
     hot = (wh.groupBy("whash").agg(F.count("*").alias("occ"))
-             .where(F.col("occ") >= min_count).select("whash"))
+             .where(F.col("occ") >= 2).select("whash"))
     hits = wh.join(hot, "whash")
     keeper = hits.groupBy("whash").agg(
         F.min(F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))).alias("k")

@@ -44,12 +44,17 @@ from freemap_tiler_spark.functions import cells, mercator
 RINGS = (1, 2, 4)
 
 
+def _located(df: DataFrame, id_col: str, lon_col: str, lat_col: str, px: str) -> DataFrame:
+    """(id, {px}lon, {px}lat) for the rows with both coordinates."""
+    lon, lat = F.col(lon_col), F.col(lat_col)
+    return df.where(lon.isNotNull() & lat.isNotNull()).select(
+        id_col, lon.alias(f"{px}lon"), lat.alias(f"{px}lat"))
+
+
 def _with_cell_xy(df: DataFrame, lon_col: str, lat_col: str, zoom: int, px: str) -> DataFrame:
-    return df.select(
-        "*",
-        mercator.tile_x(F.col(lon_col), F.lit(zoom)).alias(f"{px}tx"),
-        mercator.tile_y(F.col(lat_col), F.lit(zoom)).alias(f"{px}ty"),
-    )
+    """``df`` (from ``_located``) plus its tile column and row."""
+    tx, ty = mercator.located_tiles(F.col(lon_col), F.col(lat_col), F.lit(zoom))
+    return df.select("*", tx.alias(f"{px}tx"), ty.alias(f"{px}ty"))
 
 
 def sq_dist(lon1, lat1, lon2, lat2):
@@ -74,15 +79,13 @@ def knn_join(
     """Returns (probe_id, point_id, dist, rank) with rank 1..k per probe.
 
     probes: (probe_id, lon, lat); points: (point_id, lon, lat).
-    Ties broken deterministically by point_id.
+    Ties broken deterministically by point_id.  A probe or point with a
+    NULL coordinate takes part in no row.
     """
     pr = _with_cell_xy(
-        probes.select(probe_id, F.col(lon_col).alias("_plon"), F.col(lat_col).alias("_plat")),
-        "_plon", "_plat", zoom, "p",
-    )
+        _located(probes, probe_id, lon_col, lat_col, "_p"), "_plon", "_plat", zoom, "p")
     pt = _with_cell_xy(
-        points.select(point_id, F.col(lon_col).alias("_qlon"), F.col(lat_col).alias("_qlat")),
-        "_qlon", "_qlat", zoom, "q",
+        _located(points, point_id, lon_col, lat_col, "_q"), "_qlon", "_qlat", zoom, "q",
     ).withColumn("qcell", cells.cell(F.lit(zoom), F.col("qtx"), F.col("qty"))).drop("qtx", "qty")
 
     # per-cell point counts: the escalation decision table.  Tiny relative
@@ -203,9 +206,10 @@ def knn_join_brute(
     lon_col: str = "lon",
     lat_col: str = "lat",
 ) -> DataFrame:
-    """Exact kNN via broadcast cross join — oracle / small-dim path."""
-    pr = probes.select(probe_id, F.col(lon_col).alias("_plon"), F.col(lat_col).alias("_plat"))
-    pt = points.select(point_id, F.col(lon_col).alias("_qlon"), F.col(lat_col).alias("_qlat"))
+    """Exact kNN via broadcast cross join — oracle / small-dim path.  A
+    probe or point with a NULL coordinate takes part in no row."""
+    pr = _located(probes, probe_id, lon_col, lat_col, "_p")
+    pt = _located(points, point_id, lon_col, lat_col, "_q")
     joined = pr.crossJoin(F.broadcast(pt)).withColumn(
         "dist", F.sqrt(sq_dist("_plon", "_plat", "_qlon", "_qlat"))
     )

@@ -25,23 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def _tokens(text_col: str, normalize: bool = False):
-    src = F.col(text_col)
-    if normalize:
-        # CCNet applies its unicode normalization before the LM sees the
-        # text (accents stripped, digits->0) — one Arrow stage
-        from freemap_tiler_spark.functions.text import normalize_ccnet
-
-        src = normalize_ccnet(src)
+def _tokens(text_col: str):
     return F.filter(
-        F.split(F.lower(src), "[^a-z]+"),
+        F.split(F.lower(F.col(text_col)), "[^a-z]+"),
         lambda t: t != F.lit(""),
     )
 
 
-def _bigrams(corpus: DataFrame, text_col: str, id_col: str,
-             normalize: bool = False) -> DataFrame:
-    t = _tokens(text_col, normalize).alias("toks")
+def _bigrams(corpus: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    t = _tokens(text_col).alias("toks")
     return (
         corpus.select(F.col(id_col), t)
         .where(F.size("toks") >= 2)
@@ -58,19 +50,16 @@ def _bigrams(corpus: DataFrame, text_col: str, id_col: str,
 
 def train_bigram_lm(
     corpus: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    normalize: bool = False,
 ) -> dict:
     """{pair_counts, context_counts, vocab_size} — the distributed model.
-    Two shuffles (both map-side combined) + one distinct count.
-    ``normalize`` applies CCNet unicode normalization first (train and
-    score with the SAME setting)."""
-    bg = _bigrams(corpus, text_col, id_col, normalize)
+    Two shuffles (both map-side combined) + one distinct count."""
+    bg = _bigrams(corpus, text_col, id_col)
     pair = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     # context counts fold from the (already tiny) pair table — identical
     # values to re-counting the corpus, minus a full tokenize + shuffle
     ctx = pair.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = (
-        corpus.select(F.explode(_tokens(text_col, normalize)).alias("w"))
+        corpus.select(F.explode(_tokens(text_col)).alias("w"))
         .agg(F.countDistinct("w").alias("v")).collect()[0]["v"]
     )
     return {"pair": pair, "ctx": ctx, "vocab": int(vocab)}
@@ -81,21 +70,20 @@ def doc_log_perplexity(
     lm: dict,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: float = 0.5,
-    normalize: bool = False,
 ) -> DataFrame:
     """(id, n_bigrams, log_ppl) — per-doc cross-entropy in nats under the
-    bigram LM.  Docs with < 2 tokens produce no row (no bigram evidence,
-    matching CCNet's length floor)."""
-    bg = _bigrams(corpus, text_col, id_col, normalize)
-    kv = float(k) * lm["vocab"]
+    bigram LM, add-k smoothed with k = 0.5.  Docs with < 2 tokens produce
+    no row (no bigram evidence, matching CCNet's length floor)."""
+    k = 0.5
+    bg = _bigrams(corpus, text_col, id_col)
+    kv = k * lm["vocab"]
     scored = (
         bg.join(lm["pair"], ["w1", "w2"], "left")
         .join(lm["ctx"], ["w1"], "left")
         .select(
             id_col,
             F.log(
-                (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(float(k)))
+                (F.coalesce(F.col("c12"), F.lit(0)) + F.lit(k))
                 / (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(kv))
             ).alias("lp"),
         )

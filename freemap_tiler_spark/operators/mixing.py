@@ -25,14 +25,14 @@ from freemap_tiler_spark.functions.text import md5_fingerprint
 TWO_60 = float(1 << 60)
 
 
-def sample_unit(id_col, salt: str = "mix") -> Column:
-    """Deterministic uniform-[0,1) draw per id: md5-60(id || ':salt') / 2^60.
+def sample_unit(id_col) -> Column:
+    """Deterministic uniform-[0,1) draw per id: md5-60(id || ':mix') / 2^60.
 
     Engine/oracle-identical (same construction as the dedup fingerprint
     family); the salt decorrelates this draw from other id-hash uses.
     """
     return (
-        md5_fingerprint(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
+        md5_fingerprint(F.concat(F.col(id_col).cast("string"), F.lit(":mix")))
         / F.lit(TWO_60)
     )
 
@@ -41,33 +41,26 @@ def domain_rates(
     df: DataFrame,
     domain_col: str = "source",
     alpha: float = 0.5,
-    target_rows: int | None = None,
 ) -> DataFrame:
-    """Per-domain keep-rates for alpha-smoothed resampling.
+    """Per-domain rates for alpha-smoothed resampling.
 
-    Target share of domain d is n_d^alpha / sum_e n_e^alpha; with a row
-    budget N (default: the corpus size), the keep-rate is
-    min(1, N * p_d / n_d) — hot domains are down-sampled toward the
-    smoothed share, cold domains are kept whole (no replication).
-    Returns (domain_col, n_d, rate).
+    Target share of domain d is p_d = n_d^alpha / sum_e n_e^alpha; with the
+    corpus size N as the row budget, the rate is N * p_d / n_d: above 1
+    for cold domains (``domain_mix_epochs`` repeats them), below 1 for hot
+    ones.  Returns (domain_col, n_d, rate).
     """
     counts = df.groupBy(domain_col).agg(F.count("*").alias("n_d"))
     tot = counts.agg(
         F.sum(F.pow(F.col("n_d").cast("double"), F.lit(alpha))).alias("wsum"),
         F.sum("n_d").alias("n_tot"),
     )
-    budget = F.lit(target_rows).cast("double") if target_rows else F.col("n_tot").cast("double")
     # 1-row broadcast: the scalar total rides along every domain row
     return counts.crossJoin(F.broadcast(tot)).select(
         domain_col,
         "n_d",
-        F.least(
-            F.lit(1.0),
-            budget
-            * F.pow(F.col("n_d").cast("double"), F.lit(alpha))
-            / F.col("wsum")
-            / F.col("n_d"),
-        ).alias("rate"),
+        (F.col("n_tot").cast("double")
+         * F.pow(F.col("n_d").cast("double"), F.lit(alpha))
+         / F.col("wsum") / F.col("n_d")).alias("rate"),
     )
 
 
@@ -76,16 +69,18 @@ def mix_audit(
     domain_col: str = "source",
     id_col: str = "doc_id",
     alpha: float = 0.5,
-    target_rows: int | None = None,
 ) -> DataFrame:
     """Per-domain audit of the alpha-smoothed down-sampling mixture:
     input size, kept size, keep-rate.
 
-    Row r of domain d is kept iff sample_unit(r.id) < rate_d.  Returns
+    The keep-rate is min(1, rate_d): hot domains are down-sampled toward
+    the smoothed share, cold domains are kept whole (no replication).  Row
+    r of domain d is kept iff sample_unit(r.id) < the keep-rate.  Returns
     (domain_col, n_in, n_out, rate) — n_out is exact, not expected-value:
     the sample is deterministic across runs and partitionings.
     """
-    rates = domain_rates(df, domain_col, alpha, target_rows)
+    rates = domain_rates(df, domain_col, alpha).withColumn(
+        "rate", F.least(F.lit(1.0), F.col("rate")))
     kept = (
         df.join(F.broadcast(rates), domain_col)
         .where(sample_unit(id_col) < F.col("rate"))
@@ -108,7 +103,6 @@ def domain_mix_epochs(
     domain_col: str = "source",
     id_col: str = "doc_id",
     alpha: float = 0.5,
-    target_rows: int | None = None,
 ) -> DataFrame:
     """Alpha-smoothed mixture WITH upsampling (the full mT5/XLM recipe:
     low-resource domains repeat across epochs).  The unclamped rate_d may
@@ -120,20 +114,7 @@ def domain_mix_epochs(
     deterministic and within 1 row-draw of n_d * rate_d.  Rows with
     n_copies = 0 vanish (that's the down-sampling case).
     """
-    counts = df.groupBy(domain_col).agg(F.count("*").alias("n_d"))
-    tot = counts.agg(
-        F.sum(F.pow(F.col("n_d").cast("double"), F.lit(alpha))).alias("wsum"),
-        F.sum("n_d").alias("n_tot"),
-    )
-    budget = (
-        F.lit(target_rows).cast("double") if target_rows
-        else F.col("n_tot").cast("double")
-    )
-    rates = counts.crossJoin(F.broadcast(tot)).select(
-        domain_col, "n_d",
-        (budget * F.pow(F.col("n_d").cast("double"), F.lit(alpha))
-         / F.col("wsum") / F.col("n_d")).alias("rate"),
-    )
+    rates = domain_rates(df, domain_col, alpha)
     whole = F.floor(F.col("rate")).cast("long")
     frac = F.col("rate") - F.floor(F.col("rate"))
     n_copies = whole + F.when(sample_unit(id_col) < frac, 1).otherwise(0)
@@ -153,30 +134,17 @@ def mix_epochs_audit(
     domain_col: str = "source",
     id_col: str = "doc_id",
     alpha: float = 0.5,
-    target_rows: int | None = None,
 ) -> DataFrame:
     """Per-domain audit of the upsampling mixture: (domain, n_in, n_out,
     max_epoch, rate) where n_out counts emitted rows INCLUDING repeats."""
-    m = domain_mix_epochs(df, domain_col, id_col, alpha, target_rows)
+    m = domain_mix_epochs(df, domain_col, id_col, alpha)
     out = m.groupBy(domain_col).agg(
         F.count("*").cast("bigint").alias("n_out"),
         F.max("epoch").cast("bigint").alias("max_epoch"),
     )
     # recompute the (tiny) rate table so empty domains still carry a rate
-    counts = df.groupBy(domain_col).agg(F.count("*").alias("n_d"))
-    tot = counts.agg(
-        F.sum(F.pow(F.col("n_d").cast("double"), F.lit(alpha))).alias("wsum"),
-        F.sum("n_d").alias("n_tot"),
-    )
-    budget = (
-        F.lit(target_rows).cast("double") if target_rows
-        else F.col("n_tot").cast("double")
-    )
-    rates = counts.crossJoin(F.broadcast(tot)).select(
-        domain_col, F.col("n_d").cast("bigint").alias("n_in"),
-        (budget * F.pow(F.col("n_d").cast("double"), F.lit(alpha))
-         / F.col("wsum") / F.col("n_d")).alias("rate"),
-    )
+    rates = domain_rates(df, domain_col, alpha).select(
+        domain_col, F.col("n_d").cast("bigint").alias("n_in"), "rate")
     return rates.join(out, domain_col, "left").select(
         domain_col, "n_in",
         F.coalesce(F.col("n_out"), F.lit(0)).cast("bigint").alias("n_out"),

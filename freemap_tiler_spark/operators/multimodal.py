@@ -72,17 +72,19 @@ def decode_and_resize(
     return media.mapInPandas(_proc, "media_id long, frame binary, out_w int, out_h int")
 
 
-def frame_features(frames: DataFrame, out_w: int = 64, out_h: int = 64) -> DataFrame:
-    """Thumbnail -> feature vector (channel means/stds + 8x8 luma grid) —
-    the feature-extraction stage, fully real numpy over the fake frames."""
+def frame_features(frames: DataFrame) -> DataFrame:
+    """``decode_and_resize`` thumbnail -> feature vector (channel
+    means/stds + 8x8 luma grid) — the feature-extraction stage, fully real
+    numpy over the fake frames."""
 
     def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, feats = [], []
-            for mid, fr in zip(pdf["media_id"], pdf["frame"]):
-                img = np.frombuffer(fr, np.uint8).reshape(out_h, out_w, 3).astype(np.float64)
+            for mid, fr, w, h in zip(pdf["media_id"], pdf["frame"],
+                                     pdf["out_w"], pdf["out_h"]):
+                img = np.frombuffer(fr, np.uint8).reshape(h, w, 3).astype(np.float64)
                 luma = img.mean(axis=2)
-                grid = luma.reshape(8, out_h // 8, 8, out_w // 8).mean(axis=(1, 3))
+                grid = luma.reshape(8, h // 8, 8, w // 8).mean(axis=(1, 3))
                 v = np.concatenate(
                     [img.mean(axis=(0, 1)), img.std(axis=(0, 1)), grid.ravel()]
                 )

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 from freemap_tiler_spark.functions.text import ws_token_count
 
+BUCKET_SIZE = 4096  # doc ids per bucket of the two-level running offset
+
 
 def pack_map(
     df: DataFrame,
@@ -33,7 +35,6 @@ def pack_map(
     id_col: str = "doc_id",
     n_tokens_col: str | None = None,
     text_col: str = "text",
-    bucket_size: int = 4096,
 ) -> DataFrame:
     """Doc→sequence assignment map.
 
@@ -51,7 +52,7 @@ def pack_map(
 
     id_field = df.schema[id_col]
     if not isinstance(id_field.dataType, NumericType):
-        # id/bucket_size on a string id casts to NULL buckets and the
+        # id/BUCKET_SIZE on a string id casts to NULL buckets and the
         # bucket join silently drops every row — fail loudly instead
         raise TypeError(
             f"pack_map requires a numeric id column for the deterministic "
@@ -63,7 +64,7 @@ def pack_map(
         else ws_token_count(F.col(text_col))
     ).cast("long")
     base = df.select(F.col(id_col), n_tok.alias("_n")).where(F.col("_n") > 0)
-    b = base.withColumn("_bkt", (F.col(id_col) / bucket_size).cast("long"))
+    b = base.withColumn("_bkt", (F.col(id_col) / BUCKET_SIZE).cast("long"))
 
     # level 1+2: exclusive prefix over per-bucket sums (tiny table)
     bsums = b.groupBy("_bkt").agg(F.sum("_n").alias("_bsum"))
@@ -111,7 +112,6 @@ def pack_summary(
     id_col: str = "doc_id",
     n_tokens_col: str | None = None,
     text_col: str = "text",
-    bucket_size: int = 4096,
 ) -> DataFrame:
     """Per-sequence fill summary: (seq_id, n_docs, n_tokens, n_pad).
 
@@ -119,7 +119,7 @@ def pack_summary(
     carries the stream tail.  The invariant sum(n_tokens) == corpus token
     count makes this the contract-checkable face of :func:`pack_map`.
     """
-    m = pack_map(df, seq_len, id_col, n_tokens_col, text_col, bucket_size)
+    m = pack_map(df, seq_len, id_col, n_tokens_col, text_col)
     return (
         m.groupBy("seq_id")
         .agg(

@@ -187,11 +187,10 @@ def _cell_merc_bounds(x: np.ndarray, y: np.ndarray, zoom: int):
 def _hier_cover_one(
     rings: list[tuple[np.ndarray, np.ndarray]],
     zoom: int,
-    coarse_levels: int = 6,
     space: str = "lonlat",
 ) -> tuple[np.ndarray, np.ndarray]:
     """Hierarchical EXACT cover of one polygon at ``zoom``: (cells,
-    interior) arrays.  Quadtree descent from ``zoom - coarse_levels``:
+    interior) arrays.  Quadtree descent from ``zoom - 6``:
     each frontier cell is classified exactly (center-in-polygon +
     Liang-Barsky boundary-segment test) as outside (dropped — the bbox
     meshgrid emitted these for nothing), INTERIOR (expanded to its 4^dz
@@ -209,7 +208,7 @@ def _hier_cover_one(
     e1y = np.concatenate([r[1] for r in rings])
     e2x = np.concatenate([np.roll(r[0], -1) for r in rings])
     e2y = np.concatenate([np.roll(r[1], -1) for r in rings])
-    z0 = max(zoom - coarse_levels, 0)
+    z0 = max(zoom - 6, 0)
     if space == "merc":
         span0 = mercator.WORLD / float(1 << z0)
         tx0 = int((e1x.min() + mercator.ORIGIN) // span0)
@@ -345,14 +344,9 @@ def pip_join_cells(
     still convert when the layer turns out small; interior-cell rows never
     touch the rings at all (their covering cell was proven fully inside).
     """
-    pts = points.withColumn(
-        "cell",
-        cells.cell(
-            F.lit(zoom),
-            mercator.tile_x(F.col(x_col), F.lit(zoom)),
-            mercator.tile_y(F.col(y_col), F.lit(zoom)),
-        ),
-    )
+    x, y = F.col(x_col), F.col(y_col)
+    pts = points.where(x.isNotNull() & y.isNotNull()).withColumn(
+        "cell", cells.cell(F.lit(zoom), *mercator.located_tiles(x, y, F.lit(zoom))))
     cover = polygon_covering_cells(polygons, zoom)
     if salt and salt > 1:
         pts = pts.withColumn(

@@ -55,16 +55,18 @@ def assign_cells(points: DataFrame, lon_col: str, lat_col: str, zoom: int) -> Da
     """Add (cell, fx, fy): leaf cell id + global fractional pixel coords.
 
     All JVM-side Column math — the Spark equivalent of the reference's
-    tile-coverage enumeration (src/main.rs:173-181) driven from data."""
+    tile-coverage enumeration (src/main.rs:173-181) driven from data.  A
+    point with a NULL lon or lat has no tile (``mercator.tile_x``/
+    ``tile_y`` are NULL): it is dropped and paints nothing."""
     lon, lat = F.col(lon_col), F.col(lat_col)
-    tx = mercator.tile_x(lon, F.lit(zoom))
-    ty = mercator.tile_y(lat, F.lit(zoom))
+    tx, ty = mercator.located_tiles(lon, lat, F.lit(zoom))
     n = F.lit(float(1 << zoom))
     fx = (lon + 180.0) / 360.0 * n
-    lat_r = F.radians(lat)
+    lat_r = F.radians(mercator.clamp_lat(lat))
     t = F.tan(lat_r)
     fy = (1.0 - F.log(t + F.sqrt(t * t + 1.0)) / F.lit(math.pi)) / 2.0 * n
-    return points.withColumn("cell", cells.cell(F.lit(zoom), tx, ty)).withColumn(
+    located = points.where(lon.isNotNull() & lat.isNotNull())
+    return located.withColumn("cell", cells.cell(F.lit(zoom), tx, ty)).withColumn(
         "fx", fx
     ).withColumn("fy", fy)
 

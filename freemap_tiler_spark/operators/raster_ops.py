@@ -146,8 +146,8 @@ def _taps(
     """1-D resampling taps at fractional (center-based) source ``coords``
     on an axis of ``n`` pixels: (idx (m, taps), w (m, taps) float32).
     Resampling is only a choice of kernel, as in GDAL's warper
-    (src/warp.rs:15-99): ``nearest``, ``bilinear`` or, for anything else,
-    Lanczos-3 (GRA_Lanczos, src/warp.rs:19), its kernel stretched by
+    (src/warp.rs:15-99): ``nearest``, ``bilinear`` or ``lanczos``, the
+    Lanczos-3 of GRA_Lanczos (src/warp.rs:19), its kernel stretched by
     ``scale`` when downscaling and its rows normalized.  Index clip ==
     edge clamp (clip-accumulate equals replicate-read)."""
     if method == "nearest":

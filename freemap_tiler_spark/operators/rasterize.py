@@ -73,10 +73,10 @@ def rasterize_polygons(
     return work.mapInPandas(_fill, "poly_id long, cell long, mask binary")
 
 
-def raster_to_points(tiles: DataFrame, tile_size: int = 256, bands: int = 2,
-                     band: int = 0) -> DataFrame:
+def raster_to_points(tiles: DataFrame, tile_size: int = 256, bands: int = 2) -> DataFrame:
     """(cell, payload) -> one row per non-empty pixel:
-    (cell, px, py, value) — pixels with alpha>0 (last band) only."""
+    (cell, px, py, value) — band 0 of the pixels with alpha>0 (last band)
+    only."""
     t, nb = tile_size, bands
 
     def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -89,7 +89,7 @@ def raster_to_points(tiles: DataFrame, tile_size: int = 256, bands: int = 2,
                 cs.append(np.full(len(xs), c, np.int64))
                 pxs.append(xs.astype(np.int64))
                 pys.append(ys.astype(np.int64))
-                vals.append(img[:, :, band][mask].astype(np.int64))
+                vals.append(img[:, :, 0][mask].astype(np.int64))
             if cs:
                 yield pd.DataFrame({
                     "cell": np.concatenate(cs), "px": np.concatenate(pxs),

@@ -20,6 +20,7 @@ Also provides embedding-cosine near-duplicate pairs (dedup by embedding).
 
 Zero-norm vectors have no direction: their cosine is NULL (DuckDB's
 ``x / 0.0``), it ranks after every real score and passes no threshold.
+A NULL vector is treated the same way.
 """
 
 from __future__ import annotations
@@ -70,23 +71,18 @@ def _rerank(
     probe_id: str,
     corpus_id: str,
     vec_col: str,
-    broadcast: bool,
 ) -> DataFrame:
     """Exact cosine top-k over (probe_id, corpus_id) candidate ids: the
     vectors re-attach through two equi-joins, each corpus vector shipped
-    once.  Candidate ids are probe-proportional, so with ``broadcast`` the
-    ids and the probe vectors are force-broadcast and the corpus re-attach
-    stays shuffle-free (AQE's runtime conversion fires only after the
-    corpus map stage has already written its shuffle files).  A huge probe
-    set or degenerate buckets break that size assumption: ``broadcast=
-    False`` shuffles instead of failing on a too-large broadcast."""
-    pv = probes.select(F.col(probe_id), F.col(vec_col).alias("_pv"))
-    if broadcast:
-        cand_ids, pv = F.broadcast(cand_ids), F.broadcast(pv)
+    once.  Candidate ids are probe-proportional, so the ids and the probe
+    vectors are force-broadcast and the corpus re-attach stays
+    shuffle-free (AQE's runtime conversion fires only after the corpus map
+    stage has already written its shuffle files)."""
     cand = (
         corpus.select(F.col(corpus_id), F.col(vec_col).alias("_cv"))
-        .join(cand_ids, corpus_id)
-        .join(pv, probe_id)
+        .join(F.broadcast(cand_ids), corpus_id)
+        .join(F.broadcast(probes.select(F.col(probe_id), F.col(vec_col).alias("_pv"))),
+              probe_id)
     )
     return _top_k(cand.withColumn("cos", cosine("_pv", "_cv")), k, probe_id, corpus_id)
 
@@ -114,7 +110,8 @@ def brute_force_topk(
     ~100x cheaper per pair and norms are computed once per row.  Ranks are
     unchanged: adjacent top-k cosine gaps measured >= 1.8e-6 across all
     fixture SFs — nine orders above float64 summation-order noise.  A
-    zero-norm vector's cosine is NULL and ranks last, as in ``cosine``.
+    zero-norm or NULL vector's cosine is NULL and ranks last, as in
+    ``cosine``.
 
     Raises ``ValueError`` past ``MAX_BRUTE_PROBES`` probe rows.  The guard
     keeps at most that many + 1 rows per partition in the JVM (the low 33
@@ -140,7 +137,12 @@ def brute_force_topk(
         )
     pid_type = probes.schema[probe_id].dataType.simpleString()
     cid_type = corpus.schema[corpus_id].dataType.simpleString()
-    P = np.array([list(r[1]) for r in pr_rows], dtype=np.float64)
+    # a NULL vector scores as a zero one: NaN cosines, NULL in the output
+    dim = next((len(r[1]) for r in pr_rows if r[1] is not None), 0)
+    P = np.zeros((len(pr_rows), dim))
+    for i, r in enumerate(pr_rows):
+        if r[1] is not None:
+            P[i] = r[1]
     pids = [r[0] for r in pr_rows]
     sc = corpus.sparkSession.sparkContext
     bc = sc.broadcast((pids, P))
@@ -155,7 +157,11 @@ def brute_force_topk(
             n = len(pdf)
             if n == 0:
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            vecs = pdf[vec_col]
+            has = vecs.notna().to_numpy()
+            V = np.zeros((n, bP.shape[1]))
+            if has.any() and bP.shape[1]:
+                V[has] = np.array(vecs[has].tolist(), dtype=np.float64)
             cids = pdf[corpus_id].to_numpy()
             vn = np.sqrt((V * V).sum(axis=1))
             with np.errstate(invalid="ignore"):
@@ -304,7 +310,6 @@ def ann_topk(
     n_planes: int = 10,
     n_tables: int = 4,
     multiprobe: int = 1,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Approximate top-k: SRP bucket equi-join over n_tables tables, exact
     cosine re-rank of the candidate union.  Recall grows with n_tables and
@@ -317,7 +322,7 @@ def ann_topk(
     Shuffle shape (VERDICT r3 "What's wrong" #2): bucket rows are id-only
     (tbl, bkt) — the candidate equi-join moves 20-byte rows, never the
     n_tables x flips repeated raw vectors.  Vectors re-attach to the
-    deduped candidate set in ``_rerank`` (``broadcast``: see there)."""
+    deduped candidate set in ``_rerank``."""
     pr = srp_bucket_rows(
         probes, probe_id, vec_col, dim, n_planes, n_tables, multiprobe
     )
@@ -329,7 +334,7 @@ def ann_topk(
         .select(probe_id, corpus_id)
         .dropDuplicates([probe_id, corpus_id])
     )
-    return _rerank(cand_ids, probes, corpus, k, probe_id, corpus_id, vec_col, broadcast)
+    return _rerank(cand_ids, probes, corpus, k, probe_id, corpus_id, vec_col)
 
 
 def ivf_build_centroids(
@@ -338,11 +343,10 @@ def ivf_build_centroids(
     n_centroids: int = 16,
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    lloyd_iters: int = 2,
 ) -> list[list[float]]:
     """Deterministic IVF coarse quantizer: seeds = the n_centroids corpus
     vectors with the smallest ids (reproducible across runs and cluster
-    sizes), refined by ``lloyd_iters`` k-means steps computed IN SPARK
+    sizes), refined by two k-means steps computed IN SPARK
     (assign via argmin over the broadcast centroid matrix, re-center via
     groupBy mean; empty clusters keep their previous centroid).  Returns
     the centroid matrix driver-side (tiny: n_centroids x dim floats)."""
@@ -376,7 +380,7 @@ def ivf_build_centroids(
                  "n": cnt[nz].astype(np.int64)}
             )
 
-    for _ in range(lloyd_iters):
+    for _ in range(2):
         assigned = ivf_assign(corpus, cents, corpus_id, vec_col)
         parts = assigned.select("centroid_id", vec_col).mapInPandas(
             _partials, "centroid_id int, s array<double>, n long"
@@ -411,11 +415,10 @@ def ivf_assign(
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
     nprobe: int = 1,
-    out_col: str = "centroid_id",
 ) -> DataFrame:
-    """Add the (or the ``nprobe`` nearest) centroid id(s) by cosine —
-    one vectorized Arrow kernel against the broadcast centroid matrix.
-    nprobe > 1 explodes one row per probed centroid (query side)."""
+    """Add ``centroid_id``: the (or the ``nprobe`` nearest) centroid id(s)
+    by cosine — one vectorized Arrow kernel against the broadcast centroid
+    matrix.  nprobe > 1 explodes one row per probed centroid (query side)."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -426,7 +429,7 @@ def ivf_assign(
     cols = list(corpus.columns)
     schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in corpus.schema.fields]
-        + [f"{out_col} int"]
+        + ["centroid_id int"]
     )
     k = int(nprobe)
 
@@ -440,8 +443,8 @@ def ivf_assign(
             else:
                 ids = np.argsort(-sims, axis=1)[:, :k]
             out = pdf.loc[pdf.index.repeat(ids.shape[1])].reset_index(drop=True)
-            out[out_col] = ids.ravel().astype(np.int32)
-            yield out[cols + [out_col]]
+            out["centroid_id"] = ids.ravel().astype(np.int32)
+            yield out[cols + ["centroid_id"]]
 
     return corpus.mapInPandas(_assign, schema)
 
@@ -456,15 +459,13 @@ def ivf_topk(
     probe_id: str = "probe_id",
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    centroids=None,
 ) -> DataFrame:
     """IVF approximate top-k (the prompt's 'IVF variant as the scale
     path'): corpus partitioned by nearest coarse centroid, probes visit
     their ``nprobe`` nearest cells, exact cosine re-rank on the visited
     candidates.  Candidates per probe ~ nprobe/n_centroids of the corpus
     — an equi-join on centroid_id, never all-pairs."""
-    if centroids is None:
-        centroids = ivf_build_centroids(corpus, dim, n_centroids, corpus_id, vec_col)
+    centroids = ivf_build_centroids(corpus, dim, n_centroids, corpus_id, vec_col)
     co = ivf_assign(
         corpus.select(F.col(corpus_id), F.col(vec_col).alias("_cv")),
         centroids, corpus_id, "_cv", nprobe=1,
@@ -545,15 +546,13 @@ def pq_train_codebooks(
     ks: int = 16,
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    sample: int = 512,
-    iters: int = 8,
     centroids=None,
 ):
-    """Deterministic product-quantization codebooks: the ``sample``
-    lowest-id corpus vectors (reproducible across runs/cluster sizes),
+    """Deterministic product-quantization codebooks: the 512 lowest-id
+    corpus vectors (reproducible across runs/cluster sizes),
     L2-normalized, split into ``m`` subspaces of dim/m; per-subspace
     k-means (``ks`` centroids, seeded from the first ks distinct sample
-    rows, ``iters`` Lloyd steps in numpy — the codebook is tiny:
+    rows, 8 Lloyd steps in numpy — the codebook is tiny:
     m x ks x dim/m floats, always driver-side).  On unit vectors,
     squared-L2 ADC ranking is monotone with cosine (d^2 = 2 - 2cos).
 
@@ -569,18 +568,18 @@ def pq_train_codebooks(
     (measured on the uniform-random test embeddings: residual norm 0.95
     vs 1.16, and the ADC shortlist stops losing any coarse-covered
     neighbor)."""
-    v = _pq_sample_residuals(corpus, corpus_id, vec_col, sample, centroids)
+    v = _pq_sample_residuals(corpus, corpus_id, vec_col, centroids)
     assert dim % m == 0, "dim must divide into m subspaces"
-    return _pq_fit(v, m, ks, iters)
+    return _pq_fit(v, m, ks)
 
 
-def _pq_sample_residuals(corpus, corpus_id, vec_col, sample, centroids):
+def _pq_sample_residuals(corpus, corpus_id, vec_col, centroids):
     """The deterministic PQ training sample: lowest-id vectors,
     L2-normalized, residualized vs the RAW coarse mean when given."""
     import numpy as np
 
     rows = (
-        corpus.orderBy(corpus_id).limit(sample).select(vec_col).collect()
+        corpus.orderBy(corpus_id).limit(512).select(vec_col).collect()
     )
     v = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
     v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
@@ -591,7 +590,7 @@ def _pq_sample_residuals(corpus, corpus_id, vec_col, sample, centroids):
     return v
 
 
-def _pq_fit(v, m: int, ks: int, iters: int):
+def _pq_fit(v, m: int, ks: int):
     """Per-subspace Lloyd k-means on (n, dim) rows -> (m, ks, dim/m)
     codebooks; deterministic (seeded from the first ks sample rows)."""
     import numpy as np
@@ -601,7 +600,7 @@ def _pq_fit(v, m: int, ks: int, iters: int):
     for s in range(m):
         x = v[:, s * d_sub:(s + 1) * d_sub]
         cents = x[:ks].copy()
-        for _ in range(iters):
+        for _ in range(8):
             d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             a = d2.argmin(axis=1)
             for c in range(ks):
@@ -632,15 +631,12 @@ def opq_train(
     ks: int = 16,
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    sample: int = 512,
-    iters: int = 8,
-    opq_iters: int = 10,
     centroids=None,
 ):
     """Optimized Product Quantization (Ge et al., CVPR'13, non-parametric
     variant): learn an orthonormal rotation R that minimizes PQ
-    reconstruction error by alternating (a) fit codebooks on the rotated
-    sample X R, (b) solve the orthogonal Procrustes problem
+    reconstruction error by alternating ten times (a) fit codebooks on the
+    rotated sample X R, (b) solve the orthogonal Procrustes problem
     min_R ||X R - Y||_F = SVD(Xᵀ Y) -> R = U Vᵀ against the quantized
     reconstructions Y.  Returns (R, codebooks); encode/score rotate
     residuals by R before the subspace split (distances are preserved —
@@ -656,16 +652,14 @@ def opq_train(
     import numpy as np
 
     assert dim % m == 0, "dim must divide into m subspaces"
-    v = _pq_sample_residuals(corpus, corpus_id, vec_col, sample, centroids)
+    v = _pq_sample_residuals(corpus, corpus_id, vec_col, centroids)
     R = np.eye(dim)
-    books = _pq_fit(v, m, ks, iters)
-    for _ in range(opq_iters):
+    for _ in range(10):
         x = v @ R
-        books = _pq_fit(x, m, ks, iters)
-        y = _pq_reconstruct(x, books)
+        y = _pq_reconstruct(x, _pq_fit(x, m, ks))
         u, _s, vt = np.linalg.svd(v.T @ y)
         R = u @ vt
-    return R, _pq_fit(v @ R, m, ks, iters)
+    return R, _pq_fit(v @ R, m, ks)
 
 
 def pq_encode(
@@ -744,7 +738,6 @@ def ivfpq_topk(
     probe_id: str = "probe_id",
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast: bool = True,
     opq: bool = False,
 ) -> DataFrame:
     """IVFADC approximate top-k (Jégou et al., "Product Quantization for
@@ -841,4 +834,4 @@ def ivfpq_topk(
         .select(probe_id, corpus_id)
     )
     # the short-list is <= rerank x |probes| rows by construction
-    return _rerank(short, probes, corpus, k, probe_id, corpus_id, vec_col, broadcast)
+    return _rerank(short, probes, corpus, k, probe_id, corpus_id, vec_col)

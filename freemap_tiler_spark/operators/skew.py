@@ -17,11 +17,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_count(df: DataFrame, key: str = "cell", salt_factor: int = 16) -> DataFrame:
+def salted_count(df: DataFrame, key: str = "cell") -> DataFrame:
     """Two-phase skew-proof count: partial count per (key, salt), then
-    final sum per key — map-side combine made explicit.  The salt hashes
-    every column, so it is deterministic for deterministic rows."""
-    salt = F.pmod(F.xxhash64(F.concat_ws("\x00", *df.columns)), F.lit(salt_factor))
+    final sum per key — map-side combine made explicit.  The salt (one of
+    16) hashes every column, so it is deterministic for deterministic
+    rows."""
+    salt = F.pmod(F.xxhash64(F.concat_ws("\x00", *df.columns)), F.lit(16))
     salted = df.withColumn("salt", salt.cast("int"))
     partial = salted.groupBy(key, "salt").agg(F.count("*").alias("_c"))
     return partial.groupBy(key).agg(F.sum("_c").alias("count"))

@@ -94,7 +94,14 @@ def run_tiler(
 
     ``polygon`` bounds the leaf tiles: a GeoJSON path or dict (its first
     polygon, as the reference reads it) or a polygon-layer DataFrame in
-    the pip_join schema; both prune through prune_cover_by_polygon_layer."""
+    the pip_join schema; both prune through prune_cover_by_polygon_layer.
+    An unknown ``fmt`` or ``resampling`` raises ValueError before any
+    Spark job."""
+    if fmt not in ("png", "jpeg"):
+        raise ValueError(f"fmt must be 'png' or 'jpeg', not {fmt!r}")
+    if resampling not in ("nearest", "bilinear", "lanczos"):
+        raise ValueError(
+            f"resampling must be 'nearest', 'bilinear' or 'lanczos', not {resampling!r}")
     m = MetricsSink(spark, root)
 
     # ONE aggregate over `blocks` gives every scalar the stages need: the

@@ -122,9 +122,9 @@ def export_mbtiles(
     spark: SparkSession,
     root: str,
     path: str,
-    batch: int = 1024,
 ) -> str:
-    """{root}/store parquet + {root}/metadata -> a consumable .mbtiles file.
+    """{root}/store parquet + {root}/metadata -> a consumable .mbtiles file,
+    inserted 1024 rows per ``executemany``.
 
     Format (jpeg => 5-column tiles table with tile_alpha, png => 4-column,
     src/schema.rs:20-33) and the metadata values come from the run's own
@@ -187,7 +187,7 @@ def export_mbtiles(
             if jpeg:
                 row += (r["tile_alpha"] if r["tile_alpha"] is not None else b"",)
             buf.append(row)
-            if len(buf) >= batch:
+            if len(buf) >= 1024:
                 cur.executemany(ins, buf)
                 buf.clear()
         if buf:

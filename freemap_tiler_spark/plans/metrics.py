@@ -58,9 +58,9 @@ class MetricsSink:
         )
 
     @contextmanager
-    def stage(self, name: str, rows: int | None = None):
+    def stage(self, name: str):
         t0 = time.time()
-        holder = {"rows": rows}
+        holder = {"rows": None}
         stop = threading.Event()
 
         def _tick():

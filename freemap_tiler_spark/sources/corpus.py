@@ -32,8 +32,8 @@ BBOX = (16.8, 47.7, 22.6, 49.6)  # lon_min, lat_min, lon_max, lat_max
 LANGS = ["en", "de", "sk", "cs"]
 
 
-def geotagged_corpus(spark: SparkSession, n_rows: int, partitions: int | None = None) -> DataFrame:
-    df = spark.range(0, n_rows, numPartitions=partitions or spark.sparkContext.defaultParallelism)
+def geotagged_corpus(spark: SparkSession, n_rows: int) -> DataFrame:
+    df = spark.range(0, n_rows, numPartitions=spark.sparkContext.defaultParallelism)
     i = F.col("id")
     u1 = (i * F.lit(2654435761)) % 1000003 / F.lit(1000003.0)
     u2 = (i * F.lit(2246822519)) % 1000033 / F.lit(1000033.0)

@@ -11,12 +11,11 @@ into the one-polygon layer (operators.pip_join schema) that
 from __future__ import annotations
 
 import json
-import math
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from freemap_tiler_spark.functions.mercator import np_lonlat_to_merc
+from freemap_tiler_spark.functions.mercator import MAX_LAT, np_lonlat_to_merc
 from freemap_tiler_spark.operators.pip_join import POLYGON_SCHEMA
 
 
@@ -45,10 +44,6 @@ def parse_geojson_polygon(src: str | dict) -> list[tuple[np.ndarray, np.ndarray]
     return out
 
 
-# the latitude of the square Web-Mercator world's edge, atan(sinh(pi))
-MAX_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.0511287798...
-
-
 def reproject_rings_3857(
     rings: list[tuple[np.ndarray, np.ndarray]],
 ) -> list[tuple[np.ndarray, np.ndarray]]:
@@ -64,12 +59,11 @@ def reproject_rings_3857(
 def polygon_df(
     spark: SparkSession,
     rings: list[tuple[np.ndarray, np.ndarray]],
-    poly_id: int = 1,
-    tag: str = "boundary",
 ) -> DataFrame:
-    """Rings -> the engine's polygon-layer DataFrame (pip_join schema)."""
+    """Rings -> the engine's one-polygon layer DataFrame (pip_join schema):
+    poly_id 1, tag 'boundary'."""
     rows = [
-        (poly_id, i, [float(v) for v in xs], [float(v) for v in ys], tag)
+        (1, i, [float(v) for v in xs], [float(v) for v in ys], "boundary")
         for i, (xs, ys) in enumerate(rings)
     ]
     return spark.createDataFrame(rows, POLYGON_SCHEMA)

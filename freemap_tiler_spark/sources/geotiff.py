@@ -145,13 +145,18 @@ def _read_ifd(buf: bytes) -> dict[int, tuple]:
     return tags
 
 
-def read_ifds(buf: bytes, limit: int = 64) -> list[dict[int, tuple]]:
+# read_ifds stops after this many IFDs (a safety bound on the chain walk)
+MAX_IFDS = 64
+
+
+def read_ifds(buf: bytes) -> list[dict[int, tuple]]:
     """Walk the whole IFD chain (COG files append reduced-resolution
-    overview IFDs, NewSubfileType=1, after the full-resolution one)."""
+    overview IFDs, NewSubfileType=1, after the full-resolution one), at
+    most ``MAX_IFDS`` of them."""
     e, off, ent_sz, inline, cnt_fmt = _tiff_layout(buf)
     out = []
     seen = set()
-    while off and off not in seen and len(out) < limit:
+    while off and off not in seen and len(out) < MAX_IFDS:
         seen.add(off)
         tags, off = _read_ifd_at(buf, e, off, ent_sz, inline, cnt_fmt)
         out.append(tags)
@@ -607,12 +612,12 @@ _BLOCKS_SCHEMA = (
 
 
 def geotiff_blocks(
-    spark: SparkSession, path: str, ensure_alpha: bool = True,
-    max_pixel_size: float | None = None,
+    spark: SparkSession, path: str, max_pixel_size: float | None = None,
 ) -> DataFrame:
     """Read GeoTIFF file(s) at ``path`` (a file, dir, or glob) into the
-    engine's blocks schema: binaryFile scan -> executor-side numpy split.
-    One task per file; a MOSAIC of files is the parallel 100-TB shape.
+    engine's blocks schema: binaryFile scan -> executor-side numpy split
+    (1- and 3-band files gain an opaque alpha band).  One task per file; a
+    MOSAIC of files is the parallel 100-TB shape.
 
     ``max_pixel_size`` (model units/pixel, e.g. WebMercator meters of the
     deepest requested zoom) enables COG overview selection: each file
@@ -629,7 +634,7 @@ def geotiff_blocks(
                 if max_pixel_size is not None:
                     meta = select_overview(
                         geotiff_overviews(buf), max_pixel_size)
-                rows.extend(split_blocks(buf, ensure_alpha, meta=meta))
+                rows.extend(split_blocks(buf, meta=meta))
             if rows:
                 yield pd.DataFrame(rows)
 

@@ -51,9 +51,8 @@ def raster_blocks(
     width: int = 256,
     height: int = 256,
     bands: int = 4,
-    crs: str = "EPSG:3857",
 ) -> DataFrame:
-    """grid x grid blocks placed in the WebMercator Slovakia-ish area.
+    """grid x grid EPSG:3857 blocks placed in the Slovakia-ish area.
 
     geo_transform is the standard 6-element affine [x0, px_w, 0, y0, 0,
     -px_h] (src/geo.rs:4-25 layout): pixel (c, r) of block (bx, by) sits at
@@ -88,7 +87,7 @@ def raster_blocks(
         F.array(
             F.lit(x0), F.lit(px), F.lit(0.0), F.lit(y0), F.lit(0.0), F.lit(-px)
         ).alias("geo_transform"),
-        F.lit(crs).alias("crs"),
+        F.lit("EPSG:3857").alias("crs"),
         F.array(*[F.lit(None).cast("int")] * bands).alias("nodata"),
     )
 

@@ -143,11 +143,10 @@ def parse_vrt(path: str) -> dict:
 _BLOCKS_SCHEMA = GT._BLOCKS_SCHEMA
 
 
-def vrt_blocks(
-    spark: SparkSession, path: str, ensure_alpha: bool = True
-) -> DataFrame:
+def vrt_blocks(spark: SparkSession, path: str) -> DataFrame:
     """Read a gdalbuildvrt mosaic (+ optional mosaic-wide mask band) into
-    the blocks schema, one task per member file."""
+    the blocks schema, one task per member file.  Without a mask band,
+    1- and 3-band blocks gain an opaque alpha band."""
     meta = parse_vrt(path)
     gt, crs = meta["gt"], meta["crs"]
     alpha = meta["alpha"]
@@ -236,7 +235,7 @@ def vrt_blocks(
                                 np.concatenate([a, m], axis=2)).tobytes()
                             blk["bands"] += 1
                             blk["nodata"] = blk["nodata"] + [None]
-                        elif ensure_alpha and blk["bands"] in (1, 3):
+                        elif blk["bands"] in (1, 3):
                             a = np.frombuffer(blk["data"], np.uint8).reshape(
                                 blk["height"], blk["width"], blk["bands"])
                             op = np.full((blk["height"], blk["width"], 1), 255,

@@ -39,11 +39,10 @@ def streaming_tile_counts(
     stream: DataFrame,
     zoom: int = 10,
     window: str = "10 minutes",
-    watermark: str = "30 minutes",
 ) -> DataFrame:
     """Event-time windowed per-cell document counts (the streaming rollup):
     geotag extraction + cell assignment are the SAME Column expressions as
-    the batch path; the watermark bounds state for late drops."""
+    the batch path; a 30-minute watermark bounds state for late drops."""
     lon, lat = T.geo_lon("text"), T.geo_lat("text")
     cell = cells.cell(
         F.lit(zoom),
@@ -53,7 +52,7 @@ def streaming_tile_counts(
     return (
         stream.where(lon.isNotNull() & lat.isNotNull())
         .withColumn("cell", cell)
-        .withWatermark("warc_ts", watermark)
+        .withWatermark("warc_ts", "30 minutes")
         .groupBy(F.window("warc_ts", window).alias("win"), "cell")
         .agg(F.count("*").alias("docs"))
         .select(F.col("win.start").alias("win_start"), "cell", "docs")

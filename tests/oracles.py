@@ -85,7 +85,7 @@ def read_pyramid(spark, root: str):
         os.path.join(root, "tiles"))
 
 
-def minhash_signature(text_col, num_hashes: int = 8, shingle_n: int = 3) -> Column:
+def minhash_signature(text_col, num_hashes: int = 8) -> Column:
     """array<long> MinHash signature as Column higher-order functions: per
     hash i, min over shingles of (A[i] * (md5_60(shingle) mod P) + B[i])
     mod P.  The reference for ``dedup.minhash_signatures``."""
@@ -94,5 +94,5 @@ def minhash_signature(text_col, num_hashes: int = 8, shingle_n: int = 3) -> Colu
     def perm(i):
         return lambda h: (F.lit(A[i]) * h + F.lit(B[i])) % P
 
-    base = F.transform(shingles(text_col, shingle_n), lambda s: token_hash(s) % P)
+    base = F.transform(shingles(text_col), lambda s: token_hash(s) % P)
     return F.array(*[F.array_min(F.transform(base, perm(i))) for i in range(num_hashes)])

@@ -93,6 +93,30 @@ def test_zero_norm_cosine_is_null_and_ranks_last(spark):
     assert pairs and all(r.id_a >= 20 for r in pairs)
 
 
+def test_null_vector_cosine_is_null_and_ranks_last(spark):
+    """A NULL embedding scores like a zero-norm one in brute_force_topk:
+    a NULL probe gets NULL cosines (ties by corpus id), a NULL corpus
+    vector ranks after every real score; the probe collect stays one job."""
+    emb = _zero_and_random(spark).where(F.col("vec_id") >= 20).union(
+        spark.createDataFrame([(5, None)], "vec_id long, embedding array<float>"))
+    probes = emb.where(F.col("vec_id").isin(5, 25)).select(
+        F.col("vec_id").alias("probe_id"), "embedding")
+    sc = spark.sparkContext
+    sc.setJobGroup("brute_null_collect", "probe collect")
+    try:
+        out = similarity.brute_force_topk(probes, emb, k=11)
+        assert len(sc.statusTracker().getJobIdsForGroup("brute_null_collect")) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = {}
+    for r in out.orderBy("probe_id", "rank").collect():
+        got.setdefault(r.probe_id, []).append((r.vec_id, r.cos))
+    assert got[5] == [(v, None) for v in [5] + list(range(20, 30))]
+    assert got[25][0][0] == 25 and abs(got[25][0][1] - 1.0) < 1e-6
+    assert all(c is not None for _, c in got[25][:10])
+    assert got[25][10] == (5, None)
+
+
 def test_brute_topk_probe_cap(spark, sf_dir, monkeypatch):
     """brute_force_topk collects its probes to the driver: past
     MAX_BRUTE_PROBES it raises and names the alternatives, and the guarded
@@ -481,7 +505,7 @@ def test_opq_rotation_reduces_quantization_error(spark):
     R, obooks = similarity.opq_train(df, dim=dim, m=m, ks=ks)
     assert np.allclose(R @ R.T, np.eye(dim), atol=1e-8)
 
-    s = similarity._pq_sample_residuals(df, "vec_id", "embedding", 512, None)
+    s = similarity._pq_sample_residuals(df, "vec_id", "embedding", None)
 
     def mse(x, b):
         return float(((x - similarity._pq_reconstruct(x, b)) ** 2)

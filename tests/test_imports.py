@@ -1,8 +1,10 @@
 """Every ``freemap_tiler_spark`` import in the package, the tools, the
 benchmark and ``__spark_entry__.py`` resolves — including function-local
 imports that only run on one code path (a tool check no test executes
-still fails here if it imports a deleted module) — and every top-level
-package definition is reached from outside the tests.  No Spark session."""
+still fails here if it imports a deleted module) — every top-level
+package definition is reached from outside the tests, and every option
+(defaulted parameter) of one is set by some call outside the tests.  No
+Spark session."""
 
 import ast
 import importlib
@@ -137,19 +139,25 @@ def _unreferenced(defining: dict, sources: list[str]) -> list[tuple[str, str]]:
                   and name.split(".")[-1] not in used)
 
 
+def _package(root: Path) -> dict:
+    return {str(p.relative_to(root)): p.read_text()
+            for p in sorted((root / PKG).rglob("*.py"))}
+
+
+def _reaching(root: Path) -> list[str]:
+    """The code that reaches the package: the package itself, the tools,
+    the benchmark (less its tests) and ``__spark_entry__.py``.  A package
+    ``__init__.py`` only re-exports, so it does not count."""
+    return [p.read_text() for p in _sources(root)
+            if not any(p.is_relative_to(root / d) for d in TEST_DIRS)
+            and not (p.name == "__init__.py" and p.is_relative_to(root / PKG))]
+
+
 def _dead_definitions(root: Path = ROOT) -> list[tuple[str, str]]:
-    """Package definitions that no code outside the tests names: the
-    package itself, the tools, the benchmark (less its tests) and
-    ``__spark_entry__.py``.  A name only a test calls is not reached by
-    any entry point.  A package ``__init__.py`` only re-exports, so its
-    names do not count: a re-export that only a test imports reaches
-    nothing."""
-    pkg = {str(p.relative_to(root)): p.read_text()
-           for p in sorted((root / PKG).rglob("*.py"))}
-    reaching = [p.read_text() for p in _sources(root)
-                if not any(p.is_relative_to(root / d) for d in TEST_DIRS)
-                and not (p.name == "__init__.py" and p.is_relative_to(root / PKG))]
-    return _unreferenced(pkg, reaching)
+    """Package definitions that no reaching code names.  A name only a
+    test calls is not reached by any entry point, and a re-export that
+    only a test imports reaches nothing."""
+    return _unreferenced(_package(root), _reaching(root))
 
 
 def test_every_package_definition_is_referenced():
@@ -225,6 +233,148 @@ def test_definition_guard_exempts_entry_points(tmp_path):
         "__spark_entry__.py": "",
     })
     assert _dead_definitions(root) == [(f"{PKG}/m.py", "dead")]
+
+
+# Options that no reaching call sets, kept on purpose:
+# (function, parameter) -> why.
+_COLUMN_NAME = ("a column-name parameter: it names a column of the caller's "
+                "schema, not a behaviour")
+OPTION_EXEMPT = {
+    **{(f, p): _COLUMN_NAME for f, params in {
+        "exact_dedup": ("text_col", "id_col"),
+        "minhash_lsh_pairs": ("text_col", "id_col"),
+        "jaccard_verify": ("text_col", "id_col"),
+        "simhash_near_dups": ("text_col", "id_col"),
+        "duplicate_spans": ("text_col", "id_col"),
+        "scrub_spans": ("text_col", "id_col"),
+        "contamination": ("text_col", "id_col"),
+        "knn_join": ("probe_id", "point_id", "lon_col", "lat_col"),
+        "knn_join_brute": ("probe_id", "point_id", "lon_col", "lat_col"),
+        "train_bigram_lm": ("text_col", "id_col"),
+        "doc_log_perplexity": ("text_col", "id_col"),
+        "mix_audit": ("id_col",),
+        "mix_epochs_audit": ("id_col",),
+        "pack_summary": ("id_col", "n_tokens_col", "text_col"),
+        "pip_join_cells": ("x_col", "y_col"),
+        "brute_force_topk": ("probe_id", "corpus_id", "vec_col"),
+        "ann_topk": ("probe_id", "corpus_id", "vec_col"),
+        "ivf_topk": ("probe_id", "corpus_id", "vec_col"),
+        "ivfpq_topk": ("probe_id", "corpus_id", "vec_col"),
+        "embedding_near_dups": ("corpus_id", "vec_col"),
+        "incremental_update": ("lon_col", "lat_col"),
+    }.items() for p in params},
+    **{("run_tiler", p): "one of the reference CLI's options (src/args.rs)"
+       for p in ("quality", "polygon", "resampling", "insert_empty")},
+    ("import_mbtiles", "batch"):
+        "import_mbtiles is an entry point (ENTRY_POINTS): its callers are outside",
+    ("geotiff_blocks", "max_pixel_size"):
+        "the COG overview read: the deepest zoom's pixel size picks the IFD",
+    ("png_encode", "adaptive"):
+        "adaptive=False is the unfiltered reference the adaptive-filter test compares",
+    ("minhash_lsh_pairs", "max_bucket_size"):
+        "the hot-bucket guard: a test sets it small to exercise the star and chain",
+    ("embedding_near_dups", "max_bucket_size"):
+        "the hot-bucket guard: a test sets it small to exercise the star and chain",
+    **{("write_geotiff", p): "write_geotiff writes test fixtures; each option is "
+       "a TIFF layout the reader must read"
+       for p in ("epsg", "rows_per_strip", "predictor", "bigtiff",
+                 "model_transform", "overviews")},
+}
+
+
+def _defaulted(src: str):
+    """(function, parameter, position) per defaulted parameter of a
+    top-level function or top-level class method.  An ``__init__`` is
+    named by its class, a method's positions do not count ``self`` (the
+    package has no static methods), and a keyword-only parameter has
+    position None."""
+    for node in ast.parse(src).body:
+        fns = []
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fns.append((node.name, node, 0))
+        elif isinstance(node, ast.ClassDef):
+            fns += [(node.name if m.name == "__init__" else m.name, m, 1)
+                    for m in node.body
+                    if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        for name, fn, skip in fns:
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            for i, p in enumerate(pos[first:], first):
+                yield name, p.arg, i - skip
+            for p, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None:
+                    yield name, p.arg, None
+
+
+def _calls(src: str):
+    """(called name, positional count, keyword names) per call in ``src``.
+    A call that uses ``*args`` or ``**kwargs`` passes every parameter: its
+    keyword names are None."""
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            star = any(isinstance(a, ast.Starred) for a in node.args) \
+                or any(k.arg is None for k in node.keywords)
+            yield name, len(node.args), None if star else {k.arg for k in node.keywords}
+
+
+def _unset(defining: dict, sources: list[str]) -> list[tuple[str, str, str]]:
+    calls: dict = {}
+    for src in sources:
+        for name, n_pos, kws in _calls(src):
+            calls.setdefault(name, []).append((n_pos, kws))
+    return sorted(
+        (mod, fn, p) for mod, src in defining.items()
+        for fn, p, i in _defaulted(src)
+        if (fn, p) not in OPTION_EXEMPT
+        and not any(kws is None or p in kws or (i is not None and i < n_pos)
+                    for n_pos, kws in calls.get(fn, ())))
+
+
+def _unset_options(root: Path = ROOT) -> list[tuple[str, str, str]]:
+    """Defaulted parameters of package functions that no reaching call
+    passes, matched by called name as ``_dead_definitions`` matches
+    references."""
+    return _unset(_package(root), _reaching(root))
+
+
+def test_every_option_is_set_outside_tests():
+    """An option only a test (or nothing) sets doubles the configurations
+    to test for a behaviour no entry point selects: make its default the
+    code, and delete the branch only another value took."""
+    defaulted = {(fn, p) for src in _package(ROOT).values()
+                 for fn, p, _ in _defaulted(src)}
+    assert len(defaulted) > 100  # the walk reaches the parameters at all
+    assert _unset_options() == []
+    # every exemption still names a defaulted parameter, with a reason
+    assert set(OPTION_EXEMPT) <= defaulted
+    assert all(OPTION_EXEMPT.values())
+
+
+def test_option_guard_flags_a_parameter_only_a_test_sets(tmp_path):
+    """A parameter that only ``tests/`` passes is flagged; one that a tool
+    passes by position, or by keyword to a constructor, is not."""
+    root = _tree(tmp_path, {
+        f"{PKG}/m.py": (
+            "def f(a, tooled=1, tested=2):\n    pass\n\n"
+            "class Sink:\n"
+            "    def __init__(self, path, rows=None):\n        pass\n"
+            "    def stage(self, name, rows=None):\n        pass\n"),
+        "tools/t.py": f"from {PKG}.m import f, Sink\nf(0, 1)\nSink('p', rows=3).stage('s')\n",
+        "tests/test_m.py": f"from {PKG}.m import f, Sink\nf(0, tested=3)\nSink('p').stage('s', 1)\n",
+        "__spark_entry__.py": "",
+    })
+    assert _unset_options(root) == [
+        (f"{PKG}/m.py", "f", "tested"), (f"{PKG}/m.py", "stage", "rows")]
+
+
+def test_option_guard_counts_star_arguments_and_keyword_only():
+    mod = ("def f(a, b=1, *, c=2):\n    pass\n\n"
+           "def g(a, b=1, *, c=2):\n    pass\n")
+    caller = "f(*args)\ng(0, 1)\n"
+    assert _unset({"m.py": mod}, [mod, caller]) == [("m.py", "g", "c")]
 
 
 @pytest.mark.parametrize("rel", ["tests/test_contract.py", "tools/explain_audit.py"])

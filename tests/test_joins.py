@@ -107,6 +107,33 @@ def test_knn_isolated_probe_ring_expansion(spark):
     assert {p for p, _, _ in got} == {1, 2}
 
 
+def test_null_coordinates_get_no_tile_and_no_knn_row(spark):
+    """Spark's least/greatest skip NULLs, so a NULL lon or lat used to clamp
+    to the edge tile 2^z - 1: it painted tiles on the south and east edges
+    and ranked ahead of real points in kNN.  A NULL coordinate now gives a
+    NULL tile and cell, paints nothing and takes part in no kNN row."""
+    from freemap_tiler_spark.functions import mercator
+    from freemap_tiler_spark.operators import pyramid
+
+    # each NULL used to land in the probe's corner cell (x and y 2^z - 1)
+    nulls = spark.createDataFrame(
+        [(1, 179.85, None), (2, None, -84.9)], "point_id long, lon double, lat double")
+    row = nulls.select(mercator.tile_x(F.col("lon"), F.lit(4)).alias("x"),
+                       mercator.tile_y(F.col("lat"), F.lit(4)).alias("y")).collect()
+    assert [tuple(r) for r in row] == [(15, None), (None, 15)]
+    assert pyramid.build_pyramid(nulls, max_zoom=4, tile_size=8).count() == 0
+
+    pts = nulls.union(spark.createDataFrame(
+        [(3, 179.8, -85.0)], "point_id long, lon double, lat double"))
+    probes = spark.createDataFrame(
+        [(1, 179.9, -85.0), (2, None, -85.0)], "probe_id long, lon double, lat double")
+    for zoom in (0, 1, 6):
+        got = knn.knn_join(probes, pts, k=3, zoom=zoom).collect()
+        assert [(r.probe_id, r.point_id, r.rank) for r in got] == [(1, 3, 1)], zoom
+    got = knn.knn_join_brute(probes, pts, k=3).collect()
+    assert [(r.probe_id, r.point_id, r.rank) for r in got] == [(1, 3, 1)]
+
+
 def test_hierarchical_cover_exact_and_smaller(spark):
     """Quadtree cover: (a) cover-cell count for a diagonal fixture drops
     >= 3x vs the bbox meshgrid; (b) the pip join output is identical to

@@ -64,22 +64,16 @@ def test_pack_conservation_and_fill(spark):
     assert [r.seq_id for r in s] == list(range(len(s)))
 
 
-def test_pack_bucketed_cumsum_matches_any_bucket_size(spark):
+def test_pack_bucketed_cumsum_matches_any_bucket_size(spark, monkeypatch):
     """The scale path (bucketed two-level offset) is invariant to
-    bucket_size and input partitioning — same map rows regardless."""
+    BUCKET_SIZE and input partitioning — same map rows regardless."""
     sizes = [7, 19, 3, 101, 55, 1, 42, 88, 13, 60, 2, 9]
     df = _mkdocs(spark, sizes)
-    ref = {
-        tuple(r) for r in packing.pack_map(df, 32, bucket_size=4096).collect()
-    }
+    ref = {tuple(r) for r in packing.pack_map(df, 32).collect()}
     for bs in (1, 3, 5):
-        got = {
-            tuple(r)
-            for r in packing.pack_map(
-                df.repartition(7), 32, bucket_size=bs
-            ).collect()
-        }
-        assert got == ref, f"bucket_size={bs} diverged"
+        monkeypatch.setattr(packing, "BUCKET_SIZE", bs)
+        got = {tuple(r) for r in packing.pack_map(df.repartition(7), 32).collect()}
+        assert got == ref, f"BUCKET_SIZE={bs} diverged"
 
 
 def test_pack_sparse_noncontiguous_ids(spark):

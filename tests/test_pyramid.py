@@ -90,6 +90,31 @@ def test_text_byte_identity(spark):
     assert before == after
 
 
+def test_pole_paints_the_edge_row_and_off_globe_geotag_is_null(spark):
+    """lat -90 used to reach the Mercator formula as log(0) = NULL and paint
+    pixel row 0 of the bottom tile: latitudes clamp to +-MAX_LAT first, so
+    a pole paints the grid's edge row.  A geotag off the globe is NULL."""
+    from freemap_tiler_spark.functions import cells, mercator
+
+    t = 8
+    pts = spark.createDataFrame([(-179.99, -90.0), (-179.99, 90.0)], "lon double, lat double")
+    tiles = pyramid.rasterize_level(pyramid.assign_cells(pts, "lon", "lat", 4), t)
+    got = {}
+    for r in tiles.select(cells.cell_y("cell").alias("y"), "payload").collect():
+        alpha = np.frombuffer(r.payload, np.uint8).reshape(t, t, 2)[:, :, 1]
+        got[r.y] = [tuple(v) for v in np.argwhere(alpha)]
+    assert got == {15: [(t - 1, 0)], 0: [(0, 0)]}
+    # in range, the clamp is the identity
+    lat = spark.range(1).select(mercator.clamp_lat(F.lit(48.123456789)).alias("v"))
+    assert lat.first().v == 48.123456789
+
+    tags = ["geo:91.0,20.0", "geo:45.0,200.0", "geo:-90.0,-180.0", "nogeo"]
+    rows = spark.createDataFrame([(s,) for s in tags], "text string").select(
+        text.geo_lat("text").alias("lat"), text.geo_lon("text").alias("lon")).collect()
+    assert [tuple(r) for r in rows] == [
+        (None, None), (None, None), (-90.0, -180.0), (None, None)]
+
+
 def test_empty_input(spark, points):
     empty = points.where(F.lit(False))
     assert pyramid.build_pyramid(empty, max_zoom=4, tile_size=32).count() == 0

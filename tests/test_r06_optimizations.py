@@ -37,7 +37,7 @@ def test_minhash_arrow_signatures_match_column_path(spark, docs):
     d = docs.select("doc_id", "text").unionByName(nulls)
     got = {r[0]: list(r[1:]) for r in dedup.minhash_signatures(d).collect()}
     ref = {r.doc_id: list(r.sig) for r in d.select(
-        "doc_id", minhash_signature(F.col("text"), 8, 3).alias("sig")).collect()}
+        "doc_id", minhash_signature(F.col("text"), 8).alias("sig")).collect()}
     assert len(got) == d.count()
     assert got == ref
 
@@ -53,7 +53,7 @@ def test_minhash_pairs_match_prebatch_formulation(spark, docs):
     num_hashes, bands, r = 8, 4, 2
     sig = docs.select(
         F.col("doc_id").alias("_id"),
-        minhash_signature(F.col("text"), num_hashes, 3).alias("_s"),
+        minhash_signature(F.col("text"), num_hashes).alias("_s"),
     ).select("_id", *[F.col("_s")[i].alias(f"_h{i}") for i in range(num_hashes)])
     banded = sig.select(
         "_id",

@@ -78,7 +78,8 @@ def test_warp_identity_preserves_values(spark, blocks):
 
 
 def test_warp_4326_path(spark):
-    df = raster_blocks(spark, grid=1, width=32, height=32, bands=2, crs="EPSG:4326")
+    df = raster_blocks(spark, grid=1, width=32, height=32, bands=2).withColumn(
+        "crs", F.lit("EPSG:4326"))
     # place geo_transform in degrees over Slovakia
     df = df.withColumn(
         "geo_transform",
@@ -245,6 +246,21 @@ def test_run_tiler_job_budget(spark, blocks):
     assert len(jobs) <= 13, f"run_tiler ran {len(jobs)} Spark jobs"
     jobs = sc.statusTracker().getJobIdsForGroup("run_tiler_resume_budget")
     assert len(jobs) <= 2, f"the resumed run_tiler ran {len(jobs)} Spark jobs"
+
+
+def test_run_tiler_rejects_unknown_format_and_resampling(spark, blocks, tmp_path):
+    """A format other than png/jpeg used to write JPEG tiles labelled with
+    that format, and an unknown resampling silently became Lanczos: both
+    now raise ValueError before any Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup("run_tiler_rejects", "argument checks")
+    try:
+        for kw in (dict(fmt="PNG"), dict(fmt="webp"), dict(resampling="cubic")):
+            with pytest.raises(ValueError, match="fmt must be|resampling must be"):
+                run_tiler(spark, blocks, str(tmp_path), max_zoom=9, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("run_tiler_rejects") == []
 
 
 def test_tiler_png_shaped_run_job_budget(spark, tmp_path):
@@ -486,7 +502,8 @@ def test_warp_utm_source(spark):
     # 6.4 km x 6.4 km UTM block centred near (16.9E, 48.6N)
     cx, cy = crs_mod.tm_forward(np.array([16.9]), np.array([48.6]), 15.0)
     x0, y0 = float(cx[0]) - 3200.0, float(cy[0]) + 3200.0
-    base = raster_blocks(spark, grid=1, width=64, height=64, bands=2, crs="EPSG:32633")
+    base = raster_blocks(spark, grid=1, width=64, height=64, bands=2).withColumn(
+        "crs", F.lit("EPSG:32633"))
     const = np.full((64, 64, 2), 99, np.uint8)
     const[:, :, 1] = 255
 
@@ -835,7 +852,8 @@ def test_warp_proj_pipeline_string_equals_epsg(spark):
         return img.tobytes()
 
     def tiles_for(crs_str):
-        base = raster_blocks(spark, grid=1, width=64, height=64, bands=2, crs=crs_str)
+        base = raster_blocks(spark, grid=1, width=64, height=64, bands=2).withColumn(
+            "crs", F.lit(crs_str))
         df = base.withColumn("data", _img("data")).withColumn(
             "geo_transform",
             F.array(F.lit(x0), F.lit(100.0), F.lit(0.0),
@@ -934,7 +952,8 @@ def test_polygon_layer_prune_matches_broadcast(spark):
     # two disjoint polygons as one layer: the union of the one-polygon prunes
     a, b = box(5.0, 45.0, 6.0, 46.0), box(20.0, 50.0, 21.5, 51.0)
     cover = cover_of([a, b], 8)
-    layer = polygon_df(spark, [a]).union(polygon_df(spark, [b], poly_id=2))
+    layer = polygon_df(spark, [a]).union(
+        polygon_df(spark, [b]).withColumn("poly_id", F.lit(2).cast("long")))
     ref = xy(_bbox_filter_prune(cover, [a])) | xy(_bbox_filter_prune(cover, [b]))
     assert xy(PL.prune_cover_by_polygon_layer(cover, layer, 8)) == ref
 

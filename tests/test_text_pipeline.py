@@ -116,22 +116,6 @@ def test_domain_mix_alpha_smoothing(spark):
     assert again == {dom: a.n_out for dom, a in audit.items()}
 
 
-def test_domain_mix_target_rows_budget(spark):
-    """target_rows scales every rate: a 10x smaller budget cuts every
-    domain (no clamp at 1 for the cold ones any more)."""
-    from freemap_tiler_spark.operators import mixing
-
-    df = spark.range(1000).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 10 == 0, "rare").otherwise("common").alias("source"),
-    )
-    audit = {r.source: r for r in
-             mixing.mix_audit(df, alpha=0.5, target_rows=100).collect()}
-    assert audit["common"].rate < 1.0 and audit["rare"].rate < 1.0
-    kept = sum(a.n_out for a in audit.values())
-    assert 50 <= kept <= 150  # hash draw lands near the budget
-
-
 def test_domain_mix_epochs_upsamples_cold_domain(spark):
     """Unclamped alpha-sampling: the cold domain's rate exceeds 1 so its
     docs repeat across epochs; totals match an independent hash replay."""
@@ -191,33 +175,3 @@ def test_lm_perplexity_filter(spark):
             ).collect()}
     import math
     assert all(math.isclose(ppl[k], ppl2[k], abs_tol=1e-9) for k in ppl)
-
-
-def test_normalize_ccnet_and_lm_normalization(spark):
-    """CCNet normalization: accents fold, digits -> 0, ligatures expand,
-    zero-width/control chars drop; with normalize=True the LM scores an
-    accented variant identically to its plain form."""
-    from freemap_tiler_spark.operators import lm
-
-    rows = spark.createDataFrame(
-        [("Café RÉSUMÉ 2024",), ("naïve fiancée ﬁne",), (None,)],
-        "t string",
-    ).select(T.normalize_ccnet("t").alias("n")).collect()
-    assert rows[0].n == "cafe resume 0000"
-    assert rows[1].n == "naive fiancee fine"
-    assert rows[2].n is None
-
-    base = "the cafe serves resume advice and the cafe is fine"
-    acc = "the café serves résumé advice and the café is ﬁne"
-    docs = spark.createDataFrame(
-        [(1, base), (2, acc)], "doc_id long, text string")
-    model = lm.train_bigram_lm(docs, normalize=True)
-    out = {r.doc_id: (r.n_bigrams, r.log_ppl)
-           for r in lm.doc_log_perplexity(docs, model,
-                                          normalize=True).collect()}
-    assert out[1] == out[2]  # accented variant == plain under normalization
-    # without normalization the accented tokens differ
-    m2 = lm.train_bigram_lm(docs)
-    o2 = {r.doc_id: r.log_ppl
-          for r in lm.doc_log_perplexity(docs, m2).collect()}
-    assert o2[1] != o2[2]

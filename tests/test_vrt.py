@@ -245,15 +245,16 @@ def test_vrt_source_band_remapping(spark):
                + "\n</VRTDataset>")
         p = os.path.join(tmp, "remap.vrt")
         open(p, "w").write(xml)
-        rows = vrt.vrt_blocks(spark, p, ensure_alpha=False).collect()
-        got = _reassemble(rows, GT, 3)
-        assert np.array_equal(got, img)  # BGR file -> RGB mosaic
+        rows = vrt.vrt_blocks(spark, p).collect()
+        got = _reassemble(rows, GT, 4)
+        assert np.array_equal(got[:, :, :3], img)  # BGR file -> RGB mosaic
+        assert (got[:, :, 3] == 255).all()  # no mask band: opaque alpha
 
         bad = xml.replace("<SourceBand>2</SourceBand>",
                           "<SourceBand>9</SourceBand>")
         pb = os.path.join(tmp, "bad.vrt")
         open(pb, "w").write(bad)
         with pytest.raises(Exception, match="SourceBand 9"):
-            vrt.vrt_blocks(spark, pb, ensure_alpha=False).collect()
+            vrt.vrt_blocks(spark, pb).collect()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
