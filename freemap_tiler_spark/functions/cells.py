@@ -9,6 +9,15 @@ where ``morton(x, y)`` bit-interleaves x (even bits) and y (odd bits).
 Zoom <= 29 (58 morton bits, 29 bits per axis) — far beyond the reference's
 max_zoom 20 workloads (reference README.md:84-168).
 
+The Column forms interleave by byte lookup: ``part1by1`` ORs four
+``SPREAD[byte] << 16j`` terms and ``compact1by1`` eight
+``COMPACT[byte] << 4j`` terms, each table one 256-entry array literal, so
+a cell expression holds its x and y inputs 4 times each, and ``cell_x``/
+``cell_y`` hold the cell 8 times: every copy is planned, copied into any
+filter Spark pushes below it, and compiled.  Callers that build a cell
+from a computed tile project the tile to a column first
+(:func:`with_cell`), so the tile math runs once per row.
+
 Semantics mirror the reference's tile ops (implemented there by the external
 ``tilemath`` crate; semantics pinned by its call sites):
 
@@ -32,7 +41,7 @@ Two parallel implementations are provided and cross-tested:
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ZOOM_SHIFT = 58
@@ -46,7 +55,6 @@ _B = [
     0x3333_3333_3333_3333,
     0x5555_5555_5555_5555,
 ]
-_S = [16, 8, 4, 2, 1]
 
 
 # ---------------------------------------------------------------------------
@@ -107,18 +115,41 @@ def _c(v) -> Column:
     return v if isinstance(v, Column) else F.col(v)
 
 
+def _byte_table(values: np.ndarray) -> str:
+    return ",".join(str(int(v)) for v in values)
+
+
+# SPREAD[b]: the 8 bits of byte b moved to the even bits of 16 (bit k -> 2k);
+# COMPACT[b]: the even bits of byte b gathered into 4 (bit 2k -> k)
+_SPREAD = _byte_table(np_part1by1(np.arange(256)))
+_COMPACT = _byte_table(np_compact1by1(np.arange(256)))
+
+
+def _lookup(v: Column, table: str, n_bytes: int, out_bits: int) -> Column:
+    """OR over the low ``n_bytes`` bytes of ``v`` of ``table[byte]``, the
+    j-th shifted left by ``j * out_bits``.  ``v`` appears once per byte.
+
+    The 256 entries are one string literal split and cast to array<bigint>,
+    which the optimizer folds into a single array ``Literal``: three py4j
+    calls, where ``F.lit(ndarray)`` makes one per element (28 ms a table
+    on 4 vCPU)."""
+    t = F.split(F.lit(table), ",").cast("array<bigint>")
+    out = None
+    for j in range(n_bytes):
+        byte = (F.shiftright(v, 8 * j) if j else v).bitwiseAND(255).cast("int")
+        term = F.shiftleft(t[byte], out_bits * j) if j else t[byte]
+        out = term if out is None else out.bitwiseOR(term)
+    return out
+
+
 def part1by1(col) -> Column:
-    v = _c(col).cast("long").bitwiseAND(F.lit(0xFFFF_FFFF))
-    for s, b in zip(_S, _B):
-        v = v.bitwiseOR(F.shiftleft(v, s)).bitwiseAND(F.lit(b))
-    return v
+    """Spread the low 32 bits so bit k lands at 2k: 4 byte lookups."""
+    return _lookup(_c(col).cast("long"), _SPREAD, 4, 16)
 
 
 def compact1by1(col) -> Column:
-    v = _c(col).cast("long").bitwiseAND(F.lit(_B[4]))
-    for s, b in zip(reversed(_S), _B[:-1][::-1] + [0xFFFF_FFFF]):
-        v = v.bitwiseOR(F.shiftright(v, s)).bitwiseAND(F.lit(b))
-    return v
+    """Inverse of :func:`part1by1` — gather even bits: 8 byte lookups."""
+    return _lookup(_c(col).cast("long"), _COMPACT, 8, 4)
 
 
 def morton(x, y) -> Column:
@@ -127,6 +158,17 @@ def morton(x, y) -> Column:
 
 def cell(zoom, x, y) -> Column:
     return F.shiftleft(_c(zoom).cast("long"), ZOOM_SHIFT).bitwiseOR(morton(x, y))
+
+
+def with_cell(df: DataFrame, zoom: int, tx: Column, ty: Column, name: str) -> DataFrame:
+    """``df`` plus column ``name``, the cell of tile ``(tx, ty)`` at
+    ``zoom``.  The tile is projected to columns first, so its math runs
+    once per row, not once per byte lookup."""
+    return (
+        df.withColumns({"_ctx": tx, "_cty": ty})
+        .withColumn(name, cell(F.lit(zoom), F.col("_ctx"), F.col("_cty")))
+        .drop("_ctx", "_cty")
+    )
 
 
 def cell_zoom(cell_col) -> Column:

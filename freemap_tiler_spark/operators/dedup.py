@@ -65,11 +65,18 @@ def shingles(text_col) -> Column:
     """
     n = SHINGLE_N
     toks = F.split(F.trim(F.lower(text_col)), r"\s+")
-    m = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(m - n, F.lit(0)))
-    return F.when(m >= n, F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)])
-    )).otherwise(F.array(F.concat_ws(" ", toks)))
+
+    def grams(t):
+        m = F.size(t)
+        idx = F.sequence(F.lit(0), F.greatest(m - n, F.lit(0)))
+        return F.when(m >= n, F.transform(
+            idx, lambda i: F.concat_ws(" ", *[F.element_at(t, (i + j + 1).cast("int")) for j in range(n)])
+        )).otherwise(F.array(F.concat_ws(" ", t)))
+
+    # bind the tokens once, as the lambda variable of a one-element
+    # transform: higher-order functions run interpreted, so a split inside
+    # the per-shingle lambda re-split the text n times per shingle
+    return F.element_at(F.transform(F.array(toks), grams), 1)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -258,14 +265,17 @@ def jaccard_verify(
     threshold: float = 0.8,
 ) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs; keeps >= threshold.
-    Returns (id_a, id_b, jaccard)."""
-    sh = df.select(
-        F.col(id_col).alias("_jid"),
-        F.array_distinct(shingles(F.col(text_col))).alias("_sh"),
-    )
+    Returns (id_a, id_b, jaccard).
+
+    The pairs take their texts by join first, so only the documents of a
+    candidate pair are shingled, not the whole corpus."""
+    docs = df.select(F.col(id_col), F.col(text_col))
     withs = (
-        pairs.join(sh.withColumnRenamed("_jid", "id_a").withColumnRenamed("_sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("_jid", "id_b").withColumnRenamed("_sh", "sh_b"), "id_b")
+        pairs.join(docs.withColumnsRenamed({id_col: "id_a", text_col: "_ta"}), "id_a")
+        .join(docs.withColumnsRenamed({id_col: "id_b", text_col: "_tb"}), "id_b")
+        .select("id_a", "id_b",
+                F.array_distinct(shingles(F.col("_ta"))).alias("sh_a"),
+                F.array_distinct(shingles(F.col("_tb"))).alias("sh_b"))
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")

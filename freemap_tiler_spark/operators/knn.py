@@ -3,9 +3,13 @@
 No counterpart in the reference (SURVEY.md §2.5); required by BASELINE.json
 ("kNN lookups").  The design reuses the engine's cell index:
 
-1. probes and points are assigned to cells at ``zoom`` (Column math);
-2. each probe joins points in its own cell **and the 8 ring cells**
-   (explode of 9 neighbor offsets — Column math, no UDF);
+1. probes and points are assigned to tiles ``(tx, ty)`` at ``zoom``
+   (Column math);
+2. each probe joins points in its own tile **and the 8 ring tiles**
+   (explode of 9 neighbor offsets — Column math, no UDF).  The join key is
+   the tile pair itself: at one zoom a morton cell id adds nothing to it,
+   and building one per exploded row made the explode stage's generated
+   method too large for the JIT;
 3. distance column (squared planar / haversine) — Column math;
 4. ``Window.partitionBy(probe).orderBy(dist)`` + ``row_number() <= k``.
 
@@ -38,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from freemap_tiler_spark.functions import cells, mercator
+from freemap_tiler_spark.functions import mercator
 
 # the ring schedule: Chebyshev neighborhood radii, in cells, tried in order
 RINGS = (1, 2, 4)
@@ -85,13 +89,12 @@ def knn_join(
     pr = _with_cell_xy(
         _located(probes, probe_id, lon_col, lat_col, "_p"), "_plon", "_plat", zoom, "p")
     pt = _with_cell_xy(
-        _located(points, point_id, lon_col, lat_col, "_q"), "_qlon", "_qlat", zoom, "q",
-    ).withColumn("qcell", cells.cell(F.lit(zoom), F.col("qtx"), F.col("qty"))).drop("qtx", "qty")
+        _located(points, point_id, lon_col, lat_col, "_q"), "_qlon", "_qlat", zoom, "q")
 
-    # per-cell point counts: the escalation decision table.  Tiny relative
-    # to the points table (<= one row per occupied cell); the identical
+    # per-tile point counts: the escalation decision table.  Tiny relative
+    # to the points table (<= one row per occupied tile); the identical
     # subplan feeding the candidate join collapses via exchange reuse.
-    cnts = pt.groupBy("qcell").agg(F.count("*").alias("_ccnt"))
+    cnts = pt.groupBy("qtx", "qty").agg(F.count("*").alias("_ccnt"))
 
     # a ring wider than the world (zoom 0 and 1) is dropped from the schedule
     rings = [r for r in RINGS if r <= (1 << zoom)]
@@ -100,7 +103,7 @@ def knn_join(
     n = mercator.zoom_n(zoom)
 
     def neighbor_cells(probe_df, R):
-        """(probe, occupied neighbor cell, Chebyshev ring) for the ±R
+        """(probe, neighbor tile, Chebyshev ring) for the ±R
         neighborhood — ONE explode (sequence keeps the plan O(1) in ring
         size).  y-clamp / x-wrap can collide offsets onto one cell near
         the poles/antimeridian — each cell must appear once with the
@@ -110,37 +113,31 @@ def knn_join(
             .select("*", F.explode(F.sequence(F.lit(-R), F.lit(R))).alias("_dx"))
             .select("*", F.explode(F.sequence(F.lit(-R), F.lit(R))).alias("_dy"))
         )
+        qx = ((F.col("ptx") + F.col("_dx")) + n) % n  # wrap antimeridian
         if 2 * R + 1 <= (1 << zoom):
             # shuffle-free form: an off-grid y offset clamps onto the edge
             # row that the SAME probe already reaches directly at a smaller
             # |_dy| (ring = max(|dx|,|dy|) is monotone in |dy|), so
             # dropping off-grid offsets IS the clamp + min-ring dedup; and
             # x wrap cannot revisit a cell while the ring is narrower than
-            # the world.  (probe, qcell) rows come out unique with the
+            # the world.  (probe, tile) rows come out unique with the
             # minimal ring — no groupBy shuffle needed.
             qy = F.col("pty") + F.col("_dy")
             return exploded.where((qy >= 0) & (qy <= n - 1)).select(
                 probe_id, "_plon", "_plat",
                 F.greatest(F.abs("_dx"), F.abs("_dy")).alias("_ring"),
-                cells.cell(
-                    F.lit(zoom),
-                    ((F.col("ptx") + F.col("_dx")) + n) % n,  # wrap antimeridian
-                    qy,
-                ).alias("qcell"),
+                qx.alias("qtx"), qy.alias("qty"),
             )
         return (
             exploded
             .select(
                 probe_id, "_plon", "_plat",
                 F.greatest(F.abs("_dx"), F.abs("_dy")).alias("_ring"),
-                cells.cell(
-                    F.lit(zoom),
-                    ((F.col("ptx") + F.col("_dx")) + n) % n,  # wrap antimeridian
-                    F.greatest(F.lit(0).cast("long"),
-                               F.least(F.col("pty") + F.col("_dy"), n - 1)),
-                ).alias("qcell"),
+                qx.alias("qtx"),
+                F.greatest(F.lit(0).cast("long"),
+                           F.least(F.col("pty") + F.col("_dy"), n - 1)).alias("qty"),
             )
-            .groupBy(probe_id, "qcell")
+            .groupBy(probe_id, "qtx", "qty")
             .agg(
                 F.min("_ring").alias("_ring"),
                 F.first("_plon").alias("_plon"),
@@ -153,7 +150,7 @@ def knn_join(
         over the probe (no separate aggregation + join back: the former
         groupBy + re-join shape cost an extra shuffle and a broadcast
         build), then the smallest sufficient ring as a CASE chain attached
-        to every (probe, cell) row; probes underfilled at the widest
+        to every (probe, tile) row; probes underfilled at the widest
         option keep ``fallback`` and return their PARTIAL top-(<k) rows
         rather than disappearing (VERDICT r2 "What's wrong" #4)."""
         w = Window.partitionBy(probe_id)
@@ -166,10 +163,10 @@ def knn_join(
         return counted.withColumn("_chosen", F.coalesce(*opts, F.lit(fallback)))
 
     # every probe explodes its widest ring once: (2*4+1)^2 = 81 offsets.
-    # occupied neighbor cells only; empty cells contribute no counts and
-    # no candidates, and a probe with ZERO occupied cells in its widest
+    # occupied neighbor tiles only; empty tiles contribute no counts and
+    # no candidates, and a probe with ZERO occupied tiles in its widest
     # ring yields no rows (the documented zero-candidate contract)
-    counted = neighbor_cells(pr, max_ring).join(cnts, "qcell")
+    counted = neighbor_cells(pr, max_ring).join(cnts, ["qtx", "qty"])
     if len(rings) == 1:
         cand_cells = counted
     else:
@@ -177,12 +174,12 @@ def knn_join(
             with_choice(counted, rings[:-1], max_ring)
             .where(F.col("_ring") <= F.col("_chosen"))
         )
-    # project to the 4 columns the candidate join needs BEFORE the fan-out
+    # project to the 5 columns the candidate join needs BEFORE the fan-out
     # (guide: an explicit select before a multiplying join is cheap
     # insurance — _ring/_ccnt/_chosen would otherwise ride every candidate
     # row through the top-k sort)
-    joined = cand_cells.select(probe_id, "qcell", "_plon", "_plat").join(
-        pt, "qcell"
+    joined = cand_cells.select(probe_id, "qtx", "qty", "_plon", "_plat").join(
+        pt, ["qtx", "qty"]
     ).withColumn(
         "dist", F.sqrt(sq_dist("_plon", "_plat", "_qlon", "_qlat"))
     )

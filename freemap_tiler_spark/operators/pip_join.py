@@ -345,8 +345,8 @@ def pip_join_cells(
     touch the rings at all (their covering cell was proven fully inside).
     """
     x, y = F.col(x_col), F.col(y_col)
-    pts = points.where(x.isNotNull() & y.isNotNull()).withColumn(
-        "cell", cells.cell(F.lit(zoom), *mercator.located_tiles(x, y, F.lit(zoom))))
+    pts = cells.with_cell(points.where(x.isNotNull() & y.isNotNull()), zoom,
+                          *mercator.located_tiles(x, y, F.lit(zoom)), "cell")
     cover = polygon_covering_cells(polygons, zoom)
     if salt and salt > 1:
         pts = pts.withColumn(

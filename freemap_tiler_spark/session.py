@@ -78,6 +78,12 @@ def get_spark(
         .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local")
                 if os.path.isdir("/dev/shm") else "/tmp")
         .config("spark.sql.session.timeZone", "UTC")
+        # no DataFrame call-site capture: with it on, PySpark wraps every
+        # Column and DataFrame call to walk the Python stack and send the
+        # caller's file:line to the JVM: several more py4j calls per call,
+        # paid by every operator that builds a plan between Spark jobs.
+        # Only the Python file:line in Spark's error context is lost.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for var in _blas_vars:
         b = b.config(f"spark.executorEnv.{var}", os.environ[var])

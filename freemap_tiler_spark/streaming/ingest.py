@@ -44,14 +44,9 @@ def streaming_tile_counts(
     geotag extraction + cell assignment are the SAME Column expressions as
     the batch path; a 30-minute watermark bounds state for late drops."""
     lon, lat = T.geo_lon("text"), T.geo_lat("text")
-    cell = cells.cell(
-        F.lit(zoom),
-        mercator.tile_x(lon, F.lit(zoom)),
-        mercator.tile_y(lat, F.lit(zoom)),
-    )
+    located = stream.where(lon.isNotNull() & lat.isNotNull())
     return (
-        stream.where(lon.isNotNull() & lat.isNotNull())
-        .withColumn("cell", cell)
+        cells.with_cell(located, zoom, *mercator.located_tiles(lon, lat, F.lit(zoom)), "cell")
         .withWatermark("warc_ts", "30 minutes")
         .groupBy(F.window("warc_ts", window).alias("win"), "cell")
         .agg(F.count("*").alias("docs"))

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from freemap_tiler_spark.functions import cells
 from oracles import np_ancestor, np_children, np_reversed_y, np_sector_in_ancestor
@@ -110,3 +111,51 @@ def test_column_parity(spark):
     kids = np.array([list(k) for k in got.kids])
     assert (kids == np_children(exp)).all()
     assert (got.ci.values == (exp & 3)).all()
+
+
+@pytest.mark.spark
+def test_interleave_matches_numpy_on_full_width_values(spark):
+    """The byte-lookup interleave == the numpy shift-and-mask kernels on
+    random 32-bit values (part1by1) and 64-bit ones (compact1by1), NULL in
+    gives NULL out."""
+    import pandas as pd
+
+    rng = np.random.default_rng(11)
+    v = rng.integers(0, 1 << 32, 20000, dtype=np.int64)
+    w = rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max, 20000, dtype=np.int64)
+    df = spark.createDataFrame(pd.DataFrame({"v": v, "w": w}))
+    got = df.select(
+        cells.part1by1("v").alias("p"), cells.compact1by1("w").alias("c")).toPandas()
+    assert (got.p.values == cells.np_part1by1(v)).all()
+    assert (got.c.values == cells.np_compact1by1(w)).all()
+    nul = spark.range(1).select(F.lit(None).cast("long").alias("v"))
+    assert nul.select(cells.part1by1("v"), cells.compact1by1("v")).first() == (None, None)
+
+
+def _name_count(df, name: str) -> int:
+    import re
+
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return len(re.findall(rf"\b{name}#\d+", plan))
+
+
+@pytest.mark.spark
+def test_interleave_expression_size(spark):
+    """A cell expression names its input once per byte lookup: 4 times for
+    part1by1, 8 for compact1by1 (the shift-and-mask cascade named it 32
+    times, and each copy was planned, pushed into filters and codegen'd)."""
+    df = spark.range(1).select(F.col("id").alias("a"))
+    assert _name_count(df.select(cells.part1by1("a")), "a") - 1 <= 4
+    assert _name_count(df.select(cells.compact1by1("a")), "a") - 1 <= 8
+
+
+@pytest.mark.spark
+def test_assign_cells_computes_the_tile_math_once(spark):
+    """``assign_cells`` projects its tile to columns before the cell's byte
+    lookups: the y formula (three tan references of asinh(tan(lat))) is in
+    the optimized plan once, as ``fy``, not again per lookup."""
+    from freemap_tiler_spark.operators import pyramid
+
+    pts = spark.range(3).select((F.col("id") * 1.5).alias("lon"), (F.col("id") * 2.5).alias("lat"))
+    plan = pyramid.assign_cells(pts, "lon", "lat", 12)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.upper().count("TAN(") == 3

@@ -7,7 +7,7 @@ Checks (written to BENCH/explain_audit.md):
 - broadcast joins are actually broadcast (BroadcastHashJoin);
 - tile algebra stays inside WholeStageCodegen (no Python in key paths);
 - partition pruning on the zoom-partitioned store (PartitionFilters);
-- spatial joins (kNN, PIP cells, the polygon prune) and the dedup joins
+- spatial joins (kNN on its tile key, PIP cells, the polygon prune) and the dedup joins
   are equi- or semi-joins on their key, never a cartesian product;
 - both LSH pair operators size their buckets with one (tbl, bkt) window;
 - one pyramid compose round is one Python group stage with no Union.
@@ -126,7 +126,7 @@ def main() -> None:
     # cartesian product (the brute twin is the only allowed crossJoin),
     # and one candidate plan: no anti-join splitting probes into tiers
     p = plan_of(contract.q_knn_grid(spark, sf))
-    check("knn_grid: cell equi-join, no cartesian, one tier", p, ["Join"],
+    check("knn_grid: tile-key equi-join, no cartesian, one tier", p, ["Join"],
           ["CartesianProduct", "BroadcastNestedLoopJoin", "LeftAnti"])
 
     # 8. cell-prefix PIP join: equi-join, no cartesian
