@@ -10,8 +10,9 @@ The reference encodes tiles as JPEG q85 + zstd alpha sidecar, or PNG
 - **Alpha sidecar** is a standard zstd frame (RFC 8878) written and read
   through pyarrow's bundled libzstd, the reference's interchange format
   (src/processor.rs:515-526, 205-209); any other sidecar is rejected.
-- **JPEG** color planes go through functions/jpeg.py (baseline T.81,
-  encoded 4:4:4); ``encode_tile`` here only splits color from alpha.
+- **JPEG** color planes go through functions/jpeg.py (T.81: baseline
+  4:4:4 encode, baseline or progressive decode); ``encode_tile`` here
+  only splits color from alpha.
 
 All functions operate on numpy u8 arrays and bytes; they run inside
 Arrow-batched pandas UDFs only (never per-row Python).
@@ -43,11 +44,11 @@ def _chunk(tag: bytes, data: bytes) -> bytes:
     )
 
 
-def png_encode(img: np.ndarray, adaptive: bool = True) -> bytes:
+def png_encode(img: np.ndarray) -> bytes:
     """Encode (H, W, 2|4) u8 as PNG (GA8 / RGBA8).
 
-    ``adaptive`` picks the per-scanline filter (None/Sub/Up/Average/Paeth)
-    by the standard minimum-sum-of-absolute-differences heuristic — the
+    Each scanline takes the filter (None/Sub/Up/Average/Paeth) that the
+    standard minimum-sum-of-absolute-differences heuristic picks — the
     reference's FilterType::Adaptive (src/processor.rs:543-547; VERDICT r3
     'What's missing' #6).  All five candidates are computed for ALL rows
     in one vectorized pass (no per-row Python beyond the zlib call).
@@ -58,30 +59,26 @@ def png_encode(img: np.ndarray, adaptive: bool = True) -> bytes:
     ihdr = struct.pack(">IIBBBBB", w, h, 8, colortype, 0, 0, 0)
     wb = w * bands
     raw = np.empty((h, 1 + wb), dtype=np.uint8)
-    if not adaptive:
-        raw[:, 0] = 0
-        raw[:, 1:] = img.reshape(h, wb)
-    else:
-        flat = img.reshape(h, wb).astype(np.int16)
-        prev = np.vstack([np.zeros((1, wb), np.int16), flat[:-1]])
-        a = np.zeros_like(flat)
-        a[:, bands:] = flat[:, :-bands]
-        c = np.zeros_like(prev)
-        c[:, bands:] = prev[:, :-bands]
-        p = a + prev - c
-        pa, pb, pc = np.abs(p - a), np.abs(p - prev), np.abs(p - c)
-        paeth = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, prev, c))
-        cands = (
-            np.stack([
-                flat, flat - a, flat - prev, flat - ((a + prev) >> 1),
-                flat - paeth,
-            ]) & 0xFF
-        ).astype(np.uint8)                                     # (5, h, wb)
-        cost = np.minimum(cands, (256 - cands.astype(np.int16)).astype(np.uint16)
-                          ).sum(axis=2, dtype=np.int64)        # (5, h) MSAD
-        choice = cost.argmin(axis=0)
-        raw[:, 0] = choice
-        raw[:, 1:] = cands[choice, np.arange(h)]
+    flat = img.reshape(h, wb).astype(np.int16)
+    prev = np.vstack([np.zeros((1, wb), np.int16), flat[:-1]])
+    a = np.zeros_like(flat)
+    a[:, bands:] = flat[:, :-bands]
+    c = np.zeros_like(prev)
+    c[:, bands:] = prev[:, :-bands]
+    p = a + prev - c
+    pa, pb, pc = np.abs(p - a), np.abs(p - prev), np.abs(p - c)
+    paeth = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, prev, c))
+    cands = (
+        np.stack([
+            flat, flat - a, flat - prev, flat - ((a + prev) >> 1),
+            flat - paeth,
+        ]) & 0xFF
+    ).astype(np.uint8)                                 # (5, h, wb)
+    cost = np.minimum(cands, (256 - cands.astype(np.int16)).astype(np.uint16)
+                      ).sum(axis=2, dtype=np.int64)    # (5, h) MSAD
+    choice = cost.argmin(axis=0)
+    raw[:, 0] = choice
+    raw[:, 1:] = cands[choice, np.arange(h)]
     idat = zlib.compress(raw.tobytes(), 6)
     return PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 

@@ -120,24 +120,6 @@ Transform = Callable[[np.ndarray, np.ndarray], tuple[np.ndarray, np.ndarray]]
 _REGISTRY: dict[str, tuple[Transform, Transform]] = {}
 
 
-def _utm_pair(zone: int, south: bool) -> tuple[Transform, Transform]:
-    lon0 = zone * 6.0 - 183.0
-    fn_n = 10_000_000.0 if south else 0.0
-
-    def to_merc(X, Y):
-        lon, lat = tm_inverse(X, Y, lon0, false_n=fn_n)
-        return mercator.np_lonlat_to_merc(np.asarray(lon), np.clip(lat, -85.06, 85.06))
-
-    def from_merc(mx, my):
-        lon = np.degrees(np.asarray(mx, float) / mercator.R)
-        lat = np.degrees(
-            2.0 * np.arctan(np.exp(np.asarray(my, float) / mercator.R)) - np.pi / 2.0
-        )
-        return tm_forward(lon, lat, lon0, false_n=fn_n)
-
-    return to_merc, from_merc
-
-
 def _tmerc_pair(
     lon0: float, lat0: float, k0: float, x0: float, y0: float
 ) -> tuple[Transform, Transform]:
@@ -146,19 +128,10 @@ def _tmerc_pair(
     (y = k0*(M - M0) + y_0, Snyder 8-9 with an origin-latitude offset)."""
     m0 = float(_m_arc(np.asarray([math.radians(lat0)]))[0]) if lat0 else 0.0
     fn = y0 - k0 * m0
-
-    def to_merc(X, Y):
-        lon, lat = tm_inverse(X, Y, lon0, k0=k0, false_e=x0, false_n=fn)
-        return mercator.np_lonlat_to_merc(np.asarray(lon), np.clip(lat, -85.06, 85.06))
-
-    def from_merc(mx, my):
-        lon = np.degrees(np.asarray(mx, float) / mercator.R)
-        lat = np.degrees(
-            2.0 * np.arctan(np.exp(np.asarray(my, float) / mercator.R)) - np.pi / 2.0
-        )
-        return tm_forward(lon, lat, lon0, k0=k0, false_e=x0, false_n=fn)
-
-    return to_merc, from_merc
+    return _wrap_pair(
+        lambda lon, lat: tm_forward(lon, lat, lon0, k0=k0, false_e=x0, false_n=fn),
+        lambda X, Y: tm_inverse(X, Y, lon0, k0=k0, false_e=x0, false_n=fn),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -337,7 +310,8 @@ def _stere_pair(
 
 
 def _wrap_pair(fwd: Transform, inv: Transform) -> tuple[Transform, Transform]:
-    """(lon/lat forward, inverse) -> (to_merc, from_merc) like _tmerc_pair."""
+    """(lon/lat forward, inverse) -> (to_merc, from_merc): the pair every
+    projection family registers."""
 
     def to_merc(X, Y):
         lon, lat = inv(X, Y)
@@ -790,7 +764,9 @@ def lookup_crs(name: str) -> tuple[Transform, Transform] | None:
         if len(code) == 5 and code[:3] in ("326", "327") and code[3:].isdigit():
             zone = int(code[3:])
             if 1 <= zone <= 60:
-                _REGISTRY[name] = _utm_pair(zone, south=code[:3] == "327")
+                _REGISTRY[name] = _tmerc_pair(
+                    zone * 6.0 - 183.0, 0.0, _K0, 500_000.0,
+                    10_000_000.0 if code[:3] == "327" else 0.0)
         elif code == "5514":
             # S-JTSK / Krovak East North (3-param EPSG datum shift)
             _REGISTRY[name] = _krovak_pair(_Krovak(),

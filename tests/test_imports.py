@@ -269,8 +269,6 @@ OPTION_EXEMPT = {
         "import_mbtiles is an entry point (ENTRY_POINTS): its callers are outside",
     ("geotiff_blocks", "max_pixel_size"):
         "the COG overview read: the deepest zoom's pixel size picks the IFD",
-    ("png_encode", "adaptive"):
-        "adaptive=False is the unfiltered reference the adaptive-filter test compares",
     ("minhash_lsh_pairs", "max_bucket_size"):
         "the hot-bucket guard: a test sets it small to exercise the star and chain",
     ("embedding_near_dups", "max_bucket_size"):
